@@ -1,8 +1,13 @@
 package graft
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import scala.util.control.NonFatal
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.types.{BinaryType, DataType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.proto._
 import graft.conv._
 
@@ -40,13 +45,8 @@ object Protarrow {
       md: PMessageDesc, cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry): DataFrame = {
     val schema = messageTypeToSchema(md, cfg, reg)
-    // catalyst-native writer → LocalRelation: skips createDataFrame's
-    // per-row CatalystTypeConverters pass over the external rows (the
-    // external rowWriter path remains for executor-side encodes);
-    // CatalystWriterSpec pins path equality, RoundTripSpec runs the whole
-    // config matrix through here
     val writer = Codecs.internalRowWriter(md, cfg, reg)
-    org.apache.spark.sql.GraftBridge.localDataFrame(spark, schema, msgs.map(writer))
+    GraftBridge.localDataFrame(spark, schema, msgs.map(writer))
   }
 
   /** Distributed variant (messages_to_table): messages already on
@@ -55,10 +55,9 @@ object Protarrow {
   def messagesDatasetToDataFrame(ds: Dataset[DynamicMessage], md: PMessageDesc,
       cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry): DataFrame = {
-    val spark = ds.sparkSession
-    val schema = messageTypeToSchema(md, cfg, reg)
-    val writer = Codecs.rowWriter(md, cfg, reg)
-    spark.createDataFrame(ds.rdd.mapPartitions(_.map(writer)), schema)
+    val writer = Codecs.internalRowWriter(md, cfg, reg)
+    GraftBridge.internalDataFrame(ds.sparkSession, messageTypeToSchema(md, cfg, reg),
+      ds.rdd.mapPartitions(_.map(writer)))
   }
 
   /** DataFrame → messages on the driver (table_to_messages,
@@ -77,7 +76,7 @@ object Protarrow {
     // QueryExecutionListeners, which driving executedPlan directly skips
     // (ListenerSpec pins the listener callback)
     val reader = Codecs.internalRowReader(md, df.schema, cfg, reg)
-    org.apache.spark.sql.GraftBridge.withExecutionId(
+    GraftBridge.withExecutionId(
         df.queryExecution, "dataFrameToMessages") {
       df.queryExecution.executedPlan.executeCollect()
     }.iterator.map(reader).toVector
@@ -122,12 +121,8 @@ object Protarrow {
       cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry,
       mode: IngestMode = IngestMode.FailFast): DataFrame = {
-    val spark = ds.sparkSession
-    val schema = messageTypeToSchema(md, cfg, reg)
-    val writer = Codecs.rowWriter(md, cfg, reg)
-    permissiveScan(spark, ds.rdd, schema, mode,
-      org.apache.spark.sql.types.BinaryType,
-      b => ProtoWire.decode(b, md, reg), writer, (b: Array[Byte]) => b)
+    permissiveScan(ds.sparkSession, ds.rdd, md, cfg, reg, mode, BinaryType,
+      b => ProtoWire.decode(b, md, reg), (b: Array[Byte]) => b)
   }
 
   /** Proto-JSONL scan (the fixture-loader shape,
@@ -142,54 +137,54 @@ object Protarrow {
       cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry,
       mode: IngestMode = IngestMode.FailFast): DataFrame = {
-    val schema = messageTypeToSchema(md, cfg, reg)
-    val writer = Codecs.rowWriter(md, cfg, reg)
     val lines = spark.read.textFile(path).rdd
       .mapPartitions(_.filter(_.trim.nonEmpty))
-    permissiveScan(spark, lines, schema, mode,
-      org.apache.spark.sql.types.StringType,
-      l => ProtoJson.parse(l, md, reg), writer, (l: String) => l)
+    permissiveScan(spark, lines, md, cfg, reg, mode, StringType,
+      l => ProtoJson.parse(l, md, reg), (l: String) => UTF8String.fromString(l))
   }
 
-  /** Shared malformed-record machinery for the ingest scans: wraps the
-    * per-record DECODE step in the [[IngestMode]] contract. The catch is
-    * per-record INSIDE mapPartitions — the partition iterator keeps
-    * streaming, so tolerance costs nothing on the happy path and no
-    * executor-side buffering anywhere. Only the decode (`ProtoJson.parse`
-    * / `ProtoWire.decode`) is caught: a rowWriter/encoder failure is an
-    * ENGINE bug, not dirty data, and must propagate rather than be
-    * reclassified as a corrupt record. */
-  private def permissiveScan[A, M](spark: SparkSession,
-      rdd: org.apache.spark.rdd.RDD[A], schema: StructType, mode: IngestMode,
-      corruptType: org.apache.spark.sql.types.DataType,
-      decode: A => M, write: M => Row, raw: A => Any): DataFrame = {
-    import org.apache.spark.sql.types.StructField
-    import scala.util.control.NonFatal
+  /** Shared malformed-record machinery for the ingest scans: decodes each
+    * record, encodes it with [[Codecs.internalRowWriter]] and wraps both
+    * steps in the [[IngestMode]] contract. The catch is per-record INSIDE
+    * mapPartitions — the partition iterator keeps streaming, so tolerance
+    * costs nothing on the happy path and no executor-side buffering
+    * anywhere. A record is malformed when the decode (`ProtoJson.parse` /
+    * `ProtoWire.decode`) fails, or when the writer rejects a decoded value
+    * as out of range (IllegalArgumentException: a month-13 Date). Any other
+    * writer failure is an ENGINE bug, not dirty data, and must propagate
+    * rather than be reclassified as a corrupt record. `raw` gives a
+    * reject's catalyst value for the `corruptType` column. */
+  private def permissiveScan[A](spark: SparkSession, rdd: RDD[A],
+      md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry, mode: IngestMode,
+      corruptType: DataType, decode: A => DynamicMessage, raw: A => Any): DataFrame = {
+    val schema = messageTypeToSchema(md, cfg, reg)
+    val write = Codecs.internalRowWriter(md, cfg, reg)
+    def converted(a: A): Option[InternalRow] =
+      (try Some(decode(a)) catch { case NonFatal(_) => None }).flatMap { m =>
+        try Some(write(m)) catch { case _: IllegalArgumentException => None }
+      }
     mode match {
       case IngestMode.FailFast =>
-        spark.createDataFrame(
-          rdd.mapPartitions(_.map(a => write(decode(a)))), schema)
+        GraftBridge.internalDataFrame(spark, schema,
+          rdd.mapPartitions(_.map(a => write(decode(a)))))
       case IngestMode.DropMalformed =>
-        spark.createDataFrame(
-          rdd.mapPartitions(_.flatMap { a =>
-            val m = try Some(decode(a)) catch { case NonFatal(_) => None }
-            m.iterator.map(write) // writer exceptions propagate
-          }), schema)
+        GraftBridge.internalDataFrame(spark, schema,
+          rdd.mapPartitions(_.flatMap(converted)))
       case IngestMode.Permissive =>
-        val n = schema.fields.length
         // reject rows surface NULL in every proto field, so the scan's
         // top-level nullability relaxes — exactly what spark.read.json's
         // PERMISSIVE schema does (good rows keep their nested shapes)
         val out = StructType(schema.fields.map(_.copy(nullable = true)) :+
           StructField(IngestMode.CorruptColumn, corruptType, nullable = true))
-        spark.createDataFrame(
+        val noFields = new GenericInternalRow(schema.length)
+        val noCorrupt = InternalRow(null)
+        GraftBridge.internalDataFrame(spark, out,
           rdd.mapPartitions(_.map { a =>
-            val m = try Some(decode(a)) catch { case NonFatal(_) => None }
-            m match {
-              case Some(msg) => Row.fromSeq(write(msg).toSeq :+ null)
-              case None      => Row.fromSeq(Seq.fill[Any](n)(null) :+ raw(a))
+            converted(a) match {
+              case Some(row) => new JoinedRow(row, noCorrupt)
+              case None      => new JoinedRow(noFields, InternalRow(raw(a)))
             }
-          }), out)
+          }))
     }
   }
 
@@ -247,9 +242,9 @@ object Protarrow {
   def writeProtoJsonl(df: DataFrame, md: PMessageDesc, path: String,
       cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry): Unit = {
-    val schema = df.schema
-    val reader = Codecs.rowReader(md, schema, cfg, reg)
-    df.mapPartitions(rows => rows.map(r => ProtoJson.toJson(reader(r), reg)))(Encoders.STRING)
+    val reader = Codecs.internalRowReader(md, df.schema, cfg, reg)
+    df.sparkSession.createDataset(df.queryExecution.toRdd.mapPartitions(rows =>
+      rows.map(r => ProtoJson.toJson(reader(r), reg))))(Encoders.STRING)
       .write.mode("overwrite").text(path)
   }
 
@@ -293,6 +288,8 @@ object Protarrow {
       * handle is O(1) per row (the reference's equivalent also reads
       * from a materialized table, message_extractor.py:156-162). */
     def readTableRow(df: DataFrame, i: Int): DynamicMessage = {
+      if (i < 0) throw new IndexOutOfBoundsException(
+        s"row $i of a ${df.count()}-row DataFrame")
       val rows = df.limit(i + 1).collect()
       if (rows.length <= i) throw new IndexOutOfBoundsException(
         s"row $i of a ${rows.length}-row DataFrame")

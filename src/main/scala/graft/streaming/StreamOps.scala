@@ -26,11 +26,10 @@ object StreamOps {
       reg: ProtoRegistry = WellKnown.registry): DataFrame = {
     val schema = SchemaConversion.messageTypeToSchema(md, cfg, reg)
     val writer = Codecs.rowWriter(md, cfg, reg)
-    // lenient row encoder: the writer emits java.time values (Instant /
-    // LocalDate — proleptic, exact for ancient instants); the strict
-    // encoder would reject them for java.sql ones unless the session flips
-    // datetime.java8API. Lenient accepts both — same tolerance the batch
-    // paths get from createDataFrame's converters.
+    // lenient row encoder: the rowWriter adapter emits java.time values
+    // (Instant / LocalDate — proleptic, exact for ancient instants); the
+    // strict encoder would reject them for java.sql ones unless the
+    // session flips datetime.java8API. Lenient accepts both.
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
       .encoderFor(schema, lenient = true)
     payloads.mapPartitions { it =>

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Column ↔ catalyst Expression bridge for graft's native expressions.
@@ -24,6 +25,15 @@ object GraftBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       catalyst.plans.logical.LocalRelation(
         catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
+  /** DataFrame over an RDD of pre-built InternalRows — what
+    * `createDataFrame(rdd, schema)` becomes AFTER its per-row RowEncoder
+    * serializer pass. Same contract as [[localDataFrame]]: the rows
+    * (graft's ingest scans) already hold catalyst representations for
+    * `schema`. */
+  def internalDataFrame(spark: SparkSession, schema: types.StructType,
+      rows: RDD[catalyst.InternalRow]): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 
   /** Runs `body` under a registered SQL execution id — what Dataset's own
     * withAction does around collect(). Callers that drive executedPlan

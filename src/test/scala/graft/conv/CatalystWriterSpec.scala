@@ -1,19 +1,24 @@
 package graft.conv
 
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.Encoders
 import org.scalacheck.Gen
 import graft.proto._
 import graft.{Protarrow, SparkSpec}
 import graft.conv.GraftConfig.{EnumRepr, TimeUnit}
 
-/** The catalyst-native encode path (internalRowWriter → LocalRelation,
-  * the driver-local fast path behind messagesToDataFrame) must be
-  * value-equal to the external path (rowWriter → createDataFrame, which
-  * runs CatalystTypeConverters per row). RoundTripSpec pins the internal
-  * path against golden fixtures across the full 35-config matrix; THIS
-  * spec pins the two paths against each other on random messages over the
-  * representative leaf configs, so a representation bug in one converter
-  * can't hide behind a tolerant decoder. */
+/** Every encode path must produce the same cells from the same messages.
+  * The reference frame is messagesToDataFrame (internalRowWriter →
+  * LocalRelation), which RoundTripSpec pins against golden fixtures over
+  * the full 35-config matrix. Against it, on random messages over the
+  * representative leaf configs, this spec compares cell by cell:
+  *  - fromProtoBinary over ProtoWire.encode of the same messages (the
+  *    distributed wire scan: decode → internalRowWriter → RDD[InternalRow]),
+  *  - messagesDatasetToDataFrame (the distributed encode),
+  *  - createDataFrame over the rowWriter adapter's external Rows (the
+  *    Row-API bridge through Spark's CatalystTypeConverters),
+  * so a representation bug in one path can't hide behind a tolerant
+  * decoder. */
 class CatalystWriterSpec extends SparkSpec {
 
   private val reg = Schemas.registry
@@ -51,16 +56,24 @@ class CatalystWriterSpec extends SparkSpec {
     val md = Schemas.msg(name)
     val msgs = TestGen.sample(Gen.listOfN(8, TestGen.genMessage(md)), 11L + i)
     val schema = Protarrow.messageTypeToSchema(md, cfg, reg)
-    val internal = Protarrow.messagesToDataFrame(spark, msgs, md, cfg, reg)
-    val externalWriter = Codecs.rowWriter(md, cfg, reg)
-    val external = spark.createDataFrame(msgs.map(externalWriter).asJava, schema)
-    assert(internal.schema === external.schema)
-    val (iRows, eRows) = (internal.collect(), external.collect())
-    assert(iRows.length === eRows.length)
-    iRows.zip(eRows).zipWithIndex.foreach { case ((a, b), r) =>
-      schema.fieldNames.indices.foreach { c =>
-        assert(norm(a.get(c)) === norm(b.get(c)),
-          s"row $r field ${schema.fieldNames(c)} of $name under $cfg")
+    val expected = Protarrow.messagesToDataFrame(spark, msgs, md, cfg, reg)
+    val wire = spark.createDataset(msgs.map(ProtoWire.encode(_, reg)))(Encoders.BINARY)
+    val paths = Seq(
+      "fromProtoBinary" -> Protarrow.fromProtoBinary(wire, md, cfg, reg),
+      "messagesDatasetToDataFrame" -> Protarrow.messagesDatasetToDataFrame(
+        spark.createDataset(msgs)(Encoders.kryo[DynamicMessage]), md, cfg, reg),
+      "rowWriter" -> spark.createDataFrame(
+        msgs.map(Codecs.rowWriter(md, cfg, reg)).asJava, schema))
+    val eRows = expected.collect()
+    paths.foreach { case (path, df) =>
+      assert(df.schema === expected.schema, path)
+      val rows = df.collect()
+      assert(rows.length === eRows.length, path)
+      rows.zip(eRows).zipWithIndex.foreach { case ((a, b), r) =>
+        schema.fieldNames.indices.foreach { c =>
+          assert(norm(a.get(c)) === norm(b.get(c)),
+            s"$path: row $r field ${schema.fieldNames(c)} of $name under $cfg")
+        }
       }
     }
   }

@@ -1,5 +1,6 @@
 package graft.conv
 
+import org.apache.spark.sql.functions.col
 import graft.{Protarrow, SparkSpec}
 import graft.operators.Fixtures
 import graft.proto._
@@ -86,5 +87,25 @@ class IngestModeSpec extends SparkSpec {
     // and DROPMALFORMED drops just that payload
     assert(Protarrow.fromProtoBinary(mixed, md, GraftConfig(), reg,
       IngestMode.DropMalformed).count() === 20)
+  }
+
+  test("wire scan: a decodable payload with an out-of-range Timestamp/Date is malformed") {
+    import spark.implicits._
+    def wire(field: String, v: DynamicMessage) =
+      ProtoWire.encode(DynamicMessage(md, Map(md.byName(field).number -> v)), reg)
+    val bad = Seq(
+      wire("date_value", DynamicMessage(WellKnown.date, Map(1 -> 2024, 2 -> 13, 3 -> 1))),
+      wire("timestamp_value", DynamicMessage(WellKnown.timestamp, Map(1 -> Long.MaxValue))))
+    val good = wire("date_value", DynamicMessage(WellKnown.date, Map(1 -> 2024, 2 -> 12, 3 -> 1)))
+    val ds = spark.createDataset(bad :+ good)(org.apache.spark.sql.Encoders.BINARY)
+    val rejects = Protarrow.fromProtoBinary(ds, md, GraftConfig(), reg, IngestMode.Permissive)
+      .filter(col(C).isNotNull).select(C).collect().map(_.getAs[Array[Byte]](0).toSeq)
+    assert(rejects.toSet === bad.map(_.toSeq).toSet)
+    assert(Protarrow.fromProtoBinary(ds, md, GraftConfig(), reg,
+      IngestMode.DropMalformed).count() === 1)
+    val e = intercept[org.apache.spark.SparkException] {
+      Protarrow.fromProtoBinary(ds, md, GraftConfig(), reg).collect()
+    }
+    assert(e.getMessage.contains("out of range"))
   }
 }

@@ -40,6 +40,10 @@ class SliceSpec extends SparkSpec {
     val all = Protarrow.dataFrameToMessages(df, md, GraftConfig(), reg)
     assert(ex.readTableRow(df, 3) === all(3))
     assert(ex.readTableRow(df, 19) === all(19))
+    for (i <- Seq(-1, -2)) {
+      val e = intercept[IndexOutOfBoundsException] { ex.readTableRow(df, i) }
+      assert(e.getMessage === s"row $i of a 20-row DataFrame")
+    }
   }
 
   test("castRecordBatch and castStructColumn facade parity") {

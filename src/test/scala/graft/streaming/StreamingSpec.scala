@@ -31,6 +31,26 @@ class StreamingSpec extends SparkSpec {
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(out === Map("u0" -> 30L, "u1" -> 25L))
     } finally q.stop()
+
+    // timestamps the hybrid calendar handles specially (year 1, the
+    // 1582-10-05..14 cutover gap) stay exact through the decode; compared
+    // as epoch micros, so no java.sql.Timestamp sits in between
+    val exMd = Schemas.msg("ExampleMessage")
+    val tsField = exMd.byName("timestamp_value").number
+    val instants = Seq("0001-01-01T00:00:00Z", "1582-10-07T12:00:00.123456Z")
+      .map(java.time.Instant.parse)
+    val tsStream = MemoryStream[Array[Byte]]
+    tsStream.addData(instants.map(i => ProtoWire.encode(DynamicMessage(exMd, Map(
+      tsField -> DynamicMessage(WellKnown.timestamp,
+        Map(1 -> i.getEpochSecond, 2 -> i.getNano)))), reg)))
+    val tq = StreamOps.decodeProtoStream(tsStream.toDS(), exMd, GraftConfig(), reg)
+      .select(unix_micros(col("timestamp_value")))
+      .writeStream.format("memory").queryName("proto_ts").start()
+    try {
+      tq.processAllAvailable()
+      assert(spark.table("proto_ts").collect().map(_.getLong(0)).toSet ===
+        instants.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000).toSet)
+    } finally tq.stop()
   }
 
   test("watermarked tumbling windows over an event stream") {
