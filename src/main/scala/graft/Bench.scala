@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import graft.proto._
 import graft.conv.GraftConfig
+import graft.Harness.time
 
 /** Per-round benchmark main (driver contract): times every registered
   * query at SPARK_GRAFT_SF_DIR plus the reference's encode/decode harness
@@ -14,12 +15,6 @@ import graft.conv.GraftConfig
   * query can never masquerade as a ~0 s speedup.
   */
 object Bench {
-
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime()
-    f
-    (System.nanoTime() - t0) / 1e9
-  }
 
   /** Random ExampleMessage generator with the reference harness's shape
     * (tests/random_generator.py:58-128): every field of the ~190-field
@@ -98,18 +93,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // collect_list/typed-aggregator queries build high-cardinality groups
-      // (e.g. the 1M+ posting lists of d27/d28); the default 128-group
-      // fallback would force them all to sort-based aggregation
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
+    // self-comparison gate (round-7): entries > 2x their recorded
+    // clean-window baseline (records/bench_baseline.json — a copy of the
+    // last canary-clean definitive run; re-baseline by replacing it) are
+    // listed machine-readably in "regressions"; on a degraded host window
+    // the canary_sec field is the tiebreaker. Read before any query runs,
+    // so a malformed baseline fails the run up front.
+    val baseline = Harness.baseline(
+      sys.env.getOrElse("SPARK_GRAFT_BASELINE", "records/bench_baseline.json"))
+    val spark = Harness.session(cpus)
 
     // untimed warm-up: JVM/codegen/parquet-reader initialization otherwise
     // lands entirely on the alphabetically-first query (~4 s) and distorts
@@ -126,8 +119,7 @@ object Bench {
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val samples = scala.collection.mutable.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[Double]]()
-    def fail(key: String, e: Throwable): Unit =
-      errors(key) = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}"
+    def fail(key: String, e: Throwable): Unit = errors(key) = Harness.reject(e)
     // one timed sample for `key`; a key that ever failed is skipped (its
     // time-to-failure is meaningless — summing it into the total would
     // let a fast crash read as a speedup; the failure lives in `errors`)
@@ -158,28 +150,18 @@ object Bench {
        catch { case _: Throwable => -1.0 })
 
     // the cache manager is cleared before EVERY query iteration —
-    // queries cache intermediates, and cached plans canonicalize equal
-    // across invocations, so without the clear later passes would time
-    // cache reads, not the query. OS page cache staying warm across
-    // passes is the intended steady state.
-    // r13: the q81/q83/q85 family's centsHist memo ALSO survives
-    // clearCache by design (its scaladoc documents the shared-scan
-    // session contract), which meant bench passes 2-3 timed a memoized
-    // histogram instead of the lineitem scan — min-of-3 picked the warm
-    // time. The bench's numbers must be cold-cost per entry like every
-    // other cache, so the memo is evicted alongside the SQL cache; the
-    // family's reported numbers RISE accordingly (honest cold cost).
-    def clearAll(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      graft.operators.Relational2.clearMemos()
-    }
+    // queries cache intermediates (q81/q83/q85 share their cents
+    // histogram that way), and cached plans canonicalize equal across
+    // invocations, so without the clear later passes would time cache
+    // reads, not the query. OS page cache staying warm across passes is
+    // the intended steady state.
     val qnames = SparkEntry.queries.toSeq.sortBy(_._1).map(_._1)
       .filter(selected)
     for (_ <- 1 to 3) {
-      clearAll()
+      spark.sharedState.cacheManager.clearCache()
       runCanary()
       qnames.foreach { name =>
-        clearAll()
+        spark.sharedState.cacheManager.clearCache()
         sample(name) { SparkEntry.queries(name)(spark, sfDir).count(); () }
       }
     }
@@ -215,7 +197,7 @@ object Bench {
       if (n == 10000 && selected(encDistKey)) {
         try {
           val ds = spark.createDataset(msgs)(Encoders.javaSerialization[DynamicMessage])
-            .repartition(cpus.toInt).cache()
+            .repartition(cpus).cache()
           ds.count()
           points += encDistKey -> (() => {
             Protarrow.messagesDatasetToDataFrame(ds, md, GraftConfig(), reg).count(); ()
@@ -231,7 +213,7 @@ object Bench {
       if (n == 10000 && selected(encWireKey)) {
         try {
           val wire = spark.createDataset(msgs.map(m => ProtoWire.encode(m, reg)))(Encoders.BINARY)
-            .repartition(cpus.toInt).cache()
+            .repartition(cpus).cache()
           wire.count()
           points += encWireKey -> (() => {
             Protarrow.fromProtoBinary(wire, md, GraftConfig(), reg).count(); ()
@@ -267,7 +249,7 @@ object Bench {
           // decode, not an accidental single-task layout
           if (n == 10000 && selected(decDistKey)) {
             try {
-              val dfd = df.repartition(cpus.toInt).cache()
+              val dfd = df.repartition(cpus).cache()
               dfd.count()
               points += decDistKey -> (() => {
                 Protarrow.toProtoBinary(dfd, md, GraftConfig(), reg).count(); ()
@@ -283,37 +265,10 @@ object Bench {
     }
 
     samples.foreach { case (k, ts) => results(k) = ts.min }
-    // --- self-comparison gate (round-7): entries > 2x their recorded
-    // clean-window baseline (records/bench_baseline.json — a copy of the
-    // last canary-clean definitive run; re-baseline by replacing it) are
-    // listed machine-readably instead of narratively. Entries under 0.5 s
-    // are never flagged (2x of a 60 ms entry is scheduler noise), and on
-    // a degraded host window the canary_sec field is the tiebreaker —
-    // regressions reported from a dirty-canary run are suspect by the
-    // same rule as every other number in it.
-    val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BASELINE",
-      "records/bench_baseline.json")
-    val baseline: Map[String, Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(baselinePath)))
-      val i = txt.indexOf("\"queries\":{")
-      val qsec = if (i < 0) "" else txt.substring(i + 11, txt.indexOf('}', i))
-      "\"([^\"]+)\":([0-9.eE+-]+)".r.findAllMatchIn(qsec)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty }
-    // pa_* micro-points get a 2.0 s absolute floor: the dist/wire points
-    // are task-scheduling/POJO-serialization dominated (10k messages
-    // through mapPartitions) and swing 3-4x BETWEEN clean windows, not
-    // just within one — measured across definitive records:
-    // pa_decode_dist 0.32 (r7f) / 0.38 (r9 baseline) / 1.2-1.8 (r9
-    // isolated min-of-3, same code); pa_encode_dist 1.10 (r7f) / 3.30
-    // (r9 baseline). A 2x trigger under ~2 s is window noise, not
-    // signal; the heavyweight pa points (decode_10000 at 3.4 s) still
-    // gate, since 2x of those clears any floor
-    def floor(k: String): Double = if (k.startsWith("pa_")) 2.0 else 0.5
+    def r4(v: Double): String = "%.4f".format(v)
     val regressions = results.collect {
-      case (k, v) if baseline.get(k).exists(b => v > 2 * b && v > floor(k)) =>
-        k -> s"${"%.4f".format(v)} vs baseline ${"%.4f".format(baseline(k))}"
+      case (k, v) if baseline.get(k).exists(Harness.regressed(k, v, _)) =>
+        k -> JsonOut.str(s"${r4(v)} vs baseline ${r4(baseline(k))}")
     }
     // Layout for the driver's 2000-char TAIL capture: the per-query map
     // (~3 KB at 100+ entries even at 4-decimal seconds) cannot fully fit,
@@ -321,16 +276,17 @@ object Bench {
     // total, canaries, ERRORS, sf — goes LAST, guaranteed inside the
     // tail window. (Round-5's artifact had the opposite order and
     // preserved neither summary nor errors.) Still one JSON line.
-    def r4(v: Double): String = "%.4f".format(v)
-    val qs = results.map { case (k, v) => JsonOut.str(k) + ":" + r4(v) }
-      .mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => JsonOut.str(k) + ":" + JsonOut.str(v) }
-      .mkString("{", ",", "}")
-    val cs = canary.map(r4).mkString("[", ",", "]")
-    val rs = regressions.map { case (k, v) => JsonOut.str(k) + ":" + JsonOut.str(v) }
-      .mkString("{", ",", "}")
-    val total = results.values.sum
-    val line = s"""{"queries":$qs,"n_queries":${results.size},"metric":"total","value":${r4(total)},"unit":"sec","canary_query":${JsonOut.str(canaryName)},"canary_sec":$cs,"regressions":$rs,"errors":$es,"sf":"$sfDir"}"""
+    val total = r4(results.values.sum)
+    val summary = Seq(
+      "canary_query" -> JsonOut.str(canaryName),
+      "canary_sec" -> JsonOut.arr(canary.map(r4)),
+      "regressions" -> JsonOut.obj(regressions),
+      "errors" -> JsonOut.obj(errors.map { case (k, v) => k -> JsonOut.str(v) }),
+      "sf" -> JsonOut.str(sfDir))
+    val line = JsonOut.obj(Seq(
+      "queries" -> JsonOut.obj(results.map { case (k, v) => k -> r4(v) }),
+      "n_queries" -> results.size.toString, "metric" -> JsonOut.str("total"),
+      "value" -> total, "unit" -> JsonOut.str("sec")) ++ summary)
     println(line)
     // ALSO persist the line: the round harness extracts this JSON from
     // captured sbt stdout and has twice recorded `parsed: null` when its
@@ -348,7 +304,9 @@ object Bench {
     // it; this line is ≤ ~0.5 kB — totals, canary, errors, sf, cpus — and
     // always lands complete inside any tail window. Per-query numbers stay
     // in the full line and in records/bench_last.json.
-    println(s"""{"metric":"total","value":${r4(total)},"unit":"sec","n_queries":${results.size},"canary_query":${JsonOut.str(canaryName)},"canary_sec":$cs,"regressions":$rs,"errors":$es,"sf":"$sfDir","cpus":$cpus,"queries_file":"records/bench_last.json"}""")
+    println(JsonOut.obj(Seq("metric" -> JsonOut.str("total"), "value" -> total,
+      "unit" -> JsonOut.str("sec"), "n_queries" -> results.size.toString) ++ summary ++ Seq(
+      "cpus" -> cpus.toString, "queries_file" -> JsonOut.str("records/bench_last.json"))))
     spark.stop()
   }
 }

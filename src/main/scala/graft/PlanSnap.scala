@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
@@ -23,14 +22,8 @@ object PlanSnap {
     val (dir, names) =
       if (args(2).startsWith("/")) (args(2), args.drop(3).toSeq)
       else ("/root/testdata/sf0.001", args.drop(2).toSeq)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 8 workers, as PlanDump: snapshots stay comparable across hosts
+    val spark = Harness.session(8)
     Files.createDirectories(Paths.get(s"plans/$tag"))
     for (n <- names) {
       val txt =

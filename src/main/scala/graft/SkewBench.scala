@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Harness.time
 
 /** Adversarial-skew stress bench: the cap/salt/band designs all CLAIM
   * skew-safety; this main measures it. It builds a deliberately hostile
@@ -33,10 +34,6 @@ import org.apache.spark.sql.functions._
   * Prints one JSON line; exits 1 if any query exceeds the wall bound.
   */
 object SkewBench {
-
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
 
   val DupFactor = 10000
   val BoundSec = 120.0
@@ -560,15 +557,7 @@ object SkewBench {
     ScaleContracts.verifyAndRecord("skew", Queries)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SKEW_DIR", "/tmp/graft_skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     generate(spark, sfDir, outDir)
 
@@ -576,12 +565,9 @@ object SkewBench {
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     Queries.foreach { name =>
       spark.sharedState.cacheManager.clearCache()
-      graft.operators.Relational2.clearMemos()
       results(name) = time {
         try { SparkEntry.queries(name)(spark, outDir).count(); () }
-        catch { case e: Throwable =>
-          errors(name) = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}"
-        }
+        catch { case e: Throwable => errors(name) = Harness.reject(e) }
       }
     }
     // the AQE-split twin of q26 (unsalted join, runtime re-plan): timed
@@ -590,8 +576,7 @@ object SkewBench {
     val (aqeSec, aqeFired) =
       try aqeSkewJoin(spark, outDir)
       catch { case e: Throwable =>
-        errors("aqe_skew_join") =
-          s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}"
+        errors("aqe_skew_join") = Harness.reject(e)
         (0.0, false)
       }
     results("aqe_skew_join") = aqeSec
@@ -599,10 +584,14 @@ object SkewBench {
       errors("aqe_skew_join") = "AQE skew-join split did not fire"
 
     val violations = results.filter(_._2 > BoundSec).keys.toSeq ++ errors.keys
-    val qs = results.map { case (k, v) => JsonOut.str(k) + ":" + v }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => JsonOut.str(k) + ":" + JsonOut.str(v) }.mkString("{", ",", "}")
-    val vs = violations.map(JsonOut.str).mkString("[", ",", "]")
-    println(s"""{"metric":"skew_total","value":${results.values.sum},"unit":"sec","bound_sec":$BoundSec,"dup_factor":$DupFactor,"aqe_skew_split":$aqeFired,"queries":$qs,"errors":$es,"violations":$vs,"sf":"$sfDir"}""")
+    println(JsonOut.obj(Seq(
+      "metric" -> JsonOut.str("skew_total"), "value" -> results.values.sum.toString,
+      "unit" -> JsonOut.str("sec"), "bound_sec" -> BoundSec.toString,
+      "dup_factor" -> DupFactor.toString, "aqe_skew_split" -> aqeFired.toString,
+      "queries" -> JsonOut.obj(results.map { case (k, v) => k -> v.toString }),
+      "errors" -> JsonOut.obj(errors.map { case (k, v) => k -> JsonOut.str(v) }),
+      "violations" -> JsonOut.arr(violations.map(JsonOut.str)),
+      "sf" -> JsonOut.str(sfDir))))
     spark.stop()
     if (violations.nonEmpty) sys.exit(1)
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Harness.time
 
 /** Empirical near-linear-scaling gauntlet: the one claim the per-round
   * bench argues only from plan shape is "survives 100×" — this main
@@ -103,10 +104,6 @@ object VolumeBench {
     // component + a component-keyed keeper re-attach (d39's posture)
     "m50_media_best_keeper")
 
-  private def time(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
   /** Synthesize the Mult× tables into `outDir` (idempotent per source
     * content — gated on the _SUCCESS marker). */
   def generate(spark: SparkSession, sfDir: String, outDir: String): Unit = {
@@ -189,15 +186,7 @@ object VolumeBench {
     // a silent skip
     ScaleContracts.verifyAndRecord("volume", Queries)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val volDir = sys.env.getOrElse("SPARK_GRAFT_VOLUME_DIR",
       s"${System.getProperty("java.io.tmpdir")}/graft_volume_" +
@@ -213,7 +202,6 @@ object VolumeBench {
         // warm-up at the base SF absorbs codegen/class-load constants so
         // t1 measures the engine, not the JIT
         spark.sharedState.cacheManager.clearCache()
-        graft.operators.Relational2.clearMemos()
         SparkEntry.queries(name)(spark, sfDir).count()
         // min-of-3 on BOTH sides: a single host-noise spike on either
         // measurement distorts the ratio in either direction (round-8's
@@ -226,7 +214,6 @@ object VolumeBench {
         def minOf3(dir: String): Double =
           (1 to 3).map { _ =>
             spark.sharedState.cacheManager.clearCache()
-            graft.operators.Relational2.clearMemos()
             time { SparkEntry.queries(name)(spark, dir).count(); () }
           }.min
         val (e1, b1) = exchanges(SparkEntry.queries(name)(spark, sfDir))
@@ -238,9 +225,7 @@ object VolumeBench {
           "cost_ratio" -> ratio, "exch_base" -> e1.toDouble,
           "exch_big" -> e10.toDouble, "bexch_base" -> b1.toDouble,
           "bexch_big" -> b10.toDouble)
-      } catch { case e: Throwable =>
-        errors(name) = s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}"
-      }
+      } catch { case e: Throwable => errors(name) = Harness.reject(e) }
     }
     // the audited 10× tier is engineered SCALE-INVARIANT: any new
     // exchange is a violation (this strictness is what caught s43's
@@ -281,27 +266,26 @@ object VolumeBench {
       if (!names.contains("s40_knn_graph")) "{}"
       else try {
         def fmt(m: Map[String, Double]) =
-          m.toSeq.sortBy(_._1).map { case (k, v) => JsonOut.str(k) + ":" + v }
-            .mkString("{", ",", "}")
+          JsonOut.obj(m.toSeq.sortBy(_._1).map { case (k, v) => k -> v.toString })
         spark.sharedState.cacheManager.clearCache()
         val base = graft.operators.Similarity.knnRecallProbe(spark, sfDir)
         val big = graft.operators.Similarity.knnRecallProbe(spark, volDir)
-        s"""{"base":${fmt(base)},"big":${fmt(big)}}"""
+        JsonOut.obj(Seq("base" -> fmt(base), "big" -> fmt(big)))
       } catch { case e: Throwable =>
-        errors("knn_recall_probe") =
-          s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(160)}"
+        errors("knn_recall_probe") = Harness.reject(e)
         "{}"
       }
-    val qs = results.map { case (k, m) =>
-      JsonOut.str(k) + ":" + m.map { case (f, v) => JsonOut.str(f) + ":" + v }
-        .mkString("{", ",", "}")
-    }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => JsonOut.str(k) + ":" + JsonOut.str(v) }
-      .mkString("{", ",", "}")
-    val vs = violations.map(JsonOut.str).mkString("[", ",", "]")
-    val total = results.values.map(_("t_big")).sum
-    val rp = replans.map(JsonOut.str).mkString("[", ",", "]")
-    println(s"""{"metric":"volume_total","value":$total,"unit":"sec","mult":$Mult,"cost_ratio_bound":$CostRatioBound,"gen_sec":$genSec,"queries":$qs,"errors":$es,"violations":$vs,"replans":$rp,"recall":$recallJson,"sf":"$sfDir"}""")
+    println(JsonOut.obj(Seq(
+      "metric" -> JsonOut.str("volume_total"),
+      "value" -> results.values.map(_("t_big")).sum.toString,
+      "unit" -> JsonOut.str("sec"), "mult" -> Mult.toString,
+      "cost_ratio_bound" -> CostRatioBound.toString, "gen_sec" -> genSec.toString,
+      "queries" -> JsonOut.obj(results.map { case (k, m) =>
+        k -> JsonOut.obj(m.map { case (f, v) => f -> v.toString }) }),
+      "errors" -> JsonOut.obj(errors.map { case (k, v) => k -> JsonOut.str(v) }),
+      "violations" -> JsonOut.arr(violations.map(JsonOut.str)),
+      "replans" -> JsonOut.arr(replans.map(JsonOut.str)),
+      "recall" -> recallJson, "sf" -> JsonOut.str(sfDir))))
     spark.stop()
     if (violations.nonEmpty) sys.exit(1)
   }

@@ -76,9 +76,9 @@ object Codecs {
       v => {
         val m = v.asInstanceOf[DynamicMessage]
         def i(n: String) = m.getOrDefault(WellKnown.timeOfDay.byName(n)).asInstanceOf[Int]
-        val totalNanos = (i("hours") * 3600L + i("minutes") * 60L + i("seconds")) *
-          1000000000L + i("nanos")
-        totalNanos / unit
+        inRange(m)(Math.addExact(Math.multiplyExact(
+          i("hours") * 3600L + i("minutes") * 60L + i("seconds"), 1000000000L),
+          i("nanos").toLong) / unit)
       }
     case PMessage(WellKnown.DurationName) =>
       val ticksPerSec = 1000000000L / cfg.durationUnit.nanos
@@ -87,7 +87,7 @@ object Codecs {
         val m = v.asInstanceOf[DynamicMessage]
         val secs = m.getOrDefault(WellKnown.duration.byName("seconds")).asInstanceOf[Long]
         val nanos = m.getOrDefault(WellKnown.duration.byName("nanos")).asInstanceOf[Int]
-        secs * ticksPerSec + nanos / unit
+        inRange(m)(Math.addExact(Math.multiplyExact(secs, ticksPerSec), nanos / unit))
       }
     case PMessage(name) if WellKnown.isWrapper(name) =>
       val inner = catalystValueWriter(WellKnown.wrapperNames(name), cfg, reg, trace)
@@ -103,10 +103,10 @@ object Codecs {
       v => rw(v.asInstanceOf[DynamicMessage])
   }
 
-  /** A Timestamp or Date that TimestampType/DateType cannot hold (seconds
-    * past the µs range, month 13) comes from the input, not from an engine
-    * fault: it raises IllegalArgumentException, which the ingest scans
-    * treat as a malformed record. */
+  /** A Timestamp, Date, TimeOfDay or Duration that its column cannot hold
+    * (seconds past the µs range, month 13, ticks past Long) comes from the
+    * input, not from an engine fault: it raises IllegalArgumentException,
+    * which the ingest scans treat as a malformed record. */
   private def inRange[T](m: DynamicMessage)(convert: => T): T =
     try convert catch {
       case e @ (_: java.time.DateTimeException | _: ArithmeticException) =>

@@ -459,43 +459,16 @@ object Relational2 {
 
   /** The (flag, cents, cnt) lineitem price histogram shared by
     * q81/q83/q85 — the ONE row-level pass the whole robust-statistics
-    * family needs, memoized per (application, source dir) and eagerly
-    * lineage-truncated ([[Ckpt]]). The memo survives the SQL cache
-    * clears the bench harness issues between entries, so a session
-    * running several family members scans lineitem once, not once per
-    * query; cells are bounded by the VALUE DOMAIN (distinct cents per
-    * flag), so holding them is a cells-sized cost at any corpus size.
-    * Keyed by applicationId + dir: gauntlets that run the family over
-    * multiple corpora in one JVM never cross-contaminate.
-    *
-    * The memo deliberately survives `cacheManager.clearCache()` — a
-    * BENCH session is supposed to measure the family at its shared-scan
-    * cost. The GAUNTLETS are the opposite contract (their cold min-of-3
-    * must audit the lineitem scan's linearity), so they call
-    * [[clearMemos]] alongside clearCache in every timed iteration;
-    * eviction also unpersists the frames and releases the
-    * localCheckpoint blocks to the ContextCleaner. */
-  private val centsHistMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      org.apache.spark.sql.DataFrame]()
-
-  /** Gauntlet hook: evict the memoized histograms so cold runs re-scan
-    * lineitem (see the memo scaladoc). Safe to call at any time — the
-    * next family member simply rebuilds. */
-  private[graft] def clearMemos(): Unit = {
-    centsHistMemo.values().forEach { df =>
-      scala.util.Try(df.unpersist(blocking = false))
-    }
-    centsHistMemo.clear()
-  }
+    * family needs. It is cached, so within a session the CacheManager
+    * hands every family member the same cells (one lineitem scan) until
+    * `clearCache`; cells are bounded by the VALUE DOMAIN (distinct cents
+    * per flag), so holding them is a cells-sized cost at any corpus size. */
   private def centsHist(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    centsHistMemo.computeIfAbsent(
-      (spark.sparkContext.applicationId, dir), _ =>
-        Ckpt(T(spark, dir, "lineitem")
-          .selectExpr("l_returnflag as flag",
-            "cast(cast(l_extendedprice as decimal(12,4)) * 100 as bigint) as c")
-          .groupBy("flag", "c").agg(count(lit(1)).as("cnt"))))
+    T(spark, dir, "lineitem")
+      .selectExpr("l_returnflag as flag",
+        "cast(cast(l_extendedprice as decimal(12,4)) * 100 as bigint) as c")
+      .groupBy("flag", "c").agg(count(lit(1)).as("cnt")).cache()
 
   /** Winsorized robust aggregation: per return flag, clamp
     * l_extendedprice to its exact nearest-rank p05/p95 and report the

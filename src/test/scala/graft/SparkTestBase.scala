@@ -5,20 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs. One session per JVM (Test/fork := true). */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match the Verify/Bench mains: posting-list aggregations build
-      // high-cardinality collect_list groups
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

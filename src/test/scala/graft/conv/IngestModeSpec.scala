@@ -95,7 +95,11 @@ class IngestModeSpec extends SparkSpec {
       ProtoWire.encode(DynamicMessage(md, Map(md.byName(field).number -> v)), reg)
     val bad = Seq(
       wire("date_value", DynamicMessage(WellKnown.date, Map(1 -> 2024, 2 -> 13, 3 -> 1))),
-      wire("timestamp_value", DynamicMessage(WellKnown.timestamp, Map(1 -> Long.MaxValue))))
+      wire("timestamp_value", DynamicMessage(WellKnown.timestamp, Map(1 -> Long.MaxValue))),
+      // Duration/TimeOfDay ticks past Long at the default nanos unit
+      wire("duration_value", DynamicMessage(WellKnown.duration, Map(1 -> 9223372037L))),
+      wire("duration_value", DynamicMessage(WellKnown.duration, Map(1 -> -9223372037L))),
+      wire("time_of_day_value", DynamicMessage(WellKnown.timeOfDay, Map(1 -> Int.MaxValue))))
     val good = wire("date_value", DynamicMessage(WellKnown.date, Map(1 -> 2024, 2 -> 12, 3 -> 1)))
     val ds = spark.createDataset(bad :+ good)(org.apache.spark.sql.Encoders.BINARY)
     val rejects = Protarrow.fromProtoBinary(ds, md, GraftConfig(), reg, IngestMode.Permissive)

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev diagnostic (`sbt "Test/runMain graft.operators.CCDiag <dir>"`):
   * round counts + wall time of both connected-component engines on a
@@ -11,13 +10,7 @@ import org.apache.spark.sql.SparkSession
 object CCDiag {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_skew")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session()
     val sh = Dedup.cappedShingleSets(Dedup.shingleHashes(spark, dir).cache()).cache()
     val pairs = Dedup.lshVerifiedPairs(sh).select("a_id", "b_id").cache()
     println(s"[ccdiag] pairs=${pairs.count()}")

@@ -158,6 +158,31 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
+  test("q81 and q83 share one cached cents histogram until clearCache") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // every cached relation a plan reads, including those read inside
+    // other cached frames' plans (q83 caches frames built over the cells)
+    def cached(rs: Seq[InMemoryRelation]): Seq[InMemoryRelation] =
+      if (rs.isEmpty) rs else rs ++ cached(rs.flatMap(r => aqe.collect(r.cacheBuilder.cachedPlan) {
+        case s: InMemoryTableScanExec => s.relation }))
+    def hist(p: LogicalPlan) = cached(p.collect { case r: InMemoryRelation => r })
+      .filter(_.output.map(_.name) == Seq("flag", "c", "cnt"))
+    val cm = spark.sharedState.cacheManager
+    cm.clearCache()
+    Relational2.q81WinsorizedAgg.fn(spark, sfDir).collect()
+    val q83 = Relational2.q83MadOutliers.fn(spark, sfDir)
+    val shared = hist(q83.queryExecution.optimizedPlan)
+    assert(shared.nonEmpty, "q83 does not read the cached histogram")
+    assert(shared.forall(_.cacheBuilder.isCachedColumnBuffersLoaded),
+      "q83 would rescan lineitem: the histogram q81 built is not the one it reads")
+    cm.clearCache()
+    val fresh = spark.sessionState.executePlan(q83.queryExecution.logical).optimizedPlan
+    assert(hist(fresh).isEmpty, "clearCache left the histogram cached")
+  }
+
   test("entry returns rows at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
