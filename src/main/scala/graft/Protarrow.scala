@@ -97,17 +97,19 @@ object Protarrow {
       cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry): Dataset[Array[Byte]] = {
     val spark = df.sparkSession
-    val reader = Codecs.internalRowReader(md, df.schema, cfg, reg)
+    val encode = WireRows.encoder(md, df.schema, cfg, reg)
     // queryExecution.toRdd keeps rows in catalyst form on the executors
-    // (no per-row external deserialization). Buffer-reuse safe: the
-    // reader materializes every value into fresh objects before the
-    // iterator advances. Listener/UI attribution: the returned Dataset is
-    // lazy — whatever action the caller runs on it registers its own
-    // execution id covering this lineage, so the work stays visible.
-    import spark.implicits._
+    // (no per-row external deserialization); the encoder reads each row
+    // before the iterator advances, so buffer reuse is safe. Each
+    // partition owns one Writer, reused for every row. Listener/UI
+    // attribution: the returned Dataset is lazy — whatever action the
+    // caller runs on it registers its own execution id covering this
+    // lineage, so the work stays visible.
     spark.createDataset(
-      df.queryExecution.toRdd.mapPartitions(rows =>
-        rows.map(r => ProtoWire.encode(reader(r)))))(Encoders.BINARY)
+      df.queryExecution.toRdd.mapPartitions { rows =>
+        val w = new ProtoWire.Writer()
+        rows.map(r => encode(r, w))
+      })(Encoders.BINARY)
   }
 
   /** Distributed encode from wire-format bytes (micro-batch/Kafka shape —
@@ -122,7 +124,7 @@ object Protarrow {
       reg: ProtoRegistry = WellKnown.registry,
       mode: IngestMode = IngestMode.FailFast): DataFrame = {
     permissiveScan(ds.sparkSession, ds.rdd, md, cfg, reg, mode, BinaryType,
-      b => ProtoWire.decode(b, md, reg), (b: Array[Byte]) => b)
+      WireRows.decoder(md, cfg, reg), (b: Array[Byte]) => b)
   }
 
   /** Proto-JSONL scan (the fixture-loader shape,
@@ -139,34 +141,37 @@ object Protarrow {
       mode: IngestMode = IngestMode.FailFast): DataFrame = {
     val lines = spark.read.textFile(path).rdd
       .mapPartitions(_.filter(_.trim.nonEmpty))
-    permissiveScan(spark, lines, md, cfg, reg, mode, StringType,
-      l => ProtoJson.parse(l, md, reg), (l: String) => UTF8String.fromString(l))
+    val write = Codecs.internalRowWriter(md, cfg, reg)
+    permissiveScan(spark, lines, md, cfg, reg, mode, StringType, (l: String) => write(
+      try ProtoJson.parse(l, md, reg) catch {
+        case NonFatal(e) if !e.isInstanceOf[IllegalArgumentException] =>
+          throw new IllegalArgumentException(s"malformed proto JSON: $e", e)
+      }), (l: String) => UTF8String.fromString(l))
   }
 
-  /** Shared malformed-record machinery for the ingest scans: decodes each
-    * record, encodes it with [[Codecs.internalRowWriter]] and wraps both
-    * steps in the [[IngestMode]] contract. The catch is per-record INSIDE
+  /** Shared malformed-record machinery for the ingest scans: converts each
+    * record to an InternalRow and wraps that in the [[IngestMode]]
+    * contract. A record is malformed when its conversion raises
+    * IllegalArgumentException: [[WireRows.decoder]] raises nothing else
+    * (truncation, bad lengths, nesting depth, a Timestamp/Date/TimeOfDay/
+    * Duration its column cannot hold), and the JSONL scan raises a parse
+    * failure or an out-of-range value as one. Any other exception is an
+    * ENGINE bug, not dirty data, and propagates rather than being
+    * reclassified as a corrupt record. The catch is per-record INSIDE
     * mapPartitions — the partition iterator keeps streaming, so tolerance
     * costs nothing on the happy path and no executor-side buffering
-    * anywhere. A record is malformed when the decode (`ProtoJson.parse` /
-    * `ProtoWire.decode`) fails, or when the writer rejects a decoded value
-    * as out of range (IllegalArgumentException: a month-13 Date). Any other
-    * writer failure is an ENGINE bug, not dirty data, and must propagate
-    * rather than be reclassified as a corrupt record. `raw` gives a
-    * reject's catalyst value for the `corruptType` column. */
+    * anywhere. `raw` gives a reject's catalyst value for the `corruptType`
+    * column. */
   private def permissiveScan[A](spark: SparkSession, rdd: RDD[A],
       md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry, mode: IngestMode,
-      corruptType: DataType, decode: A => DynamicMessage, raw: A => Any): DataFrame = {
+      corruptType: DataType, convert: A => InternalRow, raw: A => Any): DataFrame = {
     val schema = messageTypeToSchema(md, cfg, reg)
-    val write = Codecs.internalRowWriter(md, cfg, reg)
     def converted(a: A): Option[InternalRow] =
-      (try Some(decode(a)) catch { case NonFatal(_) => None }).flatMap { m =>
-        try Some(write(m)) catch { case _: IllegalArgumentException => None }
-      }
+      try Some(convert(a)) catch { case _: IllegalArgumentException => None }
     mode match {
       case IngestMode.FailFast =>
         GraftBridge.internalDataFrame(spark, schema,
-          rdd.mapPartitions(_.map(a => write(decode(a)))))
+          rdd.mapPartitions(_.map(convert)))
       case IngestMode.DropMalformed =>
         GraftBridge.internalDataFrame(spark, schema,
           rdd.mapPartitions(_.flatMap(converted)))

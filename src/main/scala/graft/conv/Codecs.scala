@@ -15,8 +15,10 @@ import graft.proto.PType._
 /** Encode (messages → rows, SURVEY.md §2 A2) and decode (rows → messages,
   * A3/A5), as schema-compiled converter trees over catalyst's internal
   * representations (UTF8String, epoch micros/days, InternalRow,
-  * ArrayData/MapData) — one tree, one definition per leaf, the shape of
-  * Spark's own ProtobufSerializer/ProtobufDeserializer. All dispatch
+  * ArrayData/MapData) — one tree, the shape of Spark's own
+  * ProtobufSerializer/ProtobufDeserializer. Its enum and well-known-type
+  * leaves are defined once, below, and shared with the direct wire codec
+  * ([[WireRows]]) that the wire scans use. All dispatch
   * happens once per (descriptor, config) on the driver — mirroring the
   * reference's compile-once discipline (`_get_converter`
   * proto_to_arrow.py:386-414, `MessageExtractor.__init__`
@@ -27,6 +29,82 @@ import graft.proto.PType._
   * `CatalystTypeConverters`.
   */
 object Codecs {
+
+  // ---------------------------------------------------------------- leaves
+  // Every enum and well-known-type conversion is defined once, here: the
+  // DynamicMessage trees below and the direct wire codec ([[WireRows]])
+  // both call these.
+
+  /** Enum number → name; an unknown number takes the first declared name
+    * (proto_to_arrow.py:236-264). */
+  def enumName(ed: PEnumDesc, n: Int): String = ed.numberToName.getOrElse(n, ed.firstName)
+
+  /** Enum name → number; an unknown name reads as 0
+    * (arrow_to_proto.py:279-291). */
+  def enumNumber(ed: PEnumDesc, name: String): Int = ed.nameToNumber.getOrElse(name, 0)
+
+  /** Timestamp → epoch µs, floored to the configured unit (µs at finest). */
+  def timestampMicros(secs: Long, nanos: Int, cfg: GraftConfig): Long = {
+    val floor = math.max(cfg.timestampUnit.nanos, 1000L)
+    inRange(WellKnown.TimestampName, s"seconds=$secs nanos=$nanos")(
+      DateTimeUtils.instantToMicros(Instant.ofEpochSecond(secs, nanos - nanos % floor)))
+  }
+  def timestampSeconds(micros: Long): Long = Math.floorDiv(micros, 1000000L)
+  def timestampNanos(micros: Long): Int = (Math.floorMod(micros, 1000000L) * 1000L).toInt
+
+  /** Date → epoch day; year 0 (unset) is the sentinel day
+    * (docs/types.md:79-84). */
+  def dateDays(year: Int, month: Int, day: Int): Int =
+    if (year == 0) SchemaConversion.DateSentinelEpochDay.toInt
+    else inRange(WellKnown.DateName, s"year=$year month=$month day=$day")(
+      DateTimeUtils.localDateToDays(LocalDate.of(year, month, day)))
+
+  /** Epoch day → its date; null for the sentinel (an unset Date). */
+  def dateOf(days: Int): LocalDate =
+    if (days == SchemaConversion.DateSentinelEpochDay) null else LocalDate.ofEpochDay(days.toLong)
+
+  /** TimeOfDay → ticks of the configured unit. */
+  def timeOfDayTicks(hours: Int, minutes: Int, seconds: Int, nanos: Int,
+      cfg: GraftConfig): Long =
+    inRange(WellKnown.TimeOfDayName,
+        s"hours=$hours minutes=$minutes seconds=$seconds nanos=$nanos")(
+      Math.addExact(Math.multiplyExact(hours * 3600L + minutes * 60L + seconds,
+        1000000000L), nanos.toLong) / cfg.timeOfDayUnit.nanos)
+
+  /** Ticks → the TimeOfDay's (hours, minutes, seconds, nanos). */
+  def timeOfDayFields(ticks: Long, cfg: GraftConfig): Array[Int] = {
+    val totalNanos = ticks * cfg.timeOfDayUnit.nanos
+    Array((totalNanos / 3600000000000L).toInt, ((totalNanos / 60000000000L) % 60).toInt,
+      ((totalNanos / 1000000000L) % 60).toInt, (totalNanos % 1000000000L).toInt)
+  }
+
+  /** Duration → ticks of the configured unit. */
+  def durationTicks(secs: Long, nanos: Int, cfg: GraftConfig): Long =
+    inRange(WellKnown.DurationName, s"seconds=$secs nanos=$nanos")(Math.addExact(
+      Math.multiplyExact(secs, 1000000000L / cfg.durationUnit.nanos),
+      nanos / cfg.durationUnit.nanos))
+
+  // ticks → Duration by floor decomposition: nanos always >= 0, like the
+  // reference's Python // and % (arrow_to_proto.py:84-104)
+  def durationSeconds(ticks: Long, cfg: GraftConfig): Long =
+    Math.floorDiv(ticks, 1000000000L / cfg.durationUnit.nanos)
+  def durationNanos(ticks: Long, cfg: GraftConfig): Int =
+    (Math.floorMod(ticks, 1000000000L / cfg.durationUnit.nanos) * cfg.durationUnit.nanos).toInt
+
+  /** A Timestamp, Date, TimeOfDay or Duration that its column cannot hold
+    * (seconds past the µs range, month 13, ticks past Long) comes from the
+    * input, not from an engine fault: it raises IllegalArgumentException,
+    * which the ingest scans treat as a malformed record. */
+  private def inRange[T](typeName: String, fields: => String)(convert: => T): T =
+    try convert catch {
+      case e @ (_: java.time.DateTimeException | _: ArithmeticException) =>
+        throw new IllegalArgumentException(s"$typeName out of range: $fields", e)
+    }
+
+  /** A message type already on the path from the root is a recursion,
+    * pruned to struct<> (proto_to_arrow.py:341-345): the payload is
+    * dropped, presence survives as an empty row. */
+  def pruned(messageName: String, trace: Vector[String]): Boolean = trace.contains(messageName)
 
   // ---------------------------------------------------------------- encode
 
@@ -46,73 +124,43 @@ object Codecs {
     case PBytes => v => v.asInstanceOf[Bytes].toArray
     case PEnum(name) =>
       val ed = reg.enum(name)
-      // unknown number → name of the first declared value
-      // (proto_to_arrow.py:236-264)
-      def enumName(v: Any) = ed.numberToName.getOrElse(v.asInstanceOf[Int], ed.firstName)
       if (!cfg.enumType.nameBased) identity
-      else if (cfg.enumType.binary) v => enumName(v).getBytes(UTF_8)
-      else v => UTF8String.fromString(enumName(v))
+      else if (cfg.enumType.binary) v => enumName(ed, v.asInstanceOf[Int]).getBytes(UTF_8)
+      else v => UTF8String.fromString(enumName(ed, v.asInstanceOf[Int]))
     case PMessage(WellKnown.TimestampName) =>
-      val floor = math.max(cfg.timestampUnit.nanos, 1000L)
       v => {
         val m = v.asInstanceOf[DynamicMessage]
-        val secs = m.getOrDefault(WellKnown.timestamp.byName("seconds")).asInstanceOf[Long]
-        val nanos = m.getOrDefault(WellKnown.timestamp.byName("nanos")).asInstanceOf[Int]
-        inRange(m)(DateTimeUtils.instantToMicros(
-          Instant.ofEpochSecond(secs, nanos - nanos % floor)))
+        timestampMicros(m.getOrDefault(WellKnown.timestamp.fields(0)).asInstanceOf[Long],
+          m.getOrDefault(WellKnown.timestamp.fields(1)).asInstanceOf[Int], cfg)
       }
     case PMessage(WellKnown.DateName) =>
       v => {
-        val m = v.asInstanceOf[DynamicMessage]
-        val y = m.getOrDefault(WellKnown.date.byName("year")).asInstanceOf[Int]
-        // year 0 = unset → sentinel day (docs/types.md:79-84)
-        if (y == 0) SchemaConversion.DateSentinelEpochDay.toInt
-        else inRange(m)(DateTimeUtils.localDateToDays(LocalDate.of(y,
-          m.getOrDefault(WellKnown.date.byName("month")).asInstanceOf[Int],
-          m.getOrDefault(WellKnown.date.byName("day")).asInstanceOf[Int])))
+        def i(k: Int) = v.asInstanceOf[DynamicMessage]
+          .getOrDefault(WellKnown.date.fields(k)).asInstanceOf[Int]
+        dateDays(i(0), i(1), i(2))
       }
     case PMessage(WellKnown.TimeOfDayName) =>
-      val unit = cfg.timeOfDayUnit.nanos
       v => {
-        val m = v.asInstanceOf[DynamicMessage]
-        def i(n: String) = m.getOrDefault(WellKnown.timeOfDay.byName(n)).asInstanceOf[Int]
-        inRange(m)(Math.addExact(Math.multiplyExact(
-          i("hours") * 3600L + i("minutes") * 60L + i("seconds"), 1000000000L),
-          i("nanos").toLong) / unit)
+        def i(k: Int) = v.asInstanceOf[DynamicMessage]
+          .getOrDefault(WellKnown.timeOfDay.fields(k)).asInstanceOf[Int]
+        timeOfDayTicks(i(0), i(1), i(2), i(3), cfg)
       }
     case PMessage(WellKnown.DurationName) =>
-      val ticksPerSec = 1000000000L / cfg.durationUnit.nanos
-      val unit = cfg.durationUnit.nanos
       v => {
         val m = v.asInstanceOf[DynamicMessage]
-        val secs = m.getOrDefault(WellKnown.duration.byName("seconds")).asInstanceOf[Long]
-        val nanos = m.getOrDefault(WellKnown.duration.byName("nanos")).asInstanceOf[Int]
-        inRange(m)(Math.addExact(Math.multiplyExact(secs, ticksPerSec), nanos / unit))
+        durationTicks(m.getOrDefault(WellKnown.duration.fields(0)).asInstanceOf[Long],
+          m.getOrDefault(WellKnown.duration.fields(1)).asInstanceOf[Int], cfg)
       }
     case PMessage(name) if WellKnown.isWrapper(name) =>
       val inner = catalystValueWriter(WellKnown.wrapperNames(name), cfg, reg, trace)
       val field = reg.message(name).byName("value")
       v => inner(v.asInstanceOf[DynamicMessage].getOrDefault(field))
     case PMessage(WellKnown.EmptyName) => _ => InternalRow.empty
-    case PMessage(name) if trace.contains(name) =>
-      // recursion pruned to struct<> (proto_to_arrow.py:341-345): the
-      // payload is dropped, presence survives as an empty row
-      _ => InternalRow.empty
+    case PMessage(name) if pruned(name, trace) => _ => InternalRow.empty
     case PMessage(name) =>
       val rw = catalystRowWriter(reg.message(name), cfg, reg, trace :+ name)
       v => rw(v.asInstanceOf[DynamicMessage])
   }
-
-  /** A Timestamp, Date, TimeOfDay or Duration that its column cannot hold
-    * (seconds past the µs range, month 13, ticks past Long) comes from the
-    * input, not from an engine fault: it raises IllegalArgumentException,
-    * which the ingest scans treat as a malformed record. */
-  private def inRange[T](m: DynamicMessage)(convert: => T): T =
-    try convert catch {
-      case e @ (_: java.time.DateTimeException | _: ArithmeticException) =>
-        throw new IllegalArgumentException(
-          s"${m.descriptor.fullName} out of range: ${m.values}", e)
-    }
 
   /** One field of a message → the cell value (null for absent presence
     * fields; defaults for absent plain fields — proto_to_arrow.py:417-453,
@@ -165,18 +213,26 @@ object Codecs {
     * session's `datetime.java8API` setting. */
   def rowWriter(md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry): DynamicMessage => Row = {
     val write = internalRowWriter(md, cfg, reg)
+    val toRow = externalRow(SchemaConversion.messageTypeToSchema(md, cfg, reg))
+    m => toRow(write(m))
+  }
+
+  /** Spark's own internal→external converter for `schema`, built so that
+    * it emits java.time cells (Instant / LocalDate) whatever the
+    * session's `datetime.java8API` setting. */
+  def externalRow(schema: StructType): InternalRow => Row = {
     val java8 = SQLConf.get.clone()
     java8.setConf(SQLConf.DATETIME_JAVA8API_ENABLED, true)
-    val toRow = SQLConf.withExistingConf(java8)(CatalystTypeConverters
-      .createToScalaConverter(SchemaConversion.messageTypeToSchema(md, cfg, reg)))
-    m => toRow(write(m)).asInstanceOf[Row]
+    val toRow = SQLConf.withExistingConf(java8)(
+      CatalystTypeConverters.createToScalaConverter(schema))
+    r => toRow(r).asInstanceOf[Row]
   }
 
   // ---------------------------------------------------------------- decode
 
   /** Scalar/WKT decoder: catalyst internal value of Spark type `dt` →
     * canonical proto value. */
-  private def catalystValueReader(t: PType, dt: DataType, cfg: GraftConfig,
+  private[conv] def catalystValueReader(t: PType, dt: DataType, cfg: GraftConfig,
       reg: ProtoRegistry): Any => Any = t match {
     case PDouble | PFloat | PBool => identity
     case PInt32 | PSInt32 | PSFixed32 => v => v.asInstanceOf[Int]
@@ -186,49 +242,34 @@ object Codecs {
     case PBytes => v => Bytes(v.asInstanceOf[Array[Byte]])
     case PEnum(name) =>
       val ed = reg.enum(name)
-      // unknown name → 0 (arrow_to_proto.py:279-291)
       if (!cfg.enumType.nameBased) v => v.asInstanceOf[Int]
       else if (cfg.enumType.binary)
-        v => ed.nameToNumber.getOrElse(new String(v.asInstanceOf[Array[Byte]], UTF_8), 0)
-      else v => ed.nameToNumber.getOrElse(v.asInstanceOf[UTF8String].toString, 0)
+        v => enumNumber(ed, new String(v.asInstanceOf[Array[Byte]], UTF_8))
+      else v => enumNumber(ed, v.asInstanceOf[UTF8String].toString)
     case PMessage(WellKnown.TimestampName) if dt == TimestampType =>
       v => {
         val micros = v.asInstanceOf[Long]
-        DynamicMessage(WellKnown.timestamp, Map(
-          1 -> Math.floorDiv(micros, 1000000L),
-          2 -> (Math.floorMod(micros, 1000000L) * 1000L).toInt))
+        DynamicMessage(WellKnown.timestamp,
+          Map(1 -> timestampSeconds(micros), 2 -> timestampNanos(micros)))
       }
     case PMessage(WellKnown.DateName) if dt == DateType =>
       v => {
-        val days = v.asInstanceOf[Int].toLong
-        if (days == SchemaConversion.DateSentinelEpochDay)
-          DynamicMessage.empty(WellKnown.date) // sentinel → unset Date()
-        else {
-          val ld = LocalDate.ofEpochDay(days)
-          DynamicMessage(WellKnown.date,
-            Map(1 -> ld.getYear, 2 -> ld.getMonthValue, 3 -> ld.getDayOfMonth))
-        }
+        val ld = dateOf(v.asInstanceOf[Int])
+        if (ld == null) DynamicMessage.empty(WellKnown.date) // sentinel → unset Date()
+        else DynamicMessage(WellKnown.date,
+          Map(1 -> ld.getYear, 2 -> ld.getMonthValue, 3 -> ld.getDayOfMonth))
       }
     case PMessage(WellKnown.TimeOfDayName) =>
-      val unit = cfg.timeOfDayUnit.nanos
       v => {
-        val totalNanos = toLong(v) * unit
-        DynamicMessage(WellKnown.timeOfDay, Map(
-          1 -> (totalNanos / 3600000000000L).toInt,
-          2 -> ((totalNanos / 60000000000L) % 60).toInt,
-          3 -> ((totalNanos / 1000000000L) % 60).toInt,
-          4 -> (totalNanos % 1000000000L).toInt))
+        val hmsn = timeOfDayFields(toLong(v), cfg)
+        DynamicMessage(WellKnown.timeOfDay,
+          Map(1 -> hmsn(0), 2 -> hmsn(1), 3 -> hmsn(2), 4 -> hmsn(3)))
       }
     case PMessage(WellKnown.DurationName) =>
-      val ticksPerSec = 1000000000L / cfg.durationUnit.nanos
-      val unit = cfg.durationUnit.nanos
       v => {
-        // floor decomposition — nanos always >= 0, like the reference's
-        // Python // and % (arrow_to_proto.py:84-104)
         val ticks = toLong(v)
-        DynamicMessage(WellKnown.duration, Map(
-          1 -> Math.floorDiv(ticks, ticksPerSec),
-          2 -> (Math.floorMod(ticks, ticksPerSec) * unit).toInt))
+        DynamicMessage(WellKnown.duration,
+          Map(1 -> durationSeconds(ticks, cfg), 2 -> durationNanos(ticks, cfg)))
       }
     case PMessage(name) if WellKnown.isWrapper(name) =>
       val wrapperDesc = reg.message(name)
@@ -246,7 +287,7 @@ object Codecs {
       v => throw new IllegalArgumentException(s"cannot decode a $dt cell as $t: $v")
   }
 
-  private def toLong(v: Any): Long = v match {
+  def toLong(v: Any): Long = v match {
     case l: Long => l
     case i: Int => i.toLong
     case other => throw new IllegalArgumentException(s"not integral: $other")

@@ -1,53 +1,139 @@
 package graft.proto
 
-import java.io.ByteArrayOutputStream
+import java.nio.charset.StandardCharsets.UTF_8
 import graft.proto.PType._
 
 /** Proto3 wire-format codec over the descriptor IR (the public protobuf
   * encoding spec: varint / zigzag / fixed32 / fixed64 / length-delimited;
   * packed repeated scalars; maps as repeated entry messages).
   *
-  * Needed because the environment has no protobuf-java (SURVEY.md §7.0);
-  * powers `to_proto`/`from_proto` binary parity
-  * ([[graft.Protarrow.toProtoBinary]] / fromProtoBinary).
+  * Needed because the environment has no protobuf-java (SURVEY.md §7.0).
+  * [[encode]] / [[decode]] are the DynamicMessage API (driver side and the
+  * reference for parity checks); the [[Reader]], [[Writer]] and wire-type
+  * rules here are the primitives every wire codec shares, including the
+  * direct wire ↔ InternalRow codec behind
+  * [[graft.Protarrow.toProtoBinary]] / fromProtoBinary
+  * ([[graft.conv.WireRows]]).
   */
 object ProtoWire {
 
-  private final val Varint = 0
-  private final val Fixed64 = 1
-  private final val Len = 2
-  private final val Fixed32 = 5
+  final val Varint = 0
+  final val Fixed64 = 1
+  final val Len = 2
+  final val Fixed32 = 5
 
-  private def wireType(t: PType): Int = t match {
+  def wireType(t: PType): Int = t match {
     case PDouble | PFixed64 | PSFixed64 => Fixed64
     case PFloat | PFixed32 | PSFixed32 => Fixed32
     case PString | PBytes | PMessage(_) => Len
     case _ => Varint
   }
 
-  private def packable(t: PType): Boolean = t match {
+  def packable(t: PType): Boolean = t match {
     case PString | PBytes | PMessage(_) => false
     case _ => true
   }
 
+  /** Does the tag's wire type match what the descriptor declares? A
+    * mismatch (schema evolution, corrupt tag) means the payload is NOT the
+    * declared field — protobuf-java treats it as an unknown field and
+    * skips it rather than misparsing the bytes. Packed repeated scalars
+    * legitimately arrive as either Len (packed) or their scalar wire type
+    * (unpacked), so both are accepted. */
+  def wireTypeMatches(f: PField, wt: Int): Boolean =
+    if (f.isMap) wt == Len
+    else if (f.repeated && packable(f.typ)) wt == Len || wt == wireType(f.typ)
+    else wt == wireType(f.typ)
+
+  /** Nesting cap on decode, matching protobuf-java's default: a crafted
+    * deeply-recursive payload must raise, not blow the executor's stack. */
+  val MaxDecodeDepth = 100
+
+  def checkDepth(depth: Int): Unit =
+    if (depth > MaxDecodeDepth) throw new IllegalArgumentException(
+      s"message nesting exceeds $MaxDecodeDepth levels")
+
   // ---------------------------------------------------------------- encode
 
-  final class Writer(val out: ByteArrayOutputStream = new ByteArrayOutputStream()) {
+  /** Unsynchronized growable byte buffer with the wire encodings. One
+    * Writer serves a whole record, nested messages included: a
+    * length-delimited payload reserves one length byte ([[beginLen]]),
+    * is written in place, and [[endLen]] back-patches the length (moving
+    * the payload up when the length needs more than one byte). Reusable
+    * across records through [[reset]]. */
+  final class Writer(initialSize: Int = 256) {
+    private var buf = new Array[Byte](math.max(initialSize, 16))
+    private var pos = 0
+
+    /** Bytes written since the last reset. */
+    def size: Int = pos
+    def reset(): Unit = pos = 0
+    /** The bytes written so far, as an exact-length copy. */
+    def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, pos)
+    /** This writer, for callers that read the encoding as `w.out.toByteArray`. */
+    def out: Writer = this
+
+    private def ensure(n: Int): Unit =
+      if (n > buf.length - pos) {
+        val want = pos.toLong + n
+        if (want > Int.MaxValue - 8) throw new IllegalArgumentException(
+          s"encoded record exceeds ${Int.MaxValue - 8} bytes")
+        buf = java.util.Arrays.copyOf(buf, math.max(want, buf.length * 2L)
+          .min(Int.MaxValue - 8L).toInt)
+      }
+
+    /** Makes room for `n` bytes at offset [[size]] and returns the buffer;
+      * the caller fills them and calls [[advance]]. */
+    def claim(n: Int): Array[Byte] = { ensure(n); buf }
+    def advance(n: Int): Unit = pos += n
+
     def varint(v: Long): Unit = {
+      ensure(10)
       var x = v
       while ((x & ~0x7FL) != 0) {
-        out.write(((x & 0x7F) | 0x80).toInt)
+        buf(pos) = ((x & 0x7F) | 0x80).toByte
+        pos += 1
         x = x >>> 7
       }
-      out.write(x.toInt)
+      buf(pos) = x.toByte
+      pos += 1
     }
     def tag(field: Int, wt: Int): Unit = varint((field.toLong << 3) | wt)
     def fixed32(v: Int): Unit = {
-      out.write(v & 0xFF); out.write((v >>> 8) & 0xFF)
-      out.write((v >>> 16) & 0xFF); out.write((v >>> 24) & 0xFF)
+      ensure(4)
+      buf(pos) = v.toByte; buf(pos + 1) = (v >>> 8).toByte
+      buf(pos + 2) = (v >>> 16).toByte; buf(pos + 3) = (v >>> 24).toByte
+      pos += 4
     }
     def fixed64(v: Long): Unit = { fixed32(v.toInt); fixed32((v >>> 32).toInt) }
-    def bytes(b: Array[Byte]): Unit = { varint(b.length.toLong); out.write(b) }
+    def raw(b: Array[Byte], off: Int, len: Int): Unit = {
+      ensure(len)
+      System.arraycopy(b, off, buf, pos, len)
+      pos += len
+    }
+    def bytes(b: Array[Byte]): Unit = { varint(b.length.toLong); raw(b, 0, b.length) }
+
+    /** Reserves the length prefix of a length-delimited payload; returns
+      * the mark [[endLen]] needs. */
+    def beginLen(): Int = { ensure(1); pos += 1; pos - 1 }
+    def endLen(mark: Int): Unit = {
+      val len = pos - mark - 1
+      val n = if (len < (1 << 7)) 1 else if (len < (1 << 14)) 2
+        else if (len < (1 << 21)) 3 else if (len < (1 << 28)) 4 else 5
+      if (n > 1) {
+        ensure(n - 1)
+        System.arraycopy(buf, mark + 1, buf, mark + n, len)
+        pos += n - 1
+      }
+      var p = mark
+      var x = len
+      while ((x & ~0x7F) != 0) {
+        buf(p) = ((x & 0x7F) | 0x80).toByte
+        p += 1
+        x = x >>> 7
+      }
+      buf(p) = x.toByte
+    }
   }
 
   def zigzag32(v: Int): Long = ((v << 1) ^ (v >> 31)).toLong & 0xFFFFFFFFL
@@ -55,7 +141,8 @@ object ProtoWire {
   def unzigzag32(v: Long): Int = (((v >>> 1) ^ -(v & 1)).toInt)
   def unzigzag64(v: Long): Long = (v >>> 1) ^ -(v & 1)
 
-  private def writeScalar(w: Writer, t: PType, v: Any, reg: ProtoRegistry): Unit = t match {
+  /** One canonical proto value of type `t` (no tag). */
+  def writeScalar(w: Writer, t: PType, v: Any, reg: ProtoRegistry): Unit = t match {
     case PDouble => w.fixed64(java.lang.Double.doubleToLongBits(v.asInstanceOf[Double]))
     case PFloat => w.fixed32(java.lang.Float.floatToIntBits(v.asInstanceOf[Float]))
     case PInt32 => w.varint(v.asInstanceOf[Int].toLong) // sign-extended per spec
@@ -69,18 +156,24 @@ object ProtoWire {
     case PSFixed32 => w.fixed32(v.asInstanceOf[Int])
     case PSFixed64 => w.fixed64(v.asInstanceOf[Long])
     case PBool => w.varint(if (v.asInstanceOf[Boolean]) 1L else 0L)
-    case PString => w.bytes(v.asInstanceOf[String]
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    case PString => w.bytes(v.asInstanceOf[String].getBytes(UTF_8))
     case PBytes => w.bytes(v.asInstanceOf[Bytes].toArray)
     case PEnum(_) => w.varint(v.asInstanceOf[Int].toLong)
-    case PMessage(_) => w.bytes(encode(v.asInstanceOf[DynamicMessage], reg))
+    case PMessage(_) =>
+      val mark = w.beginLen()
+      writeMessage(w, v.asInstanceOf[DynamicMessage], reg)
+      w.endLen(mark)
   }
 
   def encode(m: DynamicMessage, reg: ProtoRegistry = WellKnown.registry): Array[Byte] = {
     val w = new Writer()
+    writeMessage(w, m, reg)
+    w.toByteArray
+  }
+
+  private def writeMessage(w: Writer, m: DynamicMessage, reg: ProtoRegistry): Unit =
     // ascending field number: canonical, deterministic output (order is
-    // precomputed on the descriptor — encode runs per row per nested
-    // message on the toProtoBinary hot path)
+    // precomputed on the descriptor)
     m.descriptor.fieldsByNumberAsc.foreach { f =>
       m.get(f.number).foreach { v =>
         if (f.isMap) {
@@ -88,18 +181,20 @@ object ProtoWire {
             // both entry fields are ALWAYS serialized, defaults included —
             // protobuf-java/C++ map-entry serialization does the same, so
             // byte-for-byte parity holds for maps like {0 -> 0}
-            val entry = new Writer()
-            entry.tag(1, wireType(f.mapKey)); writeScalar(entry, f.mapKey, k, reg)
-            entry.tag(2, wireType(f.mapValue)); writeScalar(entry, f.mapValue, mv, reg)
-            w.tag(f.number, Len); w.bytes(entry.out.toByteArray)
+            w.tag(f.number, Len)
+            val mark = w.beginLen()
+            w.tag(1, wireType(f.mapKey)); writeScalar(w, f.mapKey, k, reg)
+            w.tag(2, wireType(f.mapValue)); writeScalar(w, f.mapValue, mv, reg)
+            w.endLen(mark)
           }
         } else if (f.repeated) {
           val xs = v.asInstanceOf[Vector[Any]]
           if (packable(f.typ)) {
             // proto3 default: packed
-            val payload = new Writer()
-            xs.foreach(x => writeScalar(payload, f.typ, x, reg))
-            w.tag(f.number, Len); w.bytes(payload.out.toByteArray)
+            w.tag(f.number, Len)
+            val mark = w.beginLen()
+            xs.foreach(x => writeScalar(w, f.typ, x, reg))
+            w.endLen(mark)
           } else xs.foreach { x =>
             w.tag(f.number, wireType(f.typ)); writeScalar(w, f.typ, x, reg)
           }
@@ -108,8 +203,6 @@ object ProtoWire {
         }
       }
     }
-    w.out.toByteArray
-  }
 
   // ---------------------------------------------------------------- decode
 
@@ -118,7 +211,8 @@ object ProtoWire {
     * payload) must raise a clear, catchable error — the previous unchecked
     * reads silently zero-padded truncated bytes (Arrays.copyOfRange pads)
     * and let a nested message with an oversized length prefix parse its
-    * PARENT's adjacent bytes as its own fields. */
+    * PARENT's adjacent bytes as its own fields. Every failure is an
+    * IllegalArgumentException. */
   final class Reader(buf: Array[Byte], var pos: Int, val end: Int) {
     def this(buf: Array[Byte]) = this(buf, 0, buf.length)
     def hasMore: Boolean = pos < end
@@ -177,8 +271,9 @@ object ProtoWire {
     }
   }
 
-  private def readScalar(r: Reader, t: PType, reg: ProtoRegistry,
-      depth: Int): Any = t match {
+  /** One canonical proto value of type `t` (message values nest one
+    * level deeper). */
+  def readScalar(r: Reader, t: PType, reg: ProtoRegistry, depth: Int): Any = t match {
     case PDouble => java.lang.Double.longBitsToDouble(r.fixed64())
     case PFloat => java.lang.Float.intBitsToFloat(r.fixed32())
     case PInt32 => r.varint().toInt
@@ -192,15 +287,11 @@ object ProtoWire {
     case PSFixed32 => r.fixed32()
     case PSFixed64 => r.fixed64()
     case PBool => r.varint() != 0L
-    case PString => new String(r.bytes(), java.nio.charset.StandardCharsets.UTF_8)
+    case PString => new String(r.bytes(), UTF_8)
     case PBytes => Bytes.owned(r.bytes())
     case PEnum(_) => r.varint().toInt
     case PMessage(name) => decodeReader(r.slice(), reg.message(name), reg, depth + 1)
   }
-
-  /** Nesting cap on decode, matching protobuf-java's default: a crafted
-    * deeply-recursive payload must raise, not blow the executor's stack. */
-  val MaxDecodeDepth = 100
 
   def decode(bytes: Array[Byte], md: PMessageDesc,
       reg: ProtoRegistry = WellKnown.registry): DynamicMessage =
@@ -230,21 +321,9 @@ object ProtoWire {
     DynamicMessage(md, merged)
   }
 
-  /** Does the tag's wire type match what the descriptor declares? A
-    * mismatch (schema evolution, corrupt tag) means the payload is NOT the
-    * declared field — protobuf-java treats it as an unknown field and
-    * skips it rather than misparsing the bytes. Packed repeated scalars
-    * legitimately arrive as either Len (packed) or their scalar wire type
-    * (unpacked), so both are accepted. */
-  private def wireTypeMatches(f: PField, wt: Int): Boolean =
-    if (f.isMap) wt == Len
-    else if (f.repeated && packable(f.typ)) wt == Len || wt == wireType(f.typ)
-    else wt == wireType(f.typ)
-
   private def decodeReader(r: Reader, md: PMessageDesc, reg: ProtoRegistry,
       depth: Int): DynamicMessage = {
-    if (depth > MaxDecodeDepth) throw new IllegalArgumentException(
-      s"message nesting exceeds $MaxDecodeDepth levels")
+    checkDepth(depth)
     var values = Map.empty[Int, Any]
     while (r.hasMore) {
       val t = r.varint()
@@ -254,19 +333,31 @@ object ProtoWire {
         case None => r.skip(wt) // unknown field
         case Some(f) if !wireTypeMatches(f, wt) => r.skip(wt) // wrong wire type → unknown
         case Some(f) if f.isMap =>
+          // an entry field whose wire type does not match is skipped as
+          // unknown, and a message value that occurs twice in one entry is
+          // merged (protobuf-java's MapEntryLite.parseEntry)
           val er = r.slice()
+          val kwt = wireType(f.mapKey)
+          val vwt = wireType(f.mapValue)
           var k: Any = PType.defaultOf(f.mapKey)
-          var v: Any = f.mapValue match {
-            case PMessage(name) => DynamicMessage.empty(reg.message(name))
-            case mt => PType.defaultOf(mt)
-          }
+          var v: Any = null
           while (er.hasMore) {
             val et = er.varint()
+            val ewt = (et & 7).toInt
             (et >>> 3).toInt match {
-              case 1 => k = readScalar(er, f.mapKey, reg, depth)
-              case 2 => v = readScalar(er, f.mapValue, reg, depth)
-              case _ => er.skip((et & 7).toInt)
+              case 1 if ewt == kwt => k = readScalar(er, f.mapKey, reg, depth)
+              case 2 if ewt == vwt =>
+                val x = readScalar(er, f.mapValue, reg, depth)
+                v = v match {
+                  case prev: DynamicMessage => mergeMessages(prev, x.asInstanceOf[DynamicMessage])
+                  case _ => x
+                }
+              case _ => er.skip(ewt)
             }
+          }
+          if (v == null) v = f.mapValue match {
+            case PMessage(name) => DynamicMessage.empty(reg.message(name))
+            case mt => PType.defaultOf(mt)
           }
           val prev = values.getOrElse(num, Map.empty[Any, Any]).asInstanceOf[Map[Any, Any]]
           values += (num -> (prev + (k -> v)))

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.proto._
-import graft.conv.{Codecs, GraftConfig, SchemaConversion}
+import graft.conv.{Codecs, GraftConfig, SchemaConversion, WireRows}
 import graft.operators.Ckpt.Rounds
 
 /** Structured Streaming surface (SURVEY.md §2 Part B, streaming row): the
@@ -19,22 +19,22 @@ import graft.operators.Ckpt.Rounds
 object StreamOps {
 
   /** Streaming decode: wire-format payload column → typed rows (the
-    * streaming twin of [[graft.Protarrow.fromProtoBinary]]; works on
-    * streaming Datasets because it avoids RDD APIs). */
+    * streaming twin of [[graft.Protarrow.fromProtoBinary]], with the same
+    * [[WireRows.decoder]]; works on streaming Datasets because it avoids
+    * RDD APIs). */
   def decodeProtoStream(payloads: Dataset[Array[Byte]], md: PMessageDesc,
       cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry): DataFrame = {
     val schema = SchemaConversion.messageTypeToSchema(md, cfg, reg)
-    val writer = Codecs.rowWriter(md, cfg, reg)
-    // lenient row encoder: the rowWriter adapter emits java.time values
-    // (Instant / LocalDate — proleptic, exact for ancient instants); the
-    // strict encoder would reject them for java.sql ones unless the
-    // session flips datetime.java8API. Lenient accepts both.
+    val decode = WireRows.decoder(md, cfg, reg)
+    val toRow = Codecs.externalRow(schema)
+    // lenient row encoder: externalRow emits java.time values (Instant /
+    // LocalDate — proleptic, exact for ancient instants); the strict
+    // encoder would reject them for java.sql ones unless the session
+    // flips datetime.java8API. Lenient accepts both.
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
       .encoderFor(schema, lenient = true)
-    payloads.mapPartitions { it =>
-      it.map(b => writer(ProtoWire.decode(b, md, reg)))
-    }(enc).toDF()
+    payloads.mapPartitions(_.map(b => toRow(decode(b))))(enc).toDF()
   }
 
   /** Tumbling-window counts with a watermark: event-time aggregation whose

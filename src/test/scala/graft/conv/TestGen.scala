@@ -66,4 +66,49 @@ object TestGen {
         Gen.option(gv).map(_.map(v => f.number -> v))
       }.toVector
     ).map(opts => DynamicMessage(md, opts.flatten.toMap))
+
+  /** WireFuzzSpec's mutant set for `md`: 24 seeded payloads (seed 7) plus
+    * one byte-flip, one truncation and one inflated-length-prefix mutant
+    * of each (seed 1000 + 3 * payload + kind). */
+  def wireMutants(md: PMessageDesc): Vector[Array[Byte]] = {
+    def flip(b: Array[Byte]): Gen[Array[Byte]] = for {
+      k <- Gen.chooseNum(1, 4)
+      hits <- Gen.listOfN(k, Gen.zip(Gen.chooseNum(0, b.length - 1), Gen.chooseNum(1, 255)))
+    } yield {
+      val m = b.clone()
+      hits.foreach { case (i, x) => m(i) = (m(i) ^ x).toByte }
+      m
+    }
+    def truncate(b: Array[Byte]): Gen[Array[Byte]] =
+      Gen.chooseNum(0, b.length - 1).map(n => b.take(n))
+    def inflate(b: Array[Byte]): Gen[Array[Byte]] = {
+      // (start, end, length) of every top-level length prefix
+      val r = new ProtoWire.Reader(b)
+      val prefixes = Vector.newBuilder[(Int, Int, Long)]
+      while (r.hasMore) {
+        val wt = (r.varint() & 7).toInt
+        if (wt == ProtoWire.Len) {
+          val start = r.pos
+          val len = r.varint()
+          prefixes += ((start, r.pos, len))
+          r.pos += len.toInt
+        } else r.skip(wt)
+      }
+      for {
+        (start, end, len) <- Gen.oneOf(prefixes.result())
+        extra <- Gen.oneOf(Gen.chooseNum(1L, 64L), Gen.chooseNum(1L << 20, 1L << 40))
+      } yield {
+        val w = new ProtoWire.Writer()
+        w.varint(len + extra)
+        b.take(start) ++ w.toByteArray ++ b.drop(end)
+      }
+    }
+    val base = sample(Gen.listOfN(24, genMessage(md)), 7L)
+      .map(ProtoWire.encode(_, reg)).filter(_.length > 1).toVector
+    base ++ base.zipWithIndex.flatMap { case (b, i) =>
+      Seq(flip(b), truncate(b), inflate(b)).zipWithIndex.map { case (g, k) =>
+        sample(g, 1000L + 3L * i + k)
+      }
+    }
+  }
 }

@@ -132,6 +132,39 @@ class WireSpec extends AnyFunSuite {
     assert(ProtoWire.decode(bytes, md, reg) === DynamicMessage(md, Map(1 -> Map(0 -> 0))))
   }
 
+  // map<int32, int32> = 1; an entry is tag 0x0A, its length, its fields
+  private val intMap = PMessageDesc("m", Seq(
+    PField("im", 1, PType.PInt32, mapKV = Some((PType.PInt32, PType.PInt32)))))
+  private def entry(fields: Int*): Array[Byte] =
+    (Seq(0x0A, fields.length) ++ fields).map(_.toByte).toArray
+
+  test("map entry: a key with the wrong wire type is skipped as unknown") {
+    // key field 1 sent length-delimited ("AB"): read as a varint it would
+    // take the length byte as the key and parse the payload as tags
+    val bad = entry(0x0A, 2, 'A', 'B', 0x10, 7)
+    val clean = entry(0x10, 7)
+    assert(ProtoWire.decode(bad, intMap, reg) === ProtoWire.decode(clean, intMap, reg))
+    assert(ProtoWire.decode(bad, intMap, reg) === DynamicMessage(intMap, Map(1 -> Map(0 -> 7))))
+  }
+
+  test("map entry: a value with the wrong wire type is skipped as unknown") {
+    // value field 2 sent as fixed32 instead of a varint
+    val bad = entry(0x08, 5, 0x15, 1, 2, 3, 4)
+    val clean = entry(0x08, 5)
+    assert(ProtoWire.decode(bad, intMap, reg) === ProtoWire.decode(clean, intMap, reg))
+    assert(ProtoWire.decode(bad, intMap, reg) === DynamicMessage(intMap, Map(1 -> Map(5 -> 0))))
+  }
+
+  test("map entry: a message value that occurs twice in one entry is merged") {
+    val self = Schemas.recursiveSelf
+    val md = PMessageDesc("mm", Seq(PField("m", 1, PType.PMessage(self.fullName),
+      mapKV = Some((PType.PInt32, PType.PMessage(self.fullName))))))
+    // key 1; value {depth: 5}; value again {next: {}}
+    val bytes = entry(0x08, 1, 0x12, 2, 0x10, 5, 0x12, 2, 0x0A, 0)
+    val merged = DynamicMessage(self, Map(2 -> 5, 1 -> DynamicMessage.empty(self)))
+    assert(ProtoWire.decode(bytes, md, reg) === DynamicMessage(md, Map(1 -> Map(1 -> merged))))
+  }
+
   test("proto3 JSON timestamps accept RFC 3339 offsets, normalized to UTC") {
     val md = Schemas.msg("ExampleMessage")
     val f = md.byName("timestamp_value")
