@@ -1,7 +1,6 @@
 package graft
 
 import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -123,8 +122,9 @@ object Protarrow {
       cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry,
       mode: IngestMode = IngestMode.FailFast): DataFrame = {
+    val plan = WireRows.plan(md, cfg, reg)
     permissiveScan(ds.sparkSession, ds.rdd, md, cfg, reg, mode, BinaryType,
-      WireRows.decoder(md, cfg, reg), (b: Array[Byte]) => b)
+      () => plan.newDecoder(), (b: Array[Byte]) => b)
   }
 
   /** Proto-JSONL scan (the fixture-loader shape,
@@ -142,20 +142,19 @@ object Protarrow {
     val lines = spark.read.textFile(path).rdd
       .mapPartitions(_.filter(_.trim.nonEmpty))
     val write = Codecs.internalRowWriter(md, cfg, reg)
-    permissiveScan(spark, lines, md, cfg, reg, mode, StringType, (l: String) => write(
-      try ProtoJson.parse(l, md, reg) catch {
-        case NonFatal(e) if !e.isInstanceOf[IllegalArgumentException] =>
-          throw new IllegalArgumentException(s"malformed proto JSON: $e", e)
-      }), (l: String) => UTF8String.fromString(l))
+    permissiveScan(spark, lines, md, cfg, reg, mode, StringType,
+      () => (l: String) => write(ProtoJson.parse(l, md, reg)), (l: String) => UTF8String.fromString(l))
   }
 
   /** Shared malformed-record machinery for the ingest scans: converts each
-    * record to an InternalRow and wraps that in the [[IngestMode]]
+    * record to an InternalRow, with one converter per partition from
+    * `newConvert` (a converter may return the same row for every record;
+    * the scan projects each at once), and wraps that in the [[IngestMode]]
     * contract. A record is malformed when its conversion raises
-    * IllegalArgumentException: [[WireRows.decoder]] raises nothing else
+    * IllegalArgumentException: the [[WireRows]] decoder raises nothing else
     * (truncation, bad lengths, nesting depth, a Timestamp/Date/TimeOfDay/
-    * Duration its column cannot hold), and the JSONL scan raises a parse
-    * failure or an out-of-range value as one. Any other exception is an
+    * Duration its column cannot hold), and `ProtoJson.parse` raises nothing
+    * else for a malformed line. Any other exception is an
     * ENGINE bug, not dirty data, and propagates rather than being
     * reclassified as a corrupt record. The catch is per-record INSIDE
     * mapPartitions — the partition iterator keeps streaming, so tolerance
@@ -164,17 +163,17 @@ object Protarrow {
     * column. */
   private def permissiveScan[A](spark: SparkSession, rdd: RDD[A],
       md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry, mode: IngestMode,
-      corruptType: DataType, convert: A => InternalRow, raw: A => Any): DataFrame = {
+      corruptType: DataType, newConvert: () => A => InternalRow, raw: A => Any): DataFrame = {
     val schema = messageTypeToSchema(md, cfg, reg)
-    def converted(a: A): Option[InternalRow] =
+    def converted(convert: A => InternalRow, a: A): Option[InternalRow] =
       try Some(convert(a)) catch { case _: IllegalArgumentException => None }
     mode match {
       case IngestMode.FailFast =>
         GraftBridge.internalDataFrame(spark, schema,
-          rdd.mapPartitions(_.map(convert)))
+          rdd.mapPartitions(_.map(newConvert())))
       case IngestMode.DropMalformed =>
         GraftBridge.internalDataFrame(spark, schema,
-          rdd.mapPartitions(_.flatMap(converted)))
+          rdd.mapPartitions { as => val convert = newConvert(); as.flatMap(converted(convert, _)) })
       case IngestMode.Permissive =>
         // reject rows surface NULL in every proto field, so the scan's
         // top-level nullability relaxes — exactly what spark.read.json's
@@ -184,12 +183,13 @@ object Protarrow {
         val noFields = new GenericInternalRow(schema.length)
         val noCorrupt = InternalRow(null)
         GraftBridge.internalDataFrame(spark, out,
-          rdd.mapPartitions(_.map { a =>
-            converted(a) match {
+          rdd.mapPartitions { as =>
+            val convert = newConvert()
+            as.map(a => converted(convert, a) match {
               case Some(row) => new JoinedRow(row, noCorrupt)
               case None      => new JoinedRow(noFields, InternalRow(raw(a)))
-            }
-          }))
+            })
+          })
     }
   }
 

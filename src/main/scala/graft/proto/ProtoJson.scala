@@ -1,8 +1,9 @@
 package graft.proto
 
 import java.time.Instant
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.core.{JsonParser, JsonProcessingException}
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode, TextNode}
 import scala.jdk.CollectionConverters._
 
 /** Proto3 JSON codec over the descriptor IR (the public proto3 JSON
@@ -18,26 +19,43 @@ import scala.jdk.CollectionConverters._
   */
 object ProtoJson {
 
+  // duplicate keys and trailing tokens are errors, as in json_format.Parse
   private val mapper = new ObjectMapper()
+    .enable(JsonParser.Feature.STRICT_DUPLICATE_DETECTION)
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
-  def parse(json: String, md: PMessageDesc, reg: ProtoRegistry): DynamicMessage =
-    fromNode(mapper.readTree(json), md, reg)
+  /** One proto-JSON object as a message of `md`. Anything the proto3 JSON
+    * mapping rejects — malformed JSON, a value of the wrong JSON kind, an
+    * integer out of its field's range or with a fraction, an unknown enum
+    * name, a bad Timestamp or Duration, nesting past
+    * [[ProtoWire.MaxDecodeDepth]] — raises IllegalArgumentException, and
+    * nothing else. */
+  def parse(json: String, md: PMessageDesc, reg: ProtoRegistry): DynamicMessage = {
+    val node = try mapper.readTree(json) catch {
+      case e: JsonProcessingException =>
+        throw new IllegalArgumentException(s"malformed JSON: ${e.getOriginalMessage}", e)
+    }
+    fromNode(node, md, reg, 0)
+  }
 
-  def fromNode(node: JsonNode, md: PMessageDesc, reg: ProtoRegistry): DynamicMessage = {
-    require(node.isObject, s"expected object for ${md.fullName}, got $node")
+  private def fromNode(node: JsonNode, md: PMessageDesc, reg: ProtoRegistry,
+      depth: Int): DynamicMessage = {
+    require(node != null && node.isObject, s"expected object for ${md.fullName}, got $node")
+    ProtoWire.checkDepth(depth)
     var values = Map.empty[Int, Any]
     md.fields.foreach { f =>
       val n = if (node.has(f.name)) node.get(f.name) else node.get(camel(f.name))
       if (n != null && !n.isNull) {
         val v =
           if (f.isMap) {
-            n.asInstanceOf[ObjectNode].properties().asScala.map { e =>
-              parseMapKey(e.getKey, f.mapKey) -> parseValue(e.getValue, f.mapValue, reg)
+            if (!n.isObject) invalid(n, f.typ)
+            n.properties().asScala.map { e =>
+              parseMapKey(e.getKey, f.mapKey, reg) -> parseValue(e.getValue, f.mapValue, reg, depth)
             }.toMap
           } else if (f.repeated) {
-            n.asInstanceOf[ArrayNode].elements().asScala
-              .map(e => parseValue(e, f.typ, reg)).toVector
-          } else parseValue(n, f.typ, reg)
+            if (!n.isArray) invalid(n, f.typ)
+            n.elements().asScala.map(e => parseValue(e, f.typ, reg, depth)).toVector
+          } else parseValue(n, f.typ, reg, depth)
         values += (f.number -> v)
       }
     }
@@ -49,14 +67,18 @@ object ProtoJson {
     parts.head + parts.tail.map(_.capitalize).mkString
   }
 
-  private def parseMapKey(key: String, t: PType): Any = t match {
+  private def invalid(n: Any, t: PType): Nothing =
+    throw new IllegalArgumentException(s"invalid proto JSON value for $t: $n")
+
+  /** Map keys are strings: integers in decimal, bools as true/false. */
+  private def parseMapKey(key: String, t: PType, reg: ProtoRegistry): Any = t match {
     case PType.PString => key
-    case PType.PBool => key == "true"
-    case PType.PInt32 | PType.PSInt32 | PType.PSFixed32 => key.toInt
-    case PType.PInt64 | PType.PSInt64 | PType.PSFixed64 => key.toLong
-    case PType.PUInt32 | PType.PFixed32 => key.toLong
-    case PType.PUInt64 | PType.PFixed64 => java.lang.Long.parseUnsignedLong(key)
-    case other => throw new IllegalArgumentException(s"bad map key type $other")
+    case PType.PBool => key match {
+      case "true" => true
+      case "false" => false
+      case _ => invalid(key, t)
+    }
+    case _ => parseValue(TextNode.valueOf(key), t, reg, 0)
   }
 
   private def base64(s: String): Bytes = {
@@ -65,41 +87,82 @@ object ProtoJson {
     Bytes.owned(dec.decode(s))
   }
 
-  def parseValue(n: JsonNode, t: PType, reg: ProtoRegistry): Any = t match {
-    case PType.PDouble => n.asDouble()
-    case PType.PFloat => n.asDouble().toFloat
+  private val IntegerText = "[+-]?[0-9]+".r
+  private val DecimalText = "[+-]?([0-9]+[.]?[0-9]*|[.][0-9]+)([eE][+-]?[0-9]+)?".r
+  private val UInt64Max = BigInt(1) << 64
+
+  /** An integer in [lo, hi]: a JSON number without a fraction, or a
+    * decimal integer string. */
+  private def integral(n: JsonNode, t: PType, lo: BigInt, hi: BigInt): BigInt = {
+    val v: BigInt =
+      if (n.isIntegralNumber) n.bigIntegerValue
+      else if (n.isFloatingPointNumber && n.decimalValue.stripTrailingZeros.scale <= 0)
+        n.decimalValue.toBigIntegerExact
+      else if (n.isTextual && IntegerText.matches(n.textValue)) BigInt(n.textValue)
+      else invalid(n, t)
+    if (v < lo || v > hi) invalid(n, t)
+    v
+  }
+
+  /** A finite JSON number, a decimal string, or "NaN"/"Infinity"/"-Infinity". */
+  private def floating(n: JsonNode, t: PType): Double =
+    if (n.isNumber) {
+      val d = n.doubleValue
+      val max = if (t == PType.PFloat) Float.MaxValue.toDouble else Double.MaxValue
+      if (d.isInfinite || math.abs(d) > max) invalid(n, t)
+      d
+    } else if (n.isTextual) n.textValue match {
+      case "NaN" => Double.NaN
+      case "Infinity" => Double.PositiveInfinity
+      case "-Infinity" => Double.NegativeInfinity
+      case s if DecimalText.matches(s) => s.toDouble
+      case _ => invalid(n, t)
+    } else invalid(n, t)
+
+  private def text(n: JsonNode, t: PType): String = if (n.isTextual) n.textValue else invalid(n, t)
+
+  /** One value of type `t` in a message at nesting `depth`. */
+  private def parseValue(n: JsonNode, t: PType, reg: ProtoRegistry, depth: Int): Any = t match {
+    case PType.PDouble => floating(n, t)
+    case PType.PFloat => floating(n, t).toFloat
     case PType.PInt32 | PType.PSInt32 | PType.PSFixed32 =>
-      if (n.isTextual) n.asText.toInt else n.asInt()
+      integral(n, t, Int.MinValue, Int.MaxValue).toInt
     case PType.PInt64 | PType.PSInt64 | PType.PSFixed64 =>
-      if (n.isTextual) n.asText.toLong else n.asLong()
-    case PType.PUInt32 | PType.PFixed32 =>
-      if (n.isTextual) n.asText.toLong else n.asLong()
-    case PType.PUInt64 | PType.PFixed64 =>
-      if (n.isTextual) java.lang.Long.parseUnsignedLong(n.asText)
-      else n.bigIntegerValue().longValue()
-    case PType.PBool => n.asBoolean()
-    case PType.PString => n.asText()
-    case PType.PBytes => base64(n.asText())
+      integral(n, t, Long.MinValue, Long.MaxValue).toLong
+    case PType.PUInt32 | PType.PFixed32 => integral(n, t, 0, 0xFFFFFFFFL).toLong
+    case PType.PUInt64 | PType.PFixed64 => integral(n, t, 0, UInt64Max - 1).toLong // bit-preserving
+    case PType.PBool => if (n.isBoolean) n.booleanValue else invalid(n, t)
+    case PType.PString => text(n, t)
+    case PType.PBytes => base64(text(n, t))
     case PType.PEnum(name) =>
-      if (n.isTextual) reg.enum(name).nameToNumber.getOrElse(n.asText(), 0)
-      else n.asInt()
+      // a name, or any int32 number (proto3 enums are open)
+      if (n.isTextual) reg.enum(name).nameToNumber.get(n.textValue) match {
+        case Some(v) => v
+        case None if IntegerText.matches(n.textValue) => integral(n, t, Int.MinValue, Int.MaxValue).toInt
+        case None => invalid(n, t)
+      } else integral(n, t, Int.MinValue, Int.MaxValue).toInt
     case PType.PMessage(WellKnown.TimestampName) =>
       // proto3 JSON accepts any RFC 3339 offset, not just 'Z'
       // (json_format normalizes "+08:00" etc. to UTC); Instant.parse is
       // ISO_INSTANT and would reject those
-      val i = java.time.OffsetDateTime.parse(n.asText()).toInstant
+      val i = try java.time.OffsetDateTime.parse(text(n, t)).toInstant catch {
+        case _: java.time.format.DateTimeParseException => invalid(n, t)
+      }
       DynamicMessage(WellKnown.timestamp, Map(1 -> i.getEpochSecond, 2 -> i.getNano))
     case PType.PMessage(WellKnown.DurationName) =>
-      val s = n.asText().stripSuffix("s")
-      val bd = new java.math.BigDecimal(s)
+      val s = text(n, t)
+      if (!s.endsWith("s") || !DecimalText.matches(s.dropRight(1))) invalid(n, t)
+      val bd = new java.math.BigDecimal(s.dropRight(1))
+      // seconds within ±10,000 years and at most nanosecond precision
+      if (bd.abs.compareTo(java.math.BigDecimal.valueOf(315576000000L)) > 0 ||
+        bd.stripTrailingZeros.scale > 9) invalid(n, t)
       val secs = bd.longValue() // truncation toward zero: proto sign rule
-      val nanos = bd.subtract(java.math.BigDecimal.valueOf(secs))
-        .movePointRight(9).intValueExact()
+      val nanos = bd.subtract(java.math.BigDecimal.valueOf(secs)).movePointRight(9).intValueExact()
       DynamicMessage(WellKnown.duration, Map(1 -> secs, 2 -> nanos))
     case PType.PMessage(name) if WellKnown.isWrapper(name) =>
       DynamicMessage(reg.message(name),
-        Map(1 -> parseValue(n, WellKnown.wrapperNames(name), reg)))
-    case PType.PMessage(name) => fromNode(n, reg.message(name), reg)
+        Map(1 -> parseValue(n, WellKnown.wrapperNames(name), reg, depth)))
+    case PType.PMessage(name) => fromNode(n, reg.message(name), reg, depth + 1)
   }
 
   // ------------------------------------------------------------------ write

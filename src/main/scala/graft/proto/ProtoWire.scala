@@ -86,17 +86,21 @@ object ProtoWire {
       * the caller fills them and calls [[advance]]. */
     def claim(n: Int): Array[Byte] = { ensure(n); buf }
     def advance(n: Int): Unit = pos += n
+    /** Drops the bytes written after the first `size`. */
+    def truncate(size: Int): Unit = pos = size
 
     def varint(v: Long): Unit = {
       ensure(10)
+      val b = buf
+      var p = pos
       var x = v
       while ((x & ~0x7FL) != 0) {
-        buf(pos) = ((x & 0x7F) | 0x80).toByte
-        pos += 1
+        b(p) = ((x & 0x7F) | 0x80).toByte
+        p += 1
         x = x >>> 7
       }
-      buf(pos) = x.toByte
-      pos += 1
+      b(p) = x.toByte
+      pos = p + 1
     }
     def tag(field: Int, wt: Int): Unit = varint((field.toLong << 3) | wt)
     def fixed32(v: Int): Unit = {
@@ -212,8 +216,9 @@ object ProtoWire {
     * reads silently zero-padded truncated bytes (Arrays.copyOfRange pads)
     * and let a nested message with an oversized length prefix parse its
     * PARENT's adjacent bytes as its own fields. Every failure is an
-    * IllegalArgumentException. */
-  final class Reader(buf: Array[Byte], var pos: Int, val end: Int) {
+    * IllegalArgumentException. A codec may move the window [pos, end)
+    * within `buf` to reread a range it has already checked. */
+  final class Reader(val buf: Array[Byte], var pos: Int, var end: Int) {
     def this(buf: Array[Byte]) = this(buf, 0, buf.length)
     def hasMore: Boolean = pos < end
     // n > end - pos, NOT pos + n > end: the latter wraps for n near
@@ -231,16 +236,40 @@ object ProtoWire {
         s"bad length prefix $len at offset $pos")
       len.toInt
     }
+    /** At most 10 bytes; with 10 or more left, one bounds check for all. */
     def varint(): Long = {
+      val b = buf
+      var p = pos
+      if (end - p >= 10) {
+        var result = 0L
+        var shift = 0
+        while (shift < 64) {
+          val x = b(p); p += 1
+          result |= (x & 0x7FL) << shift
+          if (x >= 0) { pos = p; return result }
+          shift += 7
+        }
+        throw new IllegalArgumentException("malformed varint")
+      }
       var shift = 0; var result = 0L
       while (shift < 64) {
-        need(1)
-        val b = buf(pos); pos += 1
-        result |= (b & 0x7FL) << shift
-        if ((b & 0x80) == 0) return result
+        if (p >= end) { pos = p; need(1) }
+        val x = b(p); p += 1
+        result |= (x & 0x7FL) << shift
+        if (x >= 0) { pos = p; return result }
         shift += 7
       }
       throw new IllegalArgumentException("malformed varint")
+    }
+    /** [[varint]] without its value. */
+    def skipVarint(): Unit = {
+      val b = buf
+      val limit = if (end - pos > 10) pos + 10 else end
+      var p = pos
+      while (p < limit && b(p) < 0) p += 1
+      if (p < limit) pos = p + 1
+      else if (p - pos == 10) throw new IllegalArgumentException("malformed varint")
+      else { pos = p; need(1) }
     }
     def fixed32(): Int = {
       need(4)
@@ -250,6 +279,9 @@ object ProtoWire {
     }
     def fixed64(): Long =
       (fixed32().toLong & 0xFFFFFFFFL) | (fixed32().toLong << 32)
+    /** Reads a length prefix and checks that its payload is there; `pos`
+      * stays at the payload's start. */
+    def len(): Int = { val n = lenPrefix(); need(n); n }
     def bytes(): Array[Byte] = {
       val len = lenPrefix()
       need(len)
@@ -263,7 +295,7 @@ object ProtoWire {
       pos += len; r
     }
     def skip(wt: Int): Unit = wt match {
-      case Varint => varint(); ()
+      case Varint => skipVarint()
       case Fixed64 => need(8); pos += 8
       case Fixed32 => need(4); pos += 4
       case Len => val len = lenPrefix(); need(len); pos += len

@@ -20,13 +20,13 @@ object StreamOps {
 
   /** Streaming decode: wire-format payload column → typed rows (the
     * streaming twin of [[graft.Protarrow.fromProtoBinary]], with the same
-    * [[WireRows.decoder]]; works on streaming Datasets because it avoids
-    * RDD APIs). */
+    * [[WireRows]] decoder, one per partition; works on streaming Datasets
+    * because it avoids RDD APIs). */
   def decodeProtoStream(payloads: Dataset[Array[Byte]], md: PMessageDesc,
       cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry): DataFrame = {
     val schema = SchemaConversion.messageTypeToSchema(md, cfg, reg)
-    val decode = WireRows.decoder(md, cfg, reg)
+    val plan = WireRows.plan(md, cfg, reg)
     val toRow = Codecs.externalRow(schema)
     // lenient row encoder: externalRow emits java.time values (Instant /
     // LocalDate — proleptic, exact for ancient instants); the strict
@@ -34,7 +34,10 @@ object StreamOps {
     // flips datetime.java8API. Lenient accepts both.
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
       .encoderFor(schema, lenient = true)
-    payloads.mapPartitions(_.map(b => toRow(decode(b))))(enc).toDF()
+    payloads.mapPartitions { bs =>
+      val decode = plan.newDecoder()
+      bs.map(b => toRow(decode(b)))
+    }(enc).toDF()
   }
 
   /** Tumbling-window counts with a watermark: event-time aggregation whose

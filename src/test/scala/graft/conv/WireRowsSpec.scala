@@ -232,6 +232,39 @@ class WireRowsSpec extends SparkSpec {
     assert(cell.valueArray().toIntArray().toSeq === Seq(30, 20))
   }
 
+  test("a 200,000-entry map with every key twice: the DynamicMessage path's map") {
+    val m = num("int32_int32_map")
+    val w = new ProtoWire.Writer(1 << 22)
+    for (round <- 0 until 2; k <- 0 until 200000) {
+      w.tag(m, ProtoWire.Len)
+      val mark = w.beginLen()
+      w.tag(1, 0); w.varint((k * 7919).toLong)
+      w.tag(2, 0); w.varint((k + round).toLong)
+      w.endLen(mark)
+    }
+    val bytes = w.toByteArray
+    assert(sameDecode(em, GraftConfig(), bytes))
+    val cell = directRow(em, bytes).getMap(ordinal("int32_int32_map"))
+    assert(cell.numElements() === 200000)
+    assert(cell.keyArray().getInt(3) === 3 * 7919 && cell.valueArray().getInt(3) === 4)
+  }
+
+  test("a decoder reuses its row: copies stay independent of later records") {
+    val msgs = sample(Gen.listOfN(6, TestGen.genMessage(em)), 21L)
+    val bytes = msgs.map(ProtoWire.encode(_, reg))
+    val decode = WireRows.decoder(em, GraftConfig(), reg)
+    val copies = bytes.map(b => decode(b).copy())
+    assert(decode(bytes.head) eq decode(bytes.last), "one row, overwritten per record")
+    copies.zip(bytes).foreach { case (c, b) =>
+      assert(norm(c, exampleSchema) === norm(directRow(em, b), exampleSchema))
+    }
+    // a partition's rows copied out of the scan keep their own values
+    val ds = spark.createDataset(bytes)(Encoders.BINARY).coalesce(1)
+    val rows = Protarrow.fromProtoBinary(ds, em, GraftConfig(), reg).queryExecution.toRdd
+      .map(_.copy()).collect()
+    assert(rows.map(norm(_, exampleSchema)).toSeq === bytes.map(b => norm(directRow(em, b), exampleSchema)))
+  }
+
   test("maps above four entries: equal as maps both ways") {
     val big = DynamicMessage(em, Map(
       num("int32_int32_map") -> (1 to 9).map(k => k -> k * 10).toMap,

@@ -187,6 +187,58 @@ class WireSpec extends AnyFunSuite {
     }
   }
 
+  // ---- varint fast paths: both decoders, at the edges of the 10-byte window
+
+  private val v64 = PMessageDesc("v64", Seq(PField("x", 1, PType.PInt64)))
+  private def decoders(bytes: Array[Byte]): Seq[() => Any] = Seq(
+    () => ProtoWire.decode(bytes, v64, reg),
+    () => graft.conv.WireRows.decoder(v64, graft.conv.GraftConfig(), reg)(bytes))
+
+  test("varint: a 10-byte varint ending exactly at the buffer end decodes") {
+    val bytes = Array[Byte](0x08) ++ Array.fill(9)(0xFF.toByte) ++ Array[Byte](0x01)
+    assert(ProtoWire.decode(bytes, v64, reg) === DynamicMessage(v64, Map(1 -> -1L)))
+    assert(graft.conv.WireRows.decoder(v64, graft.conv.GraftConfig(), reg)(bytes).getLong(0) === -1L)
+    val r = new ProtoWire.Reader(bytes, 1, bytes.length)
+    assert(r.varint() === -1L && !r.hasMore)
+  }
+
+  test("varint: 11 bytes with at least 10 remaining raise IllegalArgumentException") {
+    for (trailing <- Seq(0, 1, 20)) {
+      val bytes = Array[Byte](0x08) ++ Array.fill(10)(0xFF.toByte) ++ Array[Byte](0x01) ++
+        Array.fill(trailing)(0x00.toByte)
+      for (d <- decoders(bytes)) {
+        val e = intercept[IllegalArgumentException](d())
+        assert(e.getMessage.contains("malformed varint"), e.getMessage)
+      }
+    }
+  }
+
+  test("varint: a varint truncated inside the last 9 bytes raises IllegalArgumentException") {
+    for (n <- 1 to 9) {
+      val bytes = Array[Byte](0x08) ++ Array.fill(n)(0x80.toByte)
+      for (d <- decoders(bytes)) intercept[IllegalArgumentException](d())
+      val r = new ProtoWire.Reader(bytes, 1, bytes.length)
+      intercept[IllegalArgumentException](r.varint())
+      intercept[IllegalArgumentException](new ProtoWire.Reader(bytes, 1, bytes.length).skip(ProtoWire.Varint))
+    }
+  }
+
+  test("varint: every length round-trips through the writer and both reader paths") {
+    val values = (0 to 63).flatMap(b => Seq(1L << b, (1L << b) - 1, -(1L << b))) ++ Seq(Long.MinValue, Long.MaxValue)
+    for (v <- values) {
+      val w = new ProtoWire.Writer()
+      w.varint(v)
+      val exact = w.toByteArray
+      val expected = Iterator.iterate(v)(_ >>> 7).takeWhile(_ != 0).size.max(1)
+      assert(exact.length === expected, s"$v")
+      for (slack <- Seq(0, 12)) {
+        val r = new ProtoWire.Reader(exact ++ Array.fill(slack)(0x7F.toByte), 0, exact.length + slack)
+        assert(r.varint() === v, s"$v slack $slack")
+        assert(r.pos === exact.length)
+      }
+    }
+  }
+
   test("json writer round trips") {
     val md = Schemas.msg("ExampleMessage")
     fixture("ExampleMessage").foreach { m =>
