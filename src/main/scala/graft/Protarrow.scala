@@ -1,12 +1,8 @@
 package graft
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftBridge, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StructType
 import graft.proto._
 import graft.conv._
 
@@ -91,44 +87,31 @@ object Protarrow {
 
   /** Distributed decode: stays on executors, yields a Dataset of wire-format
     * proto bytes (the Spark-native way to "return messages" at scale without
-    * collecting — pair with [[fromProtoBinary]]). */
+    * collecting — pair with [[fromProtoBinary]]): a `ProtoEncode` node
+    * ([[graft.conv.ProtoNodes]]). */
   def toProtoBinary(df: DataFrame, md: PMessageDesc,
       cfg: GraftConfig = GraftConfig(),
-      reg: ProtoRegistry = WellKnown.registry): Dataset[Array[Byte]] = {
-    val spark = df.sparkSession
-    val encode = WireRows.encoder(md, df.schema, cfg, reg)
-    // queryExecution.toRdd keeps rows in catalyst form on the executors
-    // (no per-row external deserialization); the encoder reads each row
-    // before the iterator advances, so buffer reuse is safe. Each
-    // partition owns one Writer, reused for every row. Listener/UI
-    // attribution: the returned Dataset is lazy — whatever action the
-    // caller runs on it registers its own execution id covering this
-    // lineage, so the work stays visible.
-    spark.createDataset(
-      df.queryExecution.toRdd.mapPartitions { rows =>
-        val w = new ProtoWire.Writer()
-        rows.map(r => encode(r, w))
-      })(Encoders.BINARY)
-  }
+      reg: ProtoRegistry = WellKnown.registry): Dataset[Array[Byte]] =
+    ProtoNodes.encode(df, WireRows.encodePlan(md, df.schema, cfg, reg))
 
   /** Distributed encode from wire-format bytes (micro-batch/Kafka shape —
-    * the reference's streaming use case, docs/faq.md:20-25). `mode`
+    * the reference's streaming use case, docs/faq.md:20-25), batch or
+    * streaming: a `ProtoDecode` node ([[graft.conv.ProtoNodes]]). `mode`
     * controls corrupt-record tolerance ([[graft.conv.IngestMode]]):
     * FAILFAST raises on the first undecodable payload (default, the
     * reference's behavior); PERMISSIVE appends a BINARY
     * `_corrupt_record` column carrying the raw bytes of rejects;
-    * DROPMALFORMED skips them. */
+    * DROPMALFORMED skips them. A null payload (a Kafka tombstone) is
+    * malformed. */
   def fromProtoBinary(ds: Dataset[Array[Byte]], md: PMessageDesc,
       cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry,
-      mode: IngestMode = IngestMode.FailFast): DataFrame = {
-    val plan = WireRows.plan(md, cfg, reg)
-    permissiveScan(ds.sparkSession, ds.rdd, md, cfg, reg, mode, BinaryType,
-      () => plan.newDecoder(), (b: Array[Byte]) => b)
-  }
+      mode: IngestMode = IngestMode.FailFast): DataFrame =
+    ProtoNodes.decode(ds, new WirePayloads(md, cfg, reg), mode)
 
   /** Proto-JSONL scan (the fixture-loader shape,
-    * tests/test_conversion.py:99-105): schema-directed distributed parse.
+    * tests/test_conversion.py:99-105): schema-directed distributed parse,
+    * one `ProtoDecode` node over the text scan; blank lines are skipped.
     * `mode` controls corrupt-record tolerance ([[graft.conv.IngestMode]]):
     * FAILFAST raises on the first unparseable line (default, matching the
     * reference's json_format.Parse behavior); PERMISSIVE appends a STRING
@@ -138,60 +121,8 @@ object Protarrow {
   def readProtoJsonl(spark: SparkSession, path: String, md: PMessageDesc,
       cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry,
-      mode: IngestMode = IngestMode.FailFast): DataFrame = {
-    val lines = spark.read.textFile(path).rdd
-      .mapPartitions(_.filter(_.trim.nonEmpty))
-    val write = Codecs.internalRowWriter(md, cfg, reg)
-    permissiveScan(spark, lines, md, cfg, reg, mode, StringType,
-      () => (l: String) => write(ProtoJson.parse(l, md, reg)), (l: String) => UTF8String.fromString(l))
-  }
-
-  /** Shared malformed-record machinery for the ingest scans: converts each
-    * record to an InternalRow, with one converter per partition from
-    * `newConvert` (a converter may return the same row for every record;
-    * the scan projects each at once), and wraps that in the [[IngestMode]]
-    * contract. A record is malformed when its conversion raises
-    * IllegalArgumentException: the [[WireRows]] decoder raises nothing else
-    * (truncation, bad lengths, nesting depth, a Timestamp/Date/TimeOfDay/
-    * Duration its column cannot hold), and `ProtoJson.parse` raises nothing
-    * else for a malformed line. Any other exception is an
-    * ENGINE bug, not dirty data, and propagates rather than being
-    * reclassified as a corrupt record. The catch is per-record INSIDE
-    * mapPartitions — the partition iterator keeps streaming, so tolerance
-    * costs nothing on the happy path and no executor-side buffering
-    * anywhere. `raw` gives a reject's catalyst value for the `corruptType`
-    * column. */
-  private def permissiveScan[A](spark: SparkSession, rdd: RDD[A],
-      md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry, mode: IngestMode,
-      corruptType: DataType, newConvert: () => A => InternalRow, raw: A => Any): DataFrame = {
-    val schema = messageTypeToSchema(md, cfg, reg)
-    def converted(convert: A => InternalRow, a: A): Option[InternalRow] =
-      try Some(convert(a)) catch { case _: IllegalArgumentException => None }
-    mode match {
-      case IngestMode.FailFast =>
-        GraftBridge.internalDataFrame(spark, schema,
-          rdd.mapPartitions(_.map(newConvert())))
-      case IngestMode.DropMalformed =>
-        GraftBridge.internalDataFrame(spark, schema,
-          rdd.mapPartitions { as => val convert = newConvert(); as.flatMap(converted(convert, _)) })
-      case IngestMode.Permissive =>
-        // reject rows surface NULL in every proto field, so the scan's
-        // top-level nullability relaxes — exactly what spark.read.json's
-        // PERMISSIVE schema does (good rows keep their nested shapes)
-        val out = StructType(schema.fields.map(_.copy(nullable = true)) :+
-          StructField(IngestMode.CorruptColumn, corruptType, nullable = true))
-        val noFields = new GenericInternalRow(schema.length)
-        val noCorrupt = InternalRow(null)
-        GraftBridge.internalDataFrame(spark, out,
-          rdd.mapPartitions { as =>
-            val convert = newConvert()
-            as.map(a => converted(convert, a) match {
-              case Some(row) => new JoinedRow(row, noCorrupt)
-              case None      => new JoinedRow(noFields, InternalRow(raw(a)))
-            })
-          })
-    }
-  }
+      mode: IngestMode = IngestMode.FailFast): DataFrame =
+    ProtoNodes.decode(spark.read.textFile(path), new JsonLines(md, cfg, reg), mode)
 
   /** SURVEY §7.4 risk 4: Spark cannot write empty-struct columns
     * (google.protobuf.Empty, recursion-pruned fields) to parquet. This

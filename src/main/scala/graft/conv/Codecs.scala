@@ -1,11 +1,11 @@
 package graft.conv
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.time.{Instant, LocalDate}
+import java.time.LocalDate
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, DateTimeUtils, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -43,21 +43,44 @@ object Codecs {
     * (arrow_to_proto.py:279-291). */
   def enumNumber(ed: PEnumDesc, name: String): Int = ed.nameToNumber.getOrElse(name, 0)
 
-  /** Timestamp → epoch µs, floored to the configured unit (µs at finest). */
+  /** Timestamp → epoch µs, floored to the configured unit (µs at finest):
+    * Instant's normalisation of (secs, floored nanos), then the µs count if
+    * Long holds it (the seconds it holds are inside Instant's bounds). Like
+    * every leaf below, long arithmetic with no allocation per value. */
   def timestampMicros(secs: Long, nanos: Int, cfg: GraftConfig): Long = {
-    val floor = math.max(cfg.timestampUnit.nanos, 1000L)
-    inRange(WellKnown.TimestampName, s"seconds=$secs nanos=$nanos")(
-      DateTimeUtils.instantToMicros(Instant.ofEpochSecond(secs, nanos - nanos % floor)))
+    val adj = nanos - nanos % math.max(cfg.timestampUnit.nanos, 1000L)
+    try {
+      val s = Math.addExact(secs, Math.floorDiv(adj, 1000000000L))
+      val micros = Math.floorMod(adj, 1000000000L) / 1000L
+      // below zero through s + 1, so that the range's first second holds
+      if (s < 0 && micros > 0) Math.addExact(Math.multiplyExact(s + 1, 1000000L), micros - 1000000L)
+      else Math.addExact(Math.multiplyExact(s, 1000000L), micros)
+    } catch {
+      case e: ArithmeticException => throw outOfRange(WellKnown.TimestampName, s"seconds=$secs nanos=$nanos", e)
+    }
   }
   def timestampSeconds(micros: Long): Long = Math.floorDiv(micros, 1000000L)
   def timestampNanos(micros: Long): Int = (Math.floorMod(micros, 1000000L) * 1000L).toInt
 
   /** Date → epoch day; year 0 (unset) is the sentinel day
-    * (docs/types.md:79-84). */
+    * (docs/types.md:79-84). Otherwise `LocalDate.of`'s validation (year
+    * within ±999,999,999, month, the month's days) and `toEpochDay`, if
+    * Int holds it. */
   def dateDays(year: Int, month: Int, day: Int): Int =
     if (year == 0) SchemaConversion.DateSentinelEpochDay.toInt
-    else inRange(WellKnown.DateName, s"year=$year month=$month day=$day")(
-      DateTimeUtils.localDateToDays(LocalDate.of(year, month, day)))
+    else {
+      val leap = (year & 3) == 0 && (year % 100 != 0 || year % 400 == 0)
+      val monthDays = if (month == 2) (if (leap) 29 else 28)
+        else if (month == 4 || month == 6 || month == 9 || month == 11) 30 else 31
+      val y = year.toLong
+      val days = 365 * y + (if (y >= 0) (y + 3) / 4 - (y + 99) / 100 + (y + 399) / 400
+        else y / 4 - y / 100 + y / 400) +
+        (367 * month - 362) / 12 + day - 1 - (if (month <= 2) 0 else if (leap) 1 else 2) - 719528
+      if (year < -999999999 || year > 999999999 || month < 1 || month > 12 || day < 1 ||
+        day > monthDays || days != days.toInt)
+        throw outOfRange(WellKnown.DateName, s"year=$year month=$month day=$day", null)
+      days.toInt
+    }
 
   /** Epoch day → its date; null for the sentinel (an unset Date). */
   def dateOf(days: Int): LocalDate =
@@ -66,10 +89,10 @@ object Codecs {
   /** TimeOfDay → ticks of the configured unit. */
   def timeOfDayTicks(hours: Int, minutes: Int, seconds: Int, nanos: Int,
       cfg: GraftConfig): Long =
-    inRange(WellKnown.TimeOfDayName,
-        s"hours=$hours minutes=$minutes seconds=$seconds nanos=$nanos")(
-      Math.addExact(Math.multiplyExact(hours * 3600L + minutes * 60L + seconds,
-        1000000000L), nanos.toLong) / cfg.timeOfDayUnit.nanos)
+    try Math.addExact(Math.multiplyExact(hours * 3600L + minutes * 60L + seconds,
+      1000000000L), nanos.toLong) / cfg.timeOfDayUnit.nanos
+    catch { case e: ArithmeticException => throw outOfRange(WellKnown.TimeOfDayName,
+      s"hours=$hours minutes=$minutes seconds=$seconds nanos=$nanos", e) }
 
   /** Ticks → the TimeOfDay's (hours, minutes, seconds, nanos). */
   def timeOfDayFields(ticks: Long, cfg: GraftConfig): Array[Int] = {
@@ -80,9 +103,10 @@ object Codecs {
 
   /** Duration → ticks of the configured unit. */
   def durationTicks(secs: Long, nanos: Int, cfg: GraftConfig): Long =
-    inRange(WellKnown.DurationName, s"seconds=$secs nanos=$nanos")(Math.addExact(
-      Math.multiplyExact(secs, 1000000000L / cfg.durationUnit.nanos),
-      nanos / cfg.durationUnit.nanos))
+    try Math.addExact(Math.multiplyExact(secs, 1000000000L / cfg.durationUnit.nanos),
+      nanos / cfg.durationUnit.nanos)
+    catch { case e: ArithmeticException =>
+      throw outOfRange(WellKnown.DurationName, s"seconds=$secs nanos=$nanos", e) }
 
   // ticks → Duration by floor decomposition: nanos always >= 0, like the
   // reference's Python // and % (arrow_to_proto.py:84-104)
@@ -95,11 +119,8 @@ object Codecs {
     * (seconds past the µs range, month 13, ticks past Long) comes from the
     * input, not from an engine fault: it raises IllegalArgumentException,
     * which the ingest scans treat as a malformed record. */
-  private def inRange[T](typeName: String, fields: => String)(convert: => T): T =
-    try convert catch {
-      case e @ (_: java.time.DateTimeException | _: ArithmeticException) =>
-        throw new IllegalArgumentException(s"$typeName out of range: $fields", e)
-    }
+  private def outOfRange(typeName: String, fields: String, cause: Throwable) =
+    new IllegalArgumentException(s"$typeName out of range: $fields", cause)
 
   /** A message type already on the path from the root is a recursion,
     * pruned to struct<> (proto_to_arrow.py:341-345): the payload is
@@ -213,19 +234,11 @@ object Codecs {
     * session's `datetime.java8API` setting. */
   def rowWriter(md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry): DynamicMessage => Row = {
     val write = internalRowWriter(md, cfg, reg)
-    val toRow = externalRow(SchemaConversion.messageTypeToSchema(md, cfg, reg))
-    m => toRow(write(m))
-  }
-
-  /** Spark's own internal→external converter for `schema`, built so that
-    * it emits java.time cells (Instant / LocalDate) whatever the
-    * session's `datetime.java8API` setting. */
-  def externalRow(schema: StructType): InternalRow => Row = {
     val java8 = SQLConf.get.clone()
     java8.setConf(SQLConf.DATETIME_JAVA8API_ENABLED, true)
     val toRow = SQLConf.withExistingConf(java8)(
-      CatalystTypeConverters.createToScalaConverter(schema))
-    r => toRow(r).asInstanceOf[Row]
+      CatalystTypeConverters.createToScalaConverter(SchemaConversion.messageTypeToSchema(md, cfg, reg)))
+    m => toRow(write(m)).asInstanceOf[Row]
   }
 
   // ---------------------------------------------------------------- decode

@@ -15,8 +15,11 @@ package graft.conv
   *    [[IngestMode.CorruptColumn]] column (STRING for jsonl, BINARY for
   *    wire bytes); well-formed rows carry NULL there. Nothing is lost —
   *    rejects can be counted, quarantined, and replayed.
-  *  - [[IngestMode.DropMalformed]]: malformed records are silently
-  *    skipped; the schema is unchanged.
+  *  - [[IngestMode.DropMalformed]]: malformed records are skipped; the
+  *    schema is unchanged.
+  *
+  * The scan's `ProtoDecode` node counts PERMISSIVE's rejects and
+  * DROPMALFORMED's drops in its `numRejected` / `numDropped` SQLMetric.
   *
   * The knob is per-scan (an argument, not session state) so one job can
   * mix a FAILFAST fixture load with a PERMISSIVE crawl scan.

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.annotation.switch
 import scala.collection.mutable
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+import org.apache.spark.sql.catalyst.expressions.{SpecializedGetters, UnsafeArrayData, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter, UnsafeWriter}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -102,20 +102,30 @@ object WireRows {
     /** A decoder for one thread. It writes every record into the same
       * UnsafeRow and returns that row, which the next call overwrites: a
       * caller that keeps rows past the next record copies them
-      * (`row.copy()`); Spark's scans project each row at once. Malformed
-      * input (truncation, bad lengths, nesting past
-      * [[ProtoWire.MaxDecodeDepth]], a well-known-type value its column
-      * cannot hold) raises IllegalArgumentException, and nothing else; the
-      * next call starts afresh. */
-    def newDecoder(): Array[Byte] => InternalRow = {
-      val st = new MsgState(top, null)
-      val whole = new Ranges
-      bytes => {
-        whole.n = 0
-        whole.add(0, bytes.length, Len)
-        st.decode(new Reader(bytes), whole, 0)
-        st.w.getRow
-      }
+      * (`row.copy()`). Malformed input (a null payload, truncation, bad
+      * lengths, nesting past [[ProtoWire.MaxDecodeDepth]], a
+      * well-known-type value its column cannot hold) raises
+      * IllegalArgumentException, and nothing else; the next call starts
+      * afresh. With `corrupt`, rows carry one more, last column, null. */
+    def newDecoder(corrupt: Boolean = false): Decoder = new Decoder(top, corrupt)
+  }
+
+  /** One partition's decode of one record at `buf[start, start + len)`
+    * (`buf` null: a null record) into its row, or null to skip it. */
+  trait RecordDecoder { def decode(buf: Array[Byte], start: Int, len: Int): InternalRow }
+
+  final class Decoder private[WireRows] (top: Msg, corrupt: Boolean)
+      extends (Array[Byte] => InternalRow) with RecordDecoder {
+    private val st = new MsgState(top, null, if (corrupt) 1 else 0)
+    private val whole = new Ranges
+    def apply(bytes: Array[Byte]): InternalRow = decode(bytes, 0, if (bytes == null) 0 else bytes.length)
+    def decode(buf: Array[Byte], start: Int, len: Int): InternalRow = {
+      if (buf == null) throw new IllegalArgumentException("null payload")
+      whole.n = 0
+      whole.add(start, start + len, Len)
+      st.decode(new Reader(buf), whole, 0)
+      if (corrupt) st.w.setNullAt(top.fields.length)
+      st.w.getRow
     }
   }
 
@@ -259,9 +269,9 @@ object WireRows {
 
   /** The decode state of one message position, made per decoder: its row
     * writer (nested in the enclosing writer) and the state of its fields. */
-  private final class MsgState(m: Msg, parent: UnsafeWriter) {
+  private final class MsgState(m: Msg, parent: UnsafeWriter, extra: Int = 0) {
     val w: UnsafeRowWriter =
-      if (parent == null) new UnsafeRowWriter(m.fields.length)
+      if (parent == null) new UnsafeRowWriter(m.fields.length + extra)
       else new UnsafeRowWriter(parent, m.fields.length)
     private val fs = m.fields.map(new FieldState(_, w))
 
@@ -727,12 +737,19 @@ object WireRows {
     * fields of 64 bits also read IntegerType cells. */
   def encoder(md: PMessageDesc, schema: StructType, cfg: GraftConfig,
       reg: ProtoRegistry): (InternalRow, Writer) => Array[Byte] = {
-    val top = new EncodeCompiler(cfg, reg).message(md, schema)
-    (row, w) => {
-      w.reset()
-      top.write(row, w)
-      w.toByteArray
-    }
+    val plan = encodePlan(md, schema, cfg, reg)
+    (row, w) => { plan.write(row, w); w.toByteArray }
+  }
+
+  /** The compiled encoder of [[encoder]] without its copy: `write(row, w)`
+    * leaves the row's bytes in `w` (`w.buffer`, `w.size`). */
+  def encodePlan(md: PMessageDesc, schema: StructType, cfg: GraftConfig,
+      reg: ProtoRegistry): EncodePlan =
+    new EncodePlan(new EncodeCompiler(cfg, reg).message(md, schema), md.fullName)
+
+  final class EncodePlan private[WireRows] (top: EMsg, name: String) extends Serializable {
+    def write(row: InternalRow, w: Writer): Unit = { w.reset(); top.write(row, w) }
+    override def toString: String = name
   }
 
   /** The fields of one message present in one struct, in ascending field
@@ -765,27 +782,29 @@ object WireRows {
       * writes nothing. */
     def put(g: SpecializedGetters, i: Int, w: Writer, tag: Long, omitDefault: Boolean): Unit =
       (kind: @switch) match {
-        case KString =>
-          val u = g.getUTF8String(i)
-          val n = u.numBytes
+        case KString | KBytes => // the cell straight from unsafe memory, else through its getter
+          var base: AnyRef = null
+          var off = 0L
+          var n = 0
+          g match {
+            case u: UnsafeRow => val c = u.getLong(i); base = u.getBaseObject; off = u.getBaseOffset + (c >> 32); n = c.toInt
+            case a: UnsafeArrayData =>
+              val c = a.getLong(i); base = a.getBaseObject; off = a.getBaseOffset + (c >> 32); n = c.toInt
+            case _ if kind == KString => val u = g.getUTF8String(i); base = u.getBaseObject; off = u.getBaseOffset; n = u.numBytes
+            case _ => val b = g.getBinary(i); base = b; off = Platform.BYTE_ARRAY_OFFSET; n = b.length
+          }
           if (!(omitDefault && n == 0)) {
             if (tag >= 0) w.varint(tag)
             val mark = w.size
             w.varint(n.toLong)
             val b = w.claim(n)
             val start = w.size
-            u.writeToMemory(b, Platform.BYTE_ARRAY_OFFSET + start)
+            Platform.copyMemory(base, off, b, Platform.BYTE_ARRAY_OFFSET + start, n)
             w.advance(n)
-            if (!validUtf8(b, start, n)) { // written as the String round trip writes it
-              w.truncate(mark)
-              w.bytes(u.toString.getBytes(UTF_8))
+            if (kind == KString && !validUtf8(b, start, n)) { // written as the String round trip writes it
+              val s = new String(b, start, n, UTF_8).getBytes(UTF_8)
+              w.truncate(mark); w.bytes(s)
             }
-          }
-        case KBytes =>
-          val b = g.getBinary(i)
-          if (!(omitDefault && b.length == 0)) {
-            if (tag >= 0) w.varint(tag)
-            w.bytes(b)
           }
         case KMessage =>
           if (tag >= 0) w.varint(tag)

@@ -15,7 +15,7 @@ import scala.jdk.CollectionConverters._
   * base64 (std or URL-safe), enums by name (or number), Timestamp as
   * RFC3339 strings, Duration as "1.5s" strings, Date/TimeOfDay as plain
   * objects, wrappers as bare values, Empty as {}, original field names
-  * (camelCase also accepted on read).
+  * (camelCase also accepted on read; a key that names no field raises).
   */
 object ProtoJson {
 
@@ -26,8 +26,8 @@ object ProtoJson {
 
   /** One proto-JSON object as a message of `md`. Anything the proto3 JSON
     * mapping rejects — malformed JSON, a value of the wrong JSON kind, an
-    * integer out of its field's range or with a fraction, an unknown enum
-    * name, a bad Timestamp or Duration, nesting past
+    * integer out of its field's range or with a fraction, a key that names
+    * no field, an unknown enum name, a bad Timestamp or Duration, nesting past
     * [[ProtoWire.MaxDecodeDepth]] — raises IllegalArgumentException, and
     * nothing else. */
   def parse(json: String, md: PMessageDesc, reg: ProtoRegistry): DynamicMessage = {
@@ -43,8 +43,10 @@ object ProtoJson {
     require(node != null && node.isObject, s"expected object for ${md.fullName}, got $node")
     ProtoWire.checkDepth(depth)
     var values = Map.empty[Int, Any]
+    var known = 0
     md.fields.foreach { f =>
       val n = if (node.has(f.name)) node.get(f.name) else node.get(camel(f.name))
+      if (n != null) known += 1
       if (n != null && !n.isNull) {
         val v =
           if (f.isMap) {
@@ -59,6 +61,10 @@ object ProtoJson {
         values += (f.number -> v)
       }
     }
+    // a key that names no field is an error, as in json_format.Parse
+    // without ignore_unknown_fields; so is a field under both its names
+    if (known != node.size) throw new IllegalArgumentException(
+      s"unknown or repeated field of ${md.fullName} among ${node.fieldNames.asScala.mkString(", ")}")
     DynamicMessage(md, values)
   }
 

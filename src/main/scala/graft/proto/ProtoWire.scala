@@ -70,8 +70,8 @@ object ProtoWire {
     def reset(): Unit = pos = 0
     /** The bytes written so far, as an exact-length copy. */
     def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, pos)
-    /** This writer, for callers that read the encoding as `w.out.toByteArray`. */
-    def out: Writer = this
+    /** The buffer the first [[size]] bytes are in, valid until the next write. */
+    def buffer: Array[Byte] = buf
 
     private def ensure(n: Int): Unit =
       if (n > buf.length - pos) {

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.proto._
-import graft.conv.{Codecs, GraftConfig, SchemaConversion, WireRows}
+import graft.conv.{GraftConfig, IngestMode}
 import graft.operators.Ckpt.Rounds
 
 /** Structured Streaming surface (SURVEY.md §2 Part B, streaming row): the
@@ -18,27 +18,14 @@ import graft.operators.Ckpt.Rounds
   */
 object StreamOps {
 
-  /** Streaming decode: wire-format payload column → typed rows (the
-    * streaming twin of [[graft.Protarrow.fromProtoBinary]], with the same
-    * [[WireRows]] decoder, one per partition; works on streaming Datasets
-    * because it avoids RDD APIs). */
+  /** Streaming decode: [[graft.Protarrow.fromProtoBinary]] on a streaming
+    * Dataset of wire-format payloads — the same plan node, so the same
+    * [[IngestMode]] tolerance and metrics. */
   def decodeProtoStream(payloads: Dataset[Array[Byte]], md: PMessageDesc,
       cfg: GraftConfig = GraftConfig(),
-      reg: ProtoRegistry = WellKnown.registry): DataFrame = {
-    val schema = SchemaConversion.messageTypeToSchema(md, cfg, reg)
-    val plan = WireRows.plan(md, cfg, reg)
-    val toRow = Codecs.externalRow(schema)
-    // lenient row encoder: externalRow emits java.time values (Instant /
-    // LocalDate — proleptic, exact for ancient instants); the strict
-    // encoder would reject them for java.sql ones unless the session
-    // flips datetime.java8API. Lenient accepts both.
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(schema, lenient = true)
-    payloads.mapPartitions { bs =>
-      val decode = plan.newDecoder()
-      bs.map(b => toRow(decode(b)))
-    }(enc).toDF()
-  }
+      reg: ProtoRegistry = WellKnown.registry,
+      mode: IngestMode = IngestMode.FailFast): DataFrame =
+    graft.Protarrow.fromProtoBinary(payloads, md, cfg, reg, mode)
 
   /** Tumbling-window counts with a watermark: event-time aggregation whose
     * state is bounded by the watermark (late events beyond it are dropped). */

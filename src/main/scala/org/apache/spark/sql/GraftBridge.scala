@@ -22,15 +22,21 @@ object GraftBridge {
     * for `schema`. */
   def localDataFrame(spark: SparkSession, schema: types.StructType,
       rows: Seq[catalyst.InternalRow]): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
-      catalyst.plans.logical.LocalRelation(
-        catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+    ofRows(spark, catalyst.plans.logical.LocalRelation(
+      catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
+  /** DataFrame, or Dataset of `enc`, over a logical plan, graft's own plan
+    * nodes included: one analysis, where `ofRows(...).as(enc)` makes two. */
+  def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  def dataset[T](spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan, enc: Encoder[T]): Dataset[T] =
+    classic.Dataset(spark.asInstanceOf[classic.SparkSession], plan)(enc)
 
   /** DataFrame over an RDD of pre-built InternalRows — what
     * `createDataFrame(rdd, schema)` becomes AFTER its per-row RowEncoder
     * serializer pass. Same contract as [[localDataFrame]]: the rows
-    * (graft's ingest scans) already hold catalyst representations for
-    * `schema`. */
+    * (`messagesDatasetToDataFrame`'s) already hold catalyst
+    * representations for `schema`. */
   def internalDataFrame(spark: SparkSession, schema: types.StructType,
       rows: RDD[catalyst.InternalRow]): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)

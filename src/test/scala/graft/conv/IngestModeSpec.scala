@@ -112,4 +112,19 @@ class IngestModeSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("out of range"))
   }
+
+  test("wire scan: a null payload (a Kafka tombstone) is malformed in every mode") {
+    val good = ProtoWire.encode(DynamicMessage(md, Map(md.byName("int32_value").number -> 7)), reg)
+    val ds = spark.createDataset(Seq(good, null))(org.apache.spark.sql.Encoders.BINARY)
+    val e = intercept[org.apache.spark.SparkException] {
+      Protarrow.fromProtoBinary(ds, md, GraftConfig(), reg).collect()
+    }
+    assert(e.getMessage.contains("IllegalArgumentException") && e.getMessage.contains("null payload"))
+    val dropped = Protarrow.fromProtoBinary(ds, md, GraftConfig(), reg, IngestMode.DropMalformed)
+    assert(dropped.select("int32_value").collect().map(_.getInt(0)).toSeq === Seq(7))
+    // PERMISSIVE keeps the tombstone as a row of nulls, its raw payload (null) included
+    val perm = Protarrow.fromProtoBinary(ds, md, GraftConfig(), reg, IngestMode.Permissive).collect()
+    assert(perm.length === 2)
+    assert(perm.count(r => (0 until r.length).forall(r.isNullAt)) === 1)
+  }
 }
