@@ -102,7 +102,8 @@ object Protarrow {
     * reference's behavior); PERMISSIVE appends a BINARY
     * `_corrupt_record` column carrying the raw bytes of rejects;
     * DROPMALFORMED skips them. A null payload (a Kafka tombstone) is
-    * malformed. */
+    * malformed; PERMISSIVE quarantines it with an empty `_corrupt_record`,
+    * so `_corrupt_record IS NOT NULL` finds every reject. */
   def fromProtoBinary(ds: Dataset[Array[Byte]], md: PMessageDesc,
       cfg: GraftConfig = GraftConfig(),
       reg: ProtoRegistry = WellKnown.registry,

@@ -13,7 +13,11 @@ package graft.conv
   *  - [[IngestMode.Permissive]]: a malformed record becomes a row of
   *    NULL fields with the raw input preserved in the appended
   *    [[IngestMode.CorruptColumn]] column (STRING for jsonl, BINARY for
-  *    wire bytes); well-formed rows carry NULL there. Nothing is lost —
+  *    wire bytes); well-formed rows carry NULL there. A null record (a
+  *    Kafka tombstone) is quarantined with an empty value, which no
+  *    accepted record leaves there (an empty wire payload decodes to the
+  *    default message, a blank JSONL line is skipped), so
+  *    `_corrupt_record IS NOT NULL` finds every reject. Nothing is lost —
   *    rejects can be counted, quarantined, and replayed.
   *  - [[IngestMode.DropMalformed]]: malformed records are skipped; the
   *    schema is unchanged.

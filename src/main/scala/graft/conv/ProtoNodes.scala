@@ -1,7 +1,7 @@
 package graft.conv
 
 import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftBridge, SparkSession, classic}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -48,7 +48,6 @@ final class JsonLines(md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry)
       case (f, i) => BoundReference(i, f.dataType, f.nullable)
     } ++ (if (corrupt) Seq(Literal(null, StringType)) else Nil))
     (buf, start, len) => {
-      if (buf == null) throw new IllegalArgumentException("null payload")
       val line = new String(buf, start, len, UTF_8)
       if (line.trim.isEmpty) null else project(write(ProtoJson.parse(line, md, reg)))
     }
@@ -77,11 +76,14 @@ case class ProtoEncode(plan: WireRows.EncodePlan, input: Seq[Attribute], output:
 /** [[ProtoDecode]]'s exec. One decoder per partition writes every record
   * into the same UnsafeRow and emits it as is, with no projection: the
   * Spark scan contract, under which an operator that buffers rows (sort,
-  * cache, collect) copies them. A record the decoder rejects (it raises
-  * IllegalArgumentException, a null payload included) fails the task
-  * under FAILFAST, is counted in `numDropped` under DROPMALFORMED and in
-  * `numRejected` under PERMISSIVE, whose row holds nulls and the raw
-  * record. Any other exception is an engine fault and propagates. */
+  * cache, collect) copies them. A null record raises
+  * IllegalArgumentException here, before any decoder sees it. A record
+  * rejected that way or by the decoder (it raises IllegalArgumentException)
+  * fails the task under FAILFAST, is counted in `numDropped` under
+  * DROPMALFORMED and in `numRejected` under PERMISSIVE, whose row holds
+  * nulls and the raw record, empty for a null one. Any other exception is
+  * an engine fault and propagates. `decodeTime` sums each record's
+  * decode, not the operators pipelined with the node. */
 case class ProtoDecodeExec(input: Attribute, source: ProtoSource, mode: IngestMode,
     output: Seq[Attribute], child: SparkPlan) extends UnaryExecNode {
   override def producedAttributes: AttributeSet = AttributeSet(output)
@@ -101,7 +103,6 @@ case class ProtoDecodeExec(input: Attribute, source: ProtoSource, mode: IngestMo
     val (rows, bytes, time) = (longMetric("numOutputRows"), longMetric("inputBytes"), longMetric("decodeTime"))
     val bad = metrics.getOrElse("numRejected", metrics.getOrElse("numDropped", null))
     child.execute().mapPartitions { in =>
-      ProtoNodes.timed(time)
       val dec = src.newDecoder(corrupt)
       val rejects = if (corrupt) new UnsafeRowWriter(width) else null
       in.map { r =>
@@ -117,7 +118,11 @@ case class ProtoDecodeExec(input: Attribute, source: ProtoSource, mode: IngestMo
           case _ => buf = if (binary) r.getBinary(ord) else r.getUTF8String(ord).getBytes; len = buf.length
         }
         bytes += len
-        val out = try dec.decode(buf, start, len) catch {
+        val t0 = System.nanoTime()
+        val out = try {
+          if (buf == null) throw new IllegalArgumentException("null payload")
+          dec.decode(buf, start, len)
+        } catch {
           case _: IllegalArgumentException if !failFast =>
             bad += 1
             if (!corrupt) null
@@ -125,10 +130,11 @@ case class ProtoDecodeExec(input: Attribute, source: ProtoSource, mode: IngestMo
               rejects.reset()
               rejects.zeroOutNullBytes()
               for (i <- 0 until width - 1) rejects.setNullAt(i)
-              if (buf == null) rejects.setNullAt(width - 1) else rejects.write(width - 1, buf, start, len)
+              rejects.write(width - 1, if (buf == null) Array.emptyByteArray else buf, start, len)
               rejects.getRow
             }
         }
+        time += System.nanoTime() - t0
         if (out != null) rows += 1
         out
       }.filter(_ != null)
@@ -138,7 +144,7 @@ case class ProtoDecodeExec(input: Attribute, source: ProtoSource, mode: IngestMo
 
 /** [[ProtoEncode]]'s exec: one Writer and one single-cell UnsafeRowWriter
   * per partition; each row's bytes go from the Writer's buffer straight
-  * into the reused output row. */
+  * into the reused output row. `encodeTime` sums each row's encode. */
 case class ProtoEncodeExec(plan: WireRows.EncodePlan, input: Seq[Attribute],
     output: Seq[Attribute], child: SparkPlan) extends UnaryExecNode {
   override def producedAttributes: AttributeSet = AttributeSet(output)
@@ -152,10 +158,11 @@ case class ProtoEncodeExec(plan: WireRows.EncodePlan, input: Seq[Attribute],
     require(child.output.map(_.exprId) == input.map(_.exprId), s"ProtoEncode input moved: ${child.output}")
     val (rows, bytes, time) = (longMetric("numOutputRows"), longMetric("outputBytes"), longMetric("encodeTime"))
     child.execute().mapPartitions { in =>
-      ProtoNodes.timed(time)
       val (w, out) = (new ProtoWire.Writer(), new UnsafeRowWriter(1))
       in.map { r =>
+        val t0 = System.nanoTime()
         enc.write(r, w)
+        time += System.nanoTime() - t0
         out.reset()
         out.zeroOutNullBytes()
         out.write(0, w.buffer, 0, w.size)
@@ -215,10 +222,4 @@ object ProtoNodes extends SparkStrategy {
   private[conv] def shown(metrics: Map[String, SQLMetric]): String =
     metrics.toSeq.sortBy(_._1).map { case (k, m) => s"$k=${m.value}" }.mkString("metrics [", ", ", "]")
 
-  /** Adds the task's time from now to its end to `time`: one measurement
-    * per partition, which includes the operators pipelined with the node. */
-  private[conv] def timed(time: SQLMetric): Unit = {
-    val t0 = System.nanoTime()
-    TaskContext.get().addTaskCompletionListener[Unit](_ => time += System.nanoTime() - t0)
-  }
 }

@@ -2,7 +2,6 @@ package graft.conv
 
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.annotation.switch
-import scala.collection.mutable
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{SpecializedGetters, UnsafeArrayData, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter, UnsafeWriter}
@@ -94,33 +93,26 @@ object WireRows {
   def plan(md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry): DecodePlan =
     new DecodePlan(new DecodeCompiler(cfg, reg).message(md, Vector(md.fullName)))
 
-  /** `plan(md, cfg, reg).newDecoder()`: one decoder, for one thread. */
-  def decoder(md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry): Array[Byte] => InternalRow =
-    plan(md, cfg, reg).newDecoder()
-
   final class DecodePlan private[WireRows] (top: Msg) extends Serializable {
     /** A decoder for one thread. It writes every record into the same
       * UnsafeRow and returns that row, which the next call overwrites: a
       * caller that keeps rows past the next record copies them
-      * (`row.copy()`). Malformed input (a null payload, truncation, bad
-      * lengths, nesting past [[ProtoWire.MaxDecodeDepth]], a
-      * well-known-type value its column cannot hold) raises
-      * IllegalArgumentException, and nothing else; the next call starts
-      * afresh. With `corrupt`, rows carry one more, last column, null. */
-    def newDecoder(corrupt: Boolean = false): Decoder = new Decoder(top, corrupt)
+      * (`row.copy()`). Malformed input (truncation, bad lengths, nesting
+      * past [[ProtoWire.MaxDecodeDepth]], a well-known-type value its
+      * column cannot hold) raises IllegalArgumentException, and nothing
+      * else; the next call starts afresh. With `corrupt`, rows carry one
+      * more, last column, null. */
+    def newDecoder(corrupt: Boolean = false): RecordDecoder = new Decoder(top, corrupt)
   }
 
   /** One partition's decode of one record at `buf[start, start + len)`
-    * (`buf` null: a null record) into its row, or null to skip it. */
+    * into its row, or null to skip it. */
   trait RecordDecoder { def decode(buf: Array[Byte], start: Int, len: Int): InternalRow }
 
-  final class Decoder private[WireRows] (top: Msg, corrupt: Boolean)
-      extends (Array[Byte] => InternalRow) with RecordDecoder {
+  private final class Decoder(top: Msg, corrupt: Boolean) extends RecordDecoder {
     private val st = new MsgState(top, null, if (corrupt) 1 else 0)
     private val whole = new Ranges
-    def apply(bytes: Array[Byte]): InternalRow = decode(bytes, 0, if (bytes == null) 0 else bytes.length)
     def decode(buf: Array[Byte], start: Int, len: Int): InternalRow = {
-      if (buf == null) throw new IllegalArgumentException("null payload")
       whole.n = 0
       whole.add(start, start + len, Len)
       st.decode(new Reader(buf), whole, 0)
@@ -131,8 +123,14 @@ object WireRows {
 
   /** One value of a proto type at one schema position. */
   private final class Leaf(val kind: Int, val wt: Int, val cfg: GraftConfig) extends Serializable {
-    /** KMessage: the message (a pruned one is parsed and written empty). */
+    /** KMessage: the message's columns; null for a pruned message or
+      * Empty, which writes the empty row. */
     var msg: Msg = _
+    /** Message-like kinds: the message, and the registry its fields
+      * resolve in, for the reference decoder to parse a payload that is
+      * not written. */
+    var md: PMessageDesc = _
+    var reg: ProtoRegistry = _
     /** KWrapper: the wrapped scalar. */
     var inner: Leaf = _
     /** Well-known types: the wire type of fields 1..n. */
@@ -166,7 +164,7 @@ object WireRows {
 
   /** One message type at one schema position: its fields in column order
     * behind a field-number table. */
-  private final class Msg(md: PMessageDesc, val pruned: Boolean) extends Serializable {
+  private final class Msg(md: PMessageDesc) extends Serializable {
     var fields: Array[Field] = _
     // field number → slot (-1: unknown); the last field wins a duplicated
     // number, as in PMessageDesc.byNumber
@@ -189,50 +187,37 @@ object WireRows {
   }
 
   private final class DecodeCompiler(cfg: GraftConfig, reg: ProtoRegistry) {
-    // pruned message types by name: they may be cyclic, so each is
-    // registered before its fields compile
-    private val prunedMsgs = mutable.Map.empty[String, Msg]
 
     def message(md: PMessageDesc, trace: Vector[String]): Msg =
-      new Msg(md, pruned = false).init(md.fields.map(field(_, messageLeaf(_, trace))))
+      new Msg(md).init(md.fields.map(field(_, trace)))
 
-    /** A pruned (recursive) message is still parsed, so it rejects what the
-      * full decode rejects, but is written as the empty row. */
-    private def prunedMsg(name: String): Msg = prunedMsgs.getOrElse(name, {
-      val md = reg.message(name)
-      val m = new Msg(md, pruned = true)
-      prunedMsgs(name) = m
-      m.init(md.fields.map(field(_, n => msgLeaf(prunedMsg(n)))))
-    })
-
-    private def msgLeaf(m: Msg): Leaf = {
-      val l = new Leaf(KMessage, Len, cfg)
-      l.msg = m
-      l
-    }
-
-    private def wktLeaf(kind: Int, md: PMessageDesc): Leaf = {
+    /** A message-like leaf of `md`; a KMessage one without `msg` is
+      * written as the empty row. */
+    private def msgLeaf(kind: Int, md: PMessageDesc, msg: Msg = null): Leaf = {
       val l = new Leaf(kind, Len, cfg)
-      l.wkt = md.fieldsByNumberAsc.map(f => ProtoWire.wireType(f.typ)).toArray
+      l.md = md
+      l.reg = reg
+      l.msg = msg
+      if (kind != KMessage) l.wkt = md.fieldsByNumberAsc.map(f => ProtoWire.wireType(f.typ)).toArray
       l
     }
 
     private def messageLeaf(name: String, trace: Vector[String]): Leaf = name match {
-      case WellKnown.TimestampName => wktLeaf(KTimestamp, WellKnown.timestamp)
-      case WellKnown.DateName => wktLeaf(KDate, WellKnown.date)
-      case WellKnown.TimeOfDayName => wktLeaf(KTimeOfDay, WellKnown.timeOfDay)
-      case WellKnown.DurationName => wktLeaf(KDuration, WellKnown.duration)
+      case WellKnown.TimestampName => msgLeaf(KTimestamp, WellKnown.timestamp)
+      case WellKnown.DateName => msgLeaf(KDate, WellKnown.date)
+      case WellKnown.TimeOfDayName => msgLeaf(KTimeOfDay, WellKnown.timeOfDay)
+      case WellKnown.DurationName => msgLeaf(KDuration, WellKnown.duration)
       case n if WellKnown.isWrapper(n) =>
-        val l = wktLeaf(KWrapper, reg.message(n))
-        l.inner = leaf(WellKnown.wrapperNames(n), null)
+        val l = msgLeaf(KWrapper, reg.message(n))
+        l.inner = leaf(WellKnown.wrapperNames(n), trace)
         l
-      case WellKnown.EmptyName => msgLeaf(new Msg(WellKnown.empty, pruned = true).init(Nil))
-      case n if Codecs.pruned(n, trace) => msgLeaf(prunedMsg(n))
-      case n => msgLeaf(message(reg.message(n), trace :+ n))
+      case WellKnown.EmptyName => msgLeaf(KMessage, WellKnown.empty)
+      case n if Codecs.pruned(n, trace) => msgLeaf(KMessage, reg.message(n))
+      case n => msgLeaf(KMessage, reg.message(n), message(reg.message(n), trace :+ n))
     }
 
-    private def leaf(t: PType, messageLeaf: String => Leaf): Leaf = t match {
-      case PMessage(name) => messageLeaf(name)
+    private def leaf(t: PType, trace: Vector[String]): Leaf = t match {
+      case PMessage(name) => messageLeaf(name, trace)
       case PEnum(name) if cfg.enumType.nameBased =>
         val ed = reg.enum(name)
         val l = new Leaf(KEnumName, Varint, cfg)
@@ -244,10 +229,10 @@ object WireRows {
       case _ => new Leaf(scalarKind(t), ProtoWire.wireType(t), cfg)
     }
 
-    private def field(f: PField, messageLeaf: String => Leaf): Field =
+    private def field(f: PField, trace: Vector[String]): Field =
       if (f.isMap) new Field(f, if (cfg.mapAsList) MapList else MapCell,
-        leaf(f.mapKey, messageLeaf), leaf(f.mapValue, messageLeaf))
-      else new Field(f, if (f.repeated) Repeated else Singular, null, leaf(f.typ, messageLeaf))
+        leaf(f.mapKey, trace), leaf(f.mapValue, trace))
+      else new Field(f, if (f.repeated) Repeated else Singular, null, leaf(f.typ, trace))
   }
 
   /** Reusable list of a value's occurrences: (start, end, wire type) each,
@@ -324,7 +309,7 @@ object WireRows {
     private val keys = if (f.mode == MapCell) new UnsafeArrayWriter(row, f.key.size) else null
     private val entry = if (f.mode == MapList) new UnsafeRowWriter(arr, 2) else null
     private val child =
-      if (v.kind != KMessage || v.msg.pruned) null
+      if (v.kind != KMessage || v.msg == null) null
       else new MsgState(v.msg, f.mode match {
         case Singular => row
         case MapList => entry
@@ -377,8 +362,7 @@ object WireRows {
     private def putMessage(r: Reader, rgs: Ranges, out: UnsafeWriter, o: Int, depth: Int): Unit =
       if (v.kind == KMessage) {
         val prev = out.cursor()
-        if (child != null) child.decode(r, rgs, depth + 1)
-        else skimAll(r, rgs, depth + 1)
+        if (child != null) child.decode(r, rgs, depth + 1) else check(r, rgs, depth + 1)
         out.setOffsetAndSizeFromPreviousCursor(o, prev)
       } else {
         readWkt(r, v, rgs, depth + 1, vals)
@@ -394,12 +378,17 @@ object WireRows {
         }
       }
 
-    /** Parses message-like occurrences without writing them. */
-    private def skimAll(r: Reader, rgs: Ranges, depth: Int): Unit =
-      if (v.kind == KMessage) {
-        var i = 0
-        while (i < rgs.n) { rgs.window(r, i); skim(v.msg, r, depth, vals); i += 1 }
-      } else readWkt(r, v, rgs, depth, vals)
+    /** Runs the reference decoder over message-like occurrences that are
+      * not written, so they reject what a decode rejects; an empty one
+      * only counts its depth, as there. */
+    private def check(r: Reader, rgs: Ranges, depth: Int): Unit = {
+      var i = 0
+      while (i < rgs.n) {
+        rgs.window(r, i)
+        if (r.hasMore) ProtoWire.decodeReader(r, v.md, v.reg, depth) else ProtoWire.checkDepth(depth)
+        i += 1
+      }
+    }
 
     // ---------------------------------------------------------------- maps
     // Distinct keys in first-position order, each with its last entry. Keys
@@ -597,7 +586,7 @@ object WireRows {
         var i = 0
         while (i < losers.n) {
           scanEntry(r, losers.start(i), losers.end(i), all = true)
-          skimAll(r, sub, depth + 1)
+          check(r, sub, depth + 1)
           i += 1
         }
       }
@@ -667,82 +656,31 @@ object WireRows {
   private def readWkt(r: Reader, l: Leaf, rgs: Ranges, depth: Int, vals: Array[Long]): Unit = {
     if (rgs.n > 0) ProtoWire.checkDepth(depth)
     vals(0) = 0L; vals(1) = 0L; vals(2) = 0L; vals(3) = 0L
-    var i = 0
-    while (i < rgs.n) { rgs.window(r, i); wktFields(r, l, vals); i += 1 }
-  }
-
-  private def wktFields(r: Reader, l: Leaf, vals: Array[Long]): Unit =
-    while (r.hasMore) {
-      val t = r.varint()
-      val wt = (t & 7).toInt
-      val i = (t >>> 3).toInt - 1
-      if (i < 0 || i >= l.wkt.length || wt != l.wkt(i)) r.skip(wt)
-      else if (wt == Len) { val len = r.len(); vals(0) = r.pos; vals(1) = len; r.pos += len }
-      else vals(i) = readRaw(r, wt)
-    }
-
-  /** Parses `r`'s window as message `m` at `depth` without writing it: it
-    * rejects exactly what decoding it would. */
-  private def skim(m: Msg, r: Reader, depth: Int, vals: Array[Long]): Unit = {
-    ProtoWire.checkDepth(depth)
-    while (r.hasMore) {
-      val t = r.varint()
-      val wt = (t & 7).toInt
-      val s = m.slot((t >>> 3).toInt)
-      if (s < 0 || (m.fields(s).wireTypes & (1 << wt)) == 0) r.skip(wt)
-      else {
-        val f = m.fields(s)
-        if (f.mode >= MapCell || (wt == Len && f.packable)) {
-          val len = r.len()
-          val outer = r.end
-          r.end = r.pos + len
-          while (r.hasMore) {
-            if (f.mode < MapCell) readRaw(r, f.value.wt)
-            else {
-              val et = r.varint()
-              val ewt = (et & 7).toInt
-              val num = (et >>> 3).toInt
-              if (num == 1 && ewt == f.key.wt) skimValue(f.key, r, depth, vals)
-              else if (num == 2 && ewt == f.value.wt) skimValue(f.value, r, depth, vals)
-              else r.skip(ewt)
-            }
-          }
-          r.end = outer
-        } else skimValue(f.value, r, depth, vals)
+    var k = 0
+    while (k < rgs.n) {
+      rgs.window(r, k)
+      while (r.hasMore) {
+        val t = r.varint()
+        val wt = (t & 7).toInt
+        val i = (t >>> 3).toInt - 1
+        if (i < 0 || i >= l.wkt.length || wt != l.wkt(i)) r.skip(wt)
+        else if (wt == Len) { val len = r.len(); vals(0) = r.pos; vals(1) = len; r.pos += len }
+        else vals(i) = readRaw(r, wt)
       }
+      k += 1
     }
   }
-
-  private def skimValue(l: Leaf, r: Reader, depth: Int, vals: Array[Long]): Unit =
-    if (!l.msgLike) r.skip(l.wt)
-    else {
-      val len = r.len()
-      val outer = r.end
-      val end = r.pos + len
-      r.end = end
-      if (l.kind == KMessage) skim(l.msg, r, depth + 1, vals)
-      else { ProtoWire.checkDepth(depth + 1); wktFields(r, l, vals) }
-      r.pos = end
-      r.end = outer
-    }
 
   // ================================================================ encode
 
   /** Compiled row → wire encoder against the rows' actual `schema`
     * (columns missing from it are skipped; nulls read as absent, or as the
-    * default for a map value). Each call encodes one row into `w`, which
-    * the caller owns and reuses across rows, and returns an exact-length
-    * copy. A null element of a repeated field, or a cell whose type cannot
-    * hold its field's type, raises IllegalArgumentException. Integral
-    * fields of 64 bits also read IntegerType cells. */
-  def encoder(md: PMessageDesc, schema: StructType, cfg: GraftConfig,
-      reg: ProtoRegistry): (InternalRow, Writer) => Array[Byte] = {
-    val plan = encodePlan(md, schema, cfg, reg)
-    (row, w) => { plan.write(row, w); w.toByteArray }
-  }
-
-  /** The compiled encoder of [[encoder]] without its copy: `write(row, w)`
-    * leaves the row's bytes in `w` (`w.buffer`, `w.size`). */
+    * default for a map value). `write(row, w)` encodes one row into `w`,
+    * which the caller owns and reuses across rows, and leaves its bytes
+    * there (`w.buffer`, `w.size`). A null element of a repeated field, or
+    * a cell whose type cannot hold its field's type, raises
+    * IllegalArgumentException. Integral fields of 64 bits also read
+    * IntegerType cells. */
   def encodePlan(md: PMessageDesc, schema: StructType, cfg: GraftConfig,
       reg: ProtoRegistry): EncodePlan =
     new EncodePlan(new EncodeCompiler(cfg, reg).message(md, schema), md.fullName)

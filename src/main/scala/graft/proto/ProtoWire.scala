@@ -353,7 +353,10 @@ object ProtoWire {
     DynamicMessage(md, merged)
   }
 
-  private def decodeReader(r: Reader, md: PMessageDesc, reg: ProtoRegistry,
+  /** The message `md` in `r`'s window [pos, end) at nesting `depth` (the
+    * top-level message is at 0); it consumes the window and raises
+    * IllegalArgumentException on exactly what [[decode]] raises on. */
+  def decodeReader(r: Reader, md: PMessageDesc, reg: ProtoRegistry,
       depth: Int): DynamicMessage = {
     checkDepth(depth)
     var values = Map.empty[Int, Any]

@@ -122,9 +122,13 @@ class IngestModeSpec extends SparkSpec {
     assert(e.getMessage.contains("IllegalArgumentException") && e.getMessage.contains("null payload"))
     val dropped = Protarrow.fromProtoBinary(ds, md, GraftConfig(), reg, IngestMode.DropMalformed)
     assert(dropped.select("int32_value").collect().map(_.getInt(0)).toSeq === Seq(7))
-    // PERMISSIVE keeps the tombstone as a row of nulls, its raw payload (null) included
-    val perm = Protarrow.fromProtoBinary(ds, md, GraftConfig(), reg, IngestMode.Permissive).collect()
-    assert(perm.length === 2)
-    assert(perm.count(r => (0 until r.length).forall(r.isNullAt)) === 1)
+    // PERMISSIVE keeps the tombstone as a row of nulls with an empty raw
+    // payload, so the IS NOT NULL filter finds it
+    val perm = Protarrow.fromProtoBinary(ds, md, GraftConfig(), reg, IngestMode.Permissive)
+    assert(perm.count() === 2)
+    val quarantined = perm.filter(col(C).isNotNull).collect()
+    assert(quarantined.length === 1)
+    assert((0 until quarantined.head.length - 1).forall(quarantined.head.isNullAt))
+    assert(quarantined.head.getAs[Array[Byte]](C).isEmpty)
   }
 }

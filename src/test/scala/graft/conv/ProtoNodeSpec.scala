@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, GraftBridge, classic}
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, length, udf}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalacheck.Gen
 import graft.proto._
@@ -114,6 +114,20 @@ class ProtoNodeSpec extends SparkSpec {
     val m = nodes(enc).collectFirst { case e: ProtoEncodeExec => e.metrics }.get
     assert(m("numOutputRows").value === msgs.size)
     assert(m("outputBytes").value === out.map(_.length.toLong).sum)
+  }
+
+  test("decodeTime and encodeTime time the codec, not a slow operator pipelined with it") {
+    val sleepMs = 20
+    val slow = udf((x: Long) => { Thread.sleep(sleepMs); x })
+    val slowNs = msgs.size * sleepMs * 1000000L
+    val decoded = Protarrow.fromProtoBinary(wire(msgs), md, cfg, reg)
+    val (_, dec) = executed(decoded.select(slow(col("int64_value"))).collect())
+    assert(decodeMetrics(dec)("decodeTime") > 0)
+    assert(decodeMetrics(dec)("decodeTime") < slowNs / 10)
+    val encoded = Protarrow.toProtoBinary(decoded, md, cfg, reg).toDF()
+    val (_, enc) = executed(encoded.select(slow(length(col("value")).cast("long"))).collect())
+    val encodeTime = nodes(enc).collectFirst { case e: ProtoEncodeExec => e.metrics("encodeTime").value }.get
+    assert(encodeTime > 0 && encodeTime < slowNs / 10)
   }
 
   test("a stream decodes through the node, DROPMALFORMED and null payloads included") {

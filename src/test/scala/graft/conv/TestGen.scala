@@ -1,5 +1,7 @@
 package graft.conv
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.proto._
@@ -67,10 +69,32 @@ object TestGen {
       }.toVector
     ).map(opts => DynamicMessage(md, opts.flatten.toMap))
 
-  /** WireFuzzSpec's mutant set for `md`: 24 seeded payloads (seed 7) plus
-    * one byte-flip, one truncation and one inflated-length-prefix mutant
-    * of each (seed 1000 + 3 * payload + kind). */
-  def wireMutants(md: PMessageDesc): Vector[Array[Byte]] = {
+  /** A message of a recursive type `md`: every field present, message
+    * fields nested `depth` levels (then empty), two elements per repeated
+    * or map field. */
+  def genNested(md: PMessageDesc, depth: Int): Gen[DynamicMessage] = {
+    def value(t: PType): Gen[Any] = t match {
+      case PMessage(name) if depth == 0 => Gen.const(DynamicMessage.empty(reg.message(name)))
+      case PMessage(name) => genNested(reg.message(name), depth - 1)
+      case _ => genScalar(t)
+    }
+    Gen.sequence[Vector[(Int, Any)], (Int, Any)](md.fields.map { f =>
+      (if (f.isMap) Gen.mapOfN(2, Gen.zip(genScalar(f.mapKey), value(f.mapValue)))
+      else if (f.repeated) Gen.listOfN(2, value(f.typ)).map(_.toVector)
+      else value(f.typ)).map(f.number -> _)
+    }.toVector).map(vs => DynamicMessage(md, vs.toMap))
+  }
+
+  /** WireFuzzSpec's mutant set for `md`: [[mutants]] of 24 seeded
+    * payloads (seed 7). */
+  def wireMutants(md: PMessageDesc): Vector[Array[Byte]] =
+    mutants(sample(Gen.listOfN(24, genMessage(md)), 7L)
+      .map(ProtoWire.encode(_, reg)).filter(_.length > 1).toVector)
+
+  /** `base` plus one byte-flip, one truncation and one
+    * inflated-length-prefix mutant of each payload (seed 1000 + 3 *
+    * payload + kind); every payload needs a top-level length prefix. */
+  def mutants(base: Vector[Array[Byte]]): Vector[Array[Byte]] = {
     def flip(b: Array[Byte]): Gen[Array[Byte]] = for {
       k <- Gen.chooseNum(1, 4)
       hits <- Gen.listOfN(k, Gen.zip(Gen.chooseNum(0, b.length - 1), Gen.chooseNum(1, 255)))
@@ -103,12 +127,25 @@ object TestGen {
         b.take(start) ++ w.toByteArray ++ b.drop(end)
       }
     }
-    val base = sample(Gen.listOfN(24, genMessage(md)), 7L)
-      .map(ProtoWire.encode(_, reg)).filter(_.length > 1).toVector
     base ++ base.zipWithIndex.flatMap { case (b, i) =>
       Seq(flip(b), truncate(b), inflate(b)).zipWithIndex.map { case (g, k) =>
         sample(g, 1000L + 3L * i + k)
       }
     }
+  }
+
+  /** A [[WireRows]] decoder of whole payloads, for one thread: it returns
+    * one reused row, as [[WireRows.DecodePlan.newDecoder]] does. */
+  def wireDecoder(md: PMessageDesc, cfg: GraftConfig, reg: ProtoRegistry): Array[Byte] => InternalRow = {
+    val dec = WireRows.plan(md, cfg, reg).newDecoder()
+    b => dec.decode(b, 0, b.length)
+  }
+
+  /** A [[WireRows]] encoder of rows of `schema` into exact-length
+    * payloads, for one thread. */
+  def wireEncoder(md: PMessageDesc, schema: StructType, cfg: GraftConfig,
+      reg: ProtoRegistry): InternalRow => Array[Byte] = {
+    val (plan, w) = (WireRows.encodePlan(md, schema, cfg, reg), new ProtoWire.Writer())
+    row => { plan.write(row, w); w.toByteArray }
   }
 }

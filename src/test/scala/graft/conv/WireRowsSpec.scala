@@ -13,9 +13,9 @@ import graft.proto._
 import graft.{Protarrow, SparkSpec}
 
 /** Equivalence oracle for the direct wire ↔ InternalRow codec: over the
-  * 35-config matrix and explicit edge cases, [[WireRows.decoder]] gives
+  * 35-config matrix and explicit edge cases, [[TestGen.wireDecoder]] gives
   * the row `Codecs.internalRowWriter(ProtoWire.decode(b))` gives, and
-  * [[WireRows.encoder]] the bytes `ProtoWire.encode(Codecs.internalRowReader(row))`
+  * [[TestGen.wireEncoder]] the bytes `ProtoWire.encode(Codecs.internalRowReader(row))`
   * gives; both reject the same payloads, with IllegalArgumentException
   * only. */
 class WireRowsSpec extends SparkSpec {
@@ -51,7 +51,7 @@ class WireRowsSpec extends SparkSpec {
     * exception each raised. */
   private def decodeBoth(md: PMessageDesc, cfg: GraftConfig, bytes: Array[Byte]): (Try[Any], Try[Any]) = {
     val schema = SchemaConversion.messageTypeToSchema(md, cfg, reg)
-    val direct = Try(norm(WireRows.decoder(md, cfg, reg)(bytes), schema))
+    val direct = Try(norm(TestGen.wireDecoder(md, cfg, reg)(bytes), schema))
     val viaMessage = Try(norm(Codecs.internalRowWriter(md, cfg, reg)(
       ProtoWire.decode(bytes, md, reg)), schema))
     (direct, viaMessage)
@@ -69,11 +69,11 @@ class WireRowsSpec extends SparkSpec {
 
   private def directRow(md: PMessageDesc, bytes: Array[Byte],
       cfg: GraftConfig = GraftConfig()): InternalRow =
-    WireRows.decoder(md, cfg, reg)(bytes)
+    TestGen.wireDecoder(md, cfg, reg)(bytes)
 
   private def encodeBoth(md: PMessageDesc, schema: StructType, cfg: GraftConfig,
       row: InternalRow): (Array[Byte], Array[Byte]) =
-    (WireRows.encoder(md, schema, cfg, reg)(row, new ProtoWire.Writer()),
+    (TestGen.wireEncoder(md, schema, cfg, reg)(row),
       ProtoWire.encode(Codecs.internalRowReader(md, schema, cfg, reg)(row), reg))
 
   /** The encoder writes the old path's bytes from a generic row and from
@@ -252,7 +252,7 @@ class WireRowsSpec extends SparkSpec {
   test("a decoder reuses its row: copies stay independent of later records") {
     val msgs = sample(Gen.listOfN(6, TestGen.genMessage(em)), 21L)
     val bytes = msgs.map(ProtoWire.encode(_, reg))
-    val decode = WireRows.decoder(em, GraftConfig(), reg)
+    val decode = TestGen.wireDecoder(em, GraftConfig(), reg)
     val copies = bytes.map(b => decode(b).copy())
     assert(decode(bytes.head) eq decode(bytes.last), "one row, overwritten per record")
     copies.zip(bytes).foreach { case (c, b) =>
@@ -319,7 +319,7 @@ class WireRowsSpec extends SparkSpec {
     val row = exampleRow(Map.empty)
     row.update(ordinal("int32_values"), new GenericArrayData(Array[Any](1, null)))
     intercept[IllegalArgumentException] {
-      WireRows.encoder(em, exampleSchema, GraftConfig(), reg)(row, new ProtoWire.Writer())
+      TestGen.wireEncoder(em, exampleSchema, GraftConfig(), reg)(row)
     }
     intercept[IllegalArgumentException](Codecs.internalRowReader(em, exampleSchema, GraftConfig(), reg)(row))
   }

@@ -192,12 +192,12 @@ class WireSpec extends AnyFunSuite {
   private val v64 = PMessageDesc("v64", Seq(PField("x", 1, PType.PInt64)))
   private def decoders(bytes: Array[Byte]): Seq[() => Any] = Seq(
     () => ProtoWire.decode(bytes, v64, reg),
-    () => graft.conv.WireRows.decoder(v64, graft.conv.GraftConfig(), reg)(bytes))
+    () => graft.conv.TestGen.wireDecoder(v64, graft.conv.GraftConfig(), reg)(bytes))
 
   test("varint: a 10-byte varint ending exactly at the buffer end decodes") {
     val bytes = Array[Byte](0x08) ++ Array.fill(9)(0xFF.toByte) ++ Array[Byte](0x01)
     assert(ProtoWire.decode(bytes, v64, reg) === DynamicMessage(v64, Map(1 -> -1L)))
-    assert(graft.conv.WireRows.decoder(v64, graft.conv.GraftConfig(), reg)(bytes).getLong(0) === -1L)
+    assert(graft.conv.TestGen.wireDecoder(v64, graft.conv.GraftConfig(), reg)(bytes).getLong(0) === -1L)
     val r = new ProtoWire.Reader(bytes, 1, bytes.length)
     assert(r.varint() === -1L && !r.hasMore)
   }
