@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.proto._
-import graft.conv.{GraftConfig, IngestMode}
+import graft.conv.GraftConfig
 import graft.operators.Ckpt.Rounds
 
 /** Structured Streaming surface (SURVEY.md §2 Part B, streaming row): the
@@ -18,14 +18,45 @@ import graft.operators.Ckpt.Rounds
   */
 object StreamOps {
 
-  /** Streaming decode: [[graft.Protarrow.fromProtoBinary]] on a streaming
-    * Dataset of wire-format payloads — the same plan node, so the same
-    * [[IngestMode]] tolerance and metrics. */
-  def decodeProtoStream(payloads: Dataset[Array[Byte]], md: PMessageDesc,
-      cfg: GraftConfig = GraftConfig(),
-      reg: ProtoRegistry = WellKnown.registry,
-      mode: IngestMode = IngestMode.FailFast): DataFrame =
-    graft.Protarrow.fromProtoBinary(payloads, md, cfg, reg, mode)
+  /** The commit ledger of the restartable maintainers: a directory of
+    * numbered subdirectories `dir/<prefix><n>`, where `n` counts as
+    * committed once its directory holds `_SUCCESS` (every parquet write
+    * leaves one; [[Ledger.commit]] writes it where an epoch has no write
+    * of its own). A crashed attempt leaves no `_SUCCESS`, so its torn
+    * directory is invisible here and the retry overwrites it. */
+  private object Ledger {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+
+    private def numbered(spark: SparkSession, dir: String, prefix: String)
+        : (FileSystem, Seq[(Long, Path)]) = {
+      val p = new Path(dir)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val ns = if (!fs.exists(p)) Nil else fs.listStatus(p).toSeq.collect {
+        case s if s.isDirectory && s.getPath.getName.startsWith(prefix) =>
+          (s.getPath.getName.stripPrefix(prefix).toLong, s.getPath)
+      }
+      (fs, ns.sortBy(_._1))
+    }
+
+    /** The committed numbers, ascending. */
+    def committed(spark: SparkSession, dir: String, prefix: String): Seq[Long] = {
+      val (fs, ns) = numbered(spark, dir, prefix)
+      ns.collect { case (n, p) if fs.exists(new Path(p, "_SUCCESS")) => n }
+    }
+
+    /** Commits `n` with an empty `_SUCCESS`. */
+    def commit(spark: SparkSession, dir: String, prefix: String, n: Long): Unit = {
+      val p = new Path(dir, s"$prefix$n/_SUCCESS")
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true).close()
+    }
+
+    /** Deletes every numbered directory below `n`, committed or torn;
+      * callers run it only after `n` has committed. */
+    def pruneBelow(spark: SparkSession, dir: String, prefix: String, n: Long): Unit = {
+      val (fs, ns) = numbered(spark, dir, prefix)
+      ns.foreach { case (m, p) => if (m < n) fs.delete(p, true) }
+    }
+  }
 
   /** Tumbling-window counts with a watermark: event-time aggregation whose
     * state is bounded by the watermark (late events beyond it are dropped). */
@@ -535,26 +566,6 @@ object StreamOps {
     }
   }
 
-  /** t41's streaming twin: the count-min sketch maintained INCREMENTALLY
-    * — each micro-batch's token frame becomes its own cell table
-    * ([[graft.operators.TextOps.cmsCells]], the shared kernel) and merges
-    * into the running sketch by cell summation, which is the CMS
-    * mergeability contract made operational: the accumulated sketch
-    * after any number of micro-batches is bit-identical to one batch
-    * build over everything seen (StreamingSpec pins it). Per-round
-    * `localCheckpoint` is the README rule (the merge plan would
-    * otherwise deepen every batch); state is the ≤ d·w cell table,
-    * CONSTANT-size however much traffic flows through — the whole point
-    * of sketching an unbounded stream.
-    *
-    * Recovery: `foreachBatch` is at-least-once, so a micro-batch
-    * re-delivered after a failure/restart would double-merge its cells
-    * and break the bit-identical contract — the accumulator therefore
-    * tracks the last applied batchId and SKIPS duplicates (Spark
-    * re-executes a failed epoch under the SAME batchId, which is the
-    * exactly-once-via-idempotence recipe the Structured Streaming guide
-    * prescribes for foreachBatch sinks). Batches must still arrive in
-    * order, which the single-query single-sink topology guarantees. */
   /** x117's streaming twin: CONTINUOUS content-shard maintenance as a
     * `foreachBatch` sink — the resumable 100-TB export kept current
     * while documents stream in, instead of a nightly batch diff. Each
@@ -583,73 +594,34 @@ object StreamOps {
     *    takes the dynamic-overwrite merge path — the pre-fix in-memory
     *    `seeded` flag made it re-seed with a STATIC overwrite, silently
     *    truncating every previously maintained shard.
-    *  - The applied-epoch watermark is persisted as `_graft_last_batch`
-    *    beside the layout (written AFTER the shard write, the
-    *    write-ahead ordering that makes the marker a floor, not a
-    *    promise); a fresh instance recovers it and skips re-delivered
-    *    epochs exactly like the in-JVM CmsAccumulator guard.
+    *  - Each epoch commits to the [[Ledger]] as `out/_epochs/e=<batchId>`
+    *    AFTER the shard write (so a commit is a floor, never a promise);
+    *    any instance, fresh or not, skips an epoch at or below the last
+    *    commit. Spark's file listing skips `_epochs` (a `_` name without
+    *    `=`), so readers of `out` never see it.
     *  - Even when an epoch IS re-run (failure between the shard write
-    *    and the marker write), the merge is idempotent: existing rows
-    *    matching the batch's doc_ids are anti-joined out before the
-    *    batch is unioned back in, so a replay rewrites the touched
-    *    shards to identical content instead of double-appending. */
+    *    and the commit, or a layout written before the ledger existed),
+    *    the merge is idempotent: existing rows matching the batch's
+    *    doc_ids are anti-joined out before the batch is unioned back
+    *    in, so a replay rewrites the touched shards to identical
+    *    content instead of double-appending. */
   final class ShardMaintainer(out: String) extends ((DataFrame, Long) => Unit) {
-    private var lastBatchId: Long = -1L
+    private def epochs = s"$out/_epochs"
 
-    private def fsPath(spark: SparkSession) = {
-      val p = new org.apache.hadoop.fs.Path(out)
-      (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-    }
     /** The layout exists iff the output path holds ≥ 1 shard partition
       * directory — filesystem truth, valid across restarts. */
     private def layoutExists(spark: SparkSession): Boolean = {
-      val (fs, p) = fsPath(spark)
+      val p = new org.apache.hadoop.fs.Path(out)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.exists(p) && fs.listStatus(p)
         .exists(_.getPath.getName.startsWith("hshard="))
     }
-    private def markerPath(p: org.apache.hadoop.fs.Path) =
-      new org.apache.hadoop.fs.Path(p, "_graft_last_batch")
-    /** An unreadable/unparsable marker (a crash truncated it, or its
-      * checksum sidecar no longer matches) degrades to -1 — "no epoch
-      * known applied" — which is SAFE: the merge path is idempotent, so
-      * re-applying an epoch rewrites the touched shards to identical
-      * content instead of wedging the stream on an exception. */
-    private def readMarker(spark: SparkSession): Long = {
-      val (fs, p) = fsPath(spark)
-      val m = markerPath(p)
-      if (!fs.exists(m)) -1L
-      else scala.util.Try {
-        val in = fs.open(m)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                  finally in.close()
-        txt.trim.toLong
-      }.getOrElse(-1L)
-    }
-    /** Temp-write + rename so the marker is never observable in a
-      * truncated state (rename is atomic on every FS the layout
-      * targets; even where it isn't, readMarker tolerates the rest). */
-    private def writeMarker(spark: SparkSession, batchId: Long): Unit = {
-      val (fs, p) = fsPath(spark)
-      val tmp = new org.apache.hadoop.fs.Path(p, "_graft_last_batch.tmp")
-      val o = fs.create(tmp, true)
-      try o.write(batchId.toString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally o.close()
-      fs.delete(markerPath(p), false)
-      fs.rename(tmp, markerPath(p))
-    }
 
     override def apply(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (batchId <= lastBatchId) return
       val spark = batch.sparkSession
+      if (Ledger.committed(spark, epochs, "e=").lastOption.exists(batchId <= _)) return
+      if (batch.isEmpty) return
       val seeded = layoutExists(spark)
-      if (seeded && lastBatchId < 0L) {
-        // fresh instance over an existing layout (restart): recover the
-        // applied-epoch watermark from the layout, not JVM memory
-        lastBatchId = readMarker(spark)
-        if (batchId <= lastBatchId) return
-      }
-      if (batch.isEmpty) { lastBatchId = batchId; return }
       val docs = batch.select(col("doc_id"), col("text"))
         .withColumn("hshard", expr(
           s"${graft.operators.H.s("text")} div ${graft.operators.Pipeline.HashShardW}"))
@@ -671,8 +643,8 @@ object StreamOps {
           .unionByName(docs)
         graft.operators.Pipeline.writeHashShards(merged, out, dynamic = true)
       }
-      writeMarker(spark, batchId)
-      lastBatchId = batchId
+      Ledger.commit(spark, epochs, "e=", batchId)
+      Ledger.pruneBelow(spark, epochs, "e=", batchId)
     }
   }
 
@@ -691,36 +663,22 @@ object StreamOps {
     * merge is idempotent by value (deterministic priorities + doc_id
     * dedup), so a re-delivered epoch converges to the same k rows.
     * State writes are VERSIONED, never overwrite-in-place: each batch
-    * commits `out/v=<batchId>/` (a partial write has no `_SUCCESS` and
-    * is invisible), readers take the highest committed version, and
-    * older versions are pruned only AFTER the new commit — a crash at
-    * any byte leaves the previous sample intact, so "restart-safe by
-    * filesystem truth" holds through mid-write failures too.
+    * commits `out/v=<n>/` through the [[Ledger]] (a partial write has
+    * no `_SUCCESS` and is invisible), readers take the highest committed
+    * version, and older versions are pruned only AFTER the new commit —
+    * a crash at any byte leaves the previous sample intact, so
+    * "restart-safe by filesystem truth" holds through mid-write failures
+    * too.
     * Per-batch cost: the batch's map-side TakeOrdered top-k plus a
     * 2k-row merge — the corpus is never re-read. */
   final class PrioritySampleMaintainer(k: Int, out: String)
       extends ((DataFrame, Long) => Unit) {
-    private def fsOf(spark: SparkSession) = {
-      val p = new org.apache.hadoop.fs.Path(out)
-      (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-    }
-    /** Highest state version with a commit marker, if any. */
-    private def latestVersion(spark: SparkSession)
-        : Option[org.apache.hadoop.fs.Path] = {
-      val (fs, p) = fsOf(spark)
-      if (!fs.exists(p)) None
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-        .filter(s => fs.exists(
-          new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-        .sortBy(_.getPath.getName.stripPrefix("v=").toLong)
-        .lastOption.map(_.getPath)
-    }
     /** The current k-row sample (throws until the first batch lands). */
-    def current(spark: SparkSession): DataFrame =
-      spark.read.parquet(latestVersion(spark).getOrElse(
+    def current(spark: SparkSession): DataFrame = {
+      val v = Ledger.committed(spark, out, "v=").lastOption.getOrElse(
         sys.error(s"PrioritySampleMaintainer: no committed state under $out"))
-        .toString)
+      spark.read.parquet(s"$out/v=$v")
+    }
     override def apply(batch: DataFrame, batchId: Long): Unit = synchronized {
       if (batch.isEmpty) return
       val spark = batch.sparkSession
@@ -729,10 +687,10 @@ object StreamOps {
           org.apache.spark.sql.functions.expr(
             graft.operators.Pipeline.priorityExpr))
         .orderBy(col("priority").desc, col("doc_id")).limit(k)
-      val prev = latestVersion(spark)
+      val prev = Ledger.committed(spark, out, "v=").lastOption
       val merged = prev match {
         case None => bTop
-        case Some(p) => spark.read.parquet(p.toString).unionByName(bTop)
+        case Some(v) => spark.read.parquet(s"$out/v=$v").unionByName(bTop)
           .dropDuplicates("doc_id") // same doc ⇒ same priority row
           .orderBy(col("priority").desc, col("doc_id")).limit(k)
       }
@@ -743,16 +701,11 @@ object StreamOps {
       // stream restarts without its checkpoint), so it is monotone by
       // construction; a partial write of v=n+1 has no _SUCCESS and is
       // simply overwritten by the next attempt.
-      val (fs, root) = fsOf(spark)
-      val prevV = prev.map(_.getName.stripPrefix("v=").toLong).getOrElse(-1L)
-      val next = new org.apache.hadoop.fs.Path(root, s"v=${prevV + 1}")
+      val next = prev.fold(0L)(_ + 1)
       merged.localCheckpoint(true)
-        .write.mode("overwrite").parquet(next.toString)
+        .write.mode("overwrite").parquet(s"$out/v=$next")
       // prune superseded versions only after the new commit landed
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-        .filter(_.getPath.getName.stripPrefix("v=").toLong <= prevV)
-        .foreach(s => fs.delete(s.getPath, true))
+      Ledger.pruneBelow(spark, out, "v=", next)
     }
   }
 
@@ -804,32 +757,18 @@ object StreamOps {
     /** The manifest ledger (epoch=<n>-partitioned parquet). */
     def manifestPath: String = s"$root/manifest"
 
-    private def committedEpochs(spark: SparkSession, dir: String,
-        prefix: String): Seq[Long] = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-        .filter(s => fs.exists(
-          new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-        .map(_.getPath.getName.stripPrefix(prefix).toLong)
-    }
-
-    /** Applied-epoch watermark — filesystem truth, valid across
-      * restarts. */
-    private def lastApplied(spark: SparkSession): Long =
-      committedEpochs(spark, manifestPath, "epoch=").foldLeft(-1L)(math.max)
-
     override def apply(batch: DataFrame, batchId: Long): Unit = synchronized {
       val spark = batch.sparkSession
-      if (batchId <= lastApplied(spark)) return // committed epoch: skip
+      // applied-epoch watermark: the last committed manifest epoch
+      if (Ledger.committed(spark, manifestPath, "epoch=").lastOption
+          .exists(batchId <= _)) return // committed epoch: skip
       // admission state = standing corpus index + committed PRIOR
       // epochs' appends (this epoch's own torn dirs from a crashed
       // attempt are excluded by the < filter and overwritten below)
+      def prior(name: String): Seq[Long] =
+        Ledger.committed(spark, s"$root/$name", "e=").filter(_ < batchId)
       def appends(name: String): Option[DataFrame] = {
-        val es = committedEpochs(spark, s"$root/$name", "e=")
-          .filter(_ < batchId)
+        val es = prior(name)
         if (es.isEmpty) None
         else Some(spark.read.parquet(
           es.map(e => s"$root/$name/e=$e"): _*))
@@ -840,8 +779,7 @@ object StreamOps {
         batch.select("doc_id", "text"), sets, bands, hotDf)
       // quantile predecessor: highest committed snapshot BELOW this
       // epoch — replay recomputes from it, never double-merges
-      val prevCells = committedEpochs(spark, s"$root/cells", "e=")
-        .filter(_ < batchId).sorted.lastOption
+      val prevCells = prior("cells").lastOption
         .map(e => spark.read.parquet(s"$root/cells/e=$e"))
         .getOrElse(initialCells)
       val cells = graft.operators.Pipeline.mergeCellState(prevCells, batch)
@@ -856,11 +794,7 @@ object StreamOps {
       bsets.unpersist()
       bbands.unpersist()
       // prune superseded cell snapshots only after this epoch committed
-      val cp = new org.apache.hadoop.fs.Path(s"$root/cells")
-      val fs = cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      committedEpochs(spark, s"$root/cells", "e=").filter(_ < batchId)
-        .foreach(e => fs.delete(
-          new org.apache.hadoop.fs.Path(s"$root/cells/e=$e"), true))
+      Ledger.pruneBelow(spark, s"$root/cells", "e=", batchId)
     }
   }
 
@@ -893,27 +827,14 @@ object StreamOps {
     /** The rewritten-batch ledger (epoch=<n>-partitioned parquet). */
     def outPath: String = s"$root/out"
 
-    private def committedEpochs(spark: SparkSession, dir: String,
-        prefix: String): Seq[Long] = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-        .filter(s => fs.exists(
-          new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-        .map(_.getPath.getName.stripPrefix(prefix).toLong)
-    }
-
     override def apply(batch: DataFrame, batchId: Long): Unit = synchronized {
       val spark = batch.sparkSession
-      val applied = committedEpochs(spark, outPath, "epoch=")
-        .foldLeft(-1L)(math.max)
-      if (batchId <= applied) return // committed epoch: skip
+      if (Ledger.committed(spark, outPath, "epoch=").lastOption
+          .exists(batchId <= _)) return // committed epoch: skip
       val lines = graft.operators.Dedup
         .lineOccurrences(batch.select("doc_id", "text")).cache()
-      val prevDf = committedEpochs(spark, s"$root/df", "e=")
-        .filter(_ < batchId).sorted.lastOption
+      val prevDf = Ledger.committed(spark, s"$root/df", "e=")
+        .filter(_ < batchId).lastOption
         .map(e => spark.read.parquet(s"$root/df/e=$e"))
         .getOrElse(initialDf)
       val merged = prevDf.unionByName(graft.operators.Dedup.lineDf(lines))
@@ -926,14 +847,30 @@ object StreamOps {
       graft.operators.Dedup.rewriteLines(lines, boiler)
         .write.mode("overwrite").parquet(s"$outPath/epoch=$batchId")
       lines.unpersist()
-      val dp = new org.apache.hadoop.fs.Path(s"$root/df")
-      val fs = dp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      committedEpochs(spark, s"$root/df", "e=").filter(_ < batchId)
-        .foreach(e => fs.delete(
-          new org.apache.hadoop.fs.Path(s"$root/df/e=$e"), true))
+      Ledger.pruneBelow(spark, s"$root/df", "e=", batchId)
     }
   }
 
+  /** t41's streaming twin: the count-min sketch maintained INCREMENTALLY
+    * — each micro-batch's token frame becomes its own cell table
+    * ([[graft.operators.TextOps.cmsCells]], the shared kernel) and merges
+    * into the running sketch by cell summation, which is the CMS
+    * mergeability contract made operational: the accumulated sketch
+    * after any number of micro-batches is bit-identical to one batch
+    * build over everything seen (StreamingSpec pins it). Per-round
+    * `localCheckpoint` is the README rule (the merge plan would
+    * otherwise deepen every batch); state is the ≤ d·w cell table,
+    * CONSTANT-size however much traffic flows through — the whole point
+    * of sketching an unbounded stream.
+    *
+    * Recovery: `foreachBatch` is at-least-once, so a micro-batch
+    * re-delivered after a failure/restart would double-merge its cells
+    * and break the bit-identical contract — the accumulator therefore
+    * tracks the last applied batchId and SKIPS duplicates (Spark
+    * re-executes a failed epoch under the SAME batchId, which is the
+    * exactly-once-via-idempotence recipe the Structured Streaming guide
+    * prescribes for foreachBatch sinks). Batches must still arrive in
+    * order, which the single-query single-sink topology guarantees. */
   final class CmsAccumulator(d: Int, wBuckets: Int)
       extends ((DataFrame, Long) => Unit) {
     @volatile private var cells: DataFrame = null

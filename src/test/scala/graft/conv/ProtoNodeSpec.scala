@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions.{col, length, udf}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalacheck.Gen
 import graft.proto._
-import graft.streaming.StreamOps
 import graft.{Protarrow, SparkSpec}
 
 /** The ingest and export plan nodes ([[ProtoNodes]]): what EXPLAIN shows,
@@ -136,7 +135,7 @@ class ProtoNodeSpec extends SparkSpec {
     val stream = MemoryStream[Array[Byte]]
     val good = msgs.take(3).map(ProtoWire.encode(_, reg))
     stream.addData(good ++ Seq(Array[Byte](0x0b, 0x0c), null))
-    val decoded = StreamOps.decodeProtoStream(stream.toDS(), md, cfg, reg, IngestMode.DropMalformed)
+    val decoded = Protarrow.fromProtoBinary(stream.toDS(), md, cfg, reg, IngestMode.DropMalformed)
     val q = decoded.writeStream.format("memory").queryName("proto_nodes_drop").start()
     try {
       q.processAllAvailable()
@@ -145,7 +144,7 @@ class ProtoNodeSpec extends SparkSpec {
     } finally q.stop()
     val failing = MemoryStream[Array[Byte]]
     failing.addData(good :+ null)
-    val fq = StreamOps.decodeProtoStream(failing.toDS(), md, cfg, reg)
+    val fq = Protarrow.fromProtoBinary(failing.toDS(), md, cfg, reg)
       .writeStream.format("memory").queryName("proto_nodes_failfast").start()
     try {
       val e = intercept[Exception](fq.processAllAvailable())

@@ -72,6 +72,12 @@ class LineDedupStreamSpec extends SparkSpec {
         assert(d.mkdirs())
         java.nio.file.Files.write(d.toPath.resolve("part-junk.parquet"),
           Array[Byte](7, 7, 7))
+        // a torn output dir (no _SUCCESS) is not a commit: the epoch
+        // must still apply and overwrite it
+        val o = new java.io.File(s"$root/out/epoch=$i")
+        assert(o.mkdirs())
+        java.nio.file.Files.write(o.toPath.resolve("part-junk.parquet"),
+          Array[Byte](7, 7, 7))
       }
       new StreamOps.LineDedupMaintainer(emptyState, root)
         .apply(df(p.toSeq), i.toLong)

@@ -118,6 +118,12 @@ class ManifestStreamSpec extends SparkSpec {
           java.nio.file.Files.write(d.toPath.resolve("part-junk.parquet"),
             Array[Byte](9, 9, 9))
         }
+        // a torn manifest dir (no _SUCCESS) is not a commit: the epoch
+        // must still apply and overwrite it
+        val m = new java.io.File(s"$root/manifest/epoch=$i")
+        assert(m.mkdirs())
+        java.nio.file.Files.write(m.toPath.resolve("part-junk.parquet"),
+          Array[Byte](9, 9, 9))
       }
       // a FRESH maintainer per batch: every epoch is also a restart
       maintainer(root).apply(df(p.toSeq), i.toLong)

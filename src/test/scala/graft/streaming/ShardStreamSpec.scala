@@ -107,10 +107,10 @@ class ShardStreamSpec extends SparkSpec {
     assert(md5s(new java.io.File(out)) === after1,
       "a re-delivered epoch after restart must not rewrite anything")
 
-    // restart #2: the epoch died BETWEEN the shard write and the marker
-    // write (simulated by removing the marker). The re-run must converge:
-    // same rows, untouched shards byte-identical.
-    assert(new java.io.File(out, "_graft_last_batch").delete())
+    // restart #2: the epoch died BETWEEN the shard write and its ledger
+    // commit (simulated by removing epoch 1's commit). The re-run must
+    // converge: same rows, untouched shards byte-identical.
+    assert(new java.io.File(out, "_epochs/e=1/_SUCCESS").delete())
     val touched = df(b2.toSeq)
       .select(expr(s"${graft.operators.H.s("text")} div ${graft.operators.Pipeline.HashShardW}")
         .as("hshard")).distinct().collect().map(_.getLong(0)).toSet
@@ -156,22 +156,21 @@ class ShardStreamSpec extends SparkSpec {
     val rows1 = spark.read.parquet(out)
       .select(col("doc_id"), col("text")).as[(Long, String)].collect().sorted.toSeq
 
-    // a crash mid-marker-write used to leave an empty/garbage file that
-    // made every later restart throw in readMarker — simulate both
-    for (garbage <- Seq("", "not-a-number")) {
-      java.nio.file.Files.write(
-        new java.io.File(out, "_graft_last_batch").toPath,
-        garbage.getBytes("UTF-8"))
+    // a crash before the ledger commit leaves epoch 1's directory
+    // without _SUCCESS, empty or holding a partial file — simulate both
+    val e1 = new java.io.File(out, "_epochs/e=1")
+    for (junk <- Seq(None, Some("part-junk"))) {
+      e1.listFiles().foreach(f => assert(f.delete()))
+      junk.foreach(n => java.nio.file.Files.write(
+        new java.io.File(e1, n).toPath, Array[Byte](9, 9, 9)))
       val fresh = new StreamOps.ShardMaintainer(out)
       fresh.apply(df(b2.toSeq), 1L) // must replay idempotently, not throw
       val rows = spark.read.parquet(out)
         .select(col("doc_id"), col("text")).as[(Long, String)].collect().sorted.toSeq
       assert(rows === rows1,
-        s"torn marker '$garbage': replay must converge to the same layout")
-      // and the replay repaired the marker to a parsable value
-      val repaired = new String(java.nio.file.Files.readAllBytes(
-        new java.io.File(out, "_graft_last_batch").toPath), "UTF-8").trim
-      assert(repaired.toLong == 1L)
+        s"torn commit $junk: replay must converge to the same layout")
+      // and the replay committed epoch 1
+      assert(new java.io.File(e1, "_SUCCESS").exists())
     }
   }
 }

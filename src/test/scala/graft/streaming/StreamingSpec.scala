@@ -21,7 +21,7 @@ class StreamingSpec extends SparkSpec {
     val msgs = (1 to 10).map(i => DynamicMessage(md, Map(1 -> s"u${i % 2}", 2 -> i)))
     stream.addData(msgs.map(m => ProtoWire.encode(m, reg)))
 
-    val decoded = StreamOps.decodeProtoStream(stream.toDS(), md, GraftConfig(), reg)
+    val decoded = graft.Protarrow.fromProtoBinary(stream.toDS(), md, GraftConfig(), reg)
     val agg = decoded.groupBy("name").agg(sum("id").as("total"))
     val q = agg.writeStream.format("memory").queryName("proto_agg")
       .outputMode("complete").start()
@@ -43,7 +43,7 @@ class StreamingSpec extends SparkSpec {
     tsStream.addData(instants.map(i => ProtoWire.encode(DynamicMessage(exMd, Map(
       tsField -> DynamicMessage(WellKnown.timestamp,
         Map(1 -> i.getEpochSecond, 2 -> i.getNano)))), reg)))
-    val tq = StreamOps.decodeProtoStream(tsStream.toDS(), exMd, GraftConfig(), reg)
+    val tq = graft.Protarrow.fromProtoBinary(tsStream.toDS(), exMd, GraftConfig(), reg)
       .select(unix_micros(col("timestamp_value")))
       .writeStream.format("memory").queryName("proto_ts").start()
     try {
@@ -239,7 +239,7 @@ class StreamingSpec extends SparkSpec {
     val collected = scala.collection.mutable.Buffer[(Long, String, Long, Long)]()
 
     val stream = MemoryStream[Array[Byte]]
-    val decoded = StreamOps.decodeProtoStream(stream.toDS(), exMd, GraftConfig(), reg)
+    val decoded = graft.Protarrow.fromProtoBinary(stream.toDS(), exMd, GraftConfig(), reg)
       .select(col("timestamp_value").as("ts"), col("string_value").as("key"),
         col("int64_value").as("value"))
     val windowed = StreamOps.windowedCounts(decoded, "ts", "key")
