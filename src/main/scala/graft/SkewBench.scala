@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Harness.time
+import graft.operators.Confs.withConfs
 
 /** Adversarial-skew stress bench: the cap/salt/band designs all CLAIM
   * skew-safety; this main measures it. It builds a deliberately hostile
@@ -515,30 +516,19 @@ object SkewBench {
       case j: ShuffledHashJoinExec if j.isSkewJoin => j +: j.children.flatMap(skewJoins)
       case other => other.children.flatMap(skewJoins)
     }
-    val c = spark.conf
-    val keys = Seq(
-      "spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.forceOptimizeSkewedJoin",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> c.getOption(k))
-    try {
-      c.set("spark.sql.adaptive.enabled", "true")
-      c.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      c.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
+    withConfs(spark, Seq(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       // the hot partition is ~135k two-column rows ≈ 500 KB compressed;
       // thresholds scale to that (defaults assume 256 MB partitions)
-      c.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64k")
-      c.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
-      c.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16k",
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
       // both broadcast paths off: the dim side is small enough to
       // broadcast, which would dodge the shuffle this line measures
-      c.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      c.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       val li = spark.read.parquet(s"$outDir/lineitem.parquet")
         .select("l_orderkey", "l_quantity")
       val o = spark.read.parquet(s"$outDir/orders.parquet")
@@ -547,9 +537,6 @@ object SkewBench {
       val qe = joined.queryExecution
       val sec = time { qe.toRdd.count(); () }
       (sec, skewJoins(qe.executedPlan).nonEmpty)
-    } finally saved.foreach {
-      case (k, Some(v)) => c.set(k, v)
-      case (k, None) => c.unset(k)
     }
   }
 
@@ -563,25 +550,26 @@ object SkewBench {
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    // a failed entry records no time: its time-to-failure would let a
+    // fast crash read as a speedup (the failure lives in `errors`)
     Queries.foreach { name =>
       spark.sharedState.cacheManager.clearCache()
-      results(name) = time {
-        try { SparkEntry.queries(name)(spark, outDir).count(); () }
-        catch { case e: Throwable => errors(name) = Harness.reject(e) }
-      }
+      try results(name) = time { SparkEntry.queries(name)(spark, outDir).count(); () }
+      catch { case e: Throwable => errors(name) = Harness.reject(e) }
     }
     // the AQE-split twin of q26 (unsalted join, runtime re-plan): timed
     // under the same bound, plus a flag proving the split actually fired
     spark.sharedState.cacheManager.clearCache()
-    val (aqeSec, aqeFired) =
-      try aqeSkewJoin(spark, outDir)
-      catch { case e: Throwable =>
+    val aqeFired =
+      try {
+        val (sec, fired) = aqeSkewJoin(spark, outDir)
+        results("aqe_skew_join") = sec
+        if (!fired) errors("aqe_skew_join") = "AQE skew-join split did not fire"
+        fired
+      } catch { case e: Throwable =>
         errors("aqe_skew_join") = Harness.reject(e)
-        (0.0, false)
+        false
       }
-    results("aqe_skew_join") = aqeSec
-    if (!aqeFired && !errors.contains("aqe_skew_join"))
-      errors("aqe_skew_join") = "AQE skew-join split did not fire"
 
     val violations = results.filter(_._2 > BoundSec).keys.toSeq ++ errors.keys
     println(JsonOut.obj(Seq(

@@ -8,19 +8,16 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Nearest-centroid argmin over a driver-held centroid matrix — the
-  * SURVEY §2 custom-operator tier (b) path for large-K cell assignment
-  * (x96's SemDeDup clustering, x95's Lloyd steps at scale).
+  * SURVEY §2 custom-operator tier (b) path behind every k-means cell
+  * assignment ([[graft.operators.Similarity.assignCells]]: x95's Lloyd
+  * steps, x96's SemDeDup clustering, x98, and the streaming twin).
   *
-  * Closes the gap the two DataFrame forms leave open
-  * ([[graft.operators.Similarity.assignCells]]): the literal-argmax plan
-  * grows O(K·Dim) generated code (fine at K=8, hopeless at K=10⁴), and
-  * the broadcast-join form pays a fan-out aggregate plus two slim
-  * shuffles per assignment. This expression is O(1) plan size at ANY K —
-  * the matrix rides along as a codegen reference object (shipped once
-  * per task like a broadcast, not once per row), the K·Dim loop is one
-  * tight JIT'd nest inside whole-stage codegen, and the operator is
-  * map-only: zero shuffle, zero fan-out, exactly MLlib's assignment
-  * shape expressed as a Catalyst expression.
+  * O(1) plan size at ANY K — the matrix rides along as a codegen
+  * reference object (shipped once per task like a broadcast, not once
+  * per row), the K·Dim loop is one tight JIT'd nest inside whole-stage
+  * codegen, and the operator is map-only: zero shuffle, zero fan-out,
+  * exactly MLlib's assignment shape expressed as a Catalyst expression.
+  * A null vector or norm assigns a null cell.
   *
   * Semantics are EXACTLY `min(struct(-cos, cell))` over candidates in
   * ascending-cell order — the same (cos DESC, cell ASC) ROW_NUMBER
@@ -29,7 +26,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * divide, and double comparisons go through Spark's SQL ordering
   * (`SQLOrderingUtil.compareDoubles`: NaN greatest, -0.0 == 0.0) so a
   * NaN or signed-zero cosine ranks identically to the struct-min form.
-  * RecallSpec pins all three assignment forms bit-equal.
+  * RecallSpec pins it bit-equal to a driver-side reference argmin.
   *
   * `cells` must be strictly ascending — first-wins on equal scores is
   * what implements the cell tie-break.
@@ -124,7 +121,7 @@ case class CentroidArgmin(left: Expression, right: Expression,
 object CentroidArgmin {
   /** Column-API entry over a (cell, centroid) matrix; norms are computed
     * by the caller with the engine's shared driver-side fold so cosines
-    * stay bit-equal across all assignment forms. */
+    * stay bit-equal to the oracle's. */
   def apply(v: Column, nrm: Column, cent: Seq[(Long, Seq[Double])],
       centNorms: Seq[Double]): Column =
     GraftBridge.column(CentroidArgmin(

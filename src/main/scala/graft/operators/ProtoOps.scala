@@ -156,11 +156,9 @@ object ProtoOps {
     // EAGERLY inside a save/restore bracket (conf hygiene: nothing this
     // query flips survives it) and only the flag-domain result (≤ a few
     // rows, the broadcast-dim posture) comes back as a local frame
-    val fidConfs = Seq("spark.sql.parquet.fieldId.write.enabled",
-      "spark.sql.parquet.fieldId.read.enabled")
-    val saved = fidConfs.map(k => k -> spark.conf.getOption(k))
-    fidConfs.foreach(spark.conf.set(_, "true"))
-    try {
+    Confs.withConfs(spark, Seq(
+      "spark.sql.parquet.fieldId.write.enabled" -> "true",
+      "spark.sql.parquet.fieldId.read.enabled" -> "true")) {
       val md = PMessageDesc("graft.LineId", Seq(
         PField("l_orderkey", 1, PInt64),
         PField("l_returnflag", 2, PString)))
@@ -183,9 +181,6 @@ object ProtoOps {
         .orderBy("flag")
       spark.createDataFrame(
         java.util.Arrays.asList(res.collect(): _*), res.schema)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

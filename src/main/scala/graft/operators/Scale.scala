@@ -309,16 +309,13 @@ object Scale {
        WHERE o_orderpriority = '1-URGENT' AND o_totalprice > 150000
        GROUP BY l_returnflag ORDER BY l_returnflag""") { (spark, dir) =>
     import Num._
-    val keys = Seq(
+    Confs.withConfs(spark, Seq(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       // the rule only fires for probably-SHUFFLE joins: at test SF both
       // sides sit under the broadcast threshold, which on a real 100 TB
       // fact table they never would — model that regime, don't fake data
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
       val li = T(spark, dir, "lineitem")
         .select("l_orderkey", "l_returnflag", "l_extendedprice", "l_discount")
       val ords = T(spark, dir, "orders")
@@ -336,9 +333,6 @@ object Scale {
         .orderBy("l_returnflag")
       df.queryExecution.executedPlan // force optimization under the confs
       df
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -108,8 +108,6 @@ object Similarity {
         h32 % 2001 - 1000
       }
     }
-  private[operators] val hpWeights: IndexedSeq[IndexedSeq[Long]] =
-    hpWeightsFor(NumHp)
   private def wLitDuckFor(nHp: Int) =
     hpWeightsFor(nHp).map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
   /** 1-row CTE carrying the literal weight matrix (cross-joined in). */
@@ -496,93 +494,22 @@ object Similarity {
   /** Driver-side centroid norm — the same ascending acc + x·x fold as
     * [[Cosine]]'s expression/DuckDB forms, so cosines built from it stay
     * bit-equal to the oracle's. */
-  private def jvmNorm(cv: Seq[Double]): Double =
+  private[operators] def jvmNorm(cv: Seq[Double]): Double =
     math.sqrt(cv.foldLeft(0.0d)((acc, x) => acc + x * x))
 
-  /** Above this K the literal-argmax plan is replaced by the
-    * broadcast-centroid join: the literal form inlines K struct literals
-    * into ONE projection, so its generated code grows O(K·Dim) — exactly
-    * right at K=8 (zero shuffle, whole-stage codegen), hopeless at
-    * K=10⁴ (codegen blowup). The threshold sits below x96's K at the
-    * oracle SF (16), so the broadcast path itself is oracle-checked. */
-  private[operators] val LiteralAssignMaxK = 12
-
-  /** Shuffle-free small-K assignment against a literal centroid matrix:
-    * `array_min(struct(-cos, cell)).c` — exact ROW_NUMBER (cos DESC,
-    * cell) tie-break semantics, evaluated per row over columns (v, nrm).
-    * NO shuffle touches the corpus (the windowed crossJoin form shuffled
-    * every vector ×K per iteration — ~400 MB/iter at sf0.1, unbounded at
-    * 100 TB). */
-  private[graft] def cellAssignLiteral(cent: Seq[(Long, Seq[Double])]): Column = {
-    val cand = array(cent.map { case (c, cv) =>
-      struct(
-        (-(Cosine.dot(col("v"), typedlit(cv)) / (col("nrm") * lit(jvmNorm(cv)))))
-          .as("nc"),
-        lit(c).as("c"))
-    }: _*)
-    array_min(cand).getField("c")
-  }
-
-  /** Nearest-centroid assignment, dispatched on K: appends `cell` to a
-    * frame carrying (vec_id, v, nrm, ...). K ≤ [[LiteralAssignMaxK]] uses
-    * the map-only literal argmax (zero setup, whole-stage codegen);
-    * larger K uses [[assignCellsExpr]] — the codegen'd
-    * `centroid_argmin` expression, map-only at any K. All forms share
-    * the exact `min(struct(-cos, cell))` = ROW_NUMBER (cos DESC, cell)
-    * tie-break and are spec-pinned bit-equal (RecallSpec). */
+  /** Nearest-centroid assignment: appends `cell` to a frame carrying
+    * (v, nrm, ...) via [[graft.functions.CentroidArgmin]] — a codegen'd
+    * per-row K·Dim argmin whose matrix rides as a codegen reference
+    * object. O(1) plan size at any K, map-only (zero shuffle, zero
+    * fan-out), so it runs unchanged on a stream. Exactly the oracle's
+    * ROW_NUMBER (cos DESC, cell) ranking, over centroid norms from
+    * [[jvmNorm]] (RecallSpec pins it bit-equal to a driver-side
+    * reference argmin). */
   private[graft] def assignCells(df: DataFrame,
-      cent: Seq[(Long, Seq[Double])]): DataFrame =
-    if (cent.size <= LiteralAssignMaxK) assignCellsLiteral(df, cent)
-    else assignCellsExpr(df, cent)
-
-  /** The preferred large-K form: [[graft.functions.CentroidArgmin]] — a
-    * codegen'd per-row K·Dim argmin whose matrix rides as a codegen
-    * reference object. O(1) plan size at any K, map-only (zero shuffle,
-    * zero fan-out) — strictly dominates the two DataFrame forms at
-    * scale; they remain as the small-K fast path (literal) and the
-    * pure-DataFrame alternative (broadcast join), all three spec-pinned
-    * bit-equal. */
-  private[graft] def assignCellsExpr(df: DataFrame,
       cent: Seq[(Long, Seq[Double])]): DataFrame = {
     val sorted = cent.sortBy(_._1)
     df.withColumn("cell", graft.functions.CentroidArgmin(
       col("v"), col("nrm"), sorted, sorted.map(c => jvmNorm(c._2))))
-  }
-
-  /** Map-only small-K form (exposed so RecallSpec can pin both forms
-    * bit-equal on the same centroid matrix). */
-  private[operators] def assignCellsLiteral(df: DataFrame,
-      cent: Seq[(Long, Seq[Double])]): DataFrame =
-    df.withColumn("cell", cellAssignLiteral(cent))
-
-  /** Pure-DataFrame broadcast-join large-K form — kept as the
-    * no-custom-expression alternative to [[assignCellsExpr]] (and as the
-    * measured comparison point: it pays a BroadcastNestedLoopJoin
-    * fan-out, a partial-min collapse, and two slim shuffles per
-    * assignment where the expression form is map-only). The ×K fan-out
-    * is kept SLIM: the candidate rows carry only (vec_id, struct(nc,
-    * cell)) — projecting v/nrm out before the aggregate is what keeps
-    * this viable (the first cut carried the 64-dim vector through the
-    * fan-out and the sort-based partial aggregate materialized+sorted
-    * ~0.6 KB × N·K per iteration — 375 s on SkewBench's 12k×375; slim
-    * rows are ~40 B and sort in ~1 s). The chosen cell then joins back
-    * to the input row by vec_id. */
-  private[operators] def assignCellsBroadcast(df: DataFrame,
-      cent: Seq[(Long, Seq[Double])]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val centDF = cent.map { case (c, cv) => (c, cv, jvmNorm(cv)) }
-      .toDF("cen_cell", "cv", "cnrm")
-    val slim = df.select(col("vec_id"), col("v"), col("nrm"))
-      .crossJoin(broadcast(centDF))
-      .select(col("vec_id"), struct(
-        (-(Cosine.dot(col("v"), col("cv")) / (col("nrm") * col("cnrm"))))
-          .as("nc"),
-        col("cen_cell")).as("cand"))
-      .groupBy("vec_id")
-      .agg(min(col("cand")).getField("cen_cell").as("cell"))
-    df.join(slim, "vec_id")
-      .select(df.columns.map(col).toIndexedSeq :+ col("cell"): _*)
   }
 
   private def lloydStep(spark: SparkSession, e: DataFrame,
@@ -703,12 +630,11 @@ object Similarity {
     * Scale shape: K grows with N so cells stay ~[[SemTargetCell]]; the
     * assignment uses the FINAL-iteration centroid matrix (`assignCent` —
     * the post-update matrix would be an extra assignment pass the oracle
-    * never ran) via [[assignCells]] — a broadcast-centroid join at real
-    * K, map-only literals at toy K; candidate membership per cell is
-    * hard-capped ([[SemCellCap]]) by a map-side WindowGroupLimit BEFORE
-    * any shuffle, so the pair stage is bounded at cap²/2 per cell even
-    * under a mass-duplicated embedding (SkewBench measures exactly that);
-    * the summary is a K-group aggregate.
+    * never ran) via the map-only [[assignCells]]; candidate membership
+    * per cell is hard-capped ([[SemCellCap]]) by a map-side
+    * WindowGroupLimit BEFORE any shuffle, so the pair stage is bounded at
+    * cap²/2 per cell even under a mass-duplicated embedding (SkewBench
+    * measures exactly that); the summary is a K-group aggregate.
     *
     * Streaming twin: the assignment half runs unchanged on a stream
     * (map-only expression over the frozen matrix — SemdedupStreamSpec
@@ -774,13 +700,12 @@ object Similarity {
     * `assignCent` matrix — scoring against the post-update matrix would
     * rank against centroids the assignment never saw).
     *
-    * Scale shape: assignment is the map-only [[assignCellsExpr]] path
-    * (via [[assignCells]]); scoring joins the K-row centroid table
-    * BROADCAST (never a shuffle); the top-1-per-cell is a rnk=1 filter —
-    * InferWindowGroupLimit caps each cell to ONE candidate map-side
-    * before the rank shuffle, so a degenerate hot cell forwards one row,
-    * not 10k (SkewBench measures it). One shuffle total (cell), K rows
-    * out. */
+    * Scale shape: assignment is the map-only [[assignCells]]; scoring
+    * joins the K-row centroid table BROADCAST (never a shuffle); the
+    * top-1-per-cell is a rnk=1 filter — InferWindowGroupLimit caps each
+    * cell to ONE candidate map-side before the rank shuffle, so a
+    * degenerate hot cell forwards one row, not 10k (SkewBench measures
+    * it). One shuffle total (cell), K rows out. */
   val x98ClusterReps = Q(
     "x98_cluster_reps",
     s"""WITH $semKDuck,

@@ -30,8 +30,24 @@ final case class Q(
 object Q {
   def apply(name: String, sql: String)(fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, Some(sql))
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
+}
+
+/** Session-conf hygiene: runs `body` with `kvs` set on the session and
+  * restores every key afterwards, also when `body` throws — a key that
+  * was absent before is unset again, so nothing the body needed leaks
+  * into later queries of the same session. Confs are read at planning,
+  * so a body returning a frame must force its plan inside the scope. */
+object Confs {
+  def withConfs[A](spark: SparkSession, kvs: Seq[(String, String)])(body: => A): A = {
+    val c = spark.conf
+    val saved = kvs.map { case (k, _) => k -> c.getOption(k) }
+    kvs.foreach { case (k, v) => c.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => c.set(k, v)
+      case (k, None) => c.unset(k)
+    }
+  }
 }
 
 /** Per-round lineage truncation for the iterative operators (HashMin /

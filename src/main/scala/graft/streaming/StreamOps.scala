@@ -337,23 +337,14 @@ object StreamOps {
     * cell — stateless and map-only, so downstream per-cell state (counts,
     * candidate sets for cross-batch semantic dedup) hangs off a plain
     * streaming aggregation. Expects a `v: array<double>` column; appends
-    * `nrm` and `cell` computed EXACTLY as batch x96's assignment
-    * (same argmax expression, same tie-break — StreamingSpec pins the
-    * streamed cell partition equal to the batch one).
-    *
-    * Always the literal-matrix form, never the large-K broadcast join:
-    * that form ends in a per-vector argmin AGGREGATION, and a streaming
-    * query cannot chain another aggregation behind it — while the
-    * literal form's plan grows O(K·Dim), which at ingest is fine for the
-    * K this engine trains here and degrades loudly (analysis error /
-    * codegen fallback), not silently. At SemDeDup-scale K, assign at
-    * ingest against a periodically refreshed coarser matrix and leave
-    * exact cell refinement to the batch pass. */
+    * `nrm` and `cell` through batch x96's own
+    * [[graft.operators.Similarity.assignCells]] (same expression, same
+    * tie-break — StreamingSpec pins the streamed cell partition equal to
+    * the batch one). */
   def assignCellsStream(embeddings: DataFrame,
       cent: Seq[(Long, Seq[Double])]): DataFrame =
-    embeddings
-      .withColumn("nrm", graft.operators.Cosine.norm(col("v")))
-      .withColumn("cell", graft.operators.Similarity.cellAssignLiteral(cent))
+    graft.operators.Similarity.assignCells(
+      embeddings.withColumn("nrm", graft.operators.Cosine.norm(col("v"))), cent)
 
   /** t32's chunking at ingest time: each arriving (doc_id, text) row
     * explodes into its overlapping 64-token / 48-stride chunk rows —
@@ -747,9 +738,10 @@ object StreamOps {
     * A fresh instance over the same `root` resumes exactly; epochs must
     * be monotone (Structured Streaming's checkpointed batchIds — the
     * ShardMaintainer contract). Per-batch cost ∝ batch size + committed
-    * index appends + cell domain — the corpus is never rescanned;
-    * long-running streams compact the `e=` append dirs periodically
-    * (x105's posture). */
+    * index appends + cell domain — the corpus is never rescanned. Every
+    * epoch reads ALL committed `sets/e=*` and `bands/e=*` appends and
+    * nothing removes them, so admission cost and the file count grow with
+    * the number of epochs (compaction is an open ROADMAP item). */
   final class ManifestMaintainer(
       corpusSets: DataFrame, corpusBands: DataFrame, hotDf: DataFrame,
       initialCells: DataFrame, root: String) extends ((DataFrame, Long) => Unit) {

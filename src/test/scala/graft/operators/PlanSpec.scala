@@ -168,35 +168,14 @@ class PlanSpec extends SparkSpec {
       "per-bucket offsets must broadcast to the corpus side")
   }
 
-  test("assignment forms: broadcast alternative broadcasts + collapses map-side; literal stays map-only") {
-    val res = Similarity.lloydRun(spark, sfDir, 16L)
-    val e = Similarity.vecs(spark, sfDir)
-    val bc = Similarity.assignCellsBroadcast(e, res.assignCent)
-      .queryExecution.explainString(FormattedMode)
-    assert(bc.contains("BroadcastExchange"),
-      "the K·Dim centroid matrix must ship as a broadcast, not a shuffle")
-    assert(bc.contains("BroadcastNestedLoopJoin"),
-      "the candidate fan-out must be the broadcast cross join")
-    // min(struct) has an immutable buffer type, so the aggregate plans
-    // sort-based — what matters for scale is that the PARTIAL collapse of
-    // the ×K fan-out happens before the slim exchange on vec_id
-    assert(bc.contains("partial_min("),
-      "the ×K fan-out must collapse map-side (partial min) before the exchange")
-    assert(bc.contains("hashpartitioning(vec_id"),
-      "the fan-out exchange is the slim per-vector one")
-    val litP = Similarity.assignCellsLiteral(e, res.assignCent)
-      .queryExecution.explainString(FormattedMode)
-    assert(!litP.contains("Join"), "the literal argmax form must stay map-only")
-  }
-
   test("x96 assignment: centroid_argmin is map-only and stays inside whole-stage codegen") {
-    // the large-K path x96 actually dispatches to: one projection, no
+    // the one assignment form x95/x96/x98 use: one projection, no
     // join, no exchange, matrix as a codegen reference — O(1) plan at any K
     val res = Similarity.lloydRun(spark, sfDir, 16L)
     val e = Similarity.vecs(spark, sfDir)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val p = Similarity.assignCellsExpr(e, res.assignCent)
+      val p = Similarity.assignCells(e, res.assignCent)
         .queryExecution.explainString(FormattedMode)
       assert(p.contains("centroid_argmin"), "the native expression must be in the plan")
       assert(!p.contains("Join") && !p.contains("Exchange"),

@@ -163,27 +163,40 @@ class RecallSpec extends SparkSpec {
       s"$withinCells within-cell pairs vs $globalAtHalf global")
   }
 
-  test("assignment forms: literal argmax, broadcast join, and centroid_argmin are bit-equal") {
+  test("assignment: assignCells is bit-equal to a driver-side reference argmin") {
     // both the small-K regime (x95's 8 seeds, clustered corpus) and the
-    // oracle-checked large-K regime (x96's K=16 on the sf corpus): the
-    // dispatch in assignCells must be a pure physical-plan choice — any
-    // divergence (tie-break, norm fold, fan-out collapse, codegen loop)
-    // is a bug
+    // oracle-checked K=16 regime (x96 on the sf corpus): the reference is
+    // the oracle's ranking spelled out in Scala — the ascending
+    // acc + v(i)*cv(i) dot fold, jvmNorm centroid norms, highest cosine
+    // with the lowest cell on ties — so any divergence (tie-break, norm
+    // fold, codegen loop) is a bug
     for ((dir, k) <- Seq((clusteredCorpus(0.01), 8L), (sfDir, 16L))) {
       val res = Similarity.lloydRun(spark, dir, k)
       val e = Similarity.vecs(spark, dir)
         .select(org.apache.spark.sql.functions.col("vec_id"),
           org.apache.spark.sql.functions.col("v"),
           org.apache.spark.sql.functions.col("nrm"))
-      def cells(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-        df.select("vec_id", "cell").collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val lit = cells(Similarity.assignCellsLiteral(e, res.assignCent))
-      val bc = cells(Similarity.assignCellsBroadcast(e, res.assignCent))
-      val ex = cells(Similarity.assignCellsExpr(e, res.assignCent))
-      assert(lit.size === bc.size && lit === bc,
-        s"literal vs broadcast diverge at k=$k on $dir")
-      assert(ex === lit, s"centroid_argmin diverges at k=$k on $dir")
+      val cent = res.assignCent.sortBy(_._1)
+      val cnrm = cent.map(c => Similarity.jvmNorm(c._2))
+      def refCell(v: Seq[Double], nrm: Double): Long = {
+        var best = 0
+        var bestCos = 0.0d
+        for (j <- cent.indices) {
+          val cv = cent(j)._2
+          val dot = (0 until math.min(v.size, cv.size))
+            .foldLeft(0.0d)((acc, i) => acc + v(i) * cv(i))
+          val cos = dot / (nrm * cnrm(j))
+          if (j == 0 || cos > bestCos) { best = j; bestCos = cos }
+        }
+        cent(best)._1
+      }
+      val ref = e.collect()
+        .map(r => r.getLong(0) -> refCell(r.getSeq[Double](1), r.getDouble(2))).toMap
+      val got = Similarity.assignCells(e, res.assignCent)
+        .select("vec_id", "cell").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got.size === ref.size && got === ref,
+        s"centroid_argmin diverges from the reference at k=$k on $dir")
     }
   }
 

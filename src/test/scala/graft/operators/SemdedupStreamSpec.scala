@@ -31,8 +31,7 @@ class SemdedupStreamSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
     // same corpus as a 2-micro-batch stream through the SAME assignment
-    // expression (codegen'd centroid_argmin at real K — k is above the
-    // literal-form cutoff at this SF, so the scale path is what streams)
+    // expression (codegen'd centroid_argmin at x96's data-adaptive K)
     val rows = e.as[(Long, Seq[Double], Double)].collect().toSeq
     assert(k > 8 || rows.size <= 64, "fixture should exercise the large-K path")
     val stream = MemoryStream[(Long, Seq[Double], Double)]

@@ -532,6 +532,14 @@ class StreamingSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(streamed === batchCells,
         "streamed cell partition must equal the batch x96 assignment")
+      // a null embedding has no nearest centroid: centroid_argmin gives
+      // it a null cell instead of silently filing it under a real one
+      stream.addData(Seq((-1L, null: Seq[Double])))
+      q.processAllAvailable()
+      val withNull = spark.table("cells_stream").collect()
+        .map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) -> r.getLong(1)).toMap
+      assert(withNull === batchCells.map { case (c, n) => Option(c) -> n } +
+        (Option.empty[Long] -> 1L), "a null embedding must land in the null cell")
     } finally q.stop()
   }
 
