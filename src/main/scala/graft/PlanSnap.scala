@@ -7,21 +7,22 @@ import java.nio.file.{Files, Paths}
   * for the named queries to plans/<tag>/<query>_<suffix>.txt — the
   * before/after plan evidence the round deliverable requires.
   *
-  * Usage: runMain graft.PlanSnap <tag> <suffix> [query names...]
-  * e.g.   runMain graft.PlanSnap r12 before d46_prefix_join x133_dsir_selection
+  * Usage: runMain graft.PlanSnap <tag> <suffix> [dir] <name prefixes...>
+  * e.g.   runMain graft.PlanSnap fuse before d46 x133
   *
   * Data dir defaults to sf0.001 (plan SHAPE is scale-independent here: the
-  * same code path builds the frame at every SF; an absolute-path first query
-  * arg overrides it, mirroring PlanDump).
+  * same code path builds the frame at every SF); the dir and prefixes
+  * follow PlanDump's rule ([[Harness.planArgs]]).
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: PlanSnap <tag> <suffix> [dir] <queries...>")
+    // at least one prefix after the optional dir: no prefix would
+    // snapshot every registered entry
+    require(args.length >= 3 && !(args.length == 3 && args(2).startsWith("/")),
+      "usage: PlanSnap <tag> <suffix> [dir] <name prefixes...>")
     val tag = args(0)
     val suffix = args(1)
-    val (dir, names) =
-      if (args(2).startsWith("/")) (args(2), args.drop(3).toSeq)
-      else ("/root/testdata/sf0.001", args.drop(2).toSeq)
+    val (dir, names) = Harness.planArgs(args.toSeq.drop(2))
     // 8 workers, as PlanDump: snapshots stay comparable across hosts
     val spark = Harness.session(8)
     Files.createDirectories(Paths.get(s"plans/$tag"))

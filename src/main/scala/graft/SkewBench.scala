@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Harness.time
 import graft.operators.Confs.withConfs
 
 /** Adversarial-skew stress bench: the cap/salt/band designs all CLAIM
@@ -41,8 +40,8 @@ object SkewBench {
   val Queries = Seq("d26_exact_dedup", "d27_ngram_jaccard", "d28_minhash_lsh",
     "d29_simhash", "d32_minhash_agg", "s33_ann_lsh", "s34_ann_ivf",
     "s36_ann_multiprobe", "q26_salted_join", "x90_corpus_pipeline",
-    // round-3 additions: t29's gram keys all include doc_id (the hot
-    // cross-doc gram never becomes a join/agg key alone); x91's 10k-doc
+    // t29's gram keys all include doc_id (the hot cross-doc gram never
+    // becomes a join/agg key alone); x91's 10k-doc
     // hot SOURCE is the worst case for the per-source window — the
     // Partial WindowGroupLimit must cap it map-side; x92's semi-join is
     // output-bounded by its left input even when the dup cluster makes
@@ -316,7 +315,7 @@ object SkewBench {
     // key whose rows all match (or all miss) the broadcast key side;
     // each class collapses to ONE count row
     "q88_ri_audit",
-    // TPC-H heavies under the hot l_orderkey pile (round-8 verdict #6):
+    // TPC-H heavies under the hot l_orderkey pile:
     // Q18 groups BY the hot order key — the 33% pile lands in ONE
     // group whose SUM partial absorbs it map-side before the shuffle;
     // the HAVING threshold then keeps the hot order (a genuinely big
@@ -502,10 +501,10 @@ object SkewBench {
     * for bench scale: the defaults target 256 MB production partitions,
     * while the DupFactor pile here is tens of MB — the RATIO (hot ≫
     * factor × median) is what production skew looks like. Runs the
-    * UNSALTED q26 join shape and returns (seconds, splitFired) from the
-    * post-execution adaptive plan; confs are restored afterwards so no
-    * other bench line inherits the tuning. */
-  def aqeSkewJoin(spark: SparkSession, outDir: String): (Double, Boolean) = {
+    * UNSALTED q26 join shape and throws unless the post-execution
+    * adaptive plan shows the split fired; confs are restored afterwards
+    * so no other bench line inherits the tuning. */
+  def aqeSkewJoin(spark: SparkSession, outDir: String): Unit = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
@@ -533,53 +532,32 @@ object SkewBench {
         .select("l_orderkey", "l_quantity")
       val o = spark.read.parquet(s"$outDir/orders.parquet")
         .select("o_orderkey", "o_orderpriority")
-      val joined = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      val qe = joined.queryExecution
-      val sec = time { qe.toRdd.count(); () }
-      (sec, skewJoins(qe.executedPlan).nonEmpty)
+      val qe = li.join(o, col("l_orderkey") === col("o_orderkey")).queryExecution
+      qe.toRdd.count()
+      if (skewJoins(qe.executedPlan).isEmpty)
+        throw new IllegalStateException("AQE skew-join split did not fire")
     }
   }
 
   def main(args: Array[String]): Unit = {
     ScaleContracts.verifyAndRecord("skew", Queries)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SKEW_DIR", "/tmp/graft_skew")
     val spark = Harness.session()
 
-    generate(spark, sfDir, outDir)
+    generate(spark, Harness.sfDir, outDir)
 
-    val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // a failed entry records no time: its time-to-failure would let a
-    // fast crash read as a speedup (the failure lives in `errors`)
-    Queries.foreach { name =>
-      spark.sharedState.cacheManager.clearCache()
-      try results(name) = time { SparkEntry.queries(name)(spark, outDir).count(); () }
-      catch { case e: Throwable => errors(name) = Harness.reject(e) }
-    }
-    // the AQE-split twin of q26 (unsalted join, runtime re-plan): timed
-    // under the same bound, plus a flag proving the split actually fired
-    spark.sharedState.cacheManager.clearCache()
-    val aqeFired =
-      try {
-        val (sec, fired) = aqeSkewJoin(spark, outDir)
-        results("aqe_skew_join") = sec
-        if (!fired) errors("aqe_skew_join") = "AQE skew-join split did not fire"
-        fired
-      } catch { case e: Throwable =>
-        errors("aqe_skew_join") = Harness.reject(e)
-        false
-      }
-
-    val violations = results.filter(_._2 > BoundSec).keys.toSeq ++ errors.keys
-    println(JsonOut.obj(Seq(
-      "metric" -> JsonOut.str("skew_total"), "value" -> results.values.sum.toString,
-      "unit" -> JsonOut.str("sec"), "bound_sec" -> BoundSec.toString,
-      "dup_factor" -> DupFactor.toString, "aqe_skew_split" -> aqeFired.toString,
-      "queries" -> JsonOut.obj(results.map { case (k, v) => k -> v.toString }),
-      "errors" -> JsonOut.obj(errors.map { case (k, v) => k -> JsonOut.str(v) }),
-      "violations" -> JsonOut.arr(violations.map(JsonOut.str)),
-      "sf" -> JsonOut.str(sfDir))))
+    // one pass: each entry is timed once against the wall bound. The
+    // AQE-split twin of q26 (unsalted join, runtime re-plan) is timed
+    // under the same bound and fails unless the split actually fired
+    val run = Harness.run(1, Queries.map(Harness.entry(spark, _, outDir)) :+
+      Harness.uncached(spark, "aqe_skew_join") { aqeSkewJoin(spark, outDir) })
+    val results = run.mins
+    val violations = results.collect { case (k, v) if v > BoundSec => k } ++ run.errors.map(_._1)
+    println(Harness.record("skew_total", results.map(_._2).sum,
+      Some(JsonOut.obj(results.map { case (k, v) => k -> v.toString })), run.errors,
+      "bound_sec" -> BoundSec.toString, "dup_factor" -> DupFactor.toString,
+      "aqe_skew_split" -> (!run.errors.exists(_._1 == "aqe_skew_join")).toString,
+      "violations" -> JsonOut.arr(violations.map(JsonOut.str))))
     spark.stop()
     if (violations.nonEmpty) sys.exit(1)
   }

@@ -4,15 +4,14 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (builder-side
-    // iteration; the driver always passes exactly two args → full run)
+    // args after the two dirs: entry-name prefixes (an iteration aid;
+    // exactly two args dump every entry)
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val selected = Harness.selects(args.toSeq.drop(2), _: String)
     val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -24,7 +23,7 @@ object Verify {
     // SQL would otherwise make the driver's json.load fail and silently
     // zero the round's correctness.
     val json = JsonOut.obj(SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => selected(k) }
       .map { case (k, v) => k -> JsonOut.str(v) })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -1,8 +1,8 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Harness.time
 
 /** Empirical near-linear-scaling gauntlet: the one claim the per-round
   * bench argues only from plan shape is "survives 100×" — this main
@@ -14,7 +14,7 @@ import graft.Harness.time
   *     cost_ratio = t_big / (Mult × t_base)
   *
   * — 1.0 is perfectly linear scaling, and the gate is
-  * [[CostRatioBound]] (1.5×, the round-8 brief's bound; sub-linear
+  * [[CostRatioBound]] (1.5×; sub-linear
   * ratios < 1 are common because fixed per-query overheads amortize).
   * It also counts Exchange/BroadcastExchange nodes in each query's
   * pre-execution plan at both scales: a query that picks up a NEW
@@ -54,10 +54,9 @@ object VolumeBench {
     * grows, so the family scales linearly at every mult. */
   val Mult = sys.env.getOrElse("SPARK_GRAFT_VOLUME_MULT", "10").toInt
   val CostRatioBound = 1.5
-  /** The audited top-cost tier: the round-7 verdict's list plus the
-    * round-8 heavies (x116 shard export, TPC-H Q18/Q9, d39). m49 audits
-    * the media-components tier in place of m46: the round-9 honest
-    * in-timer measurement showed m46's 4×256-bucket pigeonhole join
+  /** The audited top-cost tier, with the heavies x116 (shard export),
+    * TPC-H Q18/Q9 and d39. m49 audits the media-components tier in place
+    * of m46: an in-timer measurement showed m46's 4×256-bucket pigeonhole join
     * generating candidates quadratically (cost_ratio 1.8 at 10×) — m46
     * is now contract-confined at base SF (the d30 precedent) and m49's
     * 35-bit-matched candidate tables are the production tier. */
@@ -76,7 +75,7 @@ object VolumeBench {
     // sampler (x119): with the per-bucket cap the whole family is
     // linear-contract, so it runs at EVERY mult including the 100× tier
     "s40_knn_graph", "x119_community_sample",
-    // the round-11 sampling layer: x122 rides d34's capped graph plus a
+    // the sampling layer: x122 rides d34's capped graph plus a
     // corpus left join; x123 rides d28's pairs plus two probe joins
     // against the bucket-parallel global index; x124 composes x121's
     // broadcast cell table with x122's component join — all claim linear
@@ -169,9 +168,14 @@ object VolumeBench {
     new java.io.FileOutputStream(s"$outDir/_SUCCESS").close()
   }
 
-  /** (shuffle exchanges, broadcast exchanges) in the pre-execution plan. */
-  private def exchanges(df: DataFrame): (Int, Int) = {
-    val p = df.queryExecution.explainString(
+  /** (shuffle exchanges, broadcast exchanges) in the pre-execution plan
+    * of entry `name` over `dir`, built on an empty cache manager: an
+    * intermediate the entry caches prints its executed adaptive plan once
+    * a run has materialized it, initial and final plan both, so its
+    * exchanges would count twice on whichever scale ran last. */
+  private def exchanges(spark: SparkSession, name: String, dir: String): (Int, Int) = {
+    spark.sharedState.cacheManager.clearCache()
+    val p = SparkEntry.queries(name)(spark, dir).queryExecution.explainString(
       org.apache.spark.sql.execution.SimpleMode)
     // negative lookbehind keeps ReusedExchange (a pointer, not a new
     // shuffle/broadcast) out of the count — a scale-dependent reuse
@@ -185,51 +189,44 @@ object VolumeBench {
     // subset arg (the 100× spot-audit idiom) is an operator action, not
     // a silent skip
     ScaleContracts.verifyAndRecord("volume", Queries)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Harness.sfDir
     val spark = Harness.session()
 
     val volDir = sys.env.getOrElse("SPARK_GRAFT_VOLUME_DIR",
       s"${System.getProperty("java.io.tmpdir")}/graft_volume_" +
         graft.operators.Scale.sourceKey(sfDir, "documents") + s"_x$Mult")
-    val genSec = time { generate(spark, sfDir, volDir) }
+    val genSec = Harness.time { generate(spark, sfDir, volDir) }
 
-    val only = args.headOption.map(_.split(",").toSet)
-    val names = Queries.filter(n => only.forall(_.contains(n)))
-    val results = scala.collection.mutable.LinkedHashMap[String, Map[String, Double]]()
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    names.foreach { name =>
-      try {
-        // warm-up at the base SF absorbs codegen/class-load constants so
-        // t1 measures the engine, not the JIT
-        spark.sharedState.cacheManager.clearCache()
-        SparkEntry.queries(name)(spark, sfDir).count()
-        // min-of-3 on BOTH sides: a single host-noise spike on either
-        // measurement distorts the ratio in either direction (round-8's
-        // q83 base read 9.2 s vs its 3.9 s standing value)
-        // frame CONSTRUCTION goes inside the timer: the export operators
-        // (x116/x117) perform their physical writes eagerly at
-        // construction — timing only count() would measure the audit and
-        // skip the work (x116's base read 0.22 s vs its 2.7 s standing
-        // bench value when construction sat outside the timer)
-        def minOf3(dir: String): Double =
-          (1 to 3).map { _ =>
-            spark.sharedState.cacheManager.clearCache()
-            time { SparkEntry.queries(name)(spark, dir).count(); () }
-          }.min
-        val (e1, b1) = exchanges(SparkEntry.queries(name)(spark, sfDir))
-        val t1 = minOf3(sfDir)
-        val (e10, b10) = exchanges(SparkEntry.queries(name)(spark, volDir))
-        val t10 = minOf3(volDir)
-        val ratio = t10 / (Mult * t1)
-        results(name) = Map("t_base" -> t1, "t_big" -> t10,
-          "cost_ratio" -> ratio, "exch_base" -> e1.toDouble,
-          "exch_big" -> e10.toDouble, "bexch_base" -> b1.toDouble,
-          "bexch_big" -> b10.toDouble)
-      } catch { case e: Throwable => errors(name) = Harness.reject(e) }
+    // per entry: one untimed warm-up at the base SF absorbs codegen and
+    // class-load constants, then its two scales alternate over 3 passes,
+    // so both time the entry's generated code hot and the min on BOTH
+    // sides drops a single host-noise spike, which would distort the
+    // ratio in either direction. An entry's samples stay together:
+    // spread over every entry's keys, each sample recompiles its code
+    // (more classes than the codegen cache holds) while @big finds what
+    // @base just compiled, and cost_ratio reads low
+    val names = Queries.filter(Harness.selects(args.toSeq, _))
+    val runs = names.map { n =>
+      val base = Harness.entry(spark, n, sfDir).copy(key = s"$n@base")
+      base.reset()
+      Try(base.run())
+      Harness.run(3, Seq(base, Harness.entry(spark, n, volDir).copy(key = s"$n@big")))
     }
+    val run = Harness.Run(runs.flatMap(_.samples), runs.flatMap(_.errors))
+    val t = run.mins.toMap
+    val plans = names.filter(n => t.contains(s"$n@base") && t.contains(s"$n@big"))
+      .map(n => n -> Try((exchanges(spark, n, sfDir), exchanges(spark, n, volDir))))
+    val results = plans.collect { case (n, Success(((e1, b1), (e10, b10)))) =>
+      val (t1, t10) = (t(s"$n@base"), t(s"$n@big"))
+      n -> Map("t_base" -> t1, "t_big" -> t10,
+        "cost_ratio" -> t10 / (Mult * t1), "exch_base" -> e1.toDouble,
+        "exch_big" -> e10.toDouble, "bexch_base" -> b1.toDouble,
+        "bexch_big" -> b10.toDouble)
+    }
+    val errors = run.errors ++ plans.collect { case (n, Failure(e)) => n -> Harness.reject(e) }
     // the audited 10× tier is engineered SCALE-INVARIANT: any new
     // exchange is a violation (this strictness is what caught s43's
-    // corpus-sized-frame broadcast flip in round 8). Beyond 10×, a new
+    // corpus-sized-frame broadcast flip). Beyond 10×, a new
     // shuffle exchange that arrives WITH a lost broadcast is Spark's
     // size-based re-plan of a genuinely grown join side (e.g. TPC-H Q9's
     // lineitem⋈orders going SMJ when orders is 100× — the behavior a
@@ -248,44 +245,40 @@ object VolumeBench {
         m("exch_big") - m("exch_base") <= 3 * (m("bexch_base") - m("bexch_big"))
     val strict = Mult <= 10
     val replans = results.collect { case (n, m)
-      if !strict && isReplan(m) => n }.toSeq
+      if !strict && isReplan(m) => n }
     val violations =
       results.collect { case (n, m)
-        if m("cost_ratio") > CostRatioBound => s"$n:cost_ratio" }.toSeq ++
+        if m("cost_ratio") > CostRatioBound => s"$n:cost_ratio" } ++
       results.collect { case (n, m)
         if m("exch_big") > m("exch_base") && (strict || !isReplan(m)) =>
-          s"$n:new_exchange" }.toSeq ++
-      errors.keys
+          s"$n:new_exchange" } ++
+      errors.map(_._1)
     // QUALITY axis for the capped KNN-graph family: recall@3 vs the
     // exact top-3 on a hash-ranked query sample, at the shipped LSH
     // resolution AND at the adaptive-resolution rule, base and mult×
     // corpora — the number that shows what the per-bucket cap does to
     // the graph as bucket populations grow (cost stays linear either
     // way; this records what resolution buys back).
-    val recallJson =
+    val recall = Try {
       if (!names.contains("s40_knn_graph")) "{}"
-      else try {
+      else {
         def fmt(m: Map[String, Double]) =
           JsonOut.obj(m.toSeq.sortBy(_._1).map { case (k, v) => k -> v.toString })
         spark.sharedState.cacheManager.clearCache()
         val base = graft.operators.Similarity.knnRecallProbe(spark, sfDir)
         val big = graft.operators.Similarity.knnRecallProbe(spark, volDir)
         JsonOut.obj(Seq("base" -> fmt(base), "big" -> fmt(big)))
-      } catch { case e: Throwable =>
-        errors("knn_recall_probe") = Harness.reject(e)
-        "{}"
       }
-    println(JsonOut.obj(Seq(
-      "metric" -> JsonOut.str("volume_total"),
-      "value" -> results.values.map(_("t_big")).sum.toString,
-      "unit" -> JsonOut.str("sec"), "mult" -> Mult.toString,
-      "cost_ratio_bound" -> CostRatioBound.toString, "gen_sec" -> genSec.toString,
-      "queries" -> JsonOut.obj(results.map { case (k, m) =>
-        k -> JsonOut.obj(m.map { case (f, v) => f -> v.toString }) }),
-      "errors" -> JsonOut.obj(errors.map { case (k, v) => k -> JsonOut.str(v) }),
+    }
+    println(Harness.record("volume_total", results.map(_._2("t_big")).sum,
+      Some(JsonOut.obj(results.map { case (k, m) =>
+        k -> JsonOut.obj(m.map { case (f, v) => f -> v.toString }) })),
+      errors ++ recall.failed.toOption.map(e => "knn_recall_probe" -> Harness.reject(e)),
+      "mult" -> Mult.toString, "cost_ratio_bound" -> CostRatioBound.toString,
+      "gen_sec" -> genSec.toString,
       "violations" -> JsonOut.arr(violations.map(JsonOut.str)),
       "replans" -> JsonOut.arr(replans.map(JsonOut.str)),
-      "recall" -> recallJson, "sf" -> JsonOut.str(sfDir))))
+      "recall" -> recall.getOrElse("{}")))
     spark.stop()
     if (violations.nonEmpty) sys.exit(1)
   }

@@ -33,7 +33,8 @@ class SemdedupStreamSpec extends SparkSpec {
     // same corpus as a 2-micro-batch stream through the SAME assignment
     // expression (codegen'd centroid_argmin at x96's data-adaptive K)
     val rows = e.as[(Long, Seq[Double], Double)].collect().toSeq
-    assert(k > 8 || rows.size <= 64, "fixture should exercise the large-K path")
+    assert(k > 8 || rows.size <= 64,
+      "fixture K should be data-adaptive: above semK's floor of 8 unless the corpus is tiny")
     val stream = MemoryStream[(Long, Seq[Double], Double)]
     val assigned = Similarity.assignCells(
       stream.toDS().toDF("vec_id", "v", "nrm"), res.assignCent)
