@@ -333,9 +333,9 @@ object SkewBench {
     "q39_tpch09",
     // s45 under the 10k-dup embedding is the rebalance's OWN adversarial
     // case: the pile lands in one cell, the split targets exactly that
-    // cell, and the re-assignment is the same broadcast-centroid
-    // map-only pass as s34 — the hot cell is an aggregation group,
-    // never a join key
+    // cell, and the re-assignment is the same map-only centroid
+    // ranking as s34 (no join, no per-vector window) — the hot cell is
+    // an aggregation group, never a join key
     "s45_ivf_rebalance",
     // s46's probes are query-side-bounded like s34 (candidates ≤
     // |Q| × cell); the 10k-dup cell inflates candidate lists linearly,

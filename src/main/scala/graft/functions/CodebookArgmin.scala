@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Nearest-codeword argmin for product quantization — the SURVEY §2
-  * custom-operator tier (b) sibling of [[CentroidArgmin]], specialized to
+  * custom-operator tier (b) sibling of [[CentroidRank]], specialized to
   * s38's integer geometry: given an int8-grid sub-vector (array<bigint>)
   * and its subspace index, return the id of the codeword minimizing the
   * EXACT integer squared-L2 distance, ties to the lowest id.

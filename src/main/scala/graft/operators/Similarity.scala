@@ -17,7 +17,8 @@ import org.apache.spark.sql.expressions.Window
   *    join (×64 candidate reduction here);
   *  - [[s34AnnIvf]]: IVF — a coarse quantizer assigns every vector to its
   *    nearest centroid cell; queries probe the 2 nearest cells. The
-  *    assignment is one broadcast join against the (tiny) centroid set.
+  *    ranking is one map-only expression over the collected (tiny)
+  *    centroid matrix ([[rankedCells]]).
   *
   * Cosines use [[Cosine]] (identical sequential fold on both engines →
   * bit-equal doubles → ranks agree exactly with the oracle).
@@ -244,6 +245,7 @@ object Similarity {
   // cosine, ties broken by centroid id. ONE definition per dialect: a
   // one-sided change to centroid selection or tie-breaking would silently
   // make s34's cells and x93's cells disagree about the same quantizer.
+  // Spark ranks the collected centroids per vector in a projection.
 
   /** DuckDB: CTEs `cent` + `asg0` (vec_id, v, c_id, rnk) over `e`. */
   private[operators] val duckIvfAssign =
@@ -254,18 +256,17 @@ object Similarity {
                                    c.c_id) AS rnk
                  FROM e, cent c)"""
 
-  /** Spark twin of [[duckIvfAssign]]: (vec_id, v, nrm, c_id, ccos, rnk).
-    * The centroid set is tiny by construction — always broadcast. */
-  private[operators] def ivfAssign0(spark: SparkSession, dir: String): DataFrame = {
+  /** Spark twin of [[duckIvfAssign]] to rank p: (vec_id, v, nrm, c_id,
+    * ccos, rnk). The tiny centroid set is collected at construction. */
+  private[operators] def ivfAssign0(spark: SparkSession, dir: String,
+      p: Int): DataFrame = {
     val e = vecs(spark, dir)
-    val cent = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("c_id"), col("v").as("vc"), col("nrm").as("cnrm"))
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("c_id"))
-    e.crossJoin(broadcast(cent))
-      .withColumn("ccos", Cosine.dot(col("v"), col("vc")) / (col("nrm") * col("cnrm")))
-      .withColumn("rnk", row_number().over(w))
-      .select("vec_id", "v", "nrm", "c_id", "ccos", "rnk")
+    rankedCells(e, ivfSeeds(e), p)
   }
+
+  /** The quantizer's centroids: `cent`'s vec_id < 8 rows, collected. */
+  private def ivfSeeds(e: DataFrame): Seq[(Long, Seq[Double])] =
+    centroidMatrix(e.filter(col("vec_id") < 8).select("vec_id", "v"))
 
   /** The s34 oracle SQL — shared verbatim by [[s47PersistedIvf]]: the
     * persisted-index probe must return EXACTLY the in-flight index's
@@ -288,34 +289,19 @@ object Similarity {
         FROM r WHERE rnk <= 5 ORDER BY q_id, rnk"""
 
   /** IVF ANN: centroids = vec_id < 8; every vector assigned to its nearest
-    * centroid (broadcast join); queries probe their 2 nearest cells and rank
-    * candidates within them. */
+    * centroid (the map-only [[rankedCells]] kernel); queries probe their 2
+    * nearest cells and rank candidates within them ([[probeTop5]]). */
   val s34AnnIvf = Q(
     "s34_ann_ivf",
     duckS34Sql) { (spark, dir) =>
-    val e = vecs(spark, dir)
-    val asg0 = ivfAssign0(spark, dir)
-    val asg = asg0.filter(col("rnk") === 1)
-      .select(col("vec_id").as("n_id"), col("c_id").as("cell"))
-    val probe = asg0.filter(col("rnk") <= 2 && col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
-    val cand = probe.join(asg, "cell").filter(col("n_id") =!= col("q_id"))
-    val wTop = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    cand
-      .join(e.select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq")), "q_id")
-      .join(e.select(col("vec_id").as("n_id"), col("v").as("vn"), col("nrm").as("nn")), "n_id")
-      .withColumn("cos", Cosine.dot(col("vq"), col("vn")) / (col("nq") * col("nn")))
-      .withColumn("rnk", row_number().over(wTop).cast("long"))
-      .filter(col("rnk") <= 5)
-      .select("q_id", "n_id", "cell", "rnk", "cos")
-      .orderBy("q_id", "rnk")
+    probeTop5(vecs(spark, dir), ivfAssign0(spark, dir, 2)).orderBy("q_id", "rnk")
   }
 
   /** s39: FILTERED ANN — metadata-constrained vector search, the
     * vector-DB feature every retrieval pipeline needs (search only the
     * caller's tenant/language/licence slice). Same IVF machinery as
-    * [[s34AnnIvf]] (2-cell probe over the broadcast centroid
-    * assignment), with the label-equality predicate applied to the
+    * [[s34AnnIvf]] (2-cell probe over the map-only centroid
+    * ranking), with the label-equality predicate applied to the
     * candidate set BEFORE scoring: the filter composes with the cell
     * equi-join as one more join key — pre-filtering, not post-filtering
     * a top-k (post-filtering returns < k results whenever the filter is
@@ -348,7 +334,7 @@ object Similarity {
         FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""") { (spark, dir) =>
     val e = vecs(spark, dir)
     val lbl = T(spark, dir, "embeddings").select(col("vec_id"), col("label"))
-    val asg0 = ivfAssign0(spark, dir)
+    val asg0 = ivfAssign0(spark, dir, 2)
     val asg = asg0.filter(col("rnk") === 1).join(lbl, "vec_id")
       .select(col("vec_id").as("n_id"), col("c_id").as("cell"), col("label"))
     val probe = asg0.filter(col("rnk") <= 2 && col("vec_id") < 10).join(lbl, "vec_id")
@@ -394,7 +380,8 @@ object Similarity {
     * clustering primitive behind IVF index builds and corpus bucketing.
     * Assignment: every vector to its nearest of the 8 seed centroids
     * (vec_id < 8, s34's init) by cosine, ties broken by centroid id —
-    * one broadcast join, the centroid set is always tiny. Update: the
+    * one map-only projection over the collected (always tiny) centroid
+    * matrix ([[rankedCells]]). Update: the
     * new centroid, emitted in LONG form (cell, dim, n, c_mean) — one
     * hash aggregation over the posexploded dimensions (K·Dim groups,
     * map-side partials), no array re-assembly and no collect_list
@@ -406,7 +393,7 @@ object Similarity {
     * AQE-stable, and the centroid drift vs the true mean is bounded by
     * 1e-6 per component — far below the noise floor of any embedding
     * model. The full Lloyd loop at 100 TB is this step iterated:
-    * broadcast join + one agg per pass, nothing driver-side but the
+    * map-only assignment + one agg per pass, nothing collected but the
     * K·Dim centroid matrix. */
   val x93KmeansStep = Q(
     "x93_kmeans_step",
@@ -422,7 +409,7 @@ object Similarity {
     // the oracle explodes range(0, Dim): guard the Spark side's
     // data-driven posexplode so a different dimensionality fails loudly
     // instead of silently diverging (same class as bucketedVecs' guard)
-    val asg = ivfAssign0(spark, dir)
+    val asg = ivfAssign0(spark, dir, 1)
       .filter(col("rnk") === 1)
       .select(dimGuarded(col("v"), col("v")).as("v"), col("c_id").as("cell"))
     asg.select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
@@ -497,20 +484,35 @@ object Similarity {
   private[operators] def jvmNorm(cv: Seq[Double]): Double =
     math.sqrt(cv.foldLeft(0.0d)((acc, x) => acc + x * x))
 
-  /** Nearest-centroid assignment: appends `cell` to a frame carrying
-    * (v, nrm, ...) via [[graft.functions.CentroidArgmin]] — a codegen'd
-    * per-row K·Dim argmin whose matrix rides as a codegen reference
-    * object. O(1) plan size at any K, map-only (zero shuffle, zero
-    * fan-out), so it runs unchanged on a stream. Exactly the oracle's
-    * ROW_NUMBER (cos DESC, cell) ranking, over centroid norms from
-    * [[jvmNorm]] (RecallSpec pins it bit-equal to a driver-side
-    * reference argmin). */
-  private[graft] def assignCells(df: DataFrame,
-      cent: Seq[(Long, Seq[Double])]): DataFrame = {
+  /** A small frame's (cell id, vector) columns, collected as a centroid
+    * matrix ascending by cell. */
+  private def centroidMatrix(cent: DataFrame): Seq[(Long, Seq[Double])] =
+    cent.collect().map(r => (r.getLong(0), r.getSeq[Double](1).toVector: Seq[Double]))
+      .sortBy(_._1).toSeq
+
+  /** The p best cells of a frame's (v, nrm) via
+    * [[graft.functions.CentroidRank]]: map-only at any K, so it runs
+    * unchanged on a stream; exactly the oracle's ROW_NUMBER (cos DESC,
+    * cell) ranking, over centroid norms from [[jvmNorm]]. */
+  private[operators] def rankCells(cent: Seq[(Long, Seq[Double])], p: Int): Column = {
     val sorted = cent.sortBy(_._1)
-    df.withColumn("cell", graft.functions.CentroidArgmin(
-      col("v"), col("nrm"), sorted, sorted.map(c => jvmNorm(c._2))))
+    graft.functions.CentroidRank(col("v"), col("nrm"), sorted,
+      sorted.map(c => jvmNorm(c._2)), p)
   }
+
+  /** Nearest-centroid assignment: appends `cell`, the top of the p = 1
+    * [[rankCells]] ranking, to a frame carrying (v, nrm, ...). */
+  private[graft] def assignCells(df: DataFrame,
+      cent: Seq[(Long, Seq[Double])]): DataFrame =
+    df.withColumn("cell", rankCells(cent, 1).getItem(0).getField("cell"))
+
+  /** [[rankCells]] as rows: the frame's columns plus (c_id, ccos, rnk)
+    * for rnk 1..p. A null vector ranks no cell. */
+  private[operators] def rankedCells(df: DataFrame,
+      cent: Seq[(Long, Seq[Double])], p: Int): DataFrame =
+    df.select(col("*"), posexplode(rankCells(cent, p)).as(Seq("pos", "rc")))
+      .withColumn("c_id", col("rc.cell")).withColumn("ccos", col("rc.cos"))
+      .withColumn("rnk", col("pos") + 1).drop("pos", "rc")
 
   private def lloydStep(spark: SparkSession, e: DataFrame,
       cent: Seq[(Long, Seq[Double])]): Array[((Long, Long), (Long, Double))] = {
@@ -547,10 +549,7 @@ object Similarity {
       .select(col("vec_id"), dimGuarded(col("v"), col("v")).as("v"), col("nrm"))
       .cache()
     try {
-      var cent: Seq[(Long, Seq[Double])] = e.filter(col("vec_id") < k)
-        .select(col("vec_id"), col("v")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toVector: Seq[Double]))
-        .sortBy(_._1).toSeq
+      var cent = centroidMatrix(e.filter(col("vec_id") < k).select("vec_id", "v"))
       var assignCent = cent
       var lastCounts = Map.empty[Long, Long]
       var frozen = false
@@ -1571,7 +1570,7 @@ object Similarity {
     * centroid list — an empty or runaway cell is exactly what the
     * report exists to catch: both degrade s34/s39 probe quality, and at
     * 100 TB a rebalance/re-train decision hangs on this table). Same
-    * broadcast-centroid assignment as [[s34AnnIvf]]; everything after
+    * map-only centroid assignment as [[s34AnnIvf]]; everything after
     * the K-cell aggregate is K rows. Integer ppm shares, deterministic
     * population rank (n desc, cell asc). */
   val s41IvfStats = Q(
@@ -1593,7 +1592,7 @@ object Similarity {
         FROM cents c LEFT JOIN pop ON c.cell = pop.cell, tot
         ORDER BY c.cell""") { (spark, dir) =>
     val lbl = T(spark, dir, "embeddings").select(col("vec_id"), col("label"))
-    val asg = ivfAssign0(spark, dir).filter(col("rnk") === 1)
+    val asg = ivfAssign0(spark, dir, 1).filter(col("rnk") === 1)
       .select(col("vec_id"), col("c_id").as("cell"))
     val cents = vecs(spark, dir).filter(col("vec_id") < 8)
       .select(col("vec_id").as("cell"))
@@ -1665,8 +1664,8 @@ object Similarity {
     * exact integer arithmetic so the oracle hash-matches raw doubles.
     *
     * Scale: the cell assignment and PQ encode are the same map-only
-    * index-build passes as s34/s38 (one broadcast each); per query the
-    * candidate set is its 2 probed cells' populations, ADC per
+    * index-build passes as s34/s38 (one collected matrix each); per
+    * query the candidate set is its 2 probed cells' populations, ADC per
     * candidate touches an 8-row broadcast codebook slice, and the
     * exact re-rank reads [[PqRerank]] full vectors — query cost is
     * cell-bounded, never corpus-bounded. RecallSpec audits recall@5
@@ -1724,12 +1723,7 @@ object Similarity {
                   PARTITION BY q_id ORDER BY qcos DESC, n_id) AS rnk FROM rr)
         SELECT q_id, n_id, cell, CAST(rnk AS BIGINT) AS rnk, qcos
         FROM fin WHERE rnk <= 5 ORDER BY q_id, rnk""") { (spark, dir) =>
-    val asg0 = ivfAssign0(spark, dir)
-    val asg = asg0.filter(col("rnk") === 1)
-      .select(col("vec_id").as("n_id"), col("c_id").as("cell"))
-    val probe = asg0.filter(col("rnk") <= 2 && col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
-    val cand0 = probe.join(asg, "cell").filter(col("n_id") =!= col("q_id"))
+    val cand0 = probeCands(ivfAssign0(spark, dir, 2))
     val qz = pqQuantized(spark, dir)
     val subs = pqSubs(qz).cache()
     val cb = pqCodebookFrame(subs)
@@ -1859,41 +1853,29 @@ object Similarity {
                  FROM e, cent2 c)"""
 
   /** Spark twin of `cent2`: original seeds plus one promoted member per
-    * hot cell. K + 2 rows — always broadcast. */
-  private[operators] def rebalancedCents(spark: SparkSession, dir: String): DataFrame = {
-    val e = vecs(spark, dir)
-    val asg = ivfAssign0(spark, dir).filter(col("rnk") === 1)
-    val wHot = Window.orderBy(col("n").desc, col("c_id"))
-    val hot = asg.groupBy("c_id").agg(count(lit(1)).as("n"))
-      .withColumn("pr", row_number().over(wHot)).filter(col("pr") <= 2)
-      .select("c_id")
-    val wFar = Window.partitionBy(col("c_id")).orderBy(col("ccos").asc, col("vec_id"))
-    val newc = asg.join(broadcast(hot), "c_id")
-      .filter(col("vec_id") >= 8) // never promote an existing centroid
-      .withColumn("fr", row_number().over(wFar)).filter(col("fr") === 1)
-      .select(col("vec_id").as("nc"))
-    e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("c_id"), col("v").as("vc"), col("nrm").as("cnrm"))
-      .unionByName(e.join(broadcast(newc), col("vec_id") === col("nc"))
-        .select(col("vec_id").as("c_id"), col("v").as("vc"), col("nrm").as("cnrm")))
-  }
-
-  /** Spark twin of `asg2`: every vector ranked against the expanded
-    * centroid set (broadcast — the centroid set stays tiny). */
-  private[operators] def rebalancedAssign(spark: SparkSession, dir: String): DataFrame = {
-    val w2 = Window.partitionBy(col("vec_id")).orderBy(col("ccos2").desc, col("c_id"))
-    vecs(spark, dir).crossJoin(broadcast(rebalancedCents(spark, dir)))
-      .withColumn("ccos2", Cosine.dot(col("v"), col("vc")) / (col("nrm") * col("cnrm")))
-      .withColumn("rnk", row_number().over(w2))
-      .select("vec_id", "c_id", "rnk")
+    * hot cell, collected as the K + 2-row centroid matrix `asg2` ranks.
+    * One K-group aggregate yields each cell's population and farthest
+    * non-seed member (min (ccos, vec_id)); the two hottest cells (n desc,
+    * c_id) are picked from its K collected rows. */
+  private def rebalancedCents(e: DataFrame,
+      seeds: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] = {
+    val cells = rankedCells(e, seeds, 1).filter(col("rnk") === 1)
+      .groupBy("c_id").agg(count(lit(1)).as("n"),
+        // never promote an existing centroid
+        min(when(col("vec_id") >= 8, struct(col("ccos"), col("vec_id"), col("v"))))
+          .as("far"))
+      .collect()
+    seeds ++ cells.sortBy(r => (-r.getLong(1), r.getLong(0))).take(2)
+      .filterNot(_.isNullAt(2)).map(_.getStruct(2))
+      .map(f => (f.getLong(1), f.getSeq[Double](2).toVector: Seq[Double]))
   }
 
   /** s45: the rebalanced index's cell-population report — s41's stats
     * AFTER the split, with `is_new` marking the promoted cells. The
     * RebalanceSpec asserts the operation's point: the max cell share
     * strictly drops. Scale: everything after the K-cell aggregate is
-    * K + 2 rows; the re-assignment is the same broadcast-centroid
-    * map-only pass s34 runs. */
+    * K + 2 rows; the re-assignment is the same map-only centroid
+    * ranking s34 runs, over the collected K + 2 centroids. */
   val s45IvfRebalance = Q(
     "s45_ivf_rebalance",
     s"""WITH $duckVecs, $duckIvfAssign, $duckRebalance,
@@ -1904,10 +1886,13 @@ object Similarity {
                CAST(CASE WHEN c.c_id >= 8 THEN 1 ELSE 0 END AS BIGINT) AS is_new
         FROM (SELECT c_id FROM cent2) c LEFT JOIN pop2 ON c.c_id = pop2.cell, tot
         ORDER BY cell""") { (spark, dir) =>
-    val pop2 = rebalancedAssign(spark, dir).filter(col("rnk") === 1)
+    import spark.implicits._
+    val e = vecs(spark, dir)
+    val cent2 = rebalancedCents(e, ivfSeeds(e))
+    val pop2 = rankedCells(e, cent2, 1).filter(col("rnk") === 1)
       .groupBy(col("c_id").as("cell")).agg(count(lit(1)).as("n0"))
-    val tot = vecs(spark, dir).agg(count(lit(1)).as("nt"))
-    rebalancedCents(spark, dir).select(col("c_id").as("cell"))
+    val tot = e.agg(count(lit(1)).as("nt"))
+    cent2.map(_._1).toDF("cell")
       .join(pop2, Seq("cell"), "left")
       .crossJoin(broadcast(tot))
       .select(col("cell"),
@@ -1917,21 +1902,30 @@ object Similarity {
       .orderBy("cell")
   }
 
-  /** 2-probe top-5 search over a full assignment ranking — the s34 probe
-    * shape, shared by both sides of the s46 recall audit. */
-  private def probeTop5(e: DataFrame, asgRanked: DataFrame): DataFrame = {
+  /** s34's candidates over an assignment ranking (vec_id, c_id, rnk to
+    * 2): each query (vec_id < 10) with the rnk-1 members of its 2
+    * top-ranked cells, as (q_id, cell, n_id). */
+  private def probeCands(asgRanked: DataFrame): DataFrame = {
     val asg = asgRanked.filter(col("rnk") === 1)
       .select(col("vec_id").as("n_id"), col("c_id").as("cell"))
-    val probe = asgRanked.filter(col("rnk") <= 2 && col("vec_id") < 10)
+    asgRanked.filter(col("rnk") <= 2 && col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
+      .join(asg, "cell").filter(col("n_id") =!= col("q_id"))
+  }
+
+  /** The s34 probe: [[probeCands]] ranked by exact cosine, the top 5 per
+    * query as (q_id, n_id, cell, rnk, cos) — s34's answer, and both sides
+    * of the s46 recall audit. */
+  private def probeTop5(e: DataFrame, asgRanked: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    probe.join(asg, "cell").filter(col("n_id") =!= col("q_id"))
+    probeCands(asgRanked)
       .join(e.select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq")), "q_id")
       .join(e.select(col("vec_id").as("n_id"), col("v").as("vn"), col("nrm").as("nn")), "n_id")
       .withColumn("cos", Cosine.dot(col("vq"), col("vn")) / (col("nq") * col("nn")))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 5)
-      .select("q_id", "n_id")
+      .select(col("q_id"), col("n_id"), col("cell"), col("rnk").cast("long").as("rnk"),
+        col("cos"))
   }
 
   /** s46: recall RE-AUDIT of the rebalance — per query (vec_id < 10)
@@ -1993,8 +1987,10 @@ object Similarity {
       .withColumn("rnk", row_number().over(wT))
       .filter(col("rnk") <= 5)
       .select("q_id", "n_id")
-    val topA = probeTop5(e, ivfAssign0(spark, dir).select("vec_id", "c_id", "rnk"))
-    val topB = probeTop5(e, rebalancedAssign(spark, dir))
+    val seeds = ivfSeeds(e)
+    val topA = probeTop5(e, rankedCells(e, seeds, 2)).select("q_id", "n_id")
+    val topB = probeTop5(e, rankedCells(e, rebalancedCents(e, seeds), 2))
+      .select("q_id", "n_id")
     val hitsA = topA.join(truth, Seq("q_id", "n_id"))
       .groupBy("q_id").agg(count(lit(1)).as("hb"))
     val hitsB = topB.join(truth, Seq("q_id", "n_id"))
@@ -2020,7 +2016,7 @@ object Similarity {
     * cells' files — and `centroids/` is the K-row quantizer. */
   private[operators] def writeIvfIndex(spark: SparkSession, dir: String,
       out: String): Unit = {
-    ivfAssign0(spark, dir).filter(col("rnk") === 1)
+    ivfAssign0(spark, dir, 1).filter(col("rnk") === 1)
       .select(col("vec_id"), col("v"), col("nrm"), col("c_id").as("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$out/cells")
     vecs(spark, dir).filter(col("vec_id") < 8)
@@ -2036,12 +2032,12 @@ object Similarity {
     * lets Spark prune to the probed cells' files (dynamic partition
     * pruning — at 100 TB the query touches nprobe/K of the index bytes,
     * which is the entire point of IVF on disk); `centroids/` is K rows,
-    * read once and broadcast. Queries arrive FRESH (re-quantized against
-    * the persisted centroids, never against in-flight state), and the
-    * oracle is [[duckS34Sql]] VERBATIM — the persisted round trip must
-    * reproduce the in-flight index's answer bit-for-bit, so any loss in
-    * the write→read path (vector precision, cell key typing, dropped
-    * rows) goes red on the shared oracle. */
+    * collected once as the queries' ranking matrix. Queries arrive FRESH
+    * (re-quantized against the persisted centroids, never against
+    * in-flight state), and the oracle is [[duckS34Sql]] VERBATIM — the
+    * persisted round trip must reproduce the in-flight index's answer
+    * bit-for-bit, so any loss in the write→read path (vector precision,
+    * cell key typing, dropped rows) goes red on the shared oracle. */
   val s47PersistedIvf = Q(
     "s47_persisted_ivf",
     duckS34Sql) { (spark, dir) =>
@@ -2049,13 +2045,8 @@ object Similarity {
     writeIvfIndex(spark, dir, out)
     // ---- serve phase: everything below reads ONLY the persisted layout
     // (plus the fresh query vectors) ----
-    val cent = spark.read.parquet(s"$out/centroids")
-    val q = vecs(spark, dir).filter(col("vec_id") < 10)
-    val wq = Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("c_id"))
-    val probe = q.crossJoin(broadcast(cent))
-      .withColumn("ccos", Cosine.dot(col("v"), col("vc")) / (col("nrm") * col("cnrm")))
-      .withColumn("prnk", row_number().over(wq))
-      .filter(col("prnk") <= 2)
+    val cent = centroidMatrix(spark.read.parquet(s"$out/centroids").select("c_id", "vc"))
+    val probe = rankedCells(vecs(spark, dir).filter(col("vec_id") < 10), cent, 2)
       .select(col("vec_id").as("q_id"), col("v").as("vq"),
         col("nrm").as("nq"), col("c_id").as("cell"))
     // partition-column values come back as the inferred partition type;
@@ -2135,7 +2126,7 @@ object Similarity {
     val spark2 = spark
     import spark2.implicits._
     val e = vecs(spark, dir)
-    val asg0v = ivfAssign0(spark, dir)
+    val asg0v = ivfAssign0(spark, dir, ProbeSweep.max)
     val asg = asg0v.filter(col("rnk") === 1)
       .select(col("vec_id").as("n_id"), col("c_id").as("cell"))
     val npDf = ProbeSweep.toDF("np")

@@ -177,7 +177,7 @@ class PlanSpec extends SparkSpec {
     try {
       val p = Similarity.assignCells(e, res.assignCent)
         .queryExecution.explainString(FormattedMode)
-      assert(p.contains("centroid_argmin"), "the native expression must be in the plan")
+      assert(p.contains("centroid_rank"), "the native expression must be in the plan")
       assert(!p.contains("Join") && !p.contains("Exchange"),
         "assignment must be map-only — zero shuffle at any K")
       assert(p.contains("[codegen id :"), "the projection must stay codegen'd")
@@ -670,10 +670,27 @@ class PlanSpec extends SparkSpec {
 
   test("s45: re-assignment scans the corpus against BROADCAST centroids only") {
     val p = plan("s45_ivf_rebalance")
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
-      "the expanded centroid set must broadcast")
+    assert(!p.contains("windowspecdefinition(vec_id"),
+      "the expanded centroid set must be ranked per vector by the map-only " +
+        "kernel, never by a per-vector window")
     assert(!p.contains("CartesianProduct"),
       "the corpus must never cross-join unbroadcast")
+  }
+
+  test("IVF family: every centroid ranking is the map-only kernel, never a " +
+    "centroid cross join ranked by a per-vector window") {
+    for (n <- Seq("s34_ann_ivf", "s39_filtered_ann", "s41_ivf_stats", "s43_ivfpq_knn",
+        "s45_ivf_rebalance", "s46_rebalance_recall", "s47_persisted_ivf",
+        "s48_probe_sweep", "x93_kmeans_step")) {
+      val p = plan(n)
+      assert(p.contains("centroid_rank"), s"$n must rank cells with the kernel")
+      assert(!p.contains("windowspecdefinition(vec_id"),
+        s"$n: a vec_id-partitioned window ranks centroids outside the kernel")
+      // s45's and s48's nested-loop joins are their 1-row tot/tt/np
+      // broadcasts; s34 and s47 have none left once centroids are not joined
+      if (n == "s34_ann_ivf" || n == "s47_persisted_ivf")
+        assert(!p.contains("BroadcastNestedLoopJoin"), s"$n must not cross-join centroids")
+    }
   }
 
   test("s46: both probe sides and the truth join stay cartesian-free") {
@@ -698,7 +715,8 @@ class PlanSpec extends SparkSpec {
       "the probe join on the hive-partitioned cell column must plan DPP — " +
         "at scale the query reads nprobe/K of the index bytes via pruning")
     assert(!p.contains("CartesianProduct"),
-      "only the broadcast K-row centroid fan-out may cross, never the corpus")
+      "the queries rank the K persisted centroids in a projection; nothing " +
+        "may cross the corpus")
   }
 
   test("x119: the quota pass adds exactly one community-keyed window over x118") {

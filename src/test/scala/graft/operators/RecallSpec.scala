@@ -164,40 +164,78 @@ class RecallSpec extends SparkSpec {
   }
 
   test("assignment: assignCells is bit-equal to a driver-side reference argmin") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{broadcast, col, lit, row_number}
+    import spark.implicits._
     // both the small-K regime (x95's 8 seeds, clustered corpus) and the
-    // oracle-checked K=16 regime (x96 on the sf corpus): the reference is
-    // the oracle's ranking spelled out in Scala — the ascending
-    // acc + v(i)*cv(i) dot fold, jvmNorm centroid norms, highest cosine
-    // with the lowest cell on ties — so any divergence (tie-break, norm
-    // fold, codegen loop) is a bug
+    // oracle-checked K=16 regime (x96 on the sf corpus), plus s34's 8
+    // seed centroids and those seeds with seed 3 duplicated as cell 100
+    // (its cosines tie seed 3's bit for bit, so cell 3 must rank first).
+    // The reference is the oracle's ranking spelled out in Scala — the
+    // ascending acc + v(i)*cv(i) dot fold, jvmNorm centroid norms,
+    // highest cosine first with the lowest cell on ties — and the top-p
+    // kernel must also match the cross-join + ROW_NUMBER form it
+    // replaced, cell for cell and cosine bit for bit, at p = 1, 2, 4 and
+    // p > K; any divergence (tie-break, norm fold, codegen loop) is a bug
+    def ranks(df: DataFrame): Map[Long, Seq[(Int, Long, Long)]] =
+      df.select("vec_id", "rnk", "c_id", "ccos").collect()
+        .map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2),
+          java.lang.Double.doubleToLongBits(r.getDouble(3)))))
+        .groupBy(_._1).map { case (id, rs) => id -> rs.map(_._2).sortBy(_._1).toSeq }
     for ((dir, k) <- Seq((clusteredCorpus(0.01), 8L), (sfDir, 16L))) {
       val res = Similarity.lloydRun(spark, dir, k)
-      val e = Similarity.vecs(spark, dir)
-        .select(org.apache.spark.sql.functions.col("vec_id"),
-          org.apache.spark.sql.functions.col("v"),
-          org.apache.spark.sql.functions.col("nrm"))
-      val cent = res.assignCent.sortBy(_._1)
-      val cnrm = cent.map(c => Similarity.jvmNorm(c._2))
-      def refCell(v: Seq[Double], nrm: Double): Long = {
-        var best = 0
-        var bestCos = 0.0d
-        for (j <- cent.indices) {
-          val cv = cent(j)._2
-          val dot = (0 until math.min(v.size, cv.size))
-            .foldLeft(0.0d)((acc, i) => acc + v(i) * cv(i))
-          val cos = dot / (nrm * cnrm(j))
-          if (j == 0 || cos > bestCos) { best = j; bestCos = cos }
+      val e = Similarity.vecs(spark, dir).select(col("vec_id"), col("v"), col("nrm"))
+      val rows = e.collect().map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
+      val seeds = e.filter(col("vec_id") < 8).select("vec_id", "v").collect()
+        .map(r => r.getLong(0) -> (r.getSeq[Double](1).toVector: Seq[Double])).toSeq
+        .sortBy(_._1)
+      for (cent0 <- Seq(res.assignCent, seeds, seeds :+ (100L -> seeds(3)._2))) {
+        val cent = cent0.sortBy(_._1)
+        val cnrm = cent.map(c => Similarity.jvmNorm(c._2))
+        def refRank(v: Seq[Double], nrm: Double, p: Int): Seq[(Long, Double)] =
+          cent.indices.map { j =>
+            val cv = cent(j)._2
+            val dot = (0 until math.min(v.size, cv.size))
+              .foldLeft(0.0d)((acc, i) => acc + v(i) * cv(i))
+            cent(j)._1 -> dot / (nrm * cnrm(j))
+          }.sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)).take(p)
+        val ref1 = rows.map { case (id, v, nrm) => id -> refRank(v, nrm, 1).head._1 }.toMap
+        val got1 = Similarity.assignCells(e, cent0)
+          .select("vec_id", "cell").collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got1.size === ref1.size && got1 === ref1,
+          s"centroid_rank's argmin diverges from the reference at K=${cent.size} on $dir")
+        val centDf = cent.toDF("c_id", "vc").withColumn("cnrm", Cosine.norm(col("vc")))
+        val w = Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("c_id"))
+        for (p <- Seq(1, 2, 4, cent.size + 1)) {
+          val got = ranks(Similarity.rankedCells(e, cent0, p))
+          val ref = rows.map { case (id, v, nrm) =>
+            id -> refRank(v, nrm, p).zipWithIndex.map { case ((c, cos), i) =>
+              (i + 1, c, java.lang.Double.doubleToLongBits(cos))
+            }
+          }.toMap
+          val crossJoined = ranks(e.crossJoin(broadcast(centDf))
+            .withColumn("ccos", Cosine.dot(col("v"), col("vc")) / (col("nrm") * col("cnrm")))
+            .withColumn("rnk", row_number().over(w))
+            .filter(col("rnk") <= p))
+          assert(got.size === rows.length && got === ref,
+            s"top-$p ranking diverges from the reference at K=${cent.size} on $dir")
+          assert(got === crossJoined,
+            s"top-$p ranking diverges from the cross-join form at K=${cent.size} on $dir")
         }
-        cent(best)._1
       }
-      val ref = e.collect()
-        .map(r => r.getLong(0) -> refCell(r.getSeq[Double](1), r.getDouble(2))).toMap
-      val got = Similarity.assignCells(e, res.assignCent)
-        .select("vec_id", "cell").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got.size === ref.size && got === ref,
-        s"centroid_argmin diverges from the reference at k=$k on $dir")
+      assert(ranks(Similarity.ivfAssign0(spark, dir, 2)) ===
+        ranks(Similarity.rankedCells(e, seeds, 2)), "ivfAssign0 ranks s34's 8 seeds")
     }
+    // a null vector has no nearest centroid: a null ranking, a null cell,
+    // and no ranked rows
+    val nullVec = Seq(1L).toDF("vec_id")
+      .select(col("vec_id"), lit(null).cast("array<double>").as("v"),
+        lit(null).cast("double").as("nrm"))
+    val one = Seq(0L -> (Seq(1.0d, 0.0d): Seq[Double]))
+    assert(nullVec.select(Similarity.rankCells(one, 2)).head().isNullAt(0))
+    assert(Similarity.assignCells(nullVec, one).select("cell").head().isNullAt(0))
+    assert(Similarity.rankedCells(nullVec, one, 2).count() === 0L)
   }
 
   test("s37: quantized ranking keeps recall ≥ 0.9 vs exact; values on the int8 grid") {
@@ -250,7 +288,7 @@ class RecallSpec extends SparkSpec {
     assert(r43 >= 0.8, f"s43 IVF-PQ recall@5 $r43%.3f < 0.8")
     // structural contract: every returned neighbor lives in one of the
     // query's 2 probed cells — the corpus outside them was never scored
-    val asg = Similarity.ivfAssign0(spark, dir)
+    val asg = Similarity.ivfAssign0(spark, dir, 2)
     val cellOf = asg.filter(org.apache.spark.sql.functions.col("rnk") === 1)
       .select("vec_id", "c_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
