@@ -172,9 +172,10 @@ object Bench {
     // entries > 2x their recorded clean-window baseline
     // (records/bench_baseline.json — a copy of the last canary-clean full
     // run; re-baseline by replacing it) are listed machine-readably in
-    // "regressions"; on a degraded host window the canary_sec field is the
-    // tiebreaker. Read before any query runs, so a malformed baseline
-    // fails the run up front.
+    // "regressions", only when this run reads the baseline's sf dir; on a
+    // degraded host window the canary_sec field is the tiebreaker. Read
+    // before any query runs, so a malformed baseline fails the run up
+    // front.
     val baseline = Harness.baseline(
       sys.env.getOrElse("SPARK_GRAFT_BASELINE", "records/bench_baseline.json"))
     val spark = Harness.session()
@@ -210,10 +211,8 @@ object Bench {
 
     val results = entries.mins ++ pointRun.mins
     val errors = entries.errors ++ pointRun.errors
-    val regressions = results.collect {
-      case (k, v) if baseline.get(k).exists(Harness.regressed(k, v, _)) =>
-        k -> JsonOut.str(s"${r4(v)} vs baseline ${r4(baseline(k))}")
-    }
+    val regressions = baseline.regressions(sfDir, results)
+      .map { case (k, note) => k -> JsonOut.str(note) }
     val total = results.map(_._2).sum
     val summary = Seq("n_queries" -> results.size.toString,
       "canary_query" -> JsonOut.str(canaryName),

@@ -4,7 +4,9 @@ import java.io.File
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** How every main (and the test suite) runs: the one session conf, the
   * entry selection rule, the entry runner and its record line, the reject
@@ -29,6 +31,10 @@ object Harness {
       // (e.g. the 1M+ posting lists of d27/d28); the default 128-group
       // fallback would force them all to sort-based aggregation
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4000000")
+      // TIMESTAMP(NANOS) parquet columns read as epoch-nano longs (the
+      // `operators.T` loader contract); Spark reads this when it plans a
+      // scan, so it is a session setting, not a scoped one
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -59,17 +65,65 @@ object Harness {
     (dir, names.filter(selects(prefixes, _)))
   }
 
+  /** Every plan registered entry `name` over `dir` runs, as (action,
+    * execution): first each named SQL execution its construction ran, in
+    * completion order and as executed (the checkpoint jobs of its
+    * `operators.Ckpt` reuse points, "localCheckpoint" or "checkpoint" in
+    * reliable mode, and any collect or count), then the returned frame's,
+    * under "result" and not yet executed. A stage before a reuse point
+    * runs in that checkpoint's job, and the returned frame's plan stops at
+    * the checkpoint's `LogicalRDD`, so a reader of the frame's plan alone
+    * misses it. */
+  def entryPlans(spark: SparkSession, name: String, dir: String): Seq[(String, QueryExecution)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, durationNs: Long): Unit = {
+        seen.add(action -> qe); ()
+      }
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    GraftBridge.awaitListenerBus(spark)
+    spark.listenerManager.register(listener)
+    try {
+      val df = SparkEntry.queries(name)(spark, dir)
+      GraftBridge.awaitListenerBus(spark)
+      seen.asScala.toSeq :+ ("result" -> df.queryExecution)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** [[entryPlans]] as `mode` prints them, each execution its construction
+    * ran headed by its action. The plan mains print this. */
+  def explainEntry(spark: SparkSession, name: String, dir: String, mode: ExplainMode): String = {
+    val plans = entryPlans(spark, name, dir)
+    val ran = plans.init
+    (ran.zipWithIndex.map { case ((action, qe), i) =>
+      s"-- ran while building (${i + 1}/${ran.size}): $action\n${qe.explainString(mode)}"
+    } :+ plans.last._2.explainString(mode)).mkString("\n")
+  }
+
   /** A keyed thunk the runner times; `reset` runs untimed before each of
     * its samples. */
   final case class Timed(key: String, run: () => Unit, reset: () => Unit = () => ())
 
-  /** A thunk timed on an empty cache manager: entries cache intermediates
-    * (q81/q83/q85 share their cents histogram that way), and cached plans
-    * canonicalize equal across invocations, so without the clear later
-    * passes would time cache reads, not the work. The OS page cache
-    * staying warm across passes is the intended steady state. */
+  /** A thunk timed on an empty cache manager and with no local checkpoint
+    * left. Registered entries reuse frames through `operators.Ckpt` and
+    * leave the CacheManager empty (SessionStateSpec), so the clear only
+    * drops what a caller cached: cached plans canonicalize equal across
+    * invocations, and a sample that found one would time a cache read,
+    * not the work. The checkpoint blocks of earlier samples' frames would
+    * otherwise stay in the block manager until a driver GC lets the
+    * ContextCleaner free them, so a later sample could time evictions the
+    * first one never met. The OS page cache staying warm across passes is
+    * the intended steady state. */
   def uncached(spark: SparkSession, key: String)(f: => Unit): Timed =
-    Timed(key, () => f, () => spark.sharedState.cacheManager.clearCache())
+    Timed(key, () => f, () => {
+      spark.sharedState.cacheManager.clearCache()
+      // a local checkpoint is a persisted RDD; the runner's callers hold
+      // no checkpointed frame across samples, so every one is an earlier
+      // sample's, and its blocks go
+      spark.sparkContext.getPersistentRDDs.values.filter(_.isCheckpointed)
+        .foreach(_.unpersist(blocking = true))
+    })
 
   /** Registered entry `name` over `dir`, keyed by its name. The frame is
     * built inside the timer: export entries (x116/x117) write at
@@ -122,12 +176,27 @@ object Harness {
   def reject(e: Throwable): String =
     s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}"
 
-  /** Per-entry seconds from a bench record's `queries` object; no file, no
-    * baseline. */
-  def baseline(path: String): Map[String, Double] =
-    if (!new File(path).exists()) Map.empty
-    else new ObjectMapper().readTree(new File(path)).path("queries")
-      .properties().asScala.map(e => e.getKey -> e.getValue.asDouble).toMap
+  /** A bench record's per-entry seconds and the `sf` dir it ran at. */
+  final case class Baseline(sf: String, secs: Map[String, Double]) {
+    /** The keys of `results` that [[regressed]] against these seconds, each
+      * with its "sec vs baseline" note. A run at another scale factor than
+      * the baseline's flags nothing: its times say nothing about these. */
+    def regressions(sfDir: String, results: Seq[(String, Double)]): Seq[(String, String)] =
+      if (sfDir != sf) Nil
+      else results.collect {
+        case (k, v) if secs.get(k).exists(regressed(k, v, _)) =>
+          k -> s"${r4(v)} vs baseline ${r4(secs(k))}"
+      }
+  }
+
+  /** The bench record at `path` as a [[Baseline]]; no file, no baseline. */
+  def baseline(path: String): Baseline =
+    if (!new File(path).exists()) Baseline("", Map.empty)
+    else {
+      val json = new ObjectMapper().readTree(new File(path))
+      Baseline(json.path("sf").asText, json.path("queries")
+        .properties().asScala.map(e => e.getKey -> e.getValue.asDouble).toMap)
+    }
 
   /** An entry regressed when it takes more than twice its baseline, and
     * more than twice a floor under which 2x is host noise, not signal.

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.execution.SimpleMode
 
-/** Dev aid: dump physical plans for the PLANS.md evidence file.
+/** Dev aid: dump physical plans for the PLANS.md evidence file, each
+  * entry's reuse-point jobs first ([[Harness.explainEntry]]).
   * `runMain graft.PlanDump [dir] [name prefixes...]` — defaults to every
   * registered entry over sf0.001 (see [[Harness.planArgs]]). */
 object PlanDump {
@@ -12,8 +13,7 @@ object PlanDump {
     val spark = Harness.session(8)
     for (n <- names) {
       println(s"===== $n")
-      println(SparkEntry.queries(n)(spark, dir)
-        .queryExecution.explainString(SimpleMode))
+      println(Harness.explainEntry(spark, n, dir, SimpleMode))
     }
     spark.stop()
   }

@@ -484,8 +484,9 @@ object SkewBench {
 
     // events: every 10th event collapses onto ONE nanosecond — a
     // flash-crowd instant that makes one q65 time bin maximally hot.
-    // Read via T (nanosAsLong); the hostile copy carries ts as plain
-    // int64 epoch-nanos, which T's readers accept unchanged.
+    // Read via T, which surfaces ts as epoch-nano LongType whatever its
+    // parquet encoding; the hostile copy carries ts as plain int64
+    // epoch-nanos, which T's readers accept unchanged.
     val ev = graft.operators.T(spark, sfDir, "events")
     val hotTs = ev.agg(min("ts")).head().getLong(0)
     ev.withColumn("ts",

@@ -2,6 +2,9 @@ package graft
 
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 
 /** Empirical near-linear-scaling gauntlet: the one claim the per-round
@@ -16,8 +19,9 @@ import org.apache.spark.sql.functions._
   * — 1.0 is perfectly linear scaling, and the gate is
   * [[CostRatioBound]] (1.5×; sub-linear
   * ratios < 1 are common because fixed per-query overheads amortize).
-  * It also counts Exchange/BroadcastExchange nodes in each query's
-  * pre-execution plan at both scales: a query that picks up a NEW
+  * It also counts Exchange/BroadcastExchange nodes in every plan each
+  * query runs (its reuse-point checkpoint jobs and its returned frame's
+  * pre-execution plan) at both scales: a query that picks up a NEW
   * exchange at 10× (e.g. a "dimension" crossing the broadcast
   * threshold into a shuffle join) is exactly the 100×-scale regression
   * the plan gates cannot see at one SF, and is flagged as a violation.
@@ -168,20 +172,42 @@ object VolumeBench {
     new java.io.FileOutputStream(s"$outDir/_SUCCESS").close()
   }
 
-  /** (shuffle exchanges, broadcast exchanges) in the pre-execution plan
-    * of entry `name` over `dir`, built on an empty cache manager: an
-    * intermediate the entry caches prints its executed adaptive plan once
-    * a run has materialized it, initial and final plan both, so its
-    * exchanges would count twice on whichever scale ran last. */
-  private def exchanges(spark: SparkSession, name: String, dir: String): (Int, Int) = {
-    spark.sharedState.cacheManager.clearCache()
-    val p = SparkEntry.queries(name)(spark, dir).queryExecution.explainString(
-      org.apache.spark.sql.execution.SimpleMode)
-    // negative lookbehind keeps ReusedExchange (a pointer, not a new
-    // shuffle/broadcast) out of the count — a scale-dependent reuse
-    // difference must not trip or mask the new-exchange gate
-    ("""(?<![A-Za-z])Exchange\b""".r.findAllIn(p).size,
-      """(?<![A-Za-z])BroadcastExchange\b""".r.findAllIn(p).size)
+  /** (shuffle exchanges, broadcast exchanges) of each distinct plan entry
+    * `name` over `dir` runs ([[Harness.entryPlans]]: the executed plans of
+    * its reuse-point checkpoint jobs, where every stage before a reuse
+    * point runs, and the returned frame's pre-execution plan), keyed by
+    * the operator tree of its optimized logical plan: expressions are left
+    * out, so the same plan over data-derived values (a cut, a codebook,
+    * an output path) keys alike at both scales, and so does a plan whose
+    * join flipped from broadcast to shuffle, a physical choice. A plan
+    * that runs more than once (a loop round) keeps the most exchanges any
+    * run planned. The trees are walked, not their printout: an executed
+    * adaptive plan prints its initial plan next to its final one, and
+    * would count twice. A `ReusedExchange` is a pointer, not a new
+    * shuffle or broadcast, so a scale-dependent reuse difference cannot
+    * trip or mask the new-exchange gate. */
+  private def exchanges(spark: SparkSession, name: String, dir: String): Map[String, (Int, Int)] = {
+    val aqe = new AdaptiveSparkPlanHelper {}
+    Harness.entryPlans(spark, name, dir).map { case (_, qe) =>
+      val found = aqe.collectWithSubqueries(qe.executedPlan) { case e: Exchange => e }
+      def shape(p: LogicalPlan): String = p.nodeName + p.children.map(shape).mkString("(", ",", ")")
+      shape(qe.optimizedPlan) ->
+        (found.count(_.isInstanceOf[ShuffleExchangeLike]),
+          found.count(_.isInstanceOf[BroadcastExchangeLike]))
+    }.groupMapReduce(_._1)(_._2) { case ((s1, b1), (s2, b2)) => (s1 max s2, b1 max b2) }
+  }
+
+  /** Entry `name`'s exchanges at the base and the big scale, summed over
+    * the plans it runs at both: a loop that converges in more rounds at
+    * the bigger scale runs plans the base run never reached (HashMin's
+    * later rounds read a projected label frame, its first round does
+    * not), and those are more rounds, not a new exchange. */
+  private def exchangesAtBoth(spark: SparkSession, name: String, base: String,
+      big: String): ((Int, Int), (Int, Int)) = {
+    val (b, g) = (exchanges(spark, name, base), exchanges(spark, name, big))
+    val both = (b.keySet & g.keySet).toSeq
+    def sum(m: Map[String, (Int, Int)]) = (both.map(m(_)._1).sum, both.map(m(_)._2).sum)
+    (sum(b), sum(g))
   }
 
   def main(args: Array[String]): Unit = {
@@ -215,7 +241,7 @@ object VolumeBench {
     val run = Harness.Run(runs.flatMap(_.samples), runs.flatMap(_.errors))
     val t = run.mins.toMap
     val plans = names.filter(n => t.contains(s"$n@base") && t.contains(s"$n@big"))
-      .map(n => n -> Try((exchanges(spark, n, sfDir), exchanges(spark, n, volDir))))
+      .map(n => n -> Try(exchangesAtBoth(spark, n, sfDir, volDir)))
     val results = plans.collect { case (n, Success(((e1, b1), (e10, b10)))) =>
       val (t1, t10) = (t(s"$n@base"), t(s"$n@big"))
       n -> Map("t_base" -> t1, "t_big" -> t10,

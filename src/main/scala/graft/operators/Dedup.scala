@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import Ckpt.Rounds
+import Ckpt.Reuse
 
 /** Deduplication operators over `documents` / `embeddings` (SURVEY.md §2
   * Part B, LLM-pipeline extensions): exact, n-gram Jaccard, MinHash+LSH,
@@ -59,8 +59,9 @@ object Dedup {
     * consumer (min per permutation, intersect sizes, counts) is
     * order-insensitive so the set order is free.
     *
-    * Defined as a stable function value so the MapPartitions plans built by
-    * different queries canonicalize equal and share one cached result. */
+    * Defined as a stable function value, so every MapPartitions plan over
+    * it canonicalizes equal and Spark can reuse an exchange over two such
+    * plans within one query. */
   /** Per-string form of the kernel (shared with the streaming near-dup
     * tier): distinct word-3-gram shingle hashes of one text, insertion
     * order. `md5` is caller-provided so partition-level loops reuse one
@@ -211,14 +212,14 @@ object Dedup {
     * differ only in the score they derive from it. */
   private def pairCounts(spark: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
-    // cache: hs fans out into the df count and the index (plan-level
+    // checkpoint: hs fans out into the df count and the index (plan-level
     // fan-out would re-run the kernel per consumer). The cap itself is a
     // broadcast anti-join against the (tiny by construction) hot set —
     // cheaper than regrouping the index into posting lists, which pays a
     // 1M+-group collect_list. The self-join stays a bigint sort-merge join.
     import spark.implicits._
-    val hs = shingleHashes(spark, dir).cache()
-    val ex2 = cappedShingleIndex(hs).cache()
+    val hs = shingleHashes(spark, dir).ckpt
+    val ex2 = cappedShingleIndex(hs).ckpt
     // pair generation: ONE shuffle on h + a sorted-run JVM pass, instead of
     // a sort-merge self-join (which sorts the 1.5M-row index twice). Every
     // run is ≤ MaxShingleDf docs by the cap, so per-run pair emission is
@@ -356,10 +357,9 @@ object Dedup {
                CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) AS jaccard
         FROM v WHERE CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) >= 0.5
         ORDER BY a_id, b_id""") { (spark, dir) =>
-    // capped per-doc sets (hs0 and the cap plans cache-dedupe with d27's
-    // identical plans)
-    val hs0 = shingleHashes(spark, dir).cache()
-    val sh = cappedShingleSets(hs0).cache()
+    // capped per-doc sets (hs0 feeds both the df count and the cap)
+    val hs0 = shingleHashes(spark, dir).ckpt
+    val sh = cappedShingleSets(hs0).ckpt
     lshVerifiedPairs(sh)
       .select("a_id", "b_id", "n_common", "n_a", "n_b", "jaccard")
       .orderBy("a_id", "b_id")
@@ -391,8 +391,8 @@ object Dedup {
         FROM v JOIN sig ga ON a_id = ga.doc_id JOIN sig gb ON b_id = gb.doc_id
         WHERE CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) >= 0.5
         ORDER BY a_id, b_id""") { (spark, dir) =>
-    val hs0 = shingleHashes(spark, dir).cache()
-    val sh = cappedShingleSets(hs0).cache()
+    val hs0 = shingleHashes(spark, dir).ckpt
+    val sh = cappedShingleSets(hs0).ckpt
     val sig = sh.withColumn("m", expr(sigSpark))
     lshVerifiedPairs(sh)
       .join(sig.select(col("doc_id").as("a_id"), col("m").as("ma")), "a_id")
@@ -449,8 +449,8 @@ object Dedup {
                c.doc_id = c.component AS is_keeper
         FROM comp c JOIN sz s ON c.component = s.component
         ORDER BY c.doc_id""") { (spark, dir) =>
-    val hs0 = shingleHashes(spark, dir).cache()
-    val sh = cappedShingleSets(hs0).cache()
+    val hs0 = shingleHashes(spark, dir).ckpt
+    val sh = cappedShingleSets(hs0).ckpt
     connectedComponents(lshVerifiedPairs(sh).select("a_id", "b_id"))
       .orderBy("doc_id")
   }
@@ -473,7 +473,7 @@ object Dedup {
     // checkpointed RDD KEEPS hashpartitioning(w) (LogicalRDD captures the
     // physical outputPartitioning), so every round's edge⋈label join
     // reuses it instead of re-shuffling the (static) edge list — at scale
-    // the edge list is the big side of every round. Checkpoint, not
+    // the edge list is the big side of every round. Checkpoint, never
     // cache: a cache bounds the physical work but not the DRIVER work —
     // each round's plan still embeds the full upstream lineage (here the
     // whole LSH pair pipeline) plus ~3× per round, and analysis/cache
@@ -486,7 +486,7 @@ object Dedup {
       .select(col("a_id").as("u"), col("b_id").as("w"))
       .union(pairs.select(col("b_id").as("u"), col("a_id").as("w")))
       .repartition(col("w"))
-      .ckptRound
+      .ckpt
     // r12 optimization: initialize each label at min(id, min neighbor id)
     // — exactly the result of the first HashMin round from the identity
     // labeling, computed as ONE aggregate over the edge list instead of a
@@ -498,7 +498,7 @@ object Dedup {
     // doubled edge list, so the aggregate covers all nodes.
     var labels = edges.groupBy(col("u").as("id"))
       .agg(min(col("w")).as("mn"))
-      .select(col("id"), least(col("id"), col("mn")).as("lbl")).ckptRound
+      .select(col("id"), least(col("id"), col("mn")).as("lbl")).ckpt
     var changed = 1L
     var it = 0
     while (changed > 0 && it < CCMaxIter) {
@@ -513,7 +513,7 @@ object Dedup {
         .join(prop, col("id") === col("pid"), "left")
         .select(col("id"), col("lbl").as("old"),
           least(col("lbl"), coalesce(col("plbl"), col("lbl"))).as("lbl"))
-        .ckptRound
+        .ckpt
       changed = next.filter(col("lbl") =!= col("old")).count()
       labels = next.select("id", "lbl")
       it += 1
@@ -589,11 +589,11 @@ object Dedup {
     // partitions each round — the standard shape for iterative Spark
     // algorithms (same reason GraphX/GraphFrames checkpoint in-loop).
     var edges = canon(pairs.select(col("a_id").as("u"), col("b_id").as("w")))
-      .ckptRound
+      .ckpt
     var it = 0
     var changed = 1L
     while (changed > 0 && it < CCMaxIter) {
-      val next = smallStar(largeStar(edges)).ckptRound
+      val next = smallStar(largeStar(edges)).ckpt
       // set equality both ways: star rounds can only shrink-or-rewire, but
       // the symmetric check makes the fixpoint test independent of that
       changed = next.except(edges).union(edges.except(next)).count()
@@ -620,7 +620,7 @@ object Dedup {
     * d28 and x90's near-dup stage, so band count, key format, and the
     * verification arithmetic cannot drift apart. */
   private[operators] def lshVerifiedPairs(sh: DataFrame): DataFrame = {
-    val sig = sh.withColumn("m", expr(sigSpark)).cache()
+    val sig = sh.withColumn("m", expr(sigSpark)).ckpt
     val band = sig
       .select(col("doc_id"), explode(expr("sequence(0, 3)")).as("b"), col("m"))
       .selectExpr("doc_id", "b",
@@ -682,13 +682,13 @@ object Dedup {
                (simhash >> 16) & 15 AS c4, (simhash >> 20) & 15 AS c5,
                (simhash >> 24) & 15 AS c6, (simhash >> 28) & 15 AS c7
         FROM sim ORDER BY doc_id""") { (spark, dir) =>
-    // localCheckpoint-free barrier: compute simhash once, then derive the
-    // 8 chunk columns from the materialized column (cache prevents the 8x
+    // checkpoint barrier: compute simhash once, then derive the 8 chunk
+    // columns from the materialized column (the checkpoint prevents the 8x
     // re-inline of the interpreted HOF expression)
     T(spark, dir, "documents")
       .selectExpr("doc_id", s"transform(split(text, ' '), x -> ${H.s("x")}) as th")
       .selectExpr("doc_id", s"$simhashSpark as simhash")
-      .cache()
+      .ckpt
       .selectExpr(Seq("doc_id", "simhash") ++
         (0 until 8).map(c => s"(shiftright(simhash, ${4 * c}) & 15) as c$c"): _*)
       .orderBy("doc_id")
@@ -710,13 +710,13 @@ object Dedup {
         SELECT a_id, b_id, sim_a, sim_b,
                CAST(bit_count(xor(sim_a, sim_b)) AS BIGINT) AS hamming
         FROM cand ORDER BY a_id, b_id""") { (spark, dir) =>
-    // cache: the interpreted simhash higher-order expression would
+    // checkpoint: the interpreted simhash higher-order expression would
     // otherwise be re-inlined by projection collapse into cv and both
     // self-join sides (16 evaluations per doc) — 25s -> 3s at sf0.1
     val sim = T(spark, dir, "documents")
       .selectExpr("doc_id", s"transform(split(text, ' '), x -> ${H.s("x")}) as th")
       .selectExpr("doc_id", s"$simhashSpark as simhash")
-      .cache()
+      .ckpt
     val chunk = sim
       .select(col("doc_id"), col("simhash"), explode(expr("sequence(0, 3)")).as("c"))
       .withColumn("cv", expr("shiftright(simhash, c*8) & 255"))
@@ -990,14 +990,14 @@ object Dedup {
       .filter(col("df") > SpanGramDfCap)
       .select("g")
     // r12 optimization: every caller (d36, x128/x131) consumes the capped
-    // occurrences 2-4× (self-join sides / split sides) — cache the
+    // occurrences 2-4× (self-join sides / split sides) — checkpoint the
     // POST-CAP frame so the tokenize+explode+cap pipeline runs once per
-    // query. Deliberately NOT caching the pre-cap `grams`: under a
+    // query. Deliberately NOT materializing the pre-cap `grams`: under a
     // mass-duplicated corpus the uncapped explosion is unbounded, and
     // materializing it regressed the skew gauntlet's d36 line ~8×
     // (measured round 12) — the two pre-cap passes (df profile +
     // anti-join side) stay streaming, the df cap bounds what is stored.
-    grams.join(hot, Seq("g"), "left_anti").cache()
+    grams.join(hot, Seq("g"), "left_anti").ckpt
   }
 
   /** Spark twin of [[duckSpanIslands]]: collapse a pair table (a_id,
@@ -1039,8 +1039,8 @@ object Dedup {
   val d35ComponentsStar = Q(
     "d35_components_star",
     d34DedupComponents.oracle.get) { (spark, dir) =>
-    val hs0 = shingleHashes(spark, dir).cache()
-    val sh = cappedShingleSets(hs0).cache()
+    val hs0 = shingleHashes(spark, dir).ckpt
+    val sh = cappedShingleSets(hs0).ckpt
     connectedComponentsStar(lshVerifiedPairs(sh).select("a_id", "b_id"))
       .orderBy("doc_id")
   }
@@ -1090,7 +1090,7 @@ object Dedup {
       || !new java.io.File(s"$hotPath/_SUCCESS").exists()) {
       val corpus = T(spark, dir, "documents")
         .filter(col("doc_id") % d37BatchMod =!= 0).select("doc_id", "text")
-      val hs = shingleHashesFrom(corpus).cache()
+      val hs = shingleHashesFrom(corpus).ckpt
       hs.select(explode(col("th")).as("h"))
         .groupBy("h").agg(count(lit(1)).as("df"))
         .filter(col("df") > MaxShingleDf).select("h")
@@ -1105,7 +1105,6 @@ object Dedup {
         .selectExpr("doc_id", s"$d37BkeySpark as bkey")
         .write.mode("overwrite").bucketBy(8, "bkey").sortBy("bkey")
         .option("path", s"$tmp/graft_d37_bands_$key").saveAsTable(bandsT)
-      hs.unpersist()
     }
     (hotPath, setsT, bandsT)
   }
@@ -1152,18 +1151,18 @@ object Dedup {
     * batchSets, batchBands); an index-maintaining caller appends the
     * latter two so the next round sees this round's docs — admitted or
     * not, matching the greedy contract (later docs reject against ALL
-    * earlier arrivals). batchSets/batchBands are cached here (three
-    * consumers each); the caller unpersists when done. */
+    * earlier arrivals). batchSets/batchBands are checkpointed here (three
+    * consumers each), so they hold no plan and need no release. */
   private[graft] def incrementalAdmit(batch: DataFrame,
       indexSets: DataFrame, indexBands: DataFrame, hotDf: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     val bex = shingleHashesFrom(batch.select("doc_id", "text"))
       .select(col("doc_id"), explode(col("th")).as("h"))
       .join(broadcast(hotDf), Seq("h"), "left_anti")
-    val bsets = bex.groupBy("doc_id").agg(collect_list(col("h")).as("th")).cache()
+    val bsets = bex.groupBy("doc_id").agg(collect_list(col("h")).as("th")).ckpt
     val bband = bsets.withColumn("m", expr(sigSpark))
       .select(col("doc_id"), explode(expr("sequence(0, 3)")).as("b"), col("m"))
-      .selectExpr("doc_id", s"$d37BkeySpark as bkey").cache()
+      .selectExpr("doc_id", s"$d37BkeySpark as bkey").ckpt
     val candIndex = bband.select(col("bkey"), col("doc_id").as("b_id"))
       .join(indexBands.select(col("bkey"), col("doc_id").as("a_id")), "bkey")
       .select("b_id", "a_id")
@@ -1282,7 +1281,7 @@ object Dedup {
     val d = T(spark, dir, "documents")
       .filter(length(col("text")) >= EditBlockLen)
       .select(col("doc_id"), col("text"), length(col("text")).as("len"))
-      .cache()
+      .ckpt
     val k = d.select(col("doc_id"), lit(0).as("side"),
         md5(substring(col("text"), 1, EditBlockLen).cast("binary")).as("bk"))
       .unionByName(d.select(col("doc_id"), lit(1).as("side"),
@@ -1348,8 +1347,8 @@ object Dedup {
                CAST(n_members AS BIGINT) AS n_members
         FROM r WHERE rnk = 1 ORDER BY component""") { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
-    val hs0 = shingleHashes(spark, dir).cache()
-    val sh = cappedShingleSets(hs0).cache()
+    val hs0 = shingleHashes(spark, dir).ckpt
+    val sh = cappedShingleSets(hs0).ckpt
     val comp = connectedComponents(lshVerifiedPairs(sh).select("a_id", "b_id"))
       .select("doc_id", "component")
     val toks = T(spark, dir, "documents")
@@ -1444,8 +1443,8 @@ object Dedup {
       "md5(text) as h",
       s"aggregate(transform(split(text, ' '), x -> ${H.s("x")} % 1000000007)," +
         s" cast(0 as bigint), (acc, v) -> (acc * 31 + v) % 1000000007) as poly")
-      .cache()
-    val u = fp.select("h", "poly").distinct().cache()
+      .ckpt
+    val u = fp.select("h", "poly").distinct().ckpt
     val pc = u.groupBy("poly").agg(count(lit(1)).as("n_contents"))
     pc.agg(count(lit(1)).as("n_distinct_poly"),
         sum(when(col("n_contents") > 1, col("n_contents")).otherwise(0L))
@@ -1497,16 +1496,16 @@ object Dedup {
     // d28/lshVerifiedPairs idiom) instead of re-joining the exploded
     // index per candidate: the old tail was cand ⋈ ex(a) ⋈ ex(b,h) →
     // groupBy(pair) → 2 sz joins — five exchanges carrying
-    // candidate×shingle exploded rows. Now ONE regroup of the cached
+    // candidate×shingle exploded rows. Now ONE regroup of the checkpointed
     // index into (doc_id, th) feeds two doc-keyed joins and the
     // intersect/sizes are map-side; n_common = |array_intersect| over
     // distinct-per-doc sets is exactly the oracle's COUNT(*) on matched
     // h. Candidate GENERATION (the prefix-filter index) is unchanged —
     // that is the operator.
-    val hs = shingleHashes(spark, dir).cache()
-    val ex = cappedShingleIndex(hs).cache()
+    val hs = shingleHashes(spark, dir).ckpt
+    val ex = cappedShingleIndex(hs).ckpt
     val dfreq = ex.groupBy("h").agg(count(lit(1)).as("df"))
-    val sets = ex.groupBy("doc_id").agg(collect_list(col("h")).as("th")).cache()
+    val sets = ex.groupBy("doc_id").agg(collect_list(col("h")).as("th")).ckpt
     val wDoc = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("df"), col("h"))
     val pref = ex.join(dfreq, "h")
@@ -1570,7 +1569,7 @@ object Dedup {
         LEFT JOIN comp c ON d.doc_id = c.doc_id
         LEFT JOIN sz s ON c.component = s.component
         ORDER BY d.doc_id""") { (spark, dir) =>
-    val sh = cappedShingleSets(shingleHashes(spark, dir).cache()).cache()
+    val sh = cappedShingleSets(shingleHashes(spark, dir).ckpt).ckpt
     val comp = connectedComponents(lshVerifiedPairs(sh).select("a_id", "b_id"))
     T(spark, dir, "documents").select(col("doc_id"))
       .join(comp.select(col("doc_id"), col("n_members")), Seq("doc_id"), "left")
@@ -1628,8 +1627,8 @@ object Dedup {
                              OR (q.b_id = t.anchor_id AND q.a_id = t.neg_id))
         ORDER BY anchor_id""") { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
-    val sh = cappedShingleSets(shingleHashes(spark, dir).cache()).cache()
-    val pairs = lshVerifiedPairs(sh).select("a_id", "b_id").cache()
+    val sh = cappedShingleSets(shingleHashes(spark, dir).ckpt).ckpt
+    val pairs = lshVerifiedPairs(sh).select("a_id", "b_id").ckpt
     val sym = pairs.select(col("a_id").as("anchor_id"), col("b_id").as("cand"))
       .unionAll(pairs.select(col("b_id").as("anchor_id"), col("a_id").as("cand")))
     val w = Window.partitionBy(col("anchor_id"))

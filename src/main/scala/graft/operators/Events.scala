@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import Ckpt.Reuse
 import org.apache.spark.sql.expressions.Window
 import Num._
 
@@ -512,9 +513,9 @@ object Events {
     // r12 optimization: the recursive step references `s` once per
     // iteration, and an inline CTE re-runs the LEAD/LAG windows (scan +
     // user_id shuffle + sort) at EVERY recursion level. Materializing
-    // `s` as a cached view makes each level one keyed join against an
-    // in-memory relation — the windows run once, rows identical (the
-    // cache is built inside the timed query; the oracle statement is
+    // `s` as a checkpointed view makes each level one keyed join against
+    // materialized rows — the windows run once, rows identical (the
+    // checkpoint runs inside the timed query; the oracle statement is
     // unchanged).
     T(spark, dir, "events").selectExpr("user_id", "event_id", "ts as tsn")
       .createOrReplaceTempView("q92_events")
@@ -524,7 +525,7 @@ object Events {
                 LEAD(tsn) OVER (PARTITION BY user_id ORDER BY tsn, event_id) AS nts,
                 LAG(tsn) OVER (PARTITION BY user_id ORDER BY tsn, event_id) AS pts
          FROM q92_events""")
-      .cache()
+      .ckpt
       .createOrReplaceTempView("q92_s")
     spark.sql(
       """WITH RECURSIVE

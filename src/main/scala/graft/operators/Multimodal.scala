@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import Ckpt.Reuse
 
 /** Multimodal-column plumbing (SURVEY.md §2 Part B, LLM-pipeline
   * extensions): media travels as opaque `binary` columns with typed
@@ -181,7 +182,7 @@ object Multimodal {
   private[operators] def mediaPairs(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     // JVM kernel (bit-equal to the expression form, DedupSpec-pinned);
-    // cache before the chunk fan-out so the pass runs once per doc
+    // checkpoint before the chunk fan-out so the pass runs once per doc
     val spark2 = spark
     import spark2.implicits._
     val sim = T(spark, dir, "documents")
@@ -189,7 +190,7 @@ object Multimodal {
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions(phashKernel)
       .toDF("doc_id", "phash")
-      .cache()
+      .ckpt
     val chunk = sim
       .select(col("doc_id"), col("phash"), explode(expr("sequence(0, 3)")).as("c"))
       .withColumn("cv", expr("shiftright(phash, c*8) & 255"))
@@ -326,7 +327,7 @@ object Multimodal {
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions(phash56Kernel)
       .toDF("doc_id", "phash")
-      .cache()
+      .ckpt
     // ONE candidate key per (row, combo), combo index tagged in the high
     // bits (keys are 35 bits; << 36 keeps tables disjoint): the keys are
     // a literal 56-element array of constant-folded shift/mask
@@ -572,12 +573,12 @@ object Multimodal {
       .selectExpr("doc_id",
         s"transform(sequence(0, (size(s) + ${FrameLen - 1}) div $FrameLen - 1), " +
           s"f -> aggregate($wS, 0L, (a, x) -> a + x * x)) as fe")
-      // cache = a collapse barrier (the m44 precedent): the cut step
+      // checkpoint = a collapse barrier (the m44 precedent): the cut step
       // references fe four times, and with the projections collapsed
       // each reference re-inlines fe's whole O(len) construction chain
-      // (measured 20-40 s vs sub-second). The cached frame is tiny —
+      // (measured 20-40 s vs sub-second). The checkpointed frame is tiny —
       // ~len/256 longs per blob.
-      .cache()
+      .ckpt
       // adjacent pairs via zip_with over two slices (t29's idiom), NOT a
       // lambda that indexes the outer fe: a lambda body referencing the
       // enclosing array re-inlines fe's whole construction per element.
@@ -632,7 +633,7 @@ object Multimodal {
       .select(col("doc_id"),
         md5(expr("cast(substring(text, cast(i * 64 + 1 as int), 64) as binary)")).as("ch"),
         length(expr("substring(text, cast(i * 64 + 1 as int), 64)")).as("clen"))
-      .cache()
+      .ckpt
     c.agg(count(lit(1)).as("n_chunks"),
         countDistinct(col("ch")).as("n_distinct_chunks"),
         sum(col("clen")).cast("long").as("total_bytes"))

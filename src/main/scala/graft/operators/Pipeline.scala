@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import Ckpt.Reuse
 import org.apache.spark.sql.functions._
 
 /** Training-data pipeline compositions: deterministic splits and the
@@ -109,12 +110,12 @@ object Pipeline {
       .filter(graft.functions.TokenQuality(col("text"), 20, 120, 0.25))
       .select(col("doc_id"), col("lang"), col("n_chars"), col("text"),
         split(col("text"), " ").as("t"))
-      .cache()
+      .ckpt
     val keep = q.groupBy(md5(col("text").cast("binary")))
       .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-    val qd = q.join(keep, "doc_id").cache()
-    val hs = Dedup.shingleHashesFrom(qd).cache()
-    val sh = Dedup.cappedShingleSets(hs).cache()
+    val qd = q.join(keep, "doc_id").ckpt
+    val hs = Dedup.shingleHashesFrom(qd).ckpt
+    val sh = Dedup.cappedShingleSets(hs).ckpt
     val dups = Dedup.lshVerifiedPairs(sh).select("b_id").distinct()
     val corpus = qd.join(dups, qd("doc_id") === dups("b_id"), "left_anti")
     (q, qd, corpus)
@@ -127,7 +128,7 @@ object Pipeline {
     * ("where did the corpus go?"). The stages ARE x90's (shared
     * [[corpusStages]] / shared oracle CTE chain), so the funnel can
     * never describe a different pipeline than the one that ships.
-    * Four counting aggregates over the already-cached stage frames +
+    * Four counting aggregates over the already-checkpointed stage frames +
     * a 1-row input-total broadcast; output is 4 rows. */
   val x112PipelineFunnel = Q(
     "x112_pipeline_funnel",
@@ -221,11 +222,11 @@ object Pipeline {
                  / NULLIF(CAST(len(th) AS BIGINT), 0) AS contamination
         FROM tr LEFT JOIN cont ON tr.doc_id = cont.doc_id
         ORDER BY tr.doc_id""") { (spark, dir) =>
-    // cached: the kernel frame feeds three subtrees (train index, train
-    // sizes, eval set) — uncached it would re-shingle the corpus 3×
+    // checkpointed: the kernel frame feeds three subtrees (train index,
+    // train sizes, eval set) — otherwise it would re-shingle the corpus 3×
     val hs = Dedup.shingleHashesFrom(T(spark, dir, "documents"))
       .withColumn("b", expr(s"${H.s("cast(doc_id as string)")} % 10"))
-      .cache()
+      .ckpt
     val train = hs.filter(col("b") < 8)
     val evalSh = hs.filter(col("b") >= 8)
       .select(explode(col("th")).as("h")).distinct()
@@ -447,7 +448,7 @@ object Pipeline {
   private[graft] case class DsirModel(tcnt: DataFrame, ttot: DataFrame,
       rcnt: DataFrame, rtot: DataFrame)
 
-  /** Build the model from an (optionally cached) feature frame — the
+  /** Build the model from an (optionally checkpointed) feature frame — the
     * totals are rollups of the ≤ [[DsirBuckets]]-row cell tables (tt =
     * Σ ct, tr = Σ cr, coalesced to 0 on an empty target), so the corpus
     * is aggregated once per side, not twice (r12 optimization: two of
@@ -463,7 +464,7 @@ object Pipeline {
       .groupBy("fb")
       .agg(count(lit(1)).as("cr"),
         count(when(col("rs").isNotNull, lit(1))).as("ct0"))
-      .cache() // ≤ DsirBuckets rows; consumed by both counts + both totals
+      .ckpt // ≤ DsirBuckets rows; consumed by both counts + both totals
     val tcnt = cells.filter(col("ct0") > 0)
       .select(col("fb"), col("ct0").as("ct"))
     val rcnt = cells.select("fb", "cr")
@@ -487,7 +488,7 @@ object Pipeline {
     dsirScoreFeatures(dsirFeatures(docs), m)
 
   /** Scoring from an already-derived feature frame — lets [[dsirScores]]
-    * reuse the one cached feature pass for both model build and scoring. */
+    * reuse the one checkpointed feature pass for both model build and scoring. */
   private def dsirScoreFeatures(fe: DataFrame, m: DsirModel): DataFrame =
     fe
       .join(broadcast(m.rcnt), Seq("fb"))
@@ -507,13 +508,13 @@ object Pipeline {
     * source, n_feats, log2w_bits, mean_bits_ppm), shared by x129 and
     * the x133 selection tier so the two cannot drift. */
   private def dsirScores(spark: SparkSession, dir: String): DataFrame = {
-    // ONE cached feature pass feeds model build AND scoring (r12
+    // ONE checkpointed feature pass feeds model build AND scoring (r12
     // optimization: the previous form derived the explode+md5 feature
     // stream five times per query — twice per model side, once for
     // scoring; now the corpus is tokenized/hashed once and the model
-    // aggregations + scoring join all read the cached stream)
+    // aggregations + scoring join all read the checkpointed stream)
     val docs = T(spark, dir, "documents")
-    val fe = dsirFeatures(docs).cache()
+    val fe = dsirFeatures(docs).ckpt
     dsirScoreFeatures(fe,
       dsirModelFrom(fe, docs.agg(min(col("source")).as("rs"))))
   }
@@ -646,11 +647,11 @@ object Pipeline {
           .otherwise(0L).as("is_quality"))
       .withColumn("b",
         (lit(1L) - col("is_quality")) * nBuckets + expr(s"h div $width"))
-      // cached: phases 1 and 2 both consume this projection, and the
+      // checkpointed: phases 1 and 2 both consume this projection, and the
       // expensive part (tokenize + quality scan) must run once, not twice.
-      // The cached frame is the NARROW projection (~40 bytes/row, ~1% of
-      // corpus bytes) — at extreme scale swap for recompute or checkpoint
-      .cache()
+      // The checkpointed frame is the NARROW projection (~40 bytes/row,
+      // ~1% of corpus bytes) — at extreme scale swap for recompute
+      .ckpt
     // phase 1: exact per-bucket token totals → prefix offsets (tiny frame:
     // sources × 2B rows, so the per-source offset window is trivially small)
     val wOff = Window.partitionBy(col("source")).orderBy(col("b"))
@@ -755,7 +756,7 @@ object Pipeline {
     val d = T(spark, dir, "documents")
       .select(col("doc_id"), col("n_chars"), expr(H.s("text")).as("h"))
       .withColumn("b", expr(s"h div $width"))
-      .cache() // consumed by both the per-bucket rank and the offsets
+      .ckpt // consumed by both the per-bucket rank and the offsets
     val wIn = Window.partitionBy(col("b")).orderBy(col("h"), col("doc_id"))
     val wOff = Window.orderBy(col("b"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -808,7 +809,7 @@ object Pipeline {
       .select(col("doc_id"), expr(H.s("text")).as("h"),
         expr("cast(size(split(text, ' ')) as bigint)").as("n_tokens"))
       .withColumn("b", expr(s"h div $width"))
-      .cache() // consumed by both the per-bucket prefix and the offsets
+      .ckpt // consumed by both the per-bucket prefix and the offsets
     val wIn = Window.partitionBy(col("b")).orderBy(col("h"), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val wOff = Window.orderBy(col("b"))
@@ -857,8 +858,8 @@ object Pipeline {
         FROM pairs JOIN sp sa ON a_id = sa.doc_id JOIN sp sb ON b_id = sb.doc_id
         WHERE sa.split <> sb.split
         ORDER BY a_id, b_id""") { (spark, dir) =>
-    val hs0 = Dedup.shingleHashes(spark, dir).cache()
-    val sh = Dedup.cappedShingleSets(hs0).cache()
+    val hs0 = Dedup.shingleHashes(spark, dir).ckpt
+    val sh = Dedup.cappedShingleSets(hs0).ckpt
     val sp = T(spark, dir, "documents")
       .withColumn("b", expr(s"${H.s("cast(doc_id as string)")} % 10"))
       .withColumn("split",
@@ -959,8 +960,8 @@ object Pipeline {
                FROM rep)
         SELECT lang, split, COUNT(*) AS n
         FROM sp GROUP BY 1, 2 ORDER BY lang, split""") { (spark, dir) =>
-    val hs0 = Dedup.shingleHashes(spark, dir).cache()
-    val sh = Dedup.cappedShingleSets(hs0).cache()
+    val hs0 = Dedup.shingleHashes(spark, dir).ckpt
+    val sh = Dedup.cappedShingleSets(hs0).ckpt
     val comp = Dedup
       .connectedComponents(Dedup.lshVerifiedPairs(sh).select("a_id", "b_id"))
       .select(col("doc_id"), col("component"))
@@ -1138,9 +1139,9 @@ object Pipeline {
 
   private[operators] def auditShards(
       spark: org.apache.spark.sql.SparkSession, dir: String, out: String): DataFrame = {
-    // ONE export read: the cached split partials feed the per-shard
+    // ONE export read: the checkpointed split partials feed the per-shard
     // content rollup AND both order detectors (previously three reads)
-    val parts = shardSplitPartials(spark, out).cache()
+    val parts = shardSplitPartials(spark, out).ckpt
     val ra = parts.groupBy("shard")
       .agg(sum(col("cnt")).as("r_docs"),
         expr("bit_xor(xor)").as("r_checksum"),
@@ -1199,7 +1200,7 @@ object Pipeline {
       s"${System.getProperty("java.io.tmpdir")}/graft_export_" +
         s"${Scale.sourceKey(dir, "documents")}_${spark.sparkContext.applicationId}")
     // (r12 note: caching the shared global-index plan was A/B-measured
-    // neutral-to-negative — globalIndexFrame already caches its hashed
+    // neutral-to-negative — globalIndexFrame already checkpoints its hashed
     // base internally, so the second consumer only re-runs a cheap
     // window; left uncached deliberately.)
     exportShards(spark, dir, out)
@@ -1223,7 +1224,7 @@ object Pipeline {
     * Any count/XOR/byte difference flags the shard; an added doc always
     * flips the count, so cancellation cannot hide a change.
     *
-    * Scale: two mergeable aggregations over one cached scan + a
+    * Scale: two mergeable aggregations over one checkpointed scan + a
     * manifest-sized (64-row here, corpus/2²⁶ in general) full-outer
     * join. The diff output is proportional to the DELTA's shard
     * footprint, not the corpus — the whole point. */
@@ -1247,7 +1248,7 @@ object Pipeline {
     val d = T(spark, dir, "documents")
       .select(col("doc_id"), col("n_chars"), expr(H.s("text")).as("h"),
         expr(s"${H.s("cast(doc_id as string)")} % 20").as("b"))
-      .cache()
+      .ckpt
     def manifest(src: DataFrame): DataFrame = src
       .groupBy(expr(s"h div $HashShardW").as("shard"))
       .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("x"),
@@ -1495,7 +1496,7 @@ object Pipeline {
       subWidth: Long = 1L << 16): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dd = d.withColumn("sub", expr(s"doc_id div $subWidth"))
-      .cache() // feeds both offset aggregates and the rank itself
+      .ckpt // feeds both offset aggregates and the rank itself
     // level-1: domain-bounded (source, n_chars) histogram → the rank
     // offset of each length group; the window runs over histogram rows
     val w1 = Window.partitionBy(col("source")).orderBy(col("n_chars").desc)
@@ -1557,7 +1558,7 @@ object Pipeline {
     * both versions' doc counts, token totals, and mean length
     * (integer ppm), with the token-volume delta in ppm of v1. Versions
     * are the x105 convention (v1 = corpus minus one doc_id band, v2 =
-    * all — a real pipeline feeds two snapshot paths). One cached scan
+    * all — a real pipeline feeds two snapshot paths). One checkpointed scan
     * feeds both profiles (partials absorb the corpus map-side into
     * |sources| rows each); the diff join is |sources| × |sources|.
     * Where x105 answers "WHICH shards changed" (re-export workset),
@@ -1587,7 +1588,7 @@ object Pipeline {
       .selectExpr("source", "n_chars",
         "cast(size(split(text, ' ')) as bigint) as n_tok",
         s"${H.s("cast(doc_id as string)")} % 20 as b")
-      .cache() // one scan feeds both version profiles
+      .ckpt // one scan feeds both version profiles
     def profile(src: DataFrame): DataFrame = src.groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"),
         sum(col("n_chars")).as("n_chars"))
@@ -1731,7 +1732,7 @@ object Pipeline {
     val d = T(spark, dir, "documents")
       .selectExpr("doc_id", "source", "text",
         s"${H.s("cast(doc_id as string)")} % 20 as b")
-      .cache() // both versions derive from one scan
+      .ckpt // both versions derive from one scan
     val v1 = d.filter(col("b") =!= 5)
       .select(col("doc_id"), col("source"), md5(col("text").cast("binary")).as("h"))
     val v2 = d.filter(col("b") =!= 7)
@@ -1877,7 +1878,7 @@ object Pipeline {
     val h = T(spark, dir, "documents")
       .groupBy(col("source").as("flag"), col("n_chars").as("c"))
       .agg(count(lit(1)).as("cnt"))
-      .cache() // tiny (source, cell) counts — histCum consumes it twice
+      .ckpt // tiny (source, cell) counts — histCum consumes it twice
 
     val cells = Relational2.histCum(h)
       .select(col("flag").as("source"), col("c"),
@@ -1966,11 +1967,11 @@ object Pipeline {
     val h = T(spark, dir, "documents")
       .groupBy(col("source").as("flag"), col("n_chars").as("c"))
       .agg(count(lit(1)).as("cnt"))
-      .cache() // tiny (source, cell) counts — histCum consumes it twice
+      .ckpt // tiny (source, cell) counts — histCum consumes it twice
     val hq = Relational2.histCum(h)
       .select(col("flag").as("source"), col("c"),
         expr("cum * 1000000 div n").as("q_ppm"))
-      .cache() // consumed as both the query side and the reference side
+      .ckpt // consumed as both the query side and the reference side
     val mapped = quantileMapCells(hq)
     val docs = T(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
@@ -2034,13 +2035,13 @@ object Pipeline {
                          ELSE 0 END AS BIGINT) AS train_weight_ppm
         FROM m ORDER BY doc_id""") { (spark, dir) =>
     val sh = Dedup.cappedShingleSets(
-      Dedup.shingleHashes(spark, dir).cache()).cache()
+      Dedup.shingleHashes(spark, dir).ckpt).ckpt
     val comp = Dedup.connectedComponents(
       Dedup.lshVerifiedPairs(sh).select("a_id", "b_id"))
     val h = T(spark, dir, "documents")
       .groupBy(col("source").as("flag"), col("n_chars").as("c"))
       .agg(count(lit(1)).as("cnt"))
-      .cache() // tiny (source, cell) counts — histCum consumes it twice
+      .ckpt // tiny (source, cell) counts — histCum consumes it twice
     val cells = Relational2.histCum(h)
       .select(col("flag").as("source"), col("c"),
         expr("cum * 1000000 div n").as("q_ppm"))
@@ -2151,7 +2152,7 @@ object Pipeline {
       spark.read.parquet(hotPath))
     val hist = spark.read.parquet(x126CellState(spark, dir))
     val merged = mergeCellState(hist, batch)
-      .cache() // tiny (source, cell) counts — histCum consumes it twice
+      .ckpt // tiny (source, cell) counts — histCum consumes it twice
     manifestRows(batch, verdicts, merged).orderBy("doc_id")
   }
 

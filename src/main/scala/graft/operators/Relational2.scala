@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import Ckpt.Reuse
 import org.apache.spark.sql.expressions.Window
 import Num._
 
@@ -457,18 +458,18 @@ object Relational2 {
       .orderBy("rk", "rnk")
   }
 
-  /** The (flag, cents, cnt) lineitem price histogram shared by
-    * q81/q83/q85 — the ONE row-level pass the whole robust-statistics
-    * family needs. It is cached, so within a session the CacheManager
-    * hands every family member the same cells (one lineitem scan) until
-    * `clearCache`; cells are bounded by the VALUE DOMAIN (distinct cents
-    * per flag), so holding them is a cells-sized cost at any corpus size. */
+  /** The (flag, cents, cnt) lineitem price histogram of q81/q83/q85 —
+    * the ONE row-level pass each robust-statistics entry needs. Each
+    * call scans lineitem once and checkpoints the cells, so an entry's
+    * later stages read cells, never rows, and no entry shares state with
+    * another; cells are bounded by the VALUE DOMAIN (distinct cents per
+    * flag), so holding them is a cells-sized cost at any corpus size. */
   private def centsHist(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     T(spark, dir, "lineitem")
       .selectExpr("l_returnflag as flag",
         "cast(cast(l_extendedprice as decimal(12,4)) * 100 as bigint) as c")
-      .groupBy("flag", "c").agg(count(lit(1)).as("cnt")).cache()
+      .groupBy("flag", "c").agg(count(lit(1)).as("cnt")).ckpt
 
   /** Winsorized robust aggregation: per return flag, clamp
     * l_extendedprice to its exact nearest-rank p05/p95 and report the
@@ -516,7 +517,7 @@ object Relational2 {
               CAST(lo AS DOUBLE) / 100.0 AS p05,
               CAST(hi AS DOUBLE) / 100.0 AS p95
        FROM cl GROUP BY flag, lo, hi ORDER BY l_returnflag""") { (spark, dir) =>
-    // ONE row-level pass (the shared histogram); thresholds AND the
+    // ONE row-level pass (the checkpointed histogram); thresholds AND the
     // clamped sums both derive from the cells — clamp(c)·cnt summed over
     // cells equals the row-level clamped sum exactly, so the corpus is
     // never rescanned for the clamp (the oracle's row-level form is the
@@ -626,8 +627,8 @@ object Relational2 {
     // never from a second corpus scan — the same multiset the oracle's
     // row-level dv computes, pre-aggregated.
     //
-    // r13 fuse: the price-axis cum runs ONCE (cached cells-sized frame
-    // feeding both the median and the fold), and the deviation cells are
+    // r13 fuse: the price-axis cum runs ONCE (checkpointed cells-sized
+    // frame feeding both the median and the fold), and the deviation cells are
     // the FOLDED price cells directly — no groupBy(flag, dev) regroup.
     // [[histCum]]'s running sum uses Spark's default RANGE frame, so the
     // two price cells that share one dev value (med−d and med+d) form a
@@ -635,13 +636,13 @@ object Relational2 {
     // MIN(dev | cum ≥ ⌈n/2⌉) picks the identical mad; the final sums run
     // over the same multiset the grouped form aggregated.
     val h = centsHist(spark, dir)
-    val cum1 = histCum(h).select("flag", "c", "cnt", "cum", "n").cache()
+    val cum1 = histCum(h).select("flag", "c", "cnt", "cum", "n").ckpt
     val med = cum1.groupBy("flag").agg(
       min(when(col("cum") >= expr("((n * 50) + 99) div 100"), col("c"))).as("med"))
     val fold = cum1.join(broadcast(med), "flag")
       .select(col("flag"), col("med"), abs(col("c") - col("med")).as("c"),
         col("cnt"))
-    val cumd = histCum(fold).cache()
+    val cumd = histCum(fold).ckpt
     val mad = cumd.groupBy("flag").agg(
       min(when(col("cum") >= expr("((n * 50) + 99) div 100"), col("c"))).as("mad"))
     cumd.join(broadcast(mad), "flag")

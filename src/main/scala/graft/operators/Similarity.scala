@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import Ckpt.Rounds
+import Ckpt.Reuse
 import org.apache.spark.sql.expressions.Window
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
@@ -547,32 +547,30 @@ object Similarity {
     // dim guard once up front (oracle unrolls range(0, Dim) per iteration)
     val e = vecs(spark, dir)
       .select(col("vec_id"), dimGuarded(col("v"), col("v")).as("v"), col("nrm"))
-      .cache()
-    try {
-      var cent = centroidMatrix(e.filter(col("vec_id") < k).select("vec_id", "v"))
-      var assignCent = cent
-      var lastCounts = Map.empty[Long, Long]
-      var frozen = false
-      var it = 0
-      while (it < LloydMaxIter && !frozen) {
-        it += 1
-        assignCent = cent
-        val m = lloydStep(spark, e, cent)
-        val byCell = m.groupBy(_._1._1)
-        lastCounts = byCell.map { case (c, rows) => c -> rows.head._2._1 }
-        val prev = cent.toMap
-        val drift = m.iterator.map { case ((c, d), (_, mean)) =>
-          math.abs(mean - prev(c)(d.toInt))
-        }.max
-        if (drift < LloydEps) frozen = true
-        else cent = cent.map { case (c, old) =>
-          val rows = byCell.get(c)
-          (c, rows.fold(old)(rs =>
-            rs.sortBy(_._1._2).map(_._2._2).toVector: Seq[Double]))
-        }
+      .ckpt
+    var cent = centroidMatrix(e.filter(col("vec_id") < k).select("vec_id", "v"))
+    var assignCent = cent
+    var lastCounts = Map.empty[Long, Long]
+    var frozen = false
+    var it = 0
+    while (it < LloydMaxIter && !frozen) {
+      it += 1
+      assignCent = cent
+      val m = lloydStep(spark, e, cent)
+      val byCell = m.groupBy(_._1._1)
+      lastCounts = byCell.map { case (c, rows) => c -> rows.head._2._1 }
+      val prev = cent.toMap
+      val drift = m.iterator.map { case ((c, d), (_, mean)) =>
+        math.abs(mean - prev(c)(d.toInt))
+      }.max
+      if (drift < LloydEps) frozen = true
+      else cent = cent.map { case (c, old) =>
+        val rows = byCell.get(c)
+        (c, rows.fold(old)(rs =>
+          rs.sortBy(_._1._2).map(_._2._2).toVector: Seq[Double]))
       }
-      LloydResult(cent, assignCent, lastCounts, it, frozen)
-    } finally { e.unpersist(); () }
+    }
+    LloydResult(cent, assignCent, lastCounts, it, frozen)
   }
 
   /** Full k-means (Lloyd) to convergence — x93's oracle-checked step
@@ -667,7 +665,7 @@ object Similarity {
     val k = semK(e.count())
     val res = lloydRun(spark, dir, k)
     val asg = assignCells(e, res.assignCent)
-      .cache() // three consumers: both pair-join sides + the member count
+      .ckpt // three consumers: both pair-join sides + the member count
     // rnk-then-filter → InferWindowGroupLimit: the hot cell is capped
     // MAP-SIDE (Partial WindowGroupLimit), so ≤ cap rows per cell ever
     // reach the rank shuffle — same mechanism x91 leans on
@@ -724,7 +722,7 @@ object Similarity {
     val e = vecs(spark, dir).select(col("vec_id"), col("v"), col("nrm"))
     val k = semK(e.count())
     val res = lloydRun(spark, dir, k)
-    val asg = assignCells(e, res.assignCent).cache()
+    val asg = assignCells(e, res.assignCent).ckpt
     import spark.implicits._
     val centDF = res.assignCent
       .map { case (c, cv) => (c, cv, jvmNorm(cv)) }
@@ -829,28 +827,13 @@ object Similarity {
 
   /** Driver-side codebook matrix in ascending (s, c) order — codeword
     * index == source vec_id, so the expression's code ids coincide with
-    * the join form's `c` column. */
+    * the codebook frame's `c` column. */
   private[graft] def pqBooks(cb: DataFrame): IndexedSeq[IndexedSeq[IndexedSeq[Long]]] = {
     val rows = cb.select(col("s"), col("c"), col("cw")).collect()
     (0 until PqM).map { s =>
       rows.filter(_.getInt(0) == s).sortBy(_.getLong(1))
         .map(_.getSeq[Long](2).toIndexedSeq).toIndexedSeq
     }
-  }
-
-  /** The explode-join + window form of PQ encode — what the DuckDB
-    * oracle runs in SQL; kept as the spec baseline the codegen'd
-    * [[graft.functions.CodebookArgmin]] path is pinned bit-equal to. */
-  private[graft] def pqCodesJoinForm(subs: DataFrame, cb: DataFrame): DataFrame = {
-    val wAsg = Window.partitionBy(col("vec_id"), col("s"))
-      .orderBy(col("dist"), col("c"))
-    subs.join(broadcast(cb), "s")
-      .withColumn("dist", expr(
-        "aggregate(zip_with(sub, cw, (x, y) -> (x - y) * (x - y)), " +
-          "cast(0 as bigint), (a, t) -> a + t)"))
-      .withColumn("rnk", row_number().over(wAsg))
-      .filter(col("rnk") === 1)
-      .select(col("vec_id").as("n_id"), col("s"), col("c"))
   }
 
   /** s38: product-quantized KNN — ADC candidate pruning + exact re-rank,
@@ -918,7 +901,7 @@ object Similarity {
         SELECT q_id, n_id, CAST(rnk AS BIGINT) AS rnk, qcos
         FROM fin WHERE rnk <= 5 ORDER BY q_id, rnk""") { (spark, dir) =>
     val qz = pqQuantized(spark, dir)
-    val subs = pqSubs(qz).cache()
+    val subs = pqSubs(qz).ckpt
     val cb = pqCodebookFrame(subs)
     // encode is MAP-ONLY: the 8×16 codebook collects driver-side (the
     // K·Dim-matrix pattern x95 already uses) and rides into the codegen'd
@@ -1060,7 +1043,7 @@ object Similarity {
     val qIds = e.select(col("vec_id"))
       .orderBy(expr(H.s("cast(vec_id as string)")), col("vec_id"))
       .limit(nQueries)
-      .cache()
+      .ckpt
     val q = e.join(broadcast(qIds), Seq("vec_id"), "left_semi")
       .select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
@@ -1071,7 +1054,7 @@ object Similarity {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 3)
       .select("q_id", "n_id")
-      .cache() // ≤ 3·nQueries rows
+      .ckpt // ≤ 3·nQueries rows
     val denom = exact.count().toDouble
     def recallAt(nHp: Int): Double =
       knnGraphRankedAt(spark, dir, nHp, Some(qIds))
@@ -1177,14 +1160,14 @@ object Similarity {
         ${duckPrIter("r2", "r3")}
         SELECT vec_id, CAST(r AS BIGINT) AS pr_ppm
         FROM r3 ORDER BY vec_id""") { (spark, dir) =>
-    val g = knnGraphRanked(spark, dir).select("q_id", "n_id").ckptRound
+    val g = knnGraphRanked(spark, dir).select("q_id", "n_id").ckpt
     val nodes = vecs(spark, dir).select("vec_id")
     val deg = g.groupBy("q_id").agg(count(lit(1)).as("d"))
     // static across sweeps: each edge pre-tagged with its source degree
-    val gd = g.join(deg, "q_id").ckptRound
+    val gd = g.join(deg, "q_id").ckpt
     var r = nodes.withColumn("r", lit(1000000L))
     for (_ <- 1 to 3)
-      r = prSweep(gd, nodes, r).ckptRound
+      r = prSweep(gd, nodes, r).ckpt
     r.select(col("vec_id"), col("r").cast("long").as("pr_ppm"))
       .orderBy("vec_id")
   }
@@ -1285,7 +1268,7 @@ object Similarity {
     * (vec_id, community, csize), shared by x118 and x119. */
   private[operators] def lpaCommunities(spark: SparkSession, dir: String): DataFrame =
     lpaCommunitiesFrom(spark, dir,
-      knnGraphRanked(spark, dir).select("q_id", "n_id").ckptRound)
+      knnGraphRanked(spark, dir).select("q_id", "n_id").ckpt)
 
   /** [[lpaCommunities]] over a caller-supplied (already materialized)
     * edge frame — lets x130 build the s40 graph ONCE and feed both the
@@ -1294,10 +1277,10 @@ object Similarity {
       g: DataFrame): DataFrame = {
     val ue = g.select(col("q_id").as("u"), col("n_id").as("w"))
       .union(g.select(col("n_id").as("u"), col("q_id").as("w")))
-      .distinct().ckptRound
+      .distinct().ckpt
     var lbl = vecs(spark, dir).select(col("vec_id"), col("vec_id").as("lbl"))
     for (_ <- 1 to LpaSweeps)
-      lbl = lpaSweep(ue, lbl).ckptRound
+      lbl = lpaSweep(ue, lbl).ckpt
     val sz = lbl.groupBy("lbl").agg(count(lit(1)).as("csize"))
     lbl.join(sz, "lbl")
       .select(col("vec_id"), col("lbl").as("community"), col("csize"))
@@ -1404,7 +1387,7 @@ object Similarity {
         col("q_id") === col("rn") && col("n_id") === col("rq"))
       .filter(col("q_id") < col("n_id"))
       .select(col("q_id").as("u"), col("n_id").as("w"))
-      .cache() // ≤ 3N rows, consumed by deg, two wedge sides and the close
+      .ckpt // ≤ 3N rows, consumed by deg, two wedge sides and the close
     val deg = mu.select(col("u").as("vec_id"))
       .unionAll(mu.select(col("w").as("vec_id")))
       .groupBy("vec_id").agg(count(lit(1)).as("deg"))
@@ -1470,7 +1453,7 @@ object Similarity {
         FROM j GROUP BY community ORDER BY community""") { (spark, dir) =>
     // ONE graph build feeds both kernels (materialized once; the two
     // consumers otherwise each rebuild the candidate join + rank)
-    val g = knnGraphRanked(spark, dir).select("q_id", "n_id").ckptRound
+    val g = knnGraphRanked(spark, dir).select("q_id", "n_id").ckpt
     val lcc = mutualLccFrom(g)
     lpaCommunitiesFrom(spark, dir, g)
       .join(lcc, Seq("vec_id"), "left")
@@ -1551,7 +1534,7 @@ object Similarity {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 3)
       .select("q_id", "n_id")
-      .cache() // ≤ 3·|sample| rows — hit join + per-query totals
+      .ckpt // ≤ 3·|sample| rows — hit join + per-query totals
     val g = knnGraphRankedAt(spark, dir, NumHp, Some(qIds))
       .select("q_id", "n_id")
     val hit = exact.join(g, Seq("q_id", "n_id"), "left_semi")
@@ -1725,7 +1708,7 @@ object Similarity {
         FROM fin WHERE rnk <= 5 ORDER BY q_id, rnk""") { (spark, dir) =>
     val cand0 = probeCands(ivfAssign0(spark, dir, 2))
     val qz = pqQuantized(spark, dir)
-    val subs = pqSubs(qz).cache()
+    val subs = pqSubs(qz).ckpt
     val cb = pqCodebookFrame(subs)
     val codes = subs
       .withColumn("c",
@@ -2134,7 +2117,7 @@ object Similarity {
       .crossJoin(broadcast(npDf)).filter(col("rnk") <= col("np"))
       .select(col("np"), col("vec_id").as("q_id"), col("c_id").as("cell"))
     val cand = probe.join(asg, "cell").filter(col("n_id") =!= col("q_id"))
-      .select("np", "q_id", "n_id").cache()
+      .select("np", "q_id", "n_id").ckpt
     val wr = Window.partitionBy(col("np"), col("q_id"))
       .orderBy(col("cos").desc, col("n_id"))
     val top5 = cand

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import Ckpt.Rounds
+import Ckpt.Reuse
 
 /** Shared deterministic hashing used by the text/dedup/similarity operators.
   *
@@ -532,7 +532,7 @@ object TextOps {
         SELECT doc_id, n_shingles, CAST(n_novel AS BIGINT) AS n_novel,
                CAST(n_novel * 1000000 // n_shingles AS BIGINT) AS novelty_ppm
         FROM per ORDER BY doc_id""") { (spark, dir) =>
-    val hs = Dedup.shingleHashes(spark, dir).cache()
+    val hs = Dedup.shingleHashes(spark, dir).ckpt
     val ex = hs.select(col("doc_id"), explode(col("th")).as("h"))
     val dfreq = ex.groupBy("h").agg(count(lit(1)).as("df"))
     ex.join(dfreq, "h")
@@ -712,12 +712,12 @@ object TextOps {
         ORDER BY src_a, src_b""") { (spark, dir) =>
     val src = T(spark, dir, "documents").select("doc_id", "source")
     // r12 optimization: ds feeds the totals AND both self-join sides —
-    // uncached, the shingle kernel + explode + join + distinct ran three
-    // times per query
+    // without the checkpoint, the shingle kernel + explode + join +
+    // distinct ran three times per query
     val ds = Dedup.shingleHashes(spark, dir)
       .select(col("doc_id"), explode(col("th")).as("h"))
       .join(src, "doc_id")
-      .select("source", "h").distinct().cache()
+      .select("source", "h").distinct().ckpt
     val tot = ds.groupBy("source").agg(count(lit(1)).as("n"))
     val a = ds.select(col("source").as("src_a"), col("h"))
     val b = ds.select(col("source").as("src_b"), col("h"))
@@ -895,7 +895,7 @@ object TextOps {
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
     var state = wf.select(col("w"), col("cnt"), split(col("w"), "").as("syms"))
-      .ckptRound
+      .ckpt
     val merges = scala.collection.mutable.Buffer[(Long, String, String, Long)]()
     var exhausted = false
     for (i <- 1 to k if !exhausted) {
@@ -913,7 +913,7 @@ object TextOps {
         val (x, y, c) =
           (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         merges += ((i.toLong, x, y, c))
-        state = bpeApplyMerge(state, x, y).ckptRound
+        state = bpeApplyMerge(state, x, y).ckpt
       }
     }
     (merges.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count"), state)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import Ckpt.Reuse
 import org.apache.spark.sql.functions._
 import Num._
 
@@ -124,9 +125,9 @@ object TpcH {
       .join(broadcast(T(spark, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
       .join(broadcast(T(spark, dir, "region").filter(col("r_name") === "EUROPE")),
         col("n_regionkey") === col("r_regionkey"))
-      // r12: consumed by the per-part min AND the final join — uncached,
-      // the lineitem-wide ps aggregation ran twice per query
-      .cache()
+      // r12: consumed by the per-part min AND the final join — without the
+      // checkpoint, the lineitem-wide ps aggregation ran twice per query
+      .ckpt
     val minCost = eligible.groupBy(col("ps_partkey").as("mc_partkey"))
       .agg(min(col("ps_supplycost")).as("mc_cost"))
     eligible
@@ -407,7 +408,7 @@ object TpcH {
       .groupBy(col("l_partkey"))
       .agg(sum(dec(col("l_extendedprice"))).as("val"))
       // r12: the Σval threshold and the filter probe share one aggregation
-      .cache()
+      .ckpt
     val total = v.agg(sum(col("val")).as("total"))
     v.crossJoin(broadcast(total))
       .filter(col("val") * 1000 > col("total"))
@@ -511,7 +512,7 @@ object TpcH {
       .groupBy(col("l_suppkey").as("supplier_no"))
       .agg(sum(rev).as("total_rev"))
       // r12: the max threshold and the join probe share one aggregation
-      .cache()
+      .ckpt
     val mx = rev0.agg(max(col("total_rev")).as("mx"))
     T(spark, dir, "supplier")
       .join(rev0.crossJoin(broadcast(mx)).filter(col("total_rev") === col("mx")),

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, UnixMicros}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, TimestampNTZType, TimestampType}
 
@@ -34,13 +35,16 @@ object Q {
 
 /** Session-conf hygiene: runs `body` with `kvs` set on the session and
   * restores every key afterwards, also when `body` throws — a key that
-  * was absent before is unset again, so nothing the body needed leaks
-  * into later queries of the same session. Confs are read at planning,
-  * so a body returning a frame must force its plan inside the scope. */
+  * was not set before is unset again, so nothing the body needed leaks
+  * into later queries of the same session. "Set" is what `getAll`
+  * lists: `getOption` also answers a key's default, and restoring that
+  * would leave the key set. Confs are read at planning, so a body
+  * returning a frame must force its plan inside the scope. */
 object Confs {
   def withConfs[A](spark: SparkSession, kvs: Seq[(String, String)])(body: => A): A = {
     val c = spark.conf
-    val saved = kvs.map { case (k, _) => k -> c.getOption(k) }
+    val set = c.getAll
+    val saved = kvs.map { case (k, _) => k -> set.get(k) }
     kvs.foreach { case (k, v) => c.set(k, v) }
     try body
     finally saved.foreach {
@@ -50,26 +54,34 @@ object Confs {
   }
 }
 
-/** Per-round lineage truncation for the iterative operators (HashMin /
-  * star-contraction components, PageRank sweeps, BPE training, the
-  * foreachBatch accumulators). Default: eager `localCheckpoint` — zero
-  * external storage, but the blocks live on executors, so an executor
-  * loss mid-loop kills the job. On a real cluster set
-  * `spark.graft.reliableCheckpoint=true` (plus
-  * `sparkContext.setCheckpointDir` to durable storage) and every round
-  * writes a reliable `checkpoint()` instead — the executor-loss-tolerant
-  * variant BASELINE.md names; rounds survive lost executors at the cost
-  * of one distributed write per round. One knob, read per call, so a
+/** The one way an operator reuses a frame: every frame consumed more
+  * than once (a fan-out into two aggregates, both sides of a self-join,
+  * a loop round of HashMin / star contraction / PageRank / BPE / Lloyd,
+  * the foreachBatch accumulators) is materialized here, never in the
+  * session's cache. An eager checkpoint truncates the lineage: once its job
+  * ends, no physical plan, broadcast relation or hash-map page of the
+  * input stays reachable, the rows live in block-manager blocks the
+  * ContextCleaner frees when the frame is dropped, and nothing lands in
+  * the session's CacheManager, so one entry cannot change what another
+  * entry's plan reads.
+  *
+  * Default: eager `localCheckpoint` — zero external storage, but the
+  * blocks live on executors, so an executor loss mid-query kills the
+  * job. On a real cluster set `spark.graft.reliableCheckpoint=true`
+  * (plus `sparkContext.setCheckpointDir` to durable storage) and every
+  * reuse point writes a reliable `checkpoint()` instead — the
+  * executor-loss-tolerant variant BASELINE.md names, at the cost of one
+  * distributed write per reuse point. One knob, read per call, so a
   * session can flip it without rebuilding frames (CheckpointModeSpec
   * runs d34 both ways). */
 object Ckpt {
   val Key = "spark.graft.reliableCheckpoint"
-  def apply(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get(Key, "false").toBoolean) df.checkpoint(true)
-    else df.localCheckpoint(true)
-  /** Postfix form for loop bodies: `frame.ckptRound` (import Ckpt.Rounds). */
-  implicit class Rounds(private val df: DataFrame) extends AnyVal {
-    def ckptRound: DataFrame = Ckpt(df)
+  def apply[T](ds: Dataset[T]): Dataset[T] =
+    if (ds.sparkSession.conf.get(Key, "false").toBoolean) ds.checkpoint(true)
+    else ds.localCheckpoint(true)
+  /** Postfix form: `frame.ckpt` (import Ckpt.Reuse). */
+  implicit class Reuse[T](private val ds: Dataset[T]) extends AnyVal {
+    def ckpt: Dataset[T] = Ckpt(ds)
   }
 }
 
@@ -112,26 +124,30 @@ object T {
     * TIMESTAMP(NANOS) in some rounds and `timestamp[us]` in others, so the
     * loader normalizes BY SCHEMA instead of assuming a layout:
     *
-    *  - TIMESTAMP(NANOS): Spark 4 rejects it by default; `nanosAsLong`
-    *    surfaces it as epoch-nano LongType directly (lossless — Spark's
-    *    TimestampType is µs, so a typed read would truncate anyway).
-    *  - timestamp[us] (tz-naive → TIMESTAMP_NTZ, or UTC-adjusted →
-    *    TIMESTAMP): projected to `unix_micros(ts) * 1000`. For the naive
-    *    case the session zone is pinned UTC first, so NTZ→LTZ is
-    *    naive-as-UTC — the same reading DuckDB's `epoch_ns` gives the
-    *    oracle. Every engine entry point (Bench/Verify/SkewBench/specs)
-    *    already pins UTC; the set here makes the loader self-sufficient.
+    *  - TIMESTAMP(NANOS): Spark 4 rejects it by default; the session's
+    *    `spark.sql.legacy.parquet.nanosAsLong` (set in `Harness.session`:
+    *    Spark reads it when it plans the scan, so a scoped set here would
+    *    not hold) surfaces it as epoch-nano LongType directly (lossless —
+    *    Spark's TimestampType is µs, so a typed read would truncate anyway).
+    *  - timestamp[us], UTC-adjusted (TIMESTAMP): `unix_micros(ts) * 1000`.
+    *  - timestamp[us], tz-naive (TIMESTAMP_NTZ): `unix_micros` of the
+    *    value cast to TIMESTAMP in zone UTC, a zone the cast carries
+    *    itself, so the session zone never enters: naive-as-UTC, the same
+    *    reading DuckDB's `epoch_ns` gives the oracle, in long arithmetic.
+    *    (A SQL-text cast takes the session zone, and so does
+    *    `timestampdiff`, which casts its NTZ arguments to TIMESTAMP.)
     *  - integral (e.g. engine-written copies of events): passed through.
+    *
+    * Reading a table writes no session conf.
     */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$dir/$name.parquet")
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(TimestampType) =>
         df.withColumn("ts", expr("unix_micros(ts) * 1000L"))
       case Some(TimestampNTZType) =>
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df.withColumn("ts", expr("unix_micros(cast(ts as timestamp_ltz)) * 1000L"))
+        df.withColumn("ts", GraftBridge.column(UnixMicros(
+          Cast(GraftBridge.expression(col("ts")), TimestampType, Some("UTC")))) * 1000L)
       case _ => df
     }
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.proto._
 import graft.conv.GraftConfig
-import graft.operators.Ckpt.Rounds
+import graft.operators.Ckpt.Reuse
 
 /** Structured Streaming surface (SURVEY.md §2 Part B, streaming row): the
   * reference's production use case is micro-batch proto ingestion off
@@ -549,10 +549,8 @@ object StreamOps {
       val (verdicts, bsets, bbands) =
         graft.operators.Dedup.incrementalAdmit(batch, sets, bands, hotDf)
       sink(verdicts)
-      sets = sets.unionByName(bsets).ckptRound
-      bands = bands.unionByName(bbands).ckptRound
-      bsets.unpersist()
-      bbands.unpersist()
+      sets = sets.unionByName(bsets).ckpt
+      bands = bands.unionByName(bbands).ckpt
       lastBatchId = batchId
     }
   }
@@ -775,7 +773,7 @@ object StreamOps {
         .map(e => spark.read.parquet(s"$root/cells/e=$e"))
         .getOrElse(initialCells)
       val cells = graft.operators.Pipeline.mergeCellState(prevCells, batch)
-        .ckptRound
+        .ckpt
       // per-epoch idempotent overwrites, each with its own _SUCCESS;
       // the MANIFEST write commits the epoch, so it goes LAST
       cells.write.mode("overwrite").parquet(s"$root/cells/e=$batchId")
@@ -783,8 +781,6 @@ object StreamOps {
       bbands.write.mode("overwrite").parquet(s"$root/bands/e=$batchId")
       graft.operators.Pipeline.manifestRows(batch, verdicts, cells)
         .write.mode("overwrite").parquet(s"$manifestPath/epoch=$batchId")
-      bsets.unpersist()
-      bbands.unpersist()
       // prune superseded cell snapshots only after this epoch committed
       Ledger.pruneBelow(spark, s"$root/cells", "e=", batchId)
     }
@@ -831,7 +827,7 @@ object StreamOps {
         .getOrElse(initialDf)
       val merged = prevDf.unionByName(graft.operators.Dedup.lineDf(lines))
         .groupBy("h").agg(org.apache.spark.sql.functions.sum(col("df")).as("df"))
-        .ckptRound
+        .ckpt
       merged.write.mode("overwrite").parquet(s"$root/df/e=$batchId")
       val boiler = merged
         .filter(col("df") > graft.operators.Dedup.LineDfMax).select("h")
@@ -873,10 +869,10 @@ object StreamOps {
       if (batchId <= lastBatchId) return // re-delivered epoch: already merged
       val bc = graft.operators.TextOps.cmsCells(batch, d, wBuckets)
       cells =
-        if (cells == null) bc.ckptRound
+        if (cells == null) bc.ckpt
         else cells.unionByName(bc).groupBy("d", "b")
           .agg(org.apache.spark.sql.functions.sum(col("c")).as("c"))
-          .ckptRound
+          .ckpt
       lastBatchId = batchId
     }
   }

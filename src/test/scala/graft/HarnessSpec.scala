@@ -10,9 +10,20 @@ class HarnessSpec extends SparkSpec {
 
   test("baseline reads every entry of the pretty-printed bench record") {
     val b = Harness.baseline("records/bench_baseline.json")
-    assert(b.size === 233)
-    assert(b("q09_customers_without_big_orders") > 0)
-    assert(Harness.baseline("records/no_such_file.json").isEmpty)
+    assert(b.secs.size === 233)
+    assert(b.secs("q09_customers_without_big_orders") > 0)
+    assert(b.sf.endsWith("/sf0.1"))
+    assert(Harness.baseline("records/no_such_file.json").secs.isEmpty)
+  }
+
+  test("regressions: flagged only when the run reads the baseline's sf dir") {
+    val b = Harness.Baseline("/data/sf0.1", Map("q01" -> 0.3, "q02" -> 1.0))
+    val results = Seq("q01" -> 1.1, "q02" -> 1.5, "q03" -> 9.0)
+    assert(b.regressions("/data/sf0.1", results) === Seq("q01" -> "1.1000 vs baseline 0.3000"))
+    assert(b.regressions("/data/sf0.01", results).isEmpty,
+      "a time at another scale factor says nothing about the baseline's")
+    assert(Harness.baseline("records/no_such_file.json")
+      .regressions(Harness.sfDir, results).isEmpty)
   }
 
   test("regression rule: 2x above the 0.5 s floor, 2.0 s for pa_* points") {
@@ -33,7 +44,8 @@ class HarnessSpec extends SparkSpec {
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false",
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4000000"
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4000000",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true"
     ).foreach { case (k, v) => assert(conf.get(k) === v, k) }
     assert(org.apache.logging.log4j.LogManager.getRootLogger.getLevel.name === "WARN")
   }
@@ -77,6 +89,18 @@ class HarnessSpec extends SparkSpec {
     assert(entrySawEmpty === Seq(true, true))
     assert(pointSawEmpty === Seq(false, false))
     cachedInput.unpersist()
+  }
+
+  test("runner: an entry's reset releases the checkpoints earlier samples left") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val entry = Harness.entry(spark, "q81_winsorized_agg", sfDir)
+    entry.run()
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.nonEmpty, "q81's reuse point is a local checkpoint of a persisted RDD")
+    entry.reset()
+    assert((sc.getPersistentRDDs.keySet & left).isEmpty,
+      "the next sample must start with no block of the last one's checkpoints")
   }
 
   test("record line: one line of JSON, even when an error message holds a newline") {

@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.proto._
 import graft.conv.GraftConfig
@@ -112,15 +114,30 @@ class FunctionsSpec extends SparkSpec {
     assert(nativePred === sqlPred)
   }
 
+  /** The explode-join + window form of PQ encode — what the DuckDB
+    * oracle runs in SQL; the reference the codegen'd [[CodebookArgmin]]
+    * path is pinned bit-equal to. */
+  private def pqCodesJoinForm(subs: DataFrame, cb: DataFrame): DataFrame = {
+    val wAsg = Window.partitionBy(col("vec_id"), col("s"))
+      .orderBy(col("dist"), col("c"))
+    subs.join(broadcast(cb), "s")
+      .withColumn("dist", expr(
+        "aggregate(zip_with(sub, cw, (x, y) -> (x - y) * (x - y)), " +
+          "cast(0 as bigint), (a, t) -> a + t)"))
+      .withColumn("rnk", row_number().over(wAsg))
+      .filter(col("rnk") === 1)
+      .select(col("vec_id").as("n_id"), col("s"), col("c"))
+  }
+
   test("codebook_argmin codes are bit-equal to the explode-join + window form") {
     import graft.operators.Similarity
     val qz = Similarity.pqQuantized(spark, "/root/testdata/sf0.001")
     val subs = Similarity.pqSubs(qz).cache()
     val cb = Similarity.pqCodebookFrame(subs)
     val books = Similarity.pqBooks(cb)
-    def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
+    def toMap(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val joinForm = toMap(Similarity.pqCodesJoinForm(subs, cb))
+    val joinForm = toMap(pqCodesJoinForm(subs, cb))
     val exprForm = toMap(subs
       .withColumn("c", CodebookArgmin(col("sub"), col("s"), books))
       .select(col("vec_id").as("n_id"), col("s"), col("c")))

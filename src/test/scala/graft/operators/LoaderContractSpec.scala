@@ -79,5 +79,12 @@ class LoaderContractSpec extends SparkSpec {
     val b = fromLong.orderBy("ts").as[Long].collect().toSeq
     assert(a == b, s"µs-typed read $a != long-typed read $b")
     assert(a == nanos.sorted)
+
+    // the naive read is zone-free: Asia/Singapore was UTC+7:30 in 1970 and
+    // is UTC+8 now, so a conversion through the session zone reads 30 min off
+    val inZone = Confs.withConfs(spark, Seq("spark.sql.session.timeZone" -> "Asia/Singapore")) {
+      T(spark, usDir, "events").orderBy("ts").as[Long].collect().toSeq
+    }
+    assert(inZone == nanos.sorted, s"µs-typed read under Asia/Singapore: $inZone")
   }
 }

@@ -1,16 +1,18 @@
 package graft.operators
 
 import org.apache.spark.sql.execution.FormattedMode
-import graft.{SparkEntry, SparkSpec}
+import graft.{Harness, SparkEntry, SparkSpec}
 
 /** Plan-regression gates: the scale-critical plan properties claimed in
   * README/PLANS.md are asserted, so a refactor that silently loses
   * pushdown, pruning, or broadcast fails CI — not a code review. */
 class PlanSpec extends SparkSpec {
 
+  // the returned frame's plan, after the plan of every execution its
+  // construction ran (a Ckpt reuse point's checkpoint job, a collect):
+  // the frame's own plan stops at its checkpoints' LogicalRDDs
   private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sfDir).queryExecution
-      .explainString(FormattedMode)
+    Harness.explainEntry(spark, name, sfDir, FormattedMode)
 
   test("q01: filter pushed into the parquet scan, columns pruned") {
     val p = plan("q01_pricing_summary")
@@ -38,10 +40,11 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("ReadSchema: struct<l_orderkey:bigint,l_linenumber:int,l_quantity:double,l_returnflag:string"))
   }
 
-  // the cap gates read the analyzed logical plan: intermediate stages are
-  // cached, so the physical plan may show only an InMemoryTableScan
+  // the analyzed logical plan of every execution the entry runs
+  // (Harness.entryPlans): a stage before a Ckpt reuse point is only in
+  // its checkpoint job's plan
   private def analyzed(name: String): String =
-    SparkEntry.queries(name)(spark, sfDir).queryExecution.analyzed.toString
+    Harness.entryPlans(spark, name, sfDir).map(_._2.analyzed.toString).mkString("\n")
 
   test("d27: hot-shingle DF cap is planned (anti-join against the hot set)") {
     val p = analyzed("d27_ngram_jaccard")

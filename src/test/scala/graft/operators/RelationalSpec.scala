@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.SparkSpec
-import graft.SparkEntry
+import graft.{Harness, SparkEntry, SparkSpec}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** Smoke + shape checks for the Part-B relational surface. Value-level
   * correctness is enforced by the DuckDB oracle (tools/check.py locally,
@@ -158,29 +159,26 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
-  test("q81 and q83 share one cached cents histogram until clearCache") {
-    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
-    val aqe = new AdaptiveSparkPlanHelper {}
-    // every cached relation a plan reads, including those read inside
-    // other cached frames' plans (q83 caches frames built over the cells)
-    def cached(rs: Seq[InMemoryRelation]): Seq[InMemoryRelation] =
-      if (rs.isEmpty) rs else rs ++ cached(rs.flatMap(r => aqe.collect(r.cacheBuilder.cachedPlan) {
-        case s: InMemoryTableScanExec => s.relation }))
-    def hist(p: LogicalPlan) = cached(p.collect { case r: InMemoryRelation => r })
-      .filter(_.output.map(_.name) == Seq("flag", "c", "cnt"))
+  test("q81 then q83 leave the CacheManager empty; q83 scans lineitem once") {
+    // each robust-statistics entry makes its own single lineitem pass and
+    // checkpoints the cells: no entry shares cached state with another
     val cm = spark.sharedState.cacheManager
     cm.clearCache()
     Relational2.q81WinsorizedAgg.fn(spark, sfDir).collect()
-    val q83 = Relational2.q83MadOutliers.fn(spark, sfDir)
-    val shared = hist(q83.queryExecution.optimizedPlan)
-    assert(shared.nonEmpty, "q83 does not read the cached histogram")
-    assert(shared.forall(_.cacheBuilder.isCachedColumnBuffersLoaded),
-      "q83 would rescan lineitem: the histogram q81 built is not the one it reads")
-    cm.clearCache()
-    val fresh = spark.sessionState.executePlan(q83.queryExecution.logical).optimizedPlan
-    assert(hist(fresh).isEmpty, "clearCache left the histogram cached")
+    assert(cm.isEmpty, "q81 left a cached frame behind")
+    val plans = Harness.entryPlans(spark, "q83_mad_outliers", sfDir)
+    assert(cm.isEmpty, "q83 left a cached frame behind")
+    assert(plans.count(_._1 == "localCheckpoint") === 3,
+      "q83 checkpoints the cells, the price-axis cum and the deviation cum")
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val scans = plans.flatMap { case (_, qe) =>
+      aqe.collectWithSubqueries(qe.executedPlan) {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.getName == "lineitem.parquet") => s
+      }
+    }
+    assert(scans.size === 1,
+      "q83's median, MAD and outlier counts all derive from one lineitem pass")
   }
 
   test("entry returns rows at sf0.001") {
