@@ -304,7 +304,7 @@ object SkewBench {
     // s42 is one partial-aggregated pass into |labels| rows; the 10k-dup
     // vector only raises one label's count
     "s42_vector_audit",
-    // x110 is two |sources|-row profiles off one cached scan — the
+    // x110 is two |sources|-row profiles off one checkpointed scan — the
     // 10k-dup doc source only moves that source's sums
     "x110_profile_drift",
     // q87's hot l_orderkey pile never keys the window: the aggregate is

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -39,23 +40,10 @@ object AsOf {
       .orderBy("user_id", "event_id")
   }
 
-  /** Two-table as-of join: each order matched to the customer's latest
-    * event at-or-before the order date. Events are pre-aggregated to one
-    * per (user, second) so the match is deterministic; the oracle uses
-    * DuckDB's native ASOF LEFT JOIN while Spark runs the union+window
-    * algorithm — independent implementations, identical results. */
-  val q56AsofJoin = Q(
-    "q56_asof_join",
-    """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS tsec,
-                        MAX(event_id) AS event_id
-                 FROM events GROUP BY 1, 2),
-        o AS (SELECT o_orderkey, o_custkey,
-                     epoch_ns(o_orderdate) // 1000000000 AS osec
-              FROM orders)
-        SELECT o.o_orderkey, o.o_custkey, e.event_id AS asof_event
-        FROM o ASOF LEFT JOIN e
-          ON o.o_custkey = e.user_id AND o.osec >= e.tsec
-        ORDER BY o_orderkey""") { (spark, dir) =>
+  /** The union every two-table as-of join here runs over: events
+    * pre-aggregated to one per (user, second) as tag-0 rows (k, t,
+    * event_id), orders as tag-1 rows (k, t, o_orderkey). */
+  private def asofInputs(spark: SparkSession, dir: String): DataFrame = {
     val e = T(spark, dir, "events")
       .selectExpr("user_id as k", "ts div 1000000000 as t", "event_id")
       .groupBy("k", "t").agg(max(col("event_id")).as("event_id"))
@@ -66,11 +54,38 @@ object AsOf {
         "o_orderkey")
       .select(col("k"), col("t"), lit(1).as("tag"),
         lit(null).cast("long").as("event_id"), col("o_orderkey"))
-    // events sort before orders at the same second (tag 0 < 1), so
-    // "at-or-before" includes same-second events
-    val w = Window.partitionBy(col("k")).orderBy(col("t"), col("tag"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     e.unionByName(o)
+  }
+
+  /** Per-key order of [[asofInputs]]: events sort before orders at the
+    * same second (tag 0 < 1), so "at-or-before" includes same-second
+    * events. */
+  private val byKey = Window.partitionBy(col("k")).orderBy(col("t"), col("tag"))
+
+  /** DuckDB dialect of [[asofInputs]]: `e` (user_id, tsec, event_id) and
+    * `o` (o_orderkey, o_custkey, osec). */
+  private val duckAsofInputs =
+    """e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS tsec,
+                        MAX(event_id) AS event_id
+                 FROM events GROUP BY 1, 2),
+        o AS (SELECT o_orderkey, o_custkey,
+                     epoch_ns(o_orderdate) // 1000000000 AS osec
+              FROM orders)"""
+
+  /** Two-table as-of join: each order matched to the customer's latest
+    * event at-or-before the order date. Events are pre-aggregated to one
+    * per (user, second) so the match is deterministic; the oracle uses
+    * DuckDB's native ASOF LEFT JOIN while Spark runs the union+window
+    * algorithm — independent implementations, identical results. */
+  val q56AsofJoin = Q(
+    "q56_asof_join",
+    s"""WITH $duckAsofInputs
+        SELECT o.o_orderkey, o.o_custkey, e.event_id AS asof_event
+        FROM o ASOF LEFT JOIN e
+          ON o.o_custkey = e.user_id AND o.osec >= e.tsec
+        ORDER BY o_orderkey""") { (spark, dir) =>
+    val w = byKey.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    asofInputs(spark, dir)
       .withColumn("asof_event", last(col("event_id"), ignoreNulls = true).over(w))
       .filter(col("tag") === 1)
       .select(col("o_orderkey"), col("k").as("o_custkey"), col("asof_event"))
@@ -94,31 +109,15 @@ object AsOf {
     * the left row must survive with a null feature, not vanish). */
   val q77AsofTolerance = Q(
     "q77_asof_tolerance",
-    s"""WITH e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS tsec,
-                         MAX(event_id) AS event_id
-                  FROM events GROUP BY 1, 2),
-        o AS (SELECT o_orderkey, o_custkey,
-                     epoch_ns(o_orderdate) // 1000000000 AS osec
-              FROM orders)
+    s"""WITH $duckAsofInputs
         SELECT o.o_orderkey, o.o_custkey,
                CASE WHEN e.tsec IS NOT NULL AND o.osec - e.tsec <= $TolSec
                     THEN e.event_id END AS asof_event
         FROM o ASOF LEFT JOIN e
           ON o.o_custkey = e.user_id AND o.osec >= e.tsec
         ORDER BY o_orderkey""") { (spark, dir) =>
-    val e = T(spark, dir, "events")
-      .selectExpr("user_id as k", "ts div 1000000000 as t", "event_id")
-      .groupBy("k", "t").agg(max(col("event_id")).as("event_id"))
-      .select(col("k"), col("t"), lit(0).as("tag"), col("event_id"),
-        lit(null).cast("long").as("o_orderkey"))
-    val o = T(spark, dir, "orders")
-      .selectExpr("o_custkey as k", "unix_timestamp(o_orderdate) as t",
-        "o_orderkey")
-      .select(col("k"), col("t"), lit(1).as("tag"),
-        lit(null).cast("long").as("event_id"), col("o_orderkey"))
-    val w = Window.partitionBy(col("k")).orderBy(col("t"), col("tag"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    e.unionByName(o)
+    val w = byKey.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    asofInputs(spark, dir)
       .withColumn("asof_event0", last(col("event_id"), ignoreNulls = true).over(w))
       .withColumn("asof_t",
         last(when(col("tag") === 0, col("t")), ignoreNulls = true).over(w))
@@ -149,12 +148,7 @@ object AsOf {
     * (users with no events keep the order row with a NULL match). */
   val q82AsofNearest = Q(
     "q82_asof_nearest",
-    """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS tsec,
-                        MAX(event_id) AS event_id
-                 FROM events GROUP BY 1, 2),
-        o AS (SELECT o_orderkey, o_custkey,
-                     epoch_ns(o_orderdate) // 1000000000 AS osec
-              FROM orders),
+    s"""WITH $duckAsofInputs,
         b AS (SELECT o.o_orderkey, o.o_custkey, o.osec,
                      e.event_id AS bid, e.tsec AS bt
               FROM o ASOF LEFT JOIN e
@@ -167,20 +161,9 @@ object AsOf {
                     THEN bid ELSE fid END AS nearest_event
         FROM b JOIN f ON b.o_orderkey = f.o_orderkey
         ORDER BY b.o_orderkey""") { (spark, dir) =>
-    val e = T(spark, dir, "events")
-      .selectExpr("user_id as k", "ts div 1000000000 as t", "event_id")
-      .groupBy("k", "t").agg(max(col("event_id")).as("event_id"))
-      .select(col("k"), col("t"), lit(0).as("tag"), col("event_id"),
-        lit(null).cast("long").as("o_orderkey"))
-    val o = T(spark, dir, "orders")
-      .selectExpr("o_custkey as k", "unix_timestamp(o_orderdate) as t",
-        "o_orderkey")
-      .select(col("k"), col("t"), lit(1).as("tag"),
-        lit(null).cast("long").as("event_id"), col("o_orderkey"))
-    val byKey = Window.partitionBy(col("k")).orderBy(col("t"), col("tag"))
     val back = byKey.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val fwd = byKey.rowsBetween(1, Window.unboundedFollowing)
-    e.unionByName(o)
+    asofInputs(spark, dir)
       .withColumn("bid", last(col("event_id"), ignoreNulls = true).over(back))
       .withColumn("bt",
         last(when(col("tag") === 0, col("t")), ignoreNulls = true).over(back))

@@ -263,19 +263,31 @@ object Dedup {
       .join(sz.select(col("doc_id").as("b_id"), col("n_sh").as("n_b")), "b_id")
   }
 
-  val d27NgramJaccard = Q(
-    "d27_ngram_jaccard",
-    s"""WITH $duckShingles,
+  /** DuckDB dialect of [[pairCounts]]: every co-occurring pair's
+    * `pairs` (a_id, b_id, n_common) over the capped index, and the
+    * per-doc set sizes `sz` (doc_id, n_sh). */
+  private val duckPairCounts =
+    s"""$duckShingles,
         $duckCappedSets,
         pairs AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_common
                   FROM ex2 a JOIN ex2 b ON a.h = b.h AND a.doc_id < b.doc_id
                   GROUP BY 1, 2),
-        sz AS (SELECT doc_id, COUNT(*) AS n_sh FROM ex2 GROUP BY doc_id)
-        SELECT a_id, b_id, n_common, sa.n_sh AS n_a, sb.n_sh AS n_b,
+        sz AS (SELECT doc_id, COUNT(*) AS n_sh FROM ex2 GROUP BY doc_id)"""
+
+  /** The exact-Jaccard output of a `pairs` (a_id, b_id, n_common) and
+    * `sz` (doc_id, n_sh) CTE pair: the verified rows at ≥ 0.5 in (a_id,
+    * b_id) order — d27's and d46's answer, one text. */
+  private val duckJaccardRows =
+    s"""SELECT a_id, b_id, n_common, sa.n_sh AS n_a, sb.n_sh AS n_b,
                CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) AS jaccard
         FROM pairs JOIN sz sa ON a_id = sa.doc_id JOIN sz sb ON b_id = sb.doc_id
         WHERE CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) >= 0.5
-        ORDER BY a_id, b_id""") { (spark, dir) =>
+        ORDER BY a_id, b_id"""
+
+  val d27NgramJaccard = Q(
+    "d27_ngram_jaccard",
+    s"""WITH $duckPairCounts
+        $duckJaccardRows""") { (spark, dir) =>
     pairCounts(spark, dir)
       .withColumn("jaccard",
         col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
@@ -296,12 +308,7 @@ object Dedup {
     * (d26 owns those; SkewBench covers this via d27's line). */
   val d40Containment = Q(
     "d40_containment",
-    s"""WITH $duckShingles,
-        $duckCappedSets,
-        pairs AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, COUNT(*) AS n_common
-                  FROM ex2 a JOIN ex2 b ON a.h = b.h AND a.doc_id < b.doc_id
-                  GROUP BY 1, 2),
-        sz AS (SELECT doc_id, COUNT(*) AS n_sh FROM ex2 GROUP BY doc_id)
+    s"""WITH $duckPairCounts
         SELECT a_id, b_id, n_common, sa.n_sh AS n_a, sb.n_sh AS n_b,
                CAST(n_common AS DOUBLE) / LEAST(sa.n_sh, sb.n_sh) AS containment
         FROM pairs JOIN sz sa ON a_id = sa.doc_id JOIN sz sb ON b_id = sb.doc_id
@@ -327,40 +334,103 @@ object Dedup {
     s"list_transform(range(0, 12), k -> list_min(list_transform(th, " +
       s"h -> ((2*k + 1) * h + (k*k + 1)) % $P)))"
 
-  /** MinHash-LSH near-dup: hot-shingle cap ([[MaxShingleDf]]) → signatures
-    * → band buckets → candidate pairs → exact-Jaccard verification at
-    * ≥ 0.5. Only bucket-colliding pairs are verified — the candidate join
-    * is on (band, band_key) — and the capped shingle sets feed both the
-    * signatures and the verification, identically in both dialects. */
-  /** The LSH candidate/verify CTE chain shared by d28 and d34 (band
-    * buckets → distinct candidates → exact-Jaccard verification inputs);
-    * one text so the two oracles cannot drift. */
-  private[operators] def duckLshPairCtes: String =
+  /** The LSH candidate chain over capped sets `sh2` (doc_id, th):
+    * signatures `sig`, 4 band buckets `band` and the distinct
+    * bucket-colliding pairs `cand` (a_id < b_id) — [[lshVerifiedPairs]]'
+    * band layout in DuckDB dialect, shared with the x90 oracle. */
+  private[operators] val duckLshCandidates =
     s"""sig AS (SELECT doc_id, $sigDuck AS m FROM sh2),
         band AS (SELECT doc_id, b,
                  m[b*3+1]::VARCHAR || ',' || m[b*3+2]::VARCHAR || ',' || m[b*3+3]::VARCHAR AS bkey
                  FROM sig, range(0, 4) r(b)),
         cand AS (SELECT DISTINCT a.doc_id AS a_id, c.doc_id AS b_id
                  FROM band a JOIN band c ON a.b = c.b AND a.bkey = c.bkey
-                                        AND a.doc_id < c.doc_id),
+                                        AND a.doc_id < c.doc_id)"""
+
+  /** MinHash-LSH near-dup: hot-shingle cap ([[MaxShingleDf]]) → signatures
+    * → band buckets → candidate pairs → exact-Jaccard verification at
+    * ≥ 0.5. Only bucket-colliding pairs are verified — the candidate join
+    * is on (band, band_key) — and the capped shingle sets feed both the
+    * signatures and the verification, identically in both dialects.
+    *
+    * DuckDB dialect of [[nearDupSets]] → [[lshVerifiedPairs]] up to the
+    * verification inputs `v` (a_id, b_id, n_common, n_a, n_b): documents
+    * → capped sets → band buckets → distinct candidates. */
+  private[operators] val duckLshPairCtes: String =
+    s"""$duckShingles,
+        $duckCappedSets,
+        $duckLshCandidates,
         v AS (SELECT a_id, b_id,
                      CAST(len(list_intersect(sa.th, sb.th)) AS BIGINT) AS n_common,
                      CAST(len(sa.th) AS BIGINT) AS n_a, CAST(len(sb.th) AS BIGINT) AS n_b
               FROM cand JOIN sh2 sa ON a_id = sa.doc_id JOIN sh2 sb ON b_id = sb.doc_id)"""
 
+  /** The near-dup pair graph in DuckDB dialect, [[nearDupPairs]]'s twin:
+    * [[duckLshPairCtes]] plus the verified `pairs` (a_id, b_id) CTE at
+    * Jaccard ≥ 0.5 — what every oracle that clusters, splits or mines
+    * near-duplicates starts from. */
+  private[operators] val duckNearDupPairs: String =
+    s"""$duckLshPairCtes,
+        pairs AS (SELECT a_id, b_id FROM v
+                  WHERE CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) >= 0.5)"""
+
+  /** The recursive transitive closure over the undirected pair CTE named
+    * by `pairs` (a_id, b_id), ending in `comp` (doc_id, component = the
+    * minimum id reachable): the oracle twin of [[connectedComponents]]
+    * and [[connectedComponentsStar]], one text for the text and media
+    * tiers. Needs `WITH RECURSIVE`. */
+  private[operators] def duckComponents(pairs: String): String =
+    s"""edges AS (SELECT a_id AS u, b_id AS w FROM $pairs
+                  UNION ALL SELECT b_id, a_id FROM $pairs),
+        nodes AS (SELECT DISTINCT u FROM edges),
+        reach(u, r) AS (
+          SELECT u, u FROM nodes
+          UNION
+          SELECT e.u, reach.r FROM edges e JOIN reach ON reach.u = e.w),
+        comp AS (SELECT u AS doc_id, MIN(r) AS component FROM reach GROUP BY u)"""
+
+  /** The component table `sz` (component, n_members) over [[duckComponents]]'
+    * `comp`: a component's size. */
+  private[operators] val duckComponentSizes =
+    """sz AS (SELECT component, CAST(COUNT(*) AS BIGINT) AS n_members
+               FROM comp GROUP BY component)"""
+
+  /** [[labelsToComponents]]' oracle twin: [[duckComponentSizes]] plus the
+    * (doc_id, component, n_members, is_keeper) rows in doc_id order. */
+  private[operators] val duckComponentRows =
+    s"""$duckComponentSizes
+        SELECT c.doc_id, c.component, s.n_members,
+               c.doc_id = c.component AS is_keeper
+        FROM comp c JOIN sz s ON c.component = s.component
+        ORDER BY c.doc_id"""
+
+  /** Capped per-doc shingle sets (doc_id, th) of a (doc_id, text) frame:
+    * [[shingleHashesFrom]] and [[cappedShingleSets]], each materialized
+    * once (the hashes feed both the df count and the cap, the sets both
+    * the signatures and the verification). */
+  private[operators] def nearDupSets(docs: DataFrame): DataFrame =
+    cappedShingleSets(shingleHashesFrom(docs).ckpt).ckpt
+
+  /** The documents table's verified near-dup pairs ([[lshVerifiedPairs]]
+    * over [[nearDupSets]]): "near-dup" means capped MinHash-LSH candidates
+    * with exact Jaccard ≥ 0.5, and every entry that needs the pair graph
+    * takes it from here. */
+  private[operators] def nearDupPairs(spark: SparkSession, dir: String): DataFrame =
+    lshVerifiedPairs(nearDupSets(T(spark, dir, "documents")))
+
+  /** HashMin components ([[connectedComponents]]) of [[nearDupPairs]]:
+    * (doc_id, component, n_members, is_keeper) for every paired doc. */
+  private[operators] def nearDupComponents(spark: SparkSession, dir: String): DataFrame =
+    connectedComponents(nearDupPairs(spark, dir).select("a_id", "b_id"))
+
   val d28MinhashLsh = Q(
     "d28_minhash_lsh",
-    s"""WITH $duckShingles,
-        $duckCappedSets,
-        $duckLshPairCtes
+    s"""WITH $duckLshPairCtes
         SELECT a_id, b_id, n_common, n_a, n_b,
                CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) AS jaccard
         FROM v WHERE CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) >= 0.5
         ORDER BY a_id, b_id""") { (spark, dir) =>
-    // capped per-doc sets (hs0 feeds both the df count and the cap)
-    val hs0 = shingleHashes(spark, dir).ckpt
-    val sh = cappedShingleSets(hs0).ckpt
-    lshVerifiedPairs(sh)
+    nearDupPairs(spark, dir)
       .select("a_id", "b_id", "n_common", "n_a", "n_b", "jaccard")
       .orderBy("a_id", "b_id")
   }
@@ -377,9 +447,7 @@ object Dedup {
     * arrays. */
   val d41MinhashCalibration = Q(
     "d41_minhash_calibration",
-    s"""WITH $duckShingles,
-        $duckCappedSets,
-        $duckLshPairCtes
+    s"""WITH $duckLshPairCtes
         SELECT a_id, b_id,
                CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) AS jaccard,
                CAST(len(list_filter(range(1, 13),
@@ -391,8 +459,7 @@ object Dedup {
         FROM v JOIN sig ga ON a_id = ga.doc_id JOIN sig gb ON b_id = gb.doc_id
         WHERE CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) >= 0.5
         ORDER BY a_id, b_id""") { (spark, dir) =>
-    val hs0 = shingleHashes(spark, dir).ckpt
-    val sh = cappedShingleSets(hs0).ckpt
+    val sh = nearDupSets(T(spark, dir, "documents"))
     val sig = sh.withColumn("m", expr(sigSpark))
     lshVerifiedPairs(sh)
       .join(sig.select(col("doc_id").as("a_id"), col("m").as("ma")), "a_id")
@@ -430,29 +497,10 @@ object Dedup {
     * O(log n)-round on a 1024-node chain HashMin cannot finish. */
   val d34DedupComponents = Q(
     "d34_dedup_components",
-    s"""WITH RECURSIVE $duckShingles,
-        $duckCappedSets,
-        $duckLshPairCtes,
-        pairs AS (SELECT a_id, b_id FROM v
-                  WHERE CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) >= 0.5),
-        edges AS (SELECT a_id AS u, b_id AS w FROM pairs
-                  UNION ALL SELECT b_id, a_id FROM pairs),
-        nodes AS (SELECT DISTINCT u FROM edges),
-        reach(u, r) AS (
-          SELECT u, u FROM nodes
-          UNION
-          SELECT e.u, reach.r FROM edges e JOIN reach ON reach.u = e.w),
-        comp AS (SELECT u AS doc_id, MIN(r) AS component FROM reach GROUP BY u),
-        sz AS (SELECT component, CAST(COUNT(*) AS BIGINT) AS n_members
-               FROM comp GROUP BY component)
-        SELECT c.doc_id, c.component, s.n_members,
-               c.doc_id = c.component AS is_keeper
-        FROM comp c JOIN sz s ON c.component = s.component
-        ORDER BY c.doc_id""") { (spark, dir) =>
-    val hs0 = shingleHashes(spark, dir).ckpt
-    val sh = cappedShingleSets(hs0).ckpt
-    connectedComponents(lshVerifiedPairs(sh).select("a_id", "b_id"))
-      .orderBy("doc_id")
+    s"""WITH RECURSIVE $duckNearDupPairs,
+        ${duckComponents("pairs")},
+        $duckComponentRows""") { (spark, dir) =>
+    nearDupComponents(spark, dir).orderBy("doc_id")
   }
 
   /** HashMin connected components over an undirected pair list
@@ -629,16 +677,23 @@ object Dedup {
       .join(band.select(col("b").as("b2"), col("bkey").as("bkey2"), col("doc_id").as("b_id")),
         col("b") === col("b2") && col("bkey") === col("bkey2") && col("a_id") < col("b_id"))
       .select("a_id", "b_id").distinct()
+    verifiedPairs(cand, sh)
+  }
+
+  /** Exact-Jaccard verification of candidate pairs (a_id, b_id) against
+    * per-doc capped sets `sets` (doc_id, th): n_common, n_a, n_b and
+    * jaccard, kept at ≥ 0.5 — one formula for the LSH (d28) and the
+    * prefix-filter (d46) candidate generators. */
+  private def verifiedPairs(cand: DataFrame, sets: DataFrame): DataFrame =
     cand
-      .join(sh.select(col("doc_id").as("a_id"), col("th").as("th_a")), "a_id")
-      .join(sh.select(col("doc_id").as("b_id"), col("th").as("th_b")), "b_id")
+      .join(sets.select(col("doc_id").as("a_id"), col("th").as("th_a")), "a_id")
+      .join(sets.select(col("doc_id").as("b_id"), col("th").as("th_b")), "b_id")
       .withColumn("n_common", size(array_intersect(col("th_a"), col("th_b"))).cast("long"))
       .withColumn("n_a", size(col("th_a")).cast("long"))
       .withColumn("n_b", size(col("th_b")).cast("long"))
       .withColumn("jaccard",
         col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
       .filter(col("jaccard") >= 0.5)
-  }
 
   // 32-bit SimHash: per bit, majority vote of gram-hash bits (gram
   // multiset, order-insensitive). The vote formulas are shared with the
@@ -1039,9 +1094,7 @@ object Dedup {
   val d35ComponentsStar = Q(
     "d35_components_star",
     d34DedupComponents.oracle.get) { (spark, dir) =>
-    val hs0 = shingleHashes(spark, dir).ckpt
-    val sh = cappedShingleSets(hs0).ckpt
-    connectedComponentsStar(lshVerifiedPairs(sh).select("a_id", "b_id"))
+    connectedComponentsStar(nearDupPairs(spark, dir).select("a_id", "b_id"))
       .orderBy("doc_id")
   }
 
@@ -1322,19 +1375,8 @@ object Dedup {
     * Output is one row per cluster. */
   val d39BestKeeper = Q(
     "d39_best_keeper",
-    s"""WITH RECURSIVE $duckShingles,
-        $duckCappedSets,
-        $duckLshPairCtes,
-        pairs AS (SELECT a_id, b_id FROM v
-                  WHERE CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) >= 0.5),
-        edges AS (SELECT a_id AS u, b_id AS w FROM pairs
-                  UNION ALL SELECT b_id, a_id FROM pairs),
-        nodes AS (SELECT DISTINCT u FROM edges),
-        reach(u, r) AS (
-          SELECT u, u FROM nodes
-          UNION
-          SELECT e.u, reach.r FROM edges e JOIN reach ON reach.u = e.w),
-        comp AS (SELECT u AS doc_id, MIN(r) AS component FROM reach GROUP BY u),
+    s"""WITH RECURSIVE $duckNearDupPairs,
+        ${duckComponents("pairs")},
         m AS (SELECT c.doc_id, c.component,
                      CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens
               FROM comp c JOIN documents d ON c.doc_id = d.doc_id),
@@ -1347,10 +1389,7 @@ object Dedup {
                CAST(n_members AS BIGINT) AS n_members
         FROM r WHERE rnk = 1 ORDER BY component""") { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
-    val hs0 = shingleHashes(spark, dir).ckpt
-    val sh = cappedShingleSets(hs0).ckpt
-    val comp = connectedComponents(lshVerifiedPairs(sh).select("a_id", "b_id"))
-      .select("doc_id", "component")
+    val comp = nearDupComponents(spark, dir).select("doc_id", "component")
     val toks = T(spark, dir, "documents")
       .select(col("doc_id"), expr("cast(size(split(text, ' ')) as bigint)").as("n_tokens"))
     val byComp = Window.partitionBy(col("component"))
@@ -1405,8 +1444,7 @@ object Dedup {
     val cfg = spark.sql("SELECT * FROM VALUES (2, 6), (4, 3), (8, 2) AS cfg(b, r)")
     val lv = spark.range(1, 21).selectExpr("cast(id as int) as i",
       "cast(id as double) / 20.0 as s")
-    cfg.crossJoin(lv).createOrReplaceTempView("d43_g")
-    spark.sql(
+    Views.sql(spark, "d43_g" -> cfg.crossJoin(lv))(
       s"""${d43Select.replace("q(r, s)",
            "(1.0 - (CASE r WHEN 2 THEN s * s WHEN 3 THEN (s * s) * s " +
              "ELSE ((s * s) * s) * ((s * s) * s) END))")}
@@ -1487,11 +1525,7 @@ object Dedup {
                   FROM cand c JOIN ex2 ea ON ea.doc_id = c.a_id
                               JOIN ex2 eb ON eb.doc_id = c.b_id AND eb.h = ea.h
                   GROUP BY 1, 2)
-        SELECT a_id, b_id, n_common, sa.n_sh AS n_a, sb.n_sh AS n_b,
-               CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) AS jaccard
-        FROM pairs JOIN sz sa ON a_id = sa.doc_id JOIN sz sb ON b_id = sb.doc_id
-        WHERE CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) >= 0.5
-        ORDER BY a_id, b_id""") { (spark, dir) =>
+        $duckJaccardRows""") { (spark, dir) =>
     // r12 optimization — verification via per-doc capped ARRAYS (the
     // d28/lshVerifiedPairs idiom) instead of re-joining the exploded
     // index per candidate: the old tail was cand ⋈ ex(a) ⋈ ex(b,h) →
@@ -1518,16 +1552,7 @@ object Dedup {
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
       .distinct()
-    cand
-      .join(sets.select(col("doc_id").as("a_id"), col("th").as("th_a")), "a_id")
-      .join(sets.select(col("doc_id").as("b_id"), col("th").as("th_b")), "b_id")
-      .withColumn("n_common",
-        size(array_intersect(col("th_a"), col("th_b"))).cast("long"))
-      .withColumn("n_a", size(col("th_a")).cast("long"))
-      .withColumn("n_b", size(col("th_b")).cast("long"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
-      .filter(col("jaccard") >= 0.5)
+    verifiedPairs(cand, sets)
       .select("a_id", "b_id", "n_common", "n_a", "n_b", "jaccard")
       .orderBy("a_id", "b_id")
   }
@@ -1548,19 +1573,8 @@ object Dedup {
     * endpoints, usually ≪ corpus) and a map-side ppm projection. */
   val x122DupWeights = Q(
     "x122_dup_weights",
-    s"""WITH RECURSIVE $duckShingles,
-        $duckCappedSets,
-        $duckLshPairCtes,
-        pairs AS (SELECT a_id, b_id FROM v
-                  WHERE CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) >= 0.5),
-        edges AS (SELECT a_id AS u, b_id AS w FROM pairs
-                  UNION ALL SELECT b_id, a_id FROM pairs),
-        nodes AS (SELECT DISTINCT u FROM edges),
-        reach(u, r) AS (
-          SELECT u, u FROM nodes
-          UNION
-          SELECT e.u, reach.r FROM edges e JOIN reach ON reach.u = e.w),
-        comp AS (SELECT u AS doc_id, MIN(r) AS component FROM reach GROUP BY u),
+    s"""WITH RECURSIVE $duckNearDupPairs,
+        ${duckComponents("pairs")},
         sz AS (SELECT component, COUNT(*) AS n_members FROM comp GROUP BY component)
         SELECT d.doc_id,
                CAST(COALESCE(GREATEST(1000000 // s.n_members, 1), 1000000) AS BIGINT)
@@ -1569,8 +1583,7 @@ object Dedup {
         LEFT JOIN comp c ON d.doc_id = c.doc_id
         LEFT JOIN sz s ON c.component = s.component
         ORDER BY d.doc_id""") { (spark, dir) =>
-    val sh = cappedShingleSets(shingleHashes(spark, dir).ckpt).ckpt
-    val comp = connectedComponents(lshVerifiedPairs(sh).select("a_id", "b_id"))
+    val comp = nearDupComponents(spark, dir)
     T(spark, dir, "documents").select(col("doc_id"))
       .join(comp.select(col("doc_id"), col("n_members")), Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -1598,11 +1611,7 @@ object Dedup {
     * stage touches doc×doc. */
   val x123ContrastivePairs = Q(
     "x123_contrastive_pairs",
-    s"""WITH $duckShingles,
-        $duckCappedSets,
-        $duckLshPairCtes,
-        pairs AS (SELECT a_id, b_id FROM v
-                  WHERE CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) >= 0.5),
+    s"""WITH $duckNearDupPairs,
         sym AS (SELECT a_id AS anchor_id, b_id AS cand FROM pairs
                 UNION ALL SELECT b_id, a_id FROM pairs),
         pos AS (SELECT anchor_id, cand AS pos_id FROM (
@@ -1627,8 +1636,7 @@ object Dedup {
                              OR (q.b_id = t.anchor_id AND q.a_id = t.neg_id))
         ORDER BY anchor_id""") { (spark, dir) =>
     import org.apache.spark.sql.expressions.Window
-    val sh = cappedShingleSets(shingleHashes(spark, dir).ckpt).ckpt
-    val pairs = lshVerifiedPairs(sh).select("a_id", "b_id").ckpt
+    val pairs = nearDupPairs(spark, dir).select("a_id", "b_id").ckpt
     val sym = pairs.select(col("a_id").as("anchor_id"), col("b_id").as("cand"))
       .unionAll(pairs.select(col("b_id").as("anchor_id"), col("a_id").as("cand")))
     val w = Window.partitionBy(col("anchor_id"))

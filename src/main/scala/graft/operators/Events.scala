@@ -517,21 +517,23 @@ object Events {
     // materialized rows — the windows run once, rows identical (the
     // checkpoint runs inside the timed query; the oracle statement is
     // unchanged).
-    T(spark, dir, "events").selectExpr("user_id", "event_id", "ts as tsn")
-      .createOrReplaceTempView("q92_events")
-    spark.sql(
+    val s = Views.sql(spark, "q92_events" ->
+      T(spark, dir, "events").selectExpr("user_id", "event_id", "ts as tsn"))(
       """SELECT user_id, event_id, tsn,
                 LEAD(event_id) OVER (PARTITION BY user_id ORDER BY tsn, event_id) AS nid,
                 LEAD(tsn) OVER (PARTITION BY user_id ORDER BY tsn, event_id) AS nts,
                 LAG(tsn) OVER (PARTITION BY user_id ORDER BY tsn, event_id) AS pts
          FROM q92_events""")
       .ckpt
-      .createOrReplaceTempView("q92_s")
-    spark.sql(
+    // the anchor names every column: each recursion level's rows come
+    // back as a LogicalRDD, and a duplicate name (event_id, tsn twice)
+    // makes it drop their statistics (a LogicalRDD WARN per run), so the
+    // next level's join plans against a default-size input
+    Views.sql(spark, "q92_s" -> s)(
       """WITH RECURSIVE
          s AS (SELECT * FROM q92_s),
          chain(user_id, root_id, event_id, tsn, root_tsn) AS (
-           SELECT user_id, event_id, event_id, tsn, tsn FROM s
+           SELECT user_id, event_id AS root_id, event_id, tsn, tsn AS root_tsn FROM s
            WHERE pts IS NULL OR tsn - pts > 1800000000000
            UNION ALL
            SELECT c.user_id, c.root_id, s.nid, s.nts, c.root_tsn

@@ -227,20 +227,8 @@ object Multimodal {
     "m46_media_components",
     s"""WITH RECURSIVE $duckMediaCtes,
         pairs AS (SELECT a_id, b_id FROM cand),
-        edges AS (SELECT a_id AS u, b_id AS w FROM pairs
-                  UNION ALL SELECT b_id, a_id FROM pairs),
-        nodes AS (SELECT DISTINCT u FROM edges),
-        reach(u, r) AS (
-          SELECT u, u FROM nodes
-          UNION
-          SELECT e.u, reach.r FROM edges e JOIN reach ON reach.u = e.w),
-        comp AS (SELECT u AS doc_id, MIN(r) AS component FROM reach GROUP BY u),
-        sz AS (SELECT component, CAST(COUNT(*) AS BIGINT) AS n_members
-               FROM comp GROUP BY component)
-        SELECT c.doc_id, c.component, s.n_members,
-               c.doc_id = c.component AS is_keeper
-        FROM comp c JOIN sz s ON c.component = s.component
-        ORDER BY c.doc_id""") { (spark, dir) =>
+        ${Dedup.duckComponents("pairs")},
+        ${Dedup.duckComponentRows}""") { (spark, dir) =>
     Dedup.connectedComponents(mediaPairs(spark, dir).select("a_id", "b_id"))
       .orderBy("doc_id")
   }
@@ -393,20 +381,8 @@ object Multimodal {
   val m49MediaComponentsScalable = Q(
     "m49_media_components_scalable",
     s"""WITH RECURSIVE $duckMedia56Ctes,
-        edges AS (SELECT a_id AS u, b_id AS w FROM cand
-                  UNION ALL SELECT b_id, a_id FROM cand),
-        nodes AS (SELECT DISTINCT u FROM edges),
-        reach(u, r) AS (
-          SELECT u, u FROM nodes
-          UNION
-          SELECT e.u, reach.r FROM edges e JOIN reach ON reach.u = e.w),
-        comp AS (SELECT u AS doc_id, MIN(r) AS component FROM reach GROUP BY u),
-        sz AS (SELECT component, CAST(COUNT(*) AS BIGINT) AS n_members
-               FROM comp GROUP BY component)
-        SELECT c.doc_id, c.component, s.n_members,
-               c.doc_id = c.component AS is_keeper
-        FROM comp c JOIN sz s ON c.component = s.component
-        ORDER BY c.doc_id""") { (spark, dir) =>
+        ${Dedup.duckComponents("cand")},
+        ${Dedup.duckComponentRows}""") { (spark, dir) =>
     Dedup.connectedComponents(mediaPairs56(spark, dir))
       .orderBy("doc_id")
   }
@@ -424,16 +400,8 @@ object Multimodal {
   val m50MediaBestKeeper = Q(
     "m50_media_best_keeper",
     s"""WITH RECURSIVE $duckMedia56Ctes,
-        edges AS (SELECT a_id AS u, b_id AS w FROM cand
-                  UNION ALL SELECT b_id, a_id FROM cand),
-        nodes AS (SELECT DISTINCT u FROM edges),
-        reach(u, r) AS (
-          SELECT u, u FROM nodes
-          UNION
-          SELECT e.u, reach.r FROM edges e JOIN reach ON reach.u = e.w),
-        comp AS (SELECT u AS doc_id, MIN(r) AS component FROM reach GROUP BY u),
-        sz AS (SELECT component, CAST(COUNT(*) AS BIGINT) AS n_members
-               FROM comp GROUP BY component),
+        ${Dedup.duckComponents("cand")},
+        ${Dedup.duckComponentSizes},
         mem AS (SELECT c.doc_id, c.component, s.n_members,
                        CAST(octet_length(encode(d.text)) AS BIGINT) AS n_bytes
                 FROM comp c JOIN sz s ON c.component = s.component

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import Ckpt.Reuse
 import org.apache.spark.sql.functions._
 
@@ -11,20 +11,37 @@ import org.apache.spark.sql.functions._
   * oracle-checked operators. */
 object Pipeline {
 
+  /** The split bucket of key column `key`: H(key) % 10. The split rule
+    * ([[splitOf]]) and every train/eval cut read this one hash. */
+  private[operators] def splitBucket(key: String): Column =
+    expr(s"${H.s(s"cast($key as string)")} % 10")
+
+  /** The train/val/test rule (80/10/10) over a [[splitBucket]] column:
+    * bucket < 8 train, 8 val, else test. */
+  private[operators] def splitOf(b: Column): Column =
+    when(b < 8, "train").when(b === 8, "val").otherwise("test")
+
+  /** DuckDB dialect of [[splitBucket]]. */
+  private[operators] def duckSplitBucket(key: String): String =
+    s"${H.d(s"CAST($key AS VARCHAR)")} % 10"
+
+  /** DuckDB dialect of [[splitOf]]. */
+  private[operators] def duckSplitOf(b: String): String =
+    s"CASE WHEN $b < 8 THEN 'train' WHEN $b = 8 THEN 'val' ELSE 'test' END"
+
   /** Deterministic hash-based train/val/test split (80/10/10): the split
     * must be a pure function of the stable id — never `rand()` — so it is
     * reproducible across engines, runs, and re-partitioning. */
   val t27TrainSplit = Q(
     "t27_train_split",
-    s"""WITH d AS (SELECT doc_id, lang, ${H.d("CAST(doc_id AS VARCHAR)")} % 10 AS b FROM documents)
+    s"""WITH d AS (SELECT doc_id, lang, ${duckSplitBucket("doc_id")} AS b FROM documents)
         SELECT lang,
-               CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val' ELSE 'test' END AS split,
+               ${duckSplitOf("b")} AS split,
                COUNT(*) AS n
         FROM d GROUP BY 1, 2 ORDER BY lang, split""") { (spark, dir) =>
     T(spark, dir, "documents")
-      .withColumn("b", expr(s"${H.s("cast(doc_id as string)")} % 10"))
-      .withColumn("split",
-        when(col("b") < 8, "train").when(col("b") === 8, "val").otherwise("test"))
+      .withColumn("b", splitBucket("doc_id"))
+      .withColumn("split", splitOf(col("b")))
       .groupBy("lang", "split").agg(count(lit(1)).as("n"))
       .orderBy("lang", "split")
   }
@@ -59,13 +76,7 @@ object Pipeline {
         -- minimum, unrelated docs collide in band buckets, and the candidate
         -- join goes quadratic in the bucket
         ${Dedup.duckCappedSets},
-        sig AS (SELECT doc_id, ${Dedup.sigDuck} AS m FROM sh2),
-        band AS (SELECT doc_id, b,
-                 m[b*3+1]::VARCHAR || ',' || m[b*3+2]::VARCHAR || ',' || m[b*3+3]::VARCHAR AS bkey
-                 FROM sig, range(0, 4) r(b)),
-        cand AS (SELECT DISTINCT a.doc_id AS a_id, c.doc_id AS b_id
-                 FROM band a JOIN band c ON a.b = c.b AND a.bkey = c.bkey
-                                        AND a.doc_id < c.doc_id),
+        ${Dedup.duckLshCandidates},
         dups AS (SELECT DISTINCT b_id FROM cand
                  JOIN sh2 sa ON a_id = sa.doc_id JOIN sh2 sb ON b_id = sb.doc_id
                  WHERE CAST(len(list_intersect(sa.th, sb.th)) AS DOUBLE)
@@ -114,9 +125,7 @@ object Pipeline {
     val keep = q.groupBy(md5(col("text").cast("binary")))
       .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
     val qd = q.join(keep, "doc_id").ckpt
-    val hs = Dedup.shingleHashesFrom(qd).ckpt
-    val sh = Dedup.cappedShingleSets(hs).ckpt
-    val dups = Dedup.lshVerifiedPairs(sh).select("b_id").distinct()
+    val dups = Dedup.lshVerifiedPairs(Dedup.nearDupSets(qd)).select("b_id").distinct()
     val corpus = qd.join(dups, qd("doc_id") === dups("b_id"), "left_anti")
     (q, qd, corpus)
   }
@@ -207,7 +216,7 @@ object Pipeline {
     "x92_decontamination",
     s"""WITH ${Dedup.duckShingles},
         ${Dedup.duckHashedShingles},
-        sp AS (SELECT doc_id, ${H.d("CAST(doc_id AS VARCHAR)")} % 10 AS b
+        sp AS (SELECT doc_id, ${duckSplitBucket("doc_id")} AS b
                FROM documents),
         tr AS (SELECT hs0.doc_id, th FROM hs0 JOIN sp ON hs0.doc_id = sp.doc_id
                WHERE sp.b < 8),
@@ -225,7 +234,7 @@ object Pipeline {
     // checkpointed: the kernel frame feeds three subtrees (train index,
     // train sizes, eval set) — otherwise it would re-shingle the corpus 3×
     val hs = Dedup.shingleHashesFrom(T(spark, dir, "documents"))
-      .withColumn("b", expr(s"${H.s("cast(doc_id as string)")} % 10"))
+      .withColumn("b", splitBucket("doc_id"))
       .ckpt
     val train = hs.filter(col("b") < 8)
     val evalSh = hs.filter(col("b") >= 8)
@@ -267,7 +276,7 @@ object Pipeline {
     * definition. */
   private[operators] def duckContaminationCtes: String =
     s"""${Dedup.duckSpanOcc},
-        sp AS (SELECT doc_id, ${H.d("CAST(doc_id AS VARCHAR)")} % 10 AS b
+        sp AS (SELECT doc_id, ${duckSplitBucket("doc_id")} AS b
                FROM documents),
         p AS (SELECT x.doc_id AS a_id, y.doc_id AS b_id, x.pos AS pa, y.pos AS pb
               FROM occ x JOIN occ y ON x.g = y.g
@@ -279,7 +288,7 @@ object Pipeline {
   private[operators] def contaminationSpans(spark: SparkSession,
       dir: String): DataFrame = {
     val occ = Dedup.spanGramOccurrences(spark, dir)
-      .withColumn("b", expr(s"${H.s("cast(doc_id as string)")} % 10"))
+      .withColumn("b", splitBucket("doc_id"))
     val p = occ.filter(col("b") < 8)
       .select(col("g"), col("doc_id").as("a_id"), col("pos").as("pa"))
       .join(occ.filter(col("b") >= 8)
@@ -338,7 +347,7 @@ object Pipeline {
       .select(col("a_id"), col("a_start"),
         (col("a_start") + col("span_tokens") - 1).as("a_end"))
     val tkn = T(spark, dir, "documents")
-      .filter(expr(s"${H.s("cast(doc_id as string)")} % 10 < 8"))
+      .filter(splitBucket("doc_id") < 8)
       .select(col("doc_id"), posexplode(split(col("text"), " ")))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("w"))
     val masked = tkn.join(broadcast(spans),
@@ -367,6 +376,33 @@ object Pipeline {
     * state is BOUNDED at this many cells regardless of corpus size. */
   private val DsirBuckets = 16384
 
+  /** DuckDB dialect of [[dsirScores]] before the per-doc sum: the
+    * hashed feature stream `fe`, the reference source `ref`, the model
+    * counts and totals, and the per-feature `sc` (doc_id, source, bits)
+    * — one text for x129 and x133. */
+  private val duckDsirScores =
+    s"""tk AS (SELECT doc_id, source, string_split(text, ' ') AS t
+                    FROM documents),
+        uni AS (SELECT doc_id, source, unnest(t) AS f FROM tk),
+        big AS (SELECT doc_id, source,
+                       unnest(list_transform(range(1, len(t)),
+                         i -> t[i] || ' ' || t[i+1])) AS f
+                FROM tk),
+        fe AS (SELECT doc_id, source, ${H.d("f")} % $DsirBuckets AS fb
+               FROM (SELECT * FROM uni UNION ALL SELECT * FROM big)),
+        ref AS (SELECT MIN(source) AS rs FROM documents),
+        tcnt AS (SELECT fb, COUNT(*) AS ct FROM fe, ref
+                 WHERE source = rs GROUP BY fb),
+        ttot AS (SELECT COUNT(*) AS tt FROM fe, ref WHERE source = rs),
+        rcnt AS (SELECT fb, COUNT(*) AS cr FROM fe GROUP BY fb),
+        rtot AS (SELECT COUNT(*) AS tr FROM fe),
+        sc AS (SELECT fe.doc_id, fe.source,
+                      (LENGTH(bin(rtot.tr)) - LENGTH(bin(rcnt.cr + 1)))
+                    - (LENGTH(bin(ttot.tt))
+                       - LENGTH(bin(COALESCE(tcnt.ct, 0) + 1))) AS bits
+               FROM fe JOIN rcnt ON fe.fb = rcnt.fb
+               LEFT JOIN tcnt ON fe.fb = tcnt.fb, rtot, ttot)"""
+
   /** x129: DSIR-style importance weighting (Xie et al., "Data Selection
     * for Language Models via Importance Resampling") — per document,
     * the log importance ratio between a TARGET source's hashed-n-gram
@@ -393,27 +429,7 @@ object Pipeline {
     * model + one for scoring, zero corpus-sized shuffles. */
   val x129DsirWeights = Q(
     "x129_dsir_weights",
-    s"""WITH tk AS (SELECT doc_id, source, string_split(text, ' ') AS t
-                    FROM documents),
-        uni AS (SELECT doc_id, source, unnest(t) AS f FROM tk),
-        big AS (SELECT doc_id, source,
-                       unnest(list_transform(range(1, len(t)),
-                         i -> t[i] || ' ' || t[i+1])) AS f
-                FROM tk),
-        fe AS (SELECT doc_id, source, ${H.d("f")} % $DsirBuckets AS fb
-               FROM (SELECT * FROM uni UNION ALL SELECT * FROM big)),
-        ref AS (SELECT MIN(source) AS rs FROM documents),
-        tcnt AS (SELECT fb, COUNT(*) AS ct FROM fe, ref
-                 WHERE source = rs GROUP BY fb),
-        ttot AS (SELECT COUNT(*) AS tt FROM fe, ref WHERE source = rs),
-        rcnt AS (SELECT fb, COUNT(*) AS cr FROM fe GROUP BY fb),
-        rtot AS (SELECT COUNT(*) AS tr FROM fe),
-        sc AS (SELECT fe.doc_id, fe.source,
-                      (LENGTH(bin(rtot.tr)) - LENGTH(bin(rcnt.cr + 1)))
-                    - (LENGTH(bin(ttot.tt))
-                       - LENGTH(bin(COALESCE(tcnt.ct, 0) + 1))) AS bits
-               FROM fe JOIN rcnt ON fe.fb = rcnt.fb
-               LEFT JOIN tcnt ON fe.fb = tcnt.fb, rtot, ttot)
+    s"""WITH $duckDsirScores
         SELECT doc_id, source, CAST(COUNT(*) AS BIGINT) AS n_feats,
                CAST(SUM(bits) AS BIGINT) AS log2w_bits,
                CAST(SUM(bits) * 1000000 // COUNT(*) AS BIGINT)
@@ -533,27 +549,7 @@ object Pipeline {
     * so the exchange carries O(sources · K) rows. */
   val x133DsirSelection = Q(
     "x133_dsir_selection",
-    s"""WITH tk AS (SELECT doc_id, source, string_split(text, ' ') AS t
-                    FROM documents),
-        uni AS (SELECT doc_id, source, unnest(t) AS f FROM tk),
-        big AS (SELECT doc_id, source,
-                       unnest(list_transform(range(1, len(t)),
-                         i -> t[i] || ' ' || t[i+1])) AS f
-                FROM tk),
-        fe AS (SELECT doc_id, source, ${H.d("f")} % $DsirBuckets AS fb
-               FROM (SELECT * FROM uni UNION ALL SELECT * FROM big)),
-        ref AS (SELECT MIN(source) AS rs FROM documents),
-        tcnt AS (SELECT fb, COUNT(*) AS ct FROM fe, ref
-                 WHERE source = rs GROUP BY fb),
-        ttot AS (SELECT COUNT(*) AS tt FROM fe, ref WHERE source = rs),
-        rcnt AS (SELECT fb, COUNT(*) AS cr FROM fe GROUP BY fb),
-        rtot AS (SELECT COUNT(*) AS tr FROM fe),
-        sc AS (SELECT fe.doc_id, fe.source,
-                      (LENGTH(bin(rtot.tr)) - LENGTH(bin(rcnt.cr + 1)))
-                    - (LENGTH(bin(ttot.tt))
-                       - LENGTH(bin(COALESCE(tcnt.ct, 0) + 1))) AS bits
-               FROM fe JOIN rcnt ON fe.fb = rcnt.fb
-               LEFT JOIN tcnt ON fe.fb = tcnt.fb, rtot, ttot),
+    s"""WITH $duckDsirScores,
         ds AS (SELECT doc_id, source,
                       SUM(bits) * 1000000 // COUNT(*) AS mean_bits_ppm
                FROM sc GROUP BY doc_id, source),
@@ -843,29 +839,23 @@ object Pipeline {
     * two broadcast-size lookups. */
   val x101SplitLeakage = Q(
     "x101_split_leakage",
-    s"""WITH ${Dedup.duckShingles},
-        ${Dedup.duckCappedSets},
-        ${Dedup.duckLshPairCtes},
+    s"""WITH ${Dedup.duckLshPairCtes},
         pairs AS (SELECT a_id, b_id,
                          CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) AS jaccard
                   FROM v WHERE CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) >= 0.5),
         sp AS (SELECT doc_id,
-                      CASE WHEN ${H.d("CAST(doc_id AS VARCHAR)")} % 10 < 8 THEN 'train'
-                           WHEN ${H.d("CAST(doc_id AS VARCHAR)")} % 10 = 8 THEN 'val'
-                           ELSE 'test' END AS split
+                      ${duckSplitOf(duckSplitBucket("doc_id"))} AS split
                FROM documents)
         SELECT a_id, b_id, sa.split AS split_a, sb.split AS split_b, jaccard
         FROM pairs JOIN sp sa ON a_id = sa.doc_id JOIN sp sb ON b_id = sb.doc_id
         WHERE sa.split <> sb.split
         ORDER BY a_id, b_id""") { (spark, dir) =>
-    val hs0 = Dedup.shingleHashes(spark, dir).ckpt
-    val sh = Dedup.cappedShingleSets(hs0).ckpt
+    val pairs = Dedup.nearDupPairs(spark, dir)
     val sp = T(spark, dir, "documents")
-      .withColumn("b", expr(s"${H.s("cast(doc_id as string)")} % 10"))
-      .withColumn("split",
-        when(col("b") < 8, "train").when(col("b") === 8, "val").otherwise("test"))
+      .withColumn("b", splitBucket("doc_id"))
+      .withColumn("split", splitOf(col("b")))
       .select("doc_id", "split")
-    Dedup.lshVerifiedPairs(sh)
+    pairs
       .select("a_id", "b_id", "jaccard")
       .join(sp.select(col("doc_id").as("a_id"), col("split").as("split_a")), "a_id")
       .join(sp.select(col("doc_id").as("b_id"), col("split").as("split_b")), "b_id")
@@ -937,33 +927,17 @@ object Pipeline {
     * comparable. */
   val x103ClusterSplit = Q(
     "x103_cluster_split",
-    s"""WITH RECURSIVE ${Dedup.duckShingles},
-        ${Dedup.duckCappedSets},
-        ${Dedup.duckLshPairCtes},
-        pairs AS (SELECT a_id, b_id FROM v
-                  WHERE CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) >= 0.5),
-        edges AS (SELECT a_id AS u, b_id AS w FROM pairs
-                  UNION ALL SELECT b_id, a_id FROM pairs),
-        nodes AS (SELECT DISTINCT u FROM edges),
-        reach(u, r) AS (
-          SELECT u, u FROM nodes
-          UNION
-          SELECT e.u, reach.r FROM edges e JOIN reach ON reach.u = e.w),
-        comp AS (SELECT u AS doc_id, MIN(r) AS component FROM reach GROUP BY u),
+    s"""WITH RECURSIVE ${Dedup.duckNearDupPairs},
+        ${Dedup.duckComponents("pairs")},
         rep AS (SELECT d.doc_id, d.lang,
                        COALESCE(c.component, d.doc_id) AS rep
                 FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
         sp AS (SELECT lang,
-                      CASE WHEN ${H.d("CAST(rep AS VARCHAR)")} % 10 < 8 THEN 'train'
-                           WHEN ${H.d("CAST(rep AS VARCHAR)")} % 10 = 8 THEN 'val'
-                           ELSE 'test' END AS split
+                      ${duckSplitOf(duckSplitBucket("rep"))} AS split
                FROM rep)
         SELECT lang, split, COUNT(*) AS n
         FROM sp GROUP BY 1, 2 ORDER BY lang, split""") { (spark, dir) =>
-    val hs0 = Dedup.shingleHashes(spark, dir).ckpt
-    val sh = Dedup.cappedShingleSets(hs0).ckpt
-    val comp = Dedup
-      .connectedComponents(Dedup.lshVerifiedPairs(sh).select("a_id", "b_id"))
+    val comp = Dedup.nearDupComponents(spark, dir)
       .select(col("doc_id"), col("component"))
     clusterSplitAssign(T(spark, dir, "documents").select("doc_id", "lang"), comp)
       .groupBy("lang", "split").agg(count(lit(1)).as("n"))
@@ -1369,9 +1343,8 @@ object Pipeline {
       docs: DataFrame, comp: DataFrame): DataFrame =
     docs.join(comp, Seq("doc_id"), "left")
       .withColumn("rep", coalesce(col("component"), col("doc_id")))
-      .withColumn("b", expr(s"${H.s("cast(rep as string)")} % 10"))
-      .withColumn("split",
-        when(col("b") < 8, "train").when(col("b") === 8, "val").otherwise("test"))
+      .withColumn("b", splitBucket("rep"))
+      .withColumn("split", splitOf(col("b")))
       .drop("component", "b")
 
   /** x106: curriculum / interleaved training order — every source's
@@ -1845,6 +1818,30 @@ object Pipeline {
       .orderBy("source", "rnk")
   }
 
+  /** (flag = source, c = n_chars, cnt) cell counts of a documents frame:
+    * the mergeable (source, length-cell) state behind every
+    * within-source quantile rank (x121, x124, x125, x126). */
+  private[operators] def cellCounts(docs: DataFrame): DataFrame =
+    docs.groupBy(col("source").as("flag"), col("n_chars").as("c"))
+      .agg(count(lit(1)).as("cnt"))
+
+  /** (source, c, q_ppm): each cell's within-source cumulative share in
+    * integer ppm, from [[cellCounts]]. */
+  private def quantileCells(counts: DataFrame): DataFrame =
+    Relational2.histCum(counts)
+      .select(col("flag").as("source"), col("c"),
+        expr("cum * 1000000 div n").as("q_ppm"))
+
+  /** DuckDB dialect of [[cellCounts]] → [[quantileCells]]' cumulative
+    * counts: `h` (source, c, cnt) and `hc` (source, c, cum, n). */
+  private val duckQuantileCells =
+    s"""h AS (SELECT source, n_chars AS c, COUNT(*) AS cnt
+                   FROM documents GROUP BY 1, 2),
+        hc AS (SELECT source, c,
+                      SUM(cnt) OVER (PARTITION BY source ORDER BY c) AS cum,
+                      SUM(cnt) OVER (PARTITION BY source) AS n
+               FROM h)"""
+
   /** x121: cross-source QUANTILE NORMALIZATION — every document's raw
     * score (n_chars) replaced by its within-source quantile rank in
     * integer ppm, the step that makes per-source scores COMPARABLE
@@ -1864,25 +1861,14 @@ object Pipeline {
     * table. One full scan, one map-side join, zero corpus-side sort. */
   val x121QuantileNorm = Q(
     "x121_quantile_norm",
-    s"""WITH h AS (SELECT source, n_chars AS c, COUNT(*) AS cnt
-                   FROM documents GROUP BY 1, 2),
-        hc AS (SELECT source, c,
-                      SUM(cnt) OVER (PARTITION BY source ORDER BY c) AS cum,
-                      SUM(cnt) OVER (PARTITION BY source) AS n
-               FROM h)
+    s"""WITH $duckQuantileCells
         SELECT d.doc_id, d.source, d.n_chars,
                CAST(hc.cum * 1000000 // hc.n AS BIGINT) AS q_ppm
         FROM documents d
         JOIN hc ON d.source = hc.source AND d.n_chars = hc.c
         ORDER BY d.doc_id""") { (spark, dir) =>
-    val h = T(spark, dir, "documents")
-      .groupBy(col("source").as("flag"), col("n_chars").as("c"))
-      .agg(count(lit(1)).as("cnt"))
-      .ckpt // tiny (source, cell) counts — histCum consumes it twice
-
-    val cells = Relational2.histCum(h)
-      .select(col("flag").as("source"), col("c"),
-        expr("cum * 1000000 div n").as("q_ppm"))
+    val cells = quantileCells(cellCounts(T(spark, dir, "documents"))
+      .ckpt) // tiny (source, cell) counts — histCum consumes it twice
     val docs = T(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
     docs.join(broadcast(cells),
@@ -1947,12 +1933,7 @@ object Pipeline {
 
   val x125QuantileMap = Q(
     "x125_quantile_map",
-    s"""WITH h AS (SELECT source, n_chars AS c, COUNT(*) AS cnt
-                   FROM documents GROUP BY 1, 2),
-        hc AS (SELECT source, c,
-                      SUM(cnt) OVER (PARTITION BY source ORDER BY c) AS cum,
-                      SUM(cnt) OVER (PARTITION BY source) AS n
-               FROM h),
+    s"""WITH $duckQuantileCells,
         hq AS (SELECT source, c, cum * 1000000 // n AS q_ppm FROM hc),
         ref AS (SELECT MIN(source) AS rs FROM documents),
         r AS (SELECT c AS c_ref, q_ppm AS r_ppm FROM hq, ref
@@ -1964,13 +1945,8 @@ object Pipeline {
         FROM documents d
         JOIN map m ON d.source = m.source AND d.n_chars = m.c
         ORDER BY d.doc_id""") { (spark, dir) =>
-    val h = T(spark, dir, "documents")
-      .groupBy(col("source").as("flag"), col("n_chars").as("c"))
-      .agg(count(lit(1)).as("cnt"))
-      .ckpt // tiny (source, cell) counts — histCum consumes it twice
-    val hq = Relational2.histCum(h)
-      .select(col("flag").as("source"), col("c"),
-        expr("cum * 1000000 div n").as("q_ppm"))
+    val hq = quantileCells(cellCounts(T(spark, dir, "documents"))
+      .ckpt) // tiny (source, cell) counts — histCum consumes it twice
       .ckpt // consumed as both the query side and the reference side
     val mapped = quantileMapCells(hq)
     val docs = T(spark, dir, "documents")
@@ -1998,28 +1974,12 @@ object Pipeline {
     * one feeds the manifest rows. */
   val x124SamplingManifest = Q(
     "x124_sampling_manifest",
-    s"""WITH RECURSIVE ${Dedup.duckShingles},
-        ${Dedup.duckCappedSets},
-        ${Dedup.duckLshPairCtes},
-        pairs AS (SELECT a_id, b_id FROM v
-                  WHERE CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) >= 0.5),
-        edges AS (SELECT a_id AS u, b_id AS w FROM pairs
-                  UNION ALL SELECT b_id, a_id FROM pairs),
-        nodes AS (SELECT DISTINCT u FROM edges),
-        reach(u, r) AS (
-          SELECT u, u FROM nodes
-          UNION
-          SELECT e.u, reach.r FROM edges e JOIN reach ON reach.u = e.w),
-        comp AS (SELECT u AS doc_id, MIN(r) AS component FROM reach GROUP BY u),
+    s"""WITH RECURSIVE ${Dedup.duckNearDupPairs},
+        ${Dedup.duckComponents("pairs")},
         sz AS (SELECT component, COUNT(*) AS n_members FROM comp GROUP BY component),
-        h AS (SELECT source, n_chars AS c, COUNT(*) AS cnt
-              FROM documents GROUP BY 1, 2),
-        hc AS (SELECT source, c,
-                      SUM(cnt) OVER (PARTITION BY source ORDER BY c) AS cum,
-                      SUM(cnt) OVER (PARTITION BY source) AS n
-               FROM h),
+        $duckQuantileCells,
         m AS (SELECT d.doc_id, d.source,
-                     ${H.d("CAST(d.doc_id AS VARCHAR)")} % 10 AS b,
+                     ${duckSplitBucket("d.doc_id")} AS b,
                      hc.cum * 1000000 // hc.n AS q_ppm,
                      COALESCE(GREATEST(1000000 // s.n_members, 1), 1000000) AS weight_ppm
               FROM documents d
@@ -2027,24 +1987,15 @@ object Pipeline {
               LEFT JOIN comp c ON d.doc_id = c.doc_id
               LEFT JOIN sz s ON c.component = s.component)
         SELECT doc_id, source,
-               CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val'
-                    ELSE 'test' END AS split,
+               ${duckSplitOf("b")} AS split,
                CAST(q_ppm AS BIGINT) AS q_ppm,
                CAST(weight_ppm AS BIGINT) AS weight_ppm,
                CAST(CASE WHEN b < 8 AND q_ppm >= 200000 THEN weight_ppm
                          ELSE 0 END AS BIGINT) AS train_weight_ppm
         FROM m ORDER BY doc_id""") { (spark, dir) =>
-    val sh = Dedup.cappedShingleSets(
-      Dedup.shingleHashes(spark, dir).ckpt).ckpt
-    val comp = Dedup.connectedComponents(
-      Dedup.lshVerifiedPairs(sh).select("a_id", "b_id"))
-    val h = T(spark, dir, "documents")
-      .groupBy(col("source").as("flag"), col("n_chars").as("c"))
-      .agg(count(lit(1)).as("cnt"))
-      .ckpt // tiny (source, cell) counts — histCum consumes it twice
-    val cells = Relational2.histCum(h)
-      .select(col("flag").as("source"), col("c"),
-        expr("cum * 1000000 div n").as("q_ppm"))
+    val comp = Dedup.nearDupComponents(spark, dir)
+    val cells = quantileCells(cellCounts(T(spark, dir, "documents"))
+      .ckpt) // tiny (source, cell) counts — histCum consumes it twice
     val docs = T(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
     docs
@@ -2054,10 +2005,8 @@ object Pipeline {
       .join(comp.select(col("doc_id"), col("n_members")), Seq("doc_id"), "left")
       .withColumn("weight_ppm",
         coalesce(expr("greatest(1000000 div n_members, 1)"), lit(1000000L)))
-      .withColumn("b", expr(s"${H.s("cast(doc_id as string)")} % 10"))
-      .select(col("doc_id"), col("source"),
-        when(col("b") < 8, "train").when(col("b") === 8, "val")
-          .otherwise("test").as("split"),
+      .withColumn("b", splitBucket("doc_id"))
+      .select(col("doc_id"), col("source"), splitOf(col("b")).as("split"),
         col("q_ppm"), col("weight_ppm"),
         when(col("b") < 8 && col("q_ppm") >= 200000, col("weight_ppm"))
           .otherwise(lit(0L)).as("train_weight_ppm"))
@@ -2076,10 +2025,8 @@ object Pipeline {
     val key = Scale.sourceKey(dir, "documents")
     val p = s"${System.getProperty("java.io.tmpdir")}/graft_x126_cells_$key"
     if (!new java.io.File(s"$p/_SUCCESS").exists()) {
-      T(spark, dir, "documents")
-        .filter(col("doc_id") % Dedup.d37BatchMod =!= 0)
-        .groupBy(col("source").as("flag"), col("n_chars").as("c"))
-        .agg(count(lit(1)).as("cnt"))
+      cellCounts(T(spark, dir, "documents")
+        .filter(col("doc_id") % Dedup.d37BatchMod =!= 0))
         .write.mode("overwrite").parquet(p)
     }
     p
@@ -2116,26 +2063,20 @@ object Pipeline {
   val x126IncrementalManifest = Q(
     "x126_incremental_manifest",
     s"""WITH ${Dedup.d37OracleCtes},
-        ch AS (SELECT source, n_chars AS c, COUNT(*) AS cnt
-               FROM documents GROUP BY 1, 2),
-        chc AS (SELECT source, c,
-                       SUM(cnt) OVER (PARTITION BY source ORDER BY c) AS cum,
-                       SUM(cnt) OVER (PARTITION BY source) AS n
-                FROM ch),
+        $duckQuantileCells,
         bd AS (SELECT doc_id, source, n_chars FROM documents
                WHERE doc_id % ${Dedup.d37BatchMod} = 0),
         o AS (SELECT bd.doc_id, bd.source,
-                     ${H.d("CAST(bd.doc_id AS VARCHAR)")} % 10 AS b,
-                     chc.cum * 1000000 // chc.n AS q_ppm,
+                     ${duckSplitBucket("bd.doc_id")} AS b,
+                     hc.cum * 1000000 // hc.n AS q_ppm,
                      CASE WHEN m.b_id IS NULL THEN 1 ELSE 0 END AS admitted,
                      GREATEST(1000000 // (1 + COALESCE(m.n_matches, 0)), 1)
                        AS weight_ppm
               FROM bd
-              JOIN chc ON bd.source = chc.source AND bd.n_chars = chc.c
+              JOIN hc ON bd.source = hc.source AND bd.n_chars = hc.c
               LEFT JOIN m ON bd.doc_id = m.b_id)
         SELECT doc_id, source,
-               CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'val'
-                    ELSE 'test' END AS split,
+               ${duckSplitOf("b")} AS split,
                CAST(q_ppm AS BIGINT) AS q_ppm,
                CAST(admitted AS BIGINT) AS admitted,
                CAST(weight_ppm AS BIGINT) AS weight_ppm,
@@ -2161,10 +2102,7 @@ object Pipeline {
     * maintainer ([[graft.streaming.StreamOps.ManifestMaintainer]]). */
   private[graft] def mergeCellState(state: DataFrame,
       batch: DataFrame): DataFrame = {
-    val delta = batch
-      .groupBy(col("source").as("flag"), col("n_chars").as("c"))
-      .agg(count(lit(1)).as("cnt"))
-    state.unionByName(delta)
+    state.unionByName(cellCounts(batch))
       .groupBy("flag", "c").agg(sum(col("cnt")).as("cnt"))
   }
 
@@ -2173,21 +2111,17 @@ object Pipeline {
     * the streaming maintainer, so the two tiers cannot drift. */
   private[graft] def manifestRows(batch: DataFrame, verdicts: DataFrame,
       mergedCells: DataFrame): DataFrame = {
-    val cells = Relational2.histCum(mergedCells)
-      .select(col("flag").as("source"), col("c"),
-        expr("cum * 1000000 div n").as("q_ppm"))
+    val cells = quantileCells(mergedCells)
     val docs = batch.select(col("doc_id"), col("source"), col("n_chars"))
     docs.join(broadcast(cells),
         docs("source") === cells("source") && docs("n_chars") === cells("c"))
       .select(docs("doc_id"), docs("source"), col("q_ppm"))
       .join(verdicts.select(col("doc_id"), col("admitted"), col("n_matches")),
         Seq("doc_id"))
-      .withColumn("b", expr(s"${H.s("cast(doc_id as string)")} % 10"))
+      .withColumn("b", splitBucket("doc_id"))
       .withColumn("weight_ppm",
         expr("greatest(1000000 div (1 + n_matches), 1)"))
-      .select(col("doc_id"), col("source"),
-        when(col("b") < 8, "train").when(col("b") === 8, "val")
-          .otherwise("test").as("split"),
+      .select(col("doc_id"), col("source"), splitOf(col("b")).as("split"),
         col("q_ppm"), col("admitted"), col("weight_ppm"),
         when(col("admitted") === 1 && col("b") < 8 && col("q_ppm") >= 200000,
           col("weight_ppm")).otherwise(lit(0L)).as("train_weight_ppm"))

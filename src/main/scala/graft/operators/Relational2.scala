@@ -35,11 +35,10 @@ object Relational2 {
        FROM lineitem
        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
        ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""") { (spark, dir) =>
-    T(spark, dir, "lineitem").createOrReplaceTempView("lineitem_gs")
     // Spark dialect: the direct decimal→double cast here IS correctly
     // rounded (BigDecimal.doubleValue); the VARCHAR mediation is an
     // oracle-side (DuckDB) fix only — Spark SQL also rejects bare VARCHAR
-    spark.sql(
+    Views.sql(spark, "lineitem_gs" -> T(spark, dir, "lineitem"))(
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
          CAST(SUM(CAST(l_quantity AS DECIMAL(12,4))) AS DOUBLE) AS qty
          FROM lineitem_gs
@@ -308,8 +307,7 @@ object Relational2 {
                  / COUNT(*)
           FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
        ORDER BY o_orderkey""") { (spark, dir) =>
-    T(spark, dir, "orders").createOrReplaceTempView("orders_cs")
-    spark.sql(
+    Views.sql(spark, "orders_cs" -> T(spark, dir, "orders"))(
       """SELECT o_orderkey, o_custkey, o_totalprice
          FROM orders_cs o
          WHERE o_totalprice >
@@ -818,9 +816,8 @@ object Relational2 {
                 WHERE c_nationkey = n.n_nationkey
                 ORDER BY c_acctbal DESC, c_name LIMIT 2) l
        ORDER BY n_name, c_acctbal DESC, c_name""") { (spark, dir) =>
-    T(spark, dir, "nation").createOrReplaceTempView("q95_nation")
-    T(spark, dir, "customer").createOrReplaceTempView("q95_customer")
-    spark.sql(
+    Views.sql(spark, "q95_nation" -> T(spark, dir, "nation"),
+      "q95_customer" -> T(spark, dir, "customer"))(
       """SELECT n_name, c_name, c_acctbal FROM q95_nation n,
          LATERAL (SELECT c_name, c_acctbal FROM q95_customer
                   WHERE c_nationkey = n.n_nationkey

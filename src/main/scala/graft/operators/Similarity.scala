@@ -41,6 +41,39 @@ object Similarity {
     s"e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), " +
       s"e AS (SELECT vec_id, v, ${Cosine.duckNorm("v")} AS nrm FROM e0)"
 
+  /** A (vec_id, v, nrm) frame as the query side (q_id, vq, nq) of a
+    * cosine ranking. */
+  private def asQueries(e: DataFrame): DataFrame =
+    e.select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq"))
+
+  /** A (vec_id, v, nrm) frame as the neighbor side (n_id, vn, nn). */
+  private def asNeighbors(e: DataFrame): DataFrame =
+    e.select(col("vec_id").as("n_id"), col("v").as("vn"), col("nrm").as("nn"))
+
+  /** Exact brute-force candidates: every query of `q` (broadcast) against
+    * every other vector of `e`. */
+  private def allPairs(e: DataFrame, q: DataFrame): DataFrame =
+    broadcast(q).join(asNeighbors(e), col("n_id") =!= col("q_id"))
+
+  /** How a candidate set is ranked by cosine: rows carrying both sides
+    * (q_id, vq, nq, n_id, vn, nn) get their exact `cos`, ordered per
+    * query by cos DESC, n_id ASC. */
+  private val byCos = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
+  private def scoredByCos(cand: DataFrame): DataFrame =
+    cand.withColumn("cos", Cosine.dot(col("vq"), col("vn")) / (col("nq") * col("nn")))
+
+  /** The top `k` candidates per query in [[byCos]] order, with the long
+    * `rnk` the entries return. */
+  private def topByCos(cand: DataFrame, k: Int): DataFrame =
+    scoredByCos(cand).withColumn("rnk", row_number().over(byCos).cast("long"))
+      .filter(col("rnk") <= k)
+
+  /** [[topByCos]] for callers that compare or cast the rank afterwards:
+    * the int rank is filtered as it comes from the window. */
+  private def topByCosRaw(cand: DataFrame, k: Int): DataFrame =
+    scoredByCos(cand).withColumn("rnk", row_number().over(byCos))
+      .filter(col("rnk") <= k)
+
   /** Exact brute-force cosine top-5 for the first 10 vectors as queries. */
   val s32KnnBruteforce = Q(
     "s32_knn_bruteforce",
@@ -55,14 +88,7 @@ object Similarity {
         SELECT q_id, n_id, CAST(rnk AS BIGINT) AS rnk, cos
         FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""") { (spark, dir) =>
     val e = vecs(spark, dir)
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq"))
-    val n = e.select(col("vec_id").as("n_id"), col("v").as("vn"), col("nrm").as("nn"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    broadcast(q).join(n, col("n_id") =!= col("q_id"))
-      .withColumn("cos", Cosine.dot(col("vq"), col("vn")) / (col("nq") * col("nn")))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 5)
+    topByCos(allPairs(e, asQueries(e.filter(col("vec_id") < 10))), 5)
       .select("q_id", "n_id", "rnk", "cos")
       .orderBy("q_id", "rnk")
   }
@@ -192,11 +218,7 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq"), col("bucket"))
     val n = bk.select(col("vec_id").as("n_id"), col("v").as("vn"), col("nrm").as("nn"),
       col("bucket").as("bn"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    q.join(n, col("bucket") === col("bn") && col("n_id") =!= col("q_id"))
-      .withColumn("cos", Cosine.dot(col("vq"), col("vn")) / (col("nq") * col("nn")))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 5)
+    topByCos(q.join(n, col("bucket") === col("bn") && col("n_id") =!= col("q_id")), 5)
       .select("q_id", "n_id", "bucket", "rnk", "cos")
       .orderBy("q_id", "rnk")
   }
@@ -231,11 +253,7 @@ object Similarity {
         probeBuckets(col("bucket")).as("pb"))
     val n = bk.select(col("vec_id").as("n_id"), col("v").as("vn"), col("nrm").as("nn"),
       col("bucket").as("bn"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    q.join(n, col("pb") === col("bn") && col("n_id") =!= col("q_id"))
-      .withColumn("cos", Cosine.dot(col("vq"), col("vn")) / (col("nq") * col("nn")))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 5)
+    topByCos(q.join(n, col("pb") === col("bn") && col("n_id") =!= col("q_id")), 5)
       .select("q_id", "n_id", "rnk", "cos")
       .orderBy("q_id", "rnk")
   }
@@ -341,13 +359,7 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("c_id").as("cell"), col("label"))
     val cand = probe.join(asg, Seq("cell", "label"))
       .filter(col("n_id") =!= col("q_id"))
-    val wTop = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    cand
-      .join(e.select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq")), "q_id")
-      .join(e.select(col("vec_id").as("n_id"), col("v").as("vn"), col("nrm").as("nn")), "n_id")
-      .withColumn("cos", Cosine.dot(col("vq"), col("vn")) / (col("nq") * col("nn")))
-      .withColumn("rnk", row_number().over(wTop).cast("long"))
-      .filter(col("rnk") <= 5)
+    topByCos(cand.join(asQueries(e), "q_id").join(asNeighbors(e), "n_id"), 5)
       .select(col("q_id"), col("n_id"), col("cell"),
         col("label").cast("long").as("label"), col("rnk"), col("cos"))
       .orderBy("q_id", "rnk")
@@ -836,6 +848,96 @@ object Similarity {
     }
   }
 
+  /** DuckDB dialect of [[pqEncode]] over `e0`: the int8 grid `qz`, the
+    * sub-vectors `subs`, the codebook `cb`, every vector's codes `codes`
+    * (n_id, s, c) and the query sub-vectors `qsub` (q_id, s, sub). */
+  private val duckPqCodes =
+    s"""qz AS (SELECT vec_id, list_transform(v, x -> CAST(round(x * 127.0 /
+                 greatest(list_max(list_transform(v, y -> abs(y))), 1e-12)) AS BIGINT)) AS qv
+               FROM e0),
+        subs AS (SELECT vec_id, s, qv[s*$PqSubDim+1 : s*$PqSubDim+$PqSubDim] AS sub
+                 FROM qz, range(0, $PqM) r(s)),
+        cb AS (SELECT s, vec_id AS c, sub AS cw FROM subs WHERE vec_id < $PqK),
+        pasg AS (SELECT subs.vec_id, subs.s, cb.c,
+                        list_reduce(list_prepend(CAST(0 AS BIGINT),
+                          list_transform(range(1, $PqSubDim + 1),
+                            i -> (sub[i] - cw[i]) * (sub[i] - cw[i]))),
+                          (a, t) -> a + t) AS dist
+                 FROM subs JOIN cb ON subs.s = cb.s),
+        codes AS (SELECT vec_id AS n_id, s, c
+                  FROM (SELECT vec_id, s, c, ROW_NUMBER() OVER (
+                          PARTITION BY vec_id, s ORDER BY dist, c) AS rnk FROM pasg)
+                  WHERE rnk = 1),
+        qsub AS (SELECT vec_id AS q_id, s, sub FROM subs WHERE vec_id < 10)"""
+
+  /** DuckDB dialect of [[pqRerank]]'s norms: `eq` (vec_id, qv, nrm). */
+  private val duckPqNorms =
+    s"""eq AS (SELECT vec_id, qv, sqrt(CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+                 list_transform(qv, x -> x * x)), (a, t) -> a + t) AS DOUBLE)) AS nrm
+               FROM qz)"""
+
+  /** DuckDB dialect of [[pqRerank]]'s exact integer cosine between the
+    * int8 vectors of `q` and `n`, as `qcos`. */
+  private val duckPqCos =
+    s"""CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+                        list_transform(range(1, ${PqM * PqSubDim + 1}),
+                          i -> q.qv[i] * n.qv[i])), (a, t) -> a + t) AS DOUBLE)
+                        / (q.nrm * n.nrm) AS qcos"""
+
+  /** PQ encode of the quantized vectors `qz`, shared by s38 and s43: the
+    * codebook frame `cb` (s, c, cw), every vector's codes (n_id, s, c)
+    * and the query sub-vectors (q_id, s, qsub) of vec_id < 10. Encode is
+    * MAP-ONLY: the 8×16 codebook collects driver-side (the K·Dim-matrix
+    * pattern x95 already uses) and rides into the codegen'd
+    * codebook_argmin as one reference object — no 16-way explode-join,
+    * no per-(vector, subspace) window shuffle. FunctionsSpec pins these
+    * codes bit-equal to the join+window form the oracle runs in SQL. */
+  private def pqEncode(qz: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val subs = pqSubs(qz).ckpt
+    val cb = pqCodebookFrame(subs)
+    val codes = subs
+      .withColumn("c",
+        graft.functions.CodebookArgmin(col("sub"), col("s"), pqBooks(cb)))
+      .select(col("vec_id").as("n_id"), col("s"), col("c"))
+    val qsub = subs.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("s"), col("sub").as("qsub"))
+    (cb, codes, qsub)
+  }
+
+  /** ADC: a candidate's score is the sum of its per-subspace dots
+    * query-slice·codeword (`ds`), an exact bigint. */
+  private val PqAdcDot =
+    "aggregate(zip_with(qsub, cw, (x, y) -> x * y), cast(0 as bigint), (a, t) -> a + t)"
+
+  /** The [[PqRerank]] best-scored candidates per query (score DESC, n_id
+    * ASC) of ADC partial dots `ds`, summed per `keys`. */
+  private def adcShortlist(parts: DataFrame, keys: String*): DataFrame = {
+    val wAdc = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id"))
+    parts.groupBy(keys.map(col): _*)
+      .agg(sum(col("ds")).as("score"))
+      .withColumn("rnk", row_number().over(wAdc))
+      .filter(col("rnk") <= PqRerank)
+      .select(keys.map(col): _*)
+  }
+
+  /** The exact int8 re-rank of a (q_id, n_id, …) shortlist over the
+    * quantized vectors `qz`: `qcos` and the long `rnk` (qcos DESC, n_id
+    * ASC), top 5 per query. */
+  private def pqRerank(cand: DataFrame, qz: DataFrame): DataFrame = {
+    val e = qz.withColumn("nrm", sqrt(expr(
+      "aggregate(transform(qv, x -> x * x), cast(0 as bigint), (a, t) -> a + t)")
+      .cast("double")))
+    val wTop = Window.partitionBy(col("q_id")).orderBy(col("qcos").desc, col("n_id"))
+    cand
+      .join(e.select(col("vec_id").as("q_id"), col("qv").as("vq"), col("nrm").as("nq")), "q_id")
+      .join(e.select(col("vec_id").as("n_id"), col("qv").as("vn"), col("nrm").as("nn")), "n_id")
+      .withColumn("qcos", expr(
+        "aggregate(zip_with(vq, vn, (x, y) -> x * y), cast(0 as bigint), (a, t) -> a + t)")
+        .cast("double") / (col("nq") * col("nn")))
+      .withColumn("rnk", row_number().over(wTop).cast("long"))
+      .filter(col("rnk") <= 5)
+  }
+
   /** s38: product-quantized KNN — ADC candidate pruning + exact re-rank,
     * the third tier of the ANN compression story (float s32 → int8 s37 →
     * PQ s38) and the production PQ shape. Vectors are s37-quantized to
@@ -858,23 +960,7 @@ object Similarity {
   val s38PqKnn = Q(
     "s38_pq_knn",
     s"""WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        qz AS (SELECT vec_id, list_transform(v, x -> CAST(round(x * 127.0 /
-                 greatest(list_max(list_transform(v, y -> abs(y))), 1e-12)) AS BIGINT)) AS qv
-               FROM e0),
-        subs AS (SELECT vec_id, s, qv[s*$PqSubDim+1 : s*$PqSubDim+$PqSubDim] AS sub
-                 FROM qz, range(0, $PqM) r(s)),
-        cb AS (SELECT s, vec_id AS c, sub AS cw FROM subs WHERE vec_id < $PqK),
-        asg AS (SELECT subs.vec_id, subs.s, cb.c,
-                       list_reduce(list_prepend(CAST(0 AS BIGINT),
-                         list_transform(range(1, $PqSubDim + 1),
-                           i -> (sub[i] - cw[i]) * (sub[i] - cw[i]))),
-                         (a, t) -> a + t) AS dist
-                FROM subs JOIN cb ON subs.s = cb.s),
-        codes AS (SELECT vec_id AS n_id, s, c
-                  FROM (SELECT vec_id, s, c, ROW_NUMBER() OVER (
-                          PARTITION BY vec_id, s ORDER BY dist, c) AS rnk FROM asg)
-                  WHERE rnk = 1),
-        qsub AS (SELECT vec_id AS q_id, s, sub FROM subs WHERE vec_id < 10),
+        $duckPqCodes,
         parts AS (SELECT q.q_id, codes.n_id,
                          list_reduce(list_prepend(CAST(0 AS BIGINT),
                            list_transform(range(1, $PqSubDim + 1),
@@ -886,57 +972,22 @@ object Similarity {
         cand AS (SELECT q_id, n_id FROM (SELECT q_id, n_id, ROW_NUMBER() OVER (
                    PARTITION BY q_id ORDER BY score DESC, n_id) AS rnk FROM sc)
                  WHERE rnk <= $PqRerank),
-        e AS (SELECT vec_id, qv, sqrt(CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-                list_transform(qv, x -> x * x)), (a, t) -> a + t) AS DOUBLE)) AS nrm
-              FROM qz),
+        $duckPqNorms,
         rr AS (SELECT c.q_id, c.n_id,
-                      CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-                        list_transform(range(1, ${PqM * PqSubDim + 1}),
-                          i -> q.qv[i] * n.qv[i])), (a, t) -> a + t) AS DOUBLE)
-                        / (q.nrm * n.nrm) AS qcos
-               FROM cand c JOIN e q ON c.q_id = q.vec_id
-                           JOIN e n ON c.n_id = n.vec_id),
+                      $duckPqCos
+               FROM cand c JOIN eq q ON c.q_id = q.vec_id
+                           JOIN eq n ON c.n_id = n.vec_id),
         fin AS (SELECT q_id, n_id, qcos, ROW_NUMBER() OVER (
                   PARTITION BY q_id ORDER BY qcos DESC, n_id) AS rnk FROM rr)
         SELECT q_id, n_id, CAST(rnk AS BIGINT) AS rnk, qcos
         FROM fin WHERE rnk <= 5 ORDER BY q_id, rnk""") { (spark, dir) =>
     val qz = pqQuantized(spark, dir)
-    val subs = pqSubs(qz).ckpt
-    val cb = pqCodebookFrame(subs)
-    // encode is MAP-ONLY: the 8×16 codebook collects driver-side (the
-    // K·Dim-matrix pattern x95 already uses) and rides into the codegen'd
-    // codebook_argmin as one reference object — no 16-way explode-join,
-    // no per-(vector, subspace) window shuffle. FunctionsSpec pins these
-    // codes bit-equal to the join+window form the oracle runs in SQL.
-    val codes = subs
-      .withColumn("c",
-        graft.functions.CodebookArgmin(col("sub"), col("s"), pqBooks(cb)))
-      .select(col("vec_id").as("n_id"), col("s"), col("c"))
-    val qsub = subs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("s"), col("sub").as("qsub"))
-    val wAdc = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id"))
-    val cand = broadcast(qsub).join(codes, "s")
+    val (cb, codes, qsub) = pqEncode(qz)
+    val cand = adcShortlist(broadcast(qsub).join(codes, "s")
       .join(broadcast(cb), Seq("s", "c"))
-      .withColumn("ds", expr(
-        "aggregate(zip_with(qsub, cw, (x, y) -> x * y), cast(0 as bigint), (a, t) -> a + t)"))
-      .filter(col("n_id") =!= col("q_id"))
-      .groupBy("q_id", "n_id")
-      .agg(sum(col("ds")).as("score"))
-      .withColumn("rnk", row_number().over(wAdc))
-      .filter(col("rnk") <= PqRerank)
-      .select("q_id", "n_id")
-    val e = qz.withColumn("nrm", sqrt(expr(
-      "aggregate(transform(qv, x -> x * x), cast(0 as bigint), (a, t) -> a + t)")
-      .cast("double")))
-    val wTop = Window.partitionBy(col("q_id")).orderBy(col("qcos").desc, col("n_id"))
-    cand
-      .join(e.select(col("vec_id").as("q_id"), col("qv").as("vq"), col("nrm").as("nq")), "q_id")
-      .join(e.select(col("vec_id").as("n_id"), col("qv").as("vn"), col("nrm").as("nn")), "n_id")
-      .withColumn("qcos", expr(
-        "aggregate(zip_with(vq, vn, (x, y) -> x * y), cast(0 as bigint), (a, t) -> a + t)")
-        .cast("double") / (col("nq") * col("nn")))
-      .withColumn("rnk", row_number().over(wTop).cast("long"))
-      .filter(col("rnk") <= 5)
+      .withColumn("ds", expr(PqAdcDot))
+      .filter(col("n_id") =!= col("q_id")), "q_id", "n_id")
+    pqRerank(cand, qz)
       .select("q_id", "n_id", "rnk", "qcos")
       .orderBy("q_id", "rnk")
   }
@@ -1025,6 +1076,14 @@ object Similarity {
   private[operators] def knnGraphRanked(spark: SparkSession, dir: String): DataFrame =
     knnGraphRankedAt(spark, dir, NumHp)
 
+  /** The exact top-3 (q_id, n_id) of the sampled queries `qIds` (vec_id)
+    * against all of `e` — the truth both the recall probe and s49 audit
+    * the capped graph against; ≤ 3·|qIds| rows, materialized once. */
+  private def exactTop3(e: DataFrame, qIds: DataFrame): DataFrame =
+    topByCosRaw(allPairs(e, asQueries(e.join(broadcast(qIds), Seq("vec_id"), "left_semi"))), 3)
+      .select("q_id", "n_id")
+      .ckpt
+
   /** Recall@3 of the capped s40 graph against the EXACT top-3, measured
     * on a deterministic hash-ranked query sample — the quality axis of
     * the scale gauntlet ([[KnnBucketCap]] bounds COST at any bucket
@@ -1044,17 +1103,7 @@ object Similarity {
       .orderBy(expr(H.s("cast(vec_id as string)")), col("vec_id"))
       .limit(nQueries)
       .ckpt
-    val q = e.join(broadcast(qIds), Seq("vec_id"), "left_semi")
-      .select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    val exact = broadcast(q)
-      .join(e.select(col("vec_id").as("n_id"), col("v").as("vn"),
-        col("nrm").as("nn")), col("n_id") =!= col("q_id"))
-      .withColumn("cos", Cosine.dot(col("vq"), col("vn")) / (col("nq") * col("nn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
-      .select("q_id", "n_id")
-      .ckpt // ≤ 3·nQueries rows
+    val exact = exactTop3(e, qIds)
     val denom = exact.count().toDouble
     def recallAt(nHp: Int): Double =
       knnGraphRankedAt(spark, dir, nHp, Some(qIds))
@@ -1524,17 +1573,7 @@ object Similarity {
     val qIds = e.select(col("vec_id"))
       .orderBy(expr(H.s("cast(vec_id as string)")), col("vec_id"))
       .limit(20)
-    val q = e.join(broadcast(qIds), Seq("vec_id"), "left_semi")
-      .select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    val exact = broadcast(q)
-      .join(e.select(col("vec_id").as("n_id"), col("v").as("vn"),
-        col("nrm").as("nn")), col("n_id") =!= col("q_id"))
-      .withColumn("cos", Cosine.dot(col("vq"), col("vn")) / (col("nq") * col("nn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
-      .select("q_id", "n_id")
-      .ckpt // ≤ 3·|sample| rows — hit join + per-query totals
+    val exact = exactTop3(e, qIds)
     val g = knnGraphRankedAt(spark, dir, NumHp, Some(qIds))
       .select("q_id", "n_id")
     val hit = exact.join(g, Seq("q_id", "n_id"), "left_semi")
@@ -1662,23 +1701,7 @@ object Similarity {
                   WHERE rnk <= 2 AND vec_id < 10),
         cand0 AS (SELECT p.q_id, a.vec_id AS n_id, p.cell
                   FROM probe p JOIN asg a ON p.cell = a.cell AND a.vec_id <> p.q_id),
-        qz AS (SELECT vec_id, list_transform(v, x -> CAST(round(x * 127.0 /
-                 greatest(list_max(list_transform(v, y -> abs(y))), 1e-12)) AS BIGINT)) AS qv
-               FROM e0),
-        subs AS (SELECT vec_id, s, qv[s*$PqSubDim+1 : s*$PqSubDim+$PqSubDim] AS sub
-                 FROM qz, range(0, $PqM) r(s)),
-        cb AS (SELECT s, vec_id AS c, sub AS cw FROM subs WHERE vec_id < $PqK),
-        pasg AS (SELECT subs.vec_id, subs.s, cb.c,
-                        list_reduce(list_prepend(CAST(0 AS BIGINT),
-                          list_transform(range(1, $PqSubDim + 1),
-                            i -> (sub[i] - cw[i]) * (sub[i] - cw[i]))),
-                          (a, t) -> a + t) AS dist
-                 FROM subs JOIN cb ON subs.s = cb.s),
-        codes AS (SELECT vec_id AS n_id, s, c
-                  FROM (SELECT vec_id, s, c, ROW_NUMBER() OVER (
-                          PARTITION BY vec_id, s ORDER BY dist, c) AS rnk FROM pasg)
-                  WHERE rnk = 1),
-        qsub AS (SELECT vec_id AS q_id, s, sub FROM subs WHERE vec_id < 10),
+        $duckPqCodes,
         parts AS (SELECT c0.q_id, c0.n_id, c0.cell,
                          list_reduce(list_prepend(CAST(0 AS BIGINT),
                            list_transform(range(1, $PqSubDim + 1),
@@ -1692,14 +1715,9 @@ object Similarity {
                    ROW_NUMBER() OVER (PARTITION BY q_id
                      ORDER BY score DESC, n_id) AS rnk FROM sc)
                  WHERE rnk <= $PqRerank),
-        eq AS (SELECT vec_id, qv, sqrt(CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-                 list_transform(qv, x -> x * x)), (a, t) -> a + t) AS DOUBLE)) AS nrm
-               FROM qz),
+        $duckPqNorms,
         rr AS (SELECT c.q_id, c.n_id, c.cell,
-                      CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-                        list_transform(range(1, ${PqM * PqSubDim + 1}),
-                          i -> q.qv[i] * n.qv[i])), (a, t) -> a + t) AS DOUBLE)
-                        / (q.nrm * n.nrm) AS qcos
+                      $duckPqCos
                FROM cand c JOIN eq q ON c.q_id = q.vec_id
                            JOIN eq n ON c.n_id = n.vec_id),
         fin AS (SELECT q_id, n_id, cell, qcos, ROW_NUMBER() OVER (
@@ -1708,15 +1726,7 @@ object Similarity {
         FROM fin WHERE rnk <= 5 ORDER BY q_id, rnk""") { (spark, dir) =>
     val cand0 = probeCands(ivfAssign0(spark, dir, 2))
     val qz = pqQuantized(spark, dir)
-    val subs = pqSubs(qz).ckpt
-    val cb = pqCodebookFrame(subs)
-    val codes = subs
-      .withColumn("c",
-        graft.functions.CodebookArgmin(col("sub"), col("s"), pqBooks(cb)))
-      .select(col("vec_id").as("n_id"), col("s"), col("c"))
-    val qsub = subs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("s"), col("sub").as("qsub"))
-    val wAdc = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id"))
+    val (cb, codes, qsub) = pqEncode(qz)
     // cell restriction FIRST: only cand0's (q, n) pairs ever reach ADC.
     // The codes side is CORPUS-sized (N×M rows) — without the merge hint
     // Catalyst broadcasts it at small SF and flips to a shuffle join once
@@ -1725,28 +1735,11 @@ object Similarity {
     // plan scale-invariant — the shape that survives 100 TB — and AQE
     // still specializes it back to a local broadcast at runtime when the
     // exchange turns out tiny.
-    val cand = cand0.join(codes.hint("merge"), "n_id")
+    val cand = adcShortlist(cand0.join(codes.hint("merge"), "n_id")
       .join(broadcast(cb), Seq("s", "c"))
       .join(broadcast(qsub), Seq("q_id", "s"))
-      .withColumn("ds", expr(
-        "aggregate(zip_with(qsub, cw, (x, y) -> x * y), cast(0 as bigint), (a, t) -> a + t)"))
-      .groupBy("q_id", "n_id", "cell")
-      .agg(sum(col("ds")).as("score"))
-      .withColumn("rnk", row_number().over(wAdc))
-      .filter(col("rnk") <= PqRerank)
-      .select("q_id", "n_id", "cell")
-    val eq = qz.withColumn("nrm", sqrt(expr(
-      "aggregate(transform(qv, x -> x * x), cast(0 as bigint), (a, t) -> a + t)")
-      .cast("double")))
-    val wTop = Window.partitionBy(col("q_id")).orderBy(col("qcos").desc, col("n_id"))
-    cand
-      .join(eq.select(col("vec_id").as("q_id"), col("qv").as("vq"), col("nrm").as("nq")), "q_id")
-      .join(eq.select(col("vec_id").as("n_id"), col("qv").as("vn"), col("nrm").as("nn")), "n_id")
-      .withColumn("qcos", expr(
-        "aggregate(zip_with(vq, vn, (x, y) -> x * y), cast(0 as bigint), (a, t) -> a + t)")
-        .cast("double") / (col("nq") * col("nn")))
-      .withColumn("rnk", row_number().over(wTop).cast("long"))
-      .filter(col("rnk") <= 5)
+      .withColumn("ds", expr(PqAdcDot)), "q_id", "n_id", "cell")
+    pqRerank(cand, qz)
       .select("q_id", "n_id", "cell", "rnk", "qcos")
       .orderBy("q_id", "rnk")
   }
@@ -1899,17 +1892,27 @@ object Similarity {
   /** The s34 probe: [[probeCands]] ranked by exact cosine, the top 5 per
     * query as (q_id, n_id, cell, rnk, cos) — s34's answer, and both sides
     * of the s46 recall audit. */
-  private def probeTop5(e: DataFrame, asgRanked: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    probeCands(asgRanked)
-      .join(e.select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq")), "q_id")
-      .join(e.select(col("vec_id").as("n_id"), col("v").as("vn"), col("nrm").as("nn")), "n_id")
-      .withColumn("cos", Cosine.dot(col("vq"), col("vn")) / (col("nq") * col("nn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
+  private def probeTop5(e: DataFrame, asgRanked: DataFrame): DataFrame =
+    topByCosRaw(probeCands(asgRanked).join(asQueries(e), "q_id").join(asNeighbors(e), "n_id"), 5)
       .select(col("q_id"), col("n_id"), col("cell"), col("rnk").cast("long").as("rnk"),
         col("cos"))
-  }
+
+  /** DuckDB dialect of [[probeTop5]] over a cell ranking CTE `ranked`
+    * (vec_id, c_id, rnk): CTEs `asg<x>`, `probe<x>` and the top-5
+    * (q_id, n_id) per query `top<x>`. */
+  private def duckProbeTop5(x: String, ranked: String): String =
+    s"""asg$x AS (SELECT vec_id AS n_id, c_id AS cell FROM $ranked WHERE rnk = 1),
+        probe$x AS (SELECT vec_id AS q_id, c_id AS cell FROM $ranked
+                   WHERE rnk <= 2 AND vec_id < 10),
+        top$x AS (SELECT q_id, n_id FROM (
+                   SELECT c.q_id, c.n_id,
+                          ROW_NUMBER() OVER (PARTITION BY c.q_id
+                            ORDER BY ${Cosine.duckDot("q.v", "n.v")} / (q.nrm * n.nrm) DESC,
+                                     c.n_id) AS rnk
+                   FROM (SELECT p.q_id, a.n_id FROM probe$x p
+                         JOIN asg$x a ON p.cell = a.cell AND a.n_id <> p.q_id) c
+                   JOIN e q ON c.q_id = q.vec_id JOIN e n ON c.n_id = n.vec_id)
+                 WHERE rnk <= 5)"""
 
   /** s46: recall RE-AUDIT of the rebalance — per query (vec_id < 10)
     * the number of exact brute-force top-5 neighbors the 2-probe search
@@ -1926,30 +1929,8 @@ object Similarity {
                                       n.vec_id) AS rnk
                     FROM e q JOIN e n ON n.vec_id <> q.vec_id
                     WHERE q.vec_id < 10) WHERE rnk <= 5),
-        asgA AS (SELECT vec_id AS n_id, c_id AS cell FROM asg0 WHERE rnk = 1),
-        probeA AS (SELECT vec_id AS q_id, c_id AS cell FROM asg0
-                   WHERE rnk <= 2 AND vec_id < 10),
-        topA AS (SELECT q_id, n_id FROM (
-                   SELECT c.q_id, c.n_id,
-                          ROW_NUMBER() OVER (PARTITION BY c.q_id
-                            ORDER BY ${Cosine.duckDot("q.v", "n.v")} / (q.nrm * n.nrm) DESC,
-                                     c.n_id) AS rnk
-                   FROM (SELECT p.q_id, a.n_id FROM probeA p
-                         JOIN asgA a ON p.cell = a.cell AND a.n_id <> p.q_id) c
-                   JOIN e q ON c.q_id = q.vec_id JOIN e n ON c.n_id = n.vec_id)
-                 WHERE rnk <= 5),
-        asgB AS (SELECT vec_id AS n_id, c_id AS cell FROM asg2 WHERE rnk = 1),
-        probeB AS (SELECT vec_id AS q_id, c_id AS cell FROM asg2
-                   WHERE rnk <= 2 AND vec_id < 10),
-        topB AS (SELECT q_id, n_id FROM (
-                   SELECT c.q_id, c.n_id,
-                          ROW_NUMBER() OVER (PARTITION BY c.q_id
-                            ORDER BY ${Cosine.duckDot("q.v", "n.v")} / (q.nrm * n.nrm) DESC,
-                                     c.n_id) AS rnk
-                   FROM (SELECT p.q_id, a.n_id FROM probeB p
-                         JOIN asgB a ON p.cell = a.cell AND a.n_id <> p.q_id) c
-                   JOIN e q ON c.q_id = q.vec_id JOIN e n ON c.n_id = n.vec_id)
-                 WHERE rnk <= 5),
+        ${duckProbeTop5("A", "asg0")},
+        ${duckProbeTop5("B", "asg2")},
         hitsA AS (SELECT a.q_id, COUNT(*) AS hb FROM topA a
                   JOIN truth t ON a.q_id = t.q_id AND a.n_id = t.n_id GROUP BY a.q_id),
         hitsB AS (SELECT b.q_id, COUNT(*) AS ha FROM topB b
@@ -1961,14 +1942,7 @@ object Similarity {
                  LEFT JOIN hitsB ON q.vec_id = hitsB.q_id
         WHERE q.vec_id < 10 ORDER BY q_id""") { (spark, dir) =>
     val e = vecs(spark, dir)
-    val wT = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    val truth = broadcast(e.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("vq"), col("nrm").as("nq")))
-      .join(e.select(col("vec_id").as("n_id"), col("v").as("vn"), col("nrm").as("nn")),
-        col("n_id") =!= col("q_id"))
-      .withColumn("cos", Cosine.dot(col("vq"), col("vn")) / (col("nq") * col("nn")))
-      .withColumn("rnk", row_number().over(wT))
-      .filter(col("rnk") <= 5)
+    val truth = topByCosRaw(allPairs(e, asQueries(e.filter(col("vec_id") < 10))), 5)
       .select("q_id", "n_id")
     val seeds = ivfSeeds(e)
     val topA = probeTop5(e, rankedCells(e, seeds, 2)).select("q_id", "n_id")
@@ -2037,12 +2011,7 @@ object Similarity {
     val cells = spark.read.parquet(s"$out/cells")
       .select(col("vec_id").as("n_id"), col("v").as("vn"),
         col("nrm").as("nn"), col("cell").cast("long").as("cell"))
-    val wTop = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    probe.join(cells, "cell")
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("cos", Cosine.dot(col("vq"), col("vn")) / (col("nq") * col("nn")))
-      .withColumn("rnk", row_number().over(wTop).cast("long"))
-      .filter(col("rnk") <= 5)
+    topByCos(probe.join(cells, "cell").filter(col("n_id") =!= col("q_id")), 5)
       .select("q_id", "n_id", "cell", "rnk", "cos")
       .orderBy("q_id", "rnk")
   }

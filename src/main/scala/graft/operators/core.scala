@@ -85,6 +85,20 @@ object Ckpt {
   }
 }
 
+/** SQL over temp views that live only while the query is analyzed: each
+  * (name, frame) is registered, `query` is analyzed against them, and
+  * every view is dropped again, also when analysis fails. The returned
+  * frame keeps its analyzed plan, and the session's temp-view list is
+  * left as it was, so no view keeps a frame (or its checkpoint blocks)
+  * reachable after the entry. */
+object Views {
+  def sql(spark: SparkSession, views: (String, DataFrame)*)(query: String): DataFrame = {
+    views.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+    try spark.sql(query)
+    finally views.foreach { case (name, _) => spark.catalog.dropTempView(name) }
+  }
+}
+
 /** Cleanup registry for PER-APPLICATION temp layouts (paths carrying the
   * applicationId — x116/x117 exports, the s47 IVF index, pa65's field-id
   * parquet). No later run can ever reuse an app-keyed path, so they are

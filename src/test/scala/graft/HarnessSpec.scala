@@ -1,6 +1,11 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.GraftBridge
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.Harness.Timed
 
 /** The shared main harness: the bench baseline reader, the regression
@@ -101,6 +106,29 @@ class HarnessSpec extends SparkSpec {
     entry.reset()
     assert((sc.getPersistentRDDs.keySet & left).isEmpty,
       "the next sample must start with no block of the last one's checkpoints")
+  }
+
+  test("runner: the timed action runs every join of the entry's frame") {
+    // under count(), x131's left joins to its unique-keyed per-doc counts
+    // and rebuilt texts were pruned with the columns nothing counted
+    val name = "x131_decontaminated_rewrite"
+    def joins(qe: QueryExecution): Int = qe.optimizedPlan.collect { case j: Join => j }.size
+    val frameJoins = joins(SparkEntry.queries(name)(spark, sfDir).queryExecution)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, durationNs: Long): Unit = {
+        seen.add(qe); ()
+      }
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    GraftBridge.awaitListenerBus(spark)
+    spark.listenerManager.register(listener)
+    try {
+      Harness.entry(spark, name, sfDir).run()
+      GraftBridge.awaitListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    assert(frameJoins >= 4)
+    assert(joins(seen.asScala.last) === frameJoins)
   }
 
   test("record line: one line of JSON, even when an error message holds a newline") {
