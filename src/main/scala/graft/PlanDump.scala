@@ -13,8 +13,19 @@ object PlanDump {
     val spark = Harness.session(8)
     for (n <- names) {
       println(s"===== $n")
-      println(Harness.explainEntry(spark, n, dir, SimpleMode))
+      println(normalize(Harness.explainEntry(spark, n, dir, SimpleMode)))
     }
     spark.stop()
   }
+
+  /** `plan` with the tokens that vary from run to run blanked, so two
+    * dumps of one tree diff clean: expression ids (`#6720`, `obj#39`),
+    * lambda class numbers and object hashes, `plan_id`s, the application
+    * id in per-run temp paths, and timing metrics. The spec suite matches
+    * `#\d+` in [[Harness.explainEntry]]'s output, so the blanking is
+    * done here, for the plan mains only. */
+  def normalize(plan: String): String =
+    Seq("#\\d+" -> "#", "(\\$Lambda)(\\$\\d+)?/0x\\p{XDigit}+@\\p{XDigit}+" -> "$1",
+      "plan_id=\\d+" -> "plan_id=", "local-\\d+" -> "local-", "(\\w+Time)=\\d+" -> "$1=")
+      .foldLeft(plan) { case (s, (re, to)) => s.replaceAll(re, to) }
 }

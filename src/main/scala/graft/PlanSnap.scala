@@ -28,7 +28,7 @@ object PlanSnap {
     Files.createDirectories(Paths.get(s"plans/$tag"))
     for (n <- names) {
       val txt =
-        try Harness.explainEntry(spark, n, dir, ExplainMode.fromString("formatted"))
+        try PlanDump.normalize(Harness.explainEntry(spark, n, dir, ExplainMode.fromString("formatted")))
         catch { case e: Throwable => s"ERROR: ${e.getMessage}" }
       Files.writeString(Paths.get(s"plans/$tag/${n}_$suffix.txt"), txt)
       println(s"[plansnap] wrote plans/$tag/${n}_$suffix.txt (${txt.length} chars)")

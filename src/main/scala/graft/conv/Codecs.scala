@@ -94,11 +94,20 @@ object Codecs {
     catch { case e: ArithmeticException => throw outOfRange(WellKnown.TimeOfDayName,
       s"hours=$hours minutes=$minutes seconds=$seconds nanos=$nanos", e) }
 
-  /** Ticks → the TimeOfDay's (hours, minutes, seconds, nanos). */
-  def timeOfDayFields(ticks: Long, cfg: GraftConfig): Array[Int] = {
-    val totalNanos = ticks * cfg.timeOfDayUnit.nanos
-    Array((totalNanos / 3600000000000L).toInt, ((totalNanos / 60000000000L) % 60).toInt,
-      ((totalNanos / 1000000000L) % 60).toInt, (totalNanos % 1000000000L).toInt)
+  /** Ticks → the TimeOfDay's nanoseconds, which [[timeOfDayField]] splits
+    * into its fields; ticks past a Long of nanoseconds raise. */
+  def timeOfDayNanos(ticks: Long, cfg: GraftConfig): Long =
+    try Math.multiplyExact(ticks, cfg.timeOfDayUnit.nanos)
+    catch { case e: ArithmeticException =>
+      throw outOfRange(WellKnown.TimeOfDayName, s"ticks=$ticks", e) }
+
+  /** TimeOfDay field `number` (1 hours, 2 minutes, 3 seconds, 4 nanos) of
+    * [[timeOfDayNanos]]'s `nanos`. */
+  def timeOfDayField(nanos: Long, number: Int): Int = number match {
+    case 1 => (nanos / 3600000000000L).toInt
+    case 2 => ((nanos / 60000000000L) % 60).toInt
+    case 3 => ((nanos / 1000000000L) % 60).toInt
+    case _ => (nanos % 1000000000L).toInt
   }
 
   /** Duration → ticks of the configured unit. */
@@ -274,9 +283,9 @@ object Codecs {
       }
     case PMessage(WellKnown.TimeOfDayName) =>
       v => {
-        val hmsn = timeOfDayFields(toLong(v), cfg)
-        DynamicMessage(WellKnown.timeOfDay,
-          Map(1 -> hmsn(0), 2 -> hmsn(1), 3 -> hmsn(2), 4 -> hmsn(3)))
+        val n = timeOfDayNanos(toLong(v), cfg)
+        DynamicMessage(WellKnown.timeOfDay, Map(1 -> timeOfDayField(n, 1),
+          2 -> timeOfDayField(n, 2), 3 -> timeOfDayField(n, 3), 4 -> timeOfDayField(n, 4)))
       }
     case PMessage(WellKnown.DurationName) =>
       v => {

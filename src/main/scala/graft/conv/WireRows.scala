@@ -378,14 +378,14 @@ object WireRows {
         }
       }
 
-    /** Runs the reference decoder over message-like occurrences that are
-      * not written, so they reject what a decode rejects; an empty one
-      * only counts its depth, as there. */
+    /** Runs the reference decoder's check-only walk over message-like
+      * occurrences that are not written, so they reject what a decode
+      * rejects; an empty one only counts its depth, as there. */
     private def check(r: Reader, rgs: Ranges, depth: Int): Unit = {
       var i = 0
       while (i < rgs.n) {
         rgs.window(r, i)
-        if (r.hasMore) ProtoWire.decodeReader(r, v.md, v.reg, depth) else ProtoWire.checkDepth(depth)
+        if (r.hasMore) ProtoWire.checkReader(r, v.md, v.reg, depth) else ProtoWire.checkDepth(depth)
         i += 1
       }
     }
@@ -757,9 +757,9 @@ object WireRows {
           if (ld == null) varintFields(w, tag, 0L, 0L, 0L, 0L)
           else varintFields(w, tag, ld.getYear, ld.getMonthValue, ld.getDayOfMonth, 0L)
         case KTimeOfDay =>
-          val nanos = long(g, i) * cfg.timeOfDayUnit.nanos
-          varintFields(w, tag, (nanos / 3600000000000L).toInt, ((nanos / 60000000000L) % 60).toInt,
-            ((nanos / 1000000000L) % 60).toInt, (nanos % 1000000000L).toInt)
+          val n = Codecs.timeOfDayNanos(long(g, i), cfg)
+          varintFields(w, tag, Codecs.timeOfDayField(n, 1), Codecs.timeOfDayField(n, 2),
+            Codecs.timeOfDayField(n, 3), Codecs.timeOfDayField(n, 4))
         case KDuration =>
           val ticks = long(g, i)
           varintFields(w, tag, Codecs.durationSeconds(ticks, cfg), Codecs.durationNanos(ticks, cfg), 0L, 0L)

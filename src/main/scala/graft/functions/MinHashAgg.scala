@@ -6,11 +6,13 @@ import org.apache.spark.sql.expressions.Aggregator
 /** MinHash signature as a typed Aggregator (SURVEY.md §7.3 "custom
   * Aggregator: minhash signatures for near-dedup").
   *
-  * Input rows are (doc_id, shingle, h32) tuples; the buffer is the running
-  * elementwise minimum of the K permuted hashes h_k(x) = ((2k+1)·x + k²+1)
-  * mod p — identical to the expression pipeline in
-  * [[graft.operators.Dedup.d28MinhashLsh]], so both paths produce the same
-  * signatures.
+  * The input is one shingle hash (a Long) per row, aggregated per group
+  * key; the buffer is the running elementwise minimum of the K permuted
+  * hashes h_k(x) = ((2k+1)·x + k²+1) mod p — identical to the expression
+  * pipeline in [[graft.operators.Dedup.d28MinhashLsh]], so both paths
+  * produce the same signatures. [[reduce]] is the one JVM statement of
+  * the permutations: `Dedup.minhashSig` (the streaming near-dup tier)
+  * folds it over a shingle set.
   *
   * Elementwise min is associative and commutative → Spark runs the partial
   * (map-side) aggregation automatically, shuffling only K longs per key;
@@ -19,9 +21,8 @@ import org.apache.spark.sql.expressions.Aggregator
 final class MinHashAgg(k: Int) extends Aggregator[Long, Array[Long], Seq[Long]] {
   private val P = 2147483647L
 
-  // empty-input sentinel is P (every permuted hash is < P), matching
-  // Dedup.minhashSig's empty-set signature — the two "identical paths"
-  // must agree even on an unreduced buffer
+  // empty-input sentinel is P (every permuted hash is < P), so an empty
+  // set's signature never collides with a real minimum
   def zero: Array[Long] = Array.fill(k)(P)
 
   def reduce(buf: Array[Long], h: Long): Array[Long] = {

@@ -2,6 +2,7 @@ package graft.multimodal
 
 import java.security.MessageDigest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.operators.H
 
 /** A media blob in flight: opaque bytes + typed metadata.
   * (Mirrors the reference's posture of typed schemas around opaque payloads;
@@ -22,20 +23,19 @@ trait MediaCodec extends Serializable {
   * container). "Dimensions" and "mean pixel" derive from a 32-bit md5-prefix
   * hash of the payload so the DuckDB oracle can recompute them exactly. */
 object StubImageCodec extends MediaCodec {
-  private def md5Hex(b: Array[Byte]): String =
-    MessageDigest.getInstance("MD5").digest(b).map("%02x".format(_)).mkString
-
-  /** Same 32-bit hash as [[graft.operators.H]]: first 8 md5 hex chars. */
-  def h32(b: Array[Byte]): Long =
-    java.lang.Long.parseLong(md5Hex(b).substring(0, 8), 16)
+  /** Same 32-bit hash as [[graft.operators.H]] over the payload bytes. A
+    * digest per call: MessageDigest is not thread-safe, and this object is
+    * shared by every task of the executor. */
+  def h32(b: Array[Byte]): Long = H.prefix(MessageDigest.getInstance("MD5").digest(b), 32)
 
   def decode(blob: MediaBlob): MediaFeatures = {
-    val h = h32(blob.data)
+    val dg = MessageDigest.getInstance("MD5").digest(blob.data)
+    val h = H.prefix(dg, 32)
     val hr = h32(blob.data.reverse)
     MediaFeatures(
       doc_id = blob.doc_id,
       n_bytes = blob.data.length.toLong,
-      content_md5 = md5Hex(blob.data),
+      content_md5 = dg.map("%02x".format(_)).mkString,
       width = h % 640 + 1,
       height = hr % 480 + 1,
       mean_px = (h / 7) % 256,
@@ -83,8 +83,9 @@ object MediaPipeline {
       it.grouped(batchSize).flatMap(_.flatMap { blob =>
         val f = StubImageCodec.decode(blob)
         val n = math.min(f.n_frames, maxFrames.toLong).toInt
+        val h = StubImageCodec.h32(blob.data)
         (0 until n).map { idx =>
-          val frameHash = (StubImageCodec.h32(blob.data) * 31L + idx) % 1000000007L
+          val frameHash = (h * 31L + idx) % 1000000007L
           FrameFeatures(blob.doc_id, idx.toLong, frameHash, frameHash % 256)
         }
       })

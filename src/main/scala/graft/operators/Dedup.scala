@@ -91,26 +91,15 @@ object Dedup {
       it.map { case (id, text) => (id, shingleHashesOf(text, md5)) }
     }
 
+  private val minhash12 = new graft.functions.MinHashAgg(12)
+
   /** 12-permutation minhash signature of a shingle-hash set — the exact
-    * JVM twin of [[sigSpark]]/[[sigDuck]] (h_k(x) = ((2k+1)·x + k²+1) mod
-    * p, min over the set). Empty set → all-p sentinel signature (never
-    * collides with a real minimum, since h_k < p). */
-  private[graft] def minhashSig(th: Array[Long]): Array[Long] = {
-    val p = 2147483647L
-    val sig = Array.fill(12)(p)
-    var i = 0
-    while (i < th.length) {
-      val h = th(i)
-      var k = 0
-      while (k < 12) {
-        val v = ((2 * k + 1) * h + (k * k + 1)) % p
-        if (v < sig(k)) sig(k) = v
-        k += 1
-      }
-      i += 1
-    }
-    sig
-  }
+    * JVM twin of [[sigSpark]]/[[sigDuck]]: a fold of
+    * [[graft.functions.MinHashAgg]]'s buffer, so the streaming tier and the
+    * aggregator share the one permutation loop. Empty set → all-p sentinel
+    * signature (never collides with a real minimum, since h_k < p). */
+  private[graft] def minhashSig(th: Array[Long]): Array[Long] =
+    th.foldLeft(minhash12.zero)(minhash12.reduce)
 
   /** (doc_id, th = distinct shingle hashes) of any (doc_id, text) frame via
     * [[shingleHashKernel]]. */

@@ -74,66 +74,63 @@ object Multimodal {
       .orderBy("doc_id")
   }
 
-  /** m44: media near-dup — perceptual-hash-style duplicate detection over
-    * the opaque media BYTES, the dedup tier of the multimodal story (the
-    * image/video dedup every multimodal training pipeline runs; doc-level
-    * text dedup never sees it). The stub "pHash" is a 32-bit SimHash over
-    * the byte 4-gram multiset of the blob (here the utf-8 stub bytes —
-    * with a real codec the gram source becomes decoded pixel blocks, one
-    * line in the kernel, plan unchanged); pairs at hamming ≤ 3 via the
-    * same 8-bit-chunk pigeonhole join as [[Dedup.d30SimhashPairs]] — a
-    * chunk-equality HASH join, never doc×doc. Vote formulas are shared
-    * with d29/d30 ([[Dedup.simhashSpark]]/[[Dedup.duckSimVote]]) so the
-    * tiers cannot drift. Blobs under 4 bytes have no grams and drop out
-    * by contract (identically in both dialects). */
-  /** JVM kernel for [[m44MediaNeardup]]'s phash: one pass per blob —
-    * slide the 4-byte window, hash each gram ([[H.jvm]], the same first-
-    * 4-md5-bytes derivation as `H.s`/`H.d`), vote the 32 bits
-    * incrementally, emit the majority phash. The SURVEY §7.3 tier (d)
-    * escape, same precedent as `Dedup.shingleHashKernel`: ~2.3M
-    * interpreted substring+md5+conv expression evaluations at sf0.1
-    * become one tight loop (bench 5.8 → sub-second). DedupSpec pins the
-    * kernel bit-equal to the expression form (which the oracle mirrors
-    * in SQL). Contract: gram positions count Java chars — identical to
-    * the SQL dialects on the corpus (ASCII stub bytes); a real binary
-    * codec feeds raw bytes here and the question disappears. */
-  private[operators] def phashKernel(
-      it: Iterator[(Long, String)]): Iterator[(Long, Long)] = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-    val memo = new GramMemo(g => H.jvm(g, md5))
-    it.map { case (id, text) =>
-      val votes = new Array[Int](32)
-      var n = 0
-      var i = 0
-      val L = text.length
-      while (i + 4 <= L) {
-        var h = memo(text.substring(i, i + 4))
-        // iterate SET bits only (vote semantics unchanged — a clear bit
-        // never votes); ~half the inner-loop iterations, branch-free
-        while (h != 0L) {
-          votes(java.lang.Long.numberOfTrailingZeros(h)) += 1
-          h &= h - 1
-        }
-        n += 1
-        i += 1
-      }
-      var ph = 0L
-      var b = 0
-      while (b < 32) {
-        if (2 * votes(b) > n) ph |= (1L << b)
-        b += 1
-      }
-      (id, ph)
-    }
-  }
+  /** JVM kernel for the media phash at `bits` bits (32: [[m44MediaNeardup]]
+    * and [[m46MediaComponents]]; 56: [[m49MediaComponentsScalable]] and
+    * [[m50MediaBestKeeper]]): one pass per blob — slide the 4-byte window,
+    * hash each gram ([[H.jvm]] at the same width, the derivation of
+    * `H.s`/`H.d`), vote the bits incrementally, emit the majority phash.
+    * The SURVEY §7.3 tier (d) escape, same precedent as
+    * `Dedup.shingleHashKernel`: ~2.3M interpreted substring+md5+conv
+    * expression evaluations at sf0.1 become one tight loop (bench 5.8 →
+    * sub-second). DedupSpec pins each width bit-equal to
+    * [[phashExprForm]] (which the oracles mirror in SQL). Contract: gram
+    * positions count Java chars — identical to the SQL dialects on the
+    * corpus (ASCII stub bytes); a real binary codec feeds raw bytes here
+    * and the question disappears.
+    *
+    * A Map from width to kernel, so each width's kernel is one stable
+    * function value: every MapPartitions plan over it canonicalizes equal
+    * (see `Dedup.shingleHashKernel`). */
+  private[operators] val phashKernel: Map[Int, Iterator[(Long, String)] => Iterator[(Long, Long)]] =
+    Seq(32, 56).map(bits => bits -> phashVote(bits)).toMap
 
-  /** Per-task gram→hash memo for the phash kernels (r12 optimization,
+  private def phashVote(bits: Int): Iterator[(Long, String)] => Iterator[(Long, Long)] =
+    it => {
+      val md5 = java.security.MessageDigest.getInstance("MD5")
+      val memo = new GramMemo(g => H.jvm(g, md5, bits))
+      it.map { case (id, text) =>
+        val votes = new Array[Int](bits)
+        var n = 0
+        var i = 0
+        val L = text.length
+        while (i + 4 <= L) {
+          var h = memo(text.substring(i, i + 4))
+          // iterate SET bits only (vote semantics unchanged — a clear bit
+          // never votes); ~half the inner-loop iterations, branch-free
+          while (h != 0L) {
+            votes(java.lang.Long.numberOfTrailingZeros(h)) += 1
+            h &= h - 1
+          }
+          n += 1
+          i += 1
+        }
+        var ph = 0L
+        var b = 0
+        while (b < bits) {
+          if (2 * votes(b) > n) ph |= (1L << b)
+          b += 1
+        }
+        (id, ph)
+      }
+    }
+
+  /** Per-task gram→hash memo for [[phashKernel]] (r12 optimization,
     * guide §1.2 step 2): the 4-char sliding grams repeat heavily within
     * and across documents, so one md5 per DISTINCT gram replaces one md5
-    * per POSITION — the hash VALUES are unchanged (same [[H.jvm]]/
-    * [[H.jvm56]] derivation; DedupSpec pins the kernels bit-equal to the
-    * expression forms the oracles mirror). The map resets at 2^20
-    * entries so a pathological task's memo stays bounded. */
+    * per POSITION — the hash VALUES are unchanged (same [[H.jvm]]
+    * derivation; DedupSpec pins the kernels bit-equal to the expression
+    * forms the oracles mirror). The map resets at 2^20 entries so a
+    * pathological task's memo stays bounded. */
   private final class GramMemo(f: String => Long) {
     private val m = new java.util.HashMap[String, java.lang.Long](1 << 16)
     def apply(g: String): Long = {
@@ -147,26 +144,51 @@ object Multimodal {
     }
   }
 
-  /** The interpreted-expression form of the phash — the formula the
-    * DuckDB oracle mirrors; kept as the spec baseline [[phashKernel]] is
-    * pinned bit-equal to. */
-  private[operators] def phashExprForm(docs: org.apache.spark.sql.DataFrame)
+  /** The interpreted-expression form of the `bits`-bit phash — the
+    * formula the DuckDB oracles mirror ([[duckMediaSim]]); kept as the
+    * spec baseline [[phashKernel]] is pinned bit-equal to. The vote is
+    * [[Dedup.simhashSparkBits]], shared with d29/d30's SimHash, so the
+    * tiers cannot drift. */
+  private[operators] def phashExprForm(docs: org.apache.spark.sql.DataFrame, bits: Int)
       : org.apache.spark.sql.DataFrame =
     docs
       .filter(length(col("text")) >= 4)
       .selectExpr("doc_id",
         s"transform(sequence(1, length(text) - 3), " +
-          s"i -> ${H.s("substring(text, i, 4)")}) as th")
-      .selectExpr("doc_id", s"${Dedup.simhashSpark} as phash")
+          s"i -> ${H.s("substring(text, i, 4)", bits)}) as th")
+      .selectExpr("doc_id", s"${Dedup.simhashSparkBits(bits)} as phash")
+
+  /** The media sim stage: (doc_id, phash) at `bits` bits for every blob
+    * of at least 4 bytes (shorter blobs have no grams and drop out by
+    * contract, identically in both dialects), through [[phashKernel]],
+    * checkpointed before the candidate fan-out so the pass runs once per
+    * doc. Both candidate schemes read it: [[mediaPairs]] and
+    * [[mediaPairs56]]. */
+  private def mediaSim(spark: org.apache.spark.sql.SparkSession, dir: String,
+      bits: Int): org.apache.spark.sql.DataFrame = {
+    val spark2 = spark
+    import spark2.implicits._
+    T(spark, dir, "documents")
+      .filter(length(col("text")) >= 4)
+      .select(col("doc_id"), col("text")).as[(Long, String)]
+      .mapPartitions(phashKernel(bits))
+      .toDF("doc_id", "phash")
+      .ckpt
+  }
+
+  /** DuckDB dialect of [[mediaSim]]: the `th0` gram-hash and `sim`
+    * (doc_id, phash) CTEs. */
+  private def duckMediaSim(bits: Int) =
+    s"""th0 AS (SELECT doc_id, list_transform(range(1, length(text) - 2),
+                  i -> ${H.d("substring(text, CAST(i AS INTEGER), 4)", bits)}) AS th
+                FROM documents WHERE length(text) >= 4),
+        sim AS (SELECT doc_id, ${Dedup.duckSimVoteBits(bits)} AS phash FROM th0)"""
 
   /** The m44 candidate CTE chain (phash -> chunks -> verified pairs as
     * `cand(a_id, ph_a, b_id, ph_b)`), shared verbatim by the m44 oracle
     * and the m46 component oracle. */
   private def duckMediaCtes =
-    s"""th0 AS (SELECT doc_id, list_transform(range(1, length(text) - 2),
-                  i -> ${H.d("substring(text, CAST(i AS INTEGER), 4)")}) AS th
-                FROM documents WHERE length(text) >= 4),
-        sim AS (SELECT doc_id, ${Dedup.duckSimVote} AS phash FROM th0),
+    s"""${duckMediaSim(32)},
         chunk AS (SELECT doc_id, phash, c,
                          (phash >> CAST(c*8 AS INTEGER)) & 255 AS cv
                   FROM sim, range(0, 4) r(c)),
@@ -177,21 +199,13 @@ object Multimodal {
                  WHERE bit_count(xor(a.phash, b.phash)) <= 3)"""
 
   /** Spark twin of [[duckMediaCtes]]: the verified media pair list
-    * (a_id, b_id, ph_a, ph_b), shared by [[m44MediaNeardup]] and
-    * [[m46MediaComponents]]. */
+    * (a_id, b_id, ph_a, ph_b) over the 32-bit phash, found through the
+    * 8-bit-chunk pigeonhole join of [[Dedup.d30SimhashPairs]] (pairs at
+    * hamming ≤ 3 share a chunk) — a chunk-equality HASH join, never
+    * doc×doc. Shared by [[m44MediaNeardup]] and [[m46MediaComponents]]. */
   private[operators] def mediaPairs(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    // JVM kernel (bit-equal to the expression form, DedupSpec-pinned);
-    // checkpoint before the chunk fan-out so the pass runs once per doc
-    val spark2 = spark
-    import spark2.implicits._
-    val sim = T(spark, dir, "documents")
-      .filter(length(col("text")) >= 4)
-      .select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions(phashKernel)
-      .toDF("doc_id", "phash")
-      .ckpt
-    val chunk = sim
+    val chunk = mediaSim(spark, dir, 32)
       .select(col("doc_id"), col("phash"), explode(expr("sequence(0, 3)")).as("c"))
       .withColumn("cv", expr("shiftright(phash, c*8) & 255"))
     chunk.select(col("c"), col("cv"), col("doc_id").as("a_id"), col("phash").as("ph_a"))
@@ -202,6 +216,14 @@ object Multimodal {
       .select("a_id", "b_id", "ph_a", "ph_b").distinct()
   }
 
+  /** m44: media near-dup — perceptual-hash-style duplicate detection over
+    * the opaque media BYTES, the dedup tier of the multimodal story (the
+    * image/video dedup every multimodal training pipeline runs; doc-level
+    * text dedup never sees it). The stub "pHash" is a 32-bit SimHash over
+    * the byte 4-gram multiset of the blob (here the utf-8 stub bytes —
+    * with a real codec the gram source becomes decoded pixel blocks, one
+    * line in the kernel, plan unchanged); pairs at hamming ≤ 3 via
+    * [[mediaPairs]]. */
   val m44MediaNeardup = Q(
     "m44_media_neardup",
     s"""WITH $duckMediaCtes
@@ -235,7 +257,7 @@ object Multimodal {
 
   /** Fingerprint geometry of the SCALABLE media tier ([[mediaPairs56]]):
     * 56-bit phash (the widest md5 prefix both SQL engines handle in
-    * signed-bigint arithmetic, [[H.s56]]), split into [[NBlocks]] blocks
+    * signed-bigint arithmetic, [[H.prefix]]), split into [[NBlocks]] blocks
     * of [[BlockBits]] bits; a pair at hamming ≤ [[Ham56]] corrupts at
     * most Ham56 blocks, so at least NBlocks − Ham56 = 5 blocks survive
     * intact — candidates are found by joining on every C(8,5) = 56
@@ -249,50 +271,6 @@ object Multimodal {
     * ONE definition both dialects' candidate tables are generated from. */
   private[operators] val combos5: Seq[Seq[Int]] =
     (0 until NBlocks).combinations(NBlocks - Ham56).map(_.toSeq).toSeq
-
-  /** 56-bit twin of [[phashKernel]] — same byte-4-gram vote loop, gram
-    * hashes widened to [[H.jvm56]]. Spec-pinned bit-equal to the
-    * expression form (which the m49 oracle mirrors in SQL). */
-  private[operators] def phash56Kernel(
-      it: Iterator[(Long, String)]): Iterator[(Long, Long)] = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-    val memo = new GramMemo(g => H.jvm56(g, md5))
-    it.map { case (id, text) =>
-      val votes = new Array[Int](56)
-      var n = 0
-      var i = 0
-      val L = text.length
-      while (i + 4 <= L) {
-        var h = memo(text.substring(i, i + 4))
-        while (h != 0L) {
-          votes(java.lang.Long.numberOfTrailingZeros(h)) += 1
-          h &= h - 1
-        }
-        n += 1
-        i += 1
-      }
-      var ph = 0L
-      var b = 0
-      while (b < 56) {
-        if (2 * votes(b) > n) ph |= (1L << b)
-        b += 1
-      }
-      (id, ph)
-    }
-  }
-
-  /** Expression form of the 56-bit phash — the formula the m49 oracle
-    * mirrors and the spec baseline [[phash56Kernel]] is pinned bit-equal
-    * to (vote builder shared with the 32-bit tier via
-    * [[Dedup.simhashSparkBits]]). */
-  private[operators] def phash56ExprForm(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    docs
-      .filter(length(col("text")) >= 4)
-      .selectExpr("doc_id",
-        s"transform(sequence(1, length(text) - 3), " +
-          s"i -> ${H.s56("substring(text, i, 4)")}) as th")
-      .selectExpr("doc_id", s"${Dedup.simhashSparkBits(56)} as phash")
 
   /** Verified media pairs at hamming ≤ [[Ham56]] on the 56-bit phash via
     * the [[combos5]] candidate tables — the scale-safe replacement for
@@ -308,14 +286,7 @@ object Multimodal {
     * against brute-force hamming at sf0.001. */
   private[operators] def mediaPairs56(spark: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val spark2 = spark
-    import spark2.implicits._
-    val sim = T(spark, dir, "documents")
-      .filter(length(col("text")) >= 4)
-      .select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions(phash56Kernel)
-      .toDF("doc_id", "phash")
-      .ckpt
+    val sim = mediaSim(spark, dir, 56)
     // ONE candidate key per (row, combo), combo index tagged in the high
     // bits (keys are 35 bits; << 36 keeps tables disjoint): the keys are
     // a literal 56-element array of constant-folded shift/mask
@@ -350,16 +321,13 @@ object Multimodal {
   /** The m49 candidate CTE chain in DuckDB — 56-bit phash + the same
     * [[combos5]]-generated candidate tables (VALUES rows emitted from the
     * ONE Scala definition, so the dialects cannot drift). */
-  private def duckMedia56Ctes: String = {
+  private def duckMediaComboCtes: String = {
     val comboRows = combos5.zipWithIndex
       .map { case (bs, i) => s"($i, ${bs.mkString(", ")})" }.mkString(", ")
     val keyExpr = (0 until (NBlocks - Ham56))
       .map(j => s"(((phash >> ($BlockBits * b$j)) & ${(1 << BlockBits) - 1}) << ${BlockBits * j})")
       .mkString(" + ")
-    s"""th0 AS (SELECT doc_id, list_transform(range(1, length(text) - 2),
-                  i -> ${H.d56("substring(text, CAST(i AS INTEGER), 4)")}) AS th
-                FROM documents WHERE length(text) >= 4),
-        sim AS (SELECT doc_id, ${Dedup.duckSimVoteBits(56)} AS phash FROM th0),
+    s"""${duckMediaSim(56)},
         combo(cid, ${(0 until (NBlocks - Ham56)).map("b" + _).mkString(", ")}) AS
           (VALUES $comboRows),
         keyed AS (SELECT doc_id, phash, cid, $keyExpr AS k FROM sim, combo),
@@ -380,7 +348,7 @@ object Multimodal {
     * contract-confined at base SF, the d30 precedent). */
   val m49MediaComponentsScalable = Q(
     "m49_media_components_scalable",
-    s"""WITH RECURSIVE $duckMedia56Ctes,
+    s"""WITH RECURSIVE $duckMediaComboCtes,
         ${Dedup.duckComponents("cand")},
         ${Dedup.duckComponentRows}""") { (spark, dir) =>
     Dedup.connectedComponents(mediaPairs56(spark, dir))
@@ -399,7 +367,7 @@ object Multimodal {
     * the keeper re-attach is a component-keyed join — d39's posture. */
   val m50MediaBestKeeper = Q(
     "m50_media_best_keeper",
-    s"""WITH RECURSIVE $duckMedia56Ctes,
+    s"""WITH RECURSIVE $duckMediaComboCtes,
         ${Dedup.duckComponents("cand")},
         ${Dedup.duckComponentSizes},
         mem AS (SELECT c.doc_id, c.component, s.n_members,
@@ -439,6 +407,26 @@ object Multimodal {
   private val FrameLen = 256
   private val SilenceE = 60000L
 
+  // The stub sample decode (each char code − 64, signed), the frame
+  // windows (FrameLen samples, last frame ragged) and the per-frame
+  // energy (Σ s²) that m45 and m47 both run, once per dialect. They are
+  // expression strings, not a shared frame, so each entry's projection
+  // chain stays its own.
+  private val samplesS =
+    "transform(sequence(1, length(text)), i -> ascii(substring(text, i, 1)) - 64) as s"
+  private val framesS = s"sequence(0, (size(s) + ${FrameLen - 1}) div $FrameLen - 1)"
+  private val windowS = s"slice(s, f*$FrameLen+1, $FrameLen)"
+  private val energyS = s"transform($framesS, f -> aggregate($windowS, 0L, (a, x) -> a + x * x)) as fe"
+  private val samplesD =
+    """ch AS (SELECT doc_id, list_transform(range(1, length(text) + 1),
+                        i -> ascii(substring(text, CAST(i AS INTEGER), 1)) - 64) AS s
+                      FROM documents WHERE length(text) >= 1)"""
+  private val framesD = s"range(0, (len(s) + ${FrameLen - 1}) // $FrameLen)"
+  private val windowD = s"list_slice(s, f*$FrameLen+1, f*$FrameLen+$FrameLen)"
+  private val energyD =
+    s"""list_transform($framesD,
+                          f -> list_sum(list_transform($windowD, x -> x * x))) AS fe"""
+
   /** m45: audio-frame FEATURES — the audio tier of the multimodal story.
     * The blob's bytes are read as a PCM-like sample stream (stub: each
     * char code − 64, signed; a real audio codec decodes samples here and
@@ -456,18 +444,14 @@ object Multimodal {
     * collection — embarrassingly parallel at any corpus size, the same
     * posture as m41-m43. */
   val m45AudioFrames = Q(
-    "m45_audio_frames", {
-      val wD = s"list_slice(s, f*$FrameLen+1, f*$FrameLen+$FrameLen)"
-      s"""WITH ch AS (SELECT doc_id, list_transform(range(1, length(text) + 1),
-                        i -> ascii(substring(text, CAST(i AS INTEGER), 1)) - 64) AS s
-                      FROM documents WHERE length(text) >= 1),
+    "m45_audio_frames",
+    s"""WITH $samplesD,
           fx AS (SELECT doc_id, len(s) AS n_samples,
-                        list_transform(range(0, (len(s) + ${FrameLen - 1}) // $FrameLen),
-                          f -> list_sum(list_transform($wD, x -> x * x))) AS fe,
-                        list_transform(range(0, (len(s) + ${FrameLen - 1}) // $FrameLen),
-                          f -> CASE WHEN len($wD) < 2 THEN 0
-                                    ELSE list_sum(list_transform(range(1, len($wD)),
-                                           i -> CASE WHEN $wD[i] * $wD[i+1] < 0
+                        $energyD,
+                        list_transform($framesD,
+                          f -> CASE WHEN len($windowD) < 2 THEN 0
+                                    ELSE list_sum(list_transform(range(1, len($windowD)),
+                                           i -> CASE WHEN $windowD[i] * $windowD[i+1] < 0
                                                      THEN 1 ELSE 0 END)) END) AS fz
                  FROM ch)
           SELECT doc_id, CAST(n_samples AS BIGINT) AS n_samples,
@@ -476,19 +460,14 @@ object Multimodal {
                  CAST(list_max(fe) AS BIGINT) AS max_frame_energy,
                  CAST(len(list_filter(fe, e -> e < $SilenceE)) AS BIGINT) AS n_silent,
                  CAST(list_sum(fz) AS BIGINT) AS n_zero_cross
-          FROM fx ORDER BY doc_id"""
-    }) { (spark, dir) =>
-    val wS = s"slice(s, f*$FrameLen+1, $FrameLen)"
+          FROM fx ORDER BY doc_id""") { (spark, dir) =>
     T(spark, dir, "documents")
       .filter(length(col("text")) >= 1)
-      .selectExpr("doc_id",
-        "transform(sequence(1, length(text)), i -> ascii(substring(text, i, 1)) - 64) as s")
-      .selectExpr("doc_id", "cast(size(s) as bigint) as n_samples",
-        s"transform(sequence(0, (size(s) + ${FrameLen - 1}) div $FrameLen - 1), " +
-          s"f -> aggregate($wS, 0L, (a, x) -> a + x * x)) as fe",
-        s"transform(sequence(0, (size(s) + ${FrameLen - 1}) div $FrameLen - 1), " +
-          s"f -> IF(size($wS) < 2, 0L, aggregate(sequence(1, size($wS) - 1), 0L, " +
-          s"(a, i) -> a + IF(element_at($wS, i) * element_at($wS, i + 1) < 0, 1L, 0L)))) as fz")
+      .selectExpr("doc_id", samplesS)
+      .selectExpr("doc_id", "cast(size(s) as bigint) as n_samples", energyS,
+        s"transform($framesS, f -> IF(size($windowS) < 2, 0L, " +
+          s"aggregate(sequence(1, size($windowS) - 1), 0L, " +
+          s"(a, i) -> a + IF(element_at($windowS, i) * element_at($windowS, i + 1) < 0, 1L, 0L)))) as fz")
       .selectExpr("doc_id", "n_samples",
         "cast(size(fe) as bigint) as n_frames",
         "aggregate(fe, 0L, (a, e) -> a + e) as total_energy",
@@ -512,14 +491,10 @@ object Multimodal {
     * the per-blob cut list, bounded by frame count), no shuffle — the
     * m45 posture with q79's lag shape moved inside the row. */
   val m47SceneCuts = Q(
-    "m47_scene_cuts", {
-      val wD = s"list_slice(s, f*$FrameLen+1, f*$FrameLen+$FrameLen)"
-      s"""WITH ch AS (SELECT doc_id, list_transform(range(1, length(text) + 1),
-                        i -> ascii(substring(text, CAST(i AS INTEGER), 1)) - 64) AS s
-                      FROM documents WHERE length(text) >= 1),
+    "m47_scene_cuts",
+    s"""WITH $samplesD,
           fx AS (SELECT doc_id,
-                        list_transform(range(0, (len(s) + ${FrameLen - 1}) // $FrameLen),
-                          f -> list_sum(list_transform($wD, x -> x * x))) AS fe
+                        $energyD
                  FROM ch),
           cut0 AS (SELECT doc_id,
                           list_filter(list_transform(range(1, len(fe)),
@@ -531,16 +506,11 @@ object Multimodal {
                  CAST(u.e_prev AS BIGINT) AS e_prev,
                  CAST(u.e_cur AS BIGINT) AS e_cur,
                  CAST(abs(u.e_cur - u.e_prev) AS BIGINT) AS delta
-          FROM ex ORDER BY doc_id, frame"""
-    }) { (spark, dir) =>
-    val wS = s"slice(s, f*$FrameLen+1, $FrameLen)"
+          FROM ex ORDER BY doc_id, frame""") { (spark, dir) =>
     T(spark, dir, "documents")
       .filter(length(col("text")) >= 1)
-      .selectExpr("doc_id",
-        "transform(sequence(1, length(text)), i -> ascii(substring(text, i, 1)) - 64) as s")
-      .selectExpr("doc_id",
-        s"transform(sequence(0, (size(s) + ${FrameLen - 1}) div $FrameLen - 1), " +
-          s"f -> aggregate($wS, 0L, (a, x) -> a + x * x)) as fe")
+      .selectExpr("doc_id", samplesS)
+      .selectExpr("doc_id", energyS)
       // checkpoint = a collapse barrier (the m44 precedent): the cut step
       // references fe four times, and with the projections collapsed
       // each reference re-inlines fe's whole O(len) construction chain

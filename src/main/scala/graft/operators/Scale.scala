@@ -606,8 +606,9 @@ object Scale {
   }
 
   /** One-time text-format re-layouts of a lineitem projection (CSV and
-    * JSON-lines), written to tmpdir keyed by the source dir (the
-    * [[bucketedTables]] guard pattern). Explicit schemas on read — at
+    * JSON-lines), written to tmpdir keyed by [[sourceKey]] (the source
+    * table's content) and rewritten unless a finished write (`_SUCCESS`)
+    * is there. Explicit schemas on read — at
     * 100 TB schema INFERENCE is a full extra scan of the corpus, so
     * the engine never relies on it; both formats stay splittable (CSV
     * single-line records, JSON as JSONL), so the scans parallelize

@@ -125,16 +125,10 @@ object Similarity {
     math.max(NumHp, math.ceil(math.log(math.max(n, 1L).toDouble /
       KnnBucketCap) / math.log(2.0)).toInt)
 
-  private[operators] def hpWeightsFor(nHp: Int): IndexedSeq[IndexedSeq[Long]] =
-    (0 until nHp).map { b =>
-      (0 until Dim).map { d =>
-        val md5 = java.security.MessageDigest.getInstance("MD5")
-          .digest(s"hp${b}_$d".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        // h32 = first 8 hex chars of md5 as unsigned 32-bit (H.s / H.d)
-        val h32 = java.lang.Long.parseLong(md5.take(4).map(x => f"$x%02x").mkString, 16)
-        h32 % 2001 - 1000
-      }
-    }
+  private[operators] def hpWeightsFor(nHp: Int): IndexedSeq[IndexedSeq[Long]] = {
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+    (0 until nHp).map(b => (0 until Dim).map(d => H.jvm(s"hp${b}_$d", md5) % 2001 - 1000))
+  }
   private def wLitDuckFor(nHp: Int) =
     hpWeightsFor(nHp).map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
   /** 1-row CTE carrying the literal weight matrix (cross-joined in). */

@@ -6,49 +6,42 @@ import Ckpt.Reuse
 /** Shared deterministic hashing used by the text/dedup/similarity operators.
   *
   * Both the Spark implementation and the DuckDB oracle need the *same* hash
-  * function, so we derive a 32-bit unsigned value from the first 8 hex chars
-  * of a standard md5 — computable with built-ins on both engines (and fully
-  * codegen'd on the Spark side: md5/substring/conv are native expressions).
+  * function, so we derive an unsigned value from a prefix of a standard md5
+  * (32 bits = the first 8 hex chars unless a caller asks for more) —
+  * computable with built-ins on both engines (and fully codegen'd on the
+  * Spark side: md5/substring/conv are native expressions).
   * All downstream arithmetic stays below 2^63 (DuckDB errors on overflow
   * instead of wrapping, so the two engines would otherwise diverge).
   */
 object H {
-  /** Spark SQL dialect: 32-bit hash of expression `x` as bigint. */
-  def s(x: String): String =
-    s"cast(conv(substring(md5($x),1,8),16,10) as bigint)"
+  /** Spark SQL dialect: the `bits`-bit hash of expression `x` as bigint
+    * (the first `bits / 4` md5 hex chars). */
+  def s(x: String, bits: Int = 32): String =
+    s"cast(conv(substring(md5($x),1,${bits / 4}),16,10) as bigint)"
   /** DuckDB dialect of the same hash. */
-  def d(x: String): String =
-    s"CAST('0x' || substring(md5($x),1,8) AS BIGINT)"
-  /** JVM twin of the same hash (first 4 md5 bytes, unsigned) — the ONE
-    * place the bit assembly lives; the shingle kernel and the spec-side
-    * recomputations all call this, so the three dialects cannot drift
-    * apart one copy at a time. `md5` is caller-provided so tight loops
-    * reuse one instance. */
-  def jvm(x: String, md5: java.security.MessageDigest): Long = {
+  def d(x: String, bits: Int = 32): String =
+    s"CAST('0x' || substring(md5($x),1,${bits / 4}) AS BIGINT)"
+  /** JVM twin of the same hash: the first `bits / 8` bytes of the utf-8
+    * md5 digest, big-endian, unsigned. `md5` is caller-provided so tight
+    * loops reuse one instance. */
+  def jvm(x: String, md5: java.security.MessageDigest, bits: Int = 32): Long = {
     md5.reset()
-    val dg = md5.digest(x.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ((dg(0) & 0xFFL) << 24) | ((dg(1) & 0xFFL) << 16) |
-      ((dg(2) & 0xFFL) << 8) | (dg(3) & 0xFFL)
+    prefix(md5.digest(x.getBytes(java.nio.charset.StandardCharsets.UTF_8)), bits)
   }
-
-  /** 56-bit widening of the same derivation (first 14 md5 hex chars =
-    * first 7 digest bytes — the widest md5 prefix that is both a whole
-    * number of bytes for the JVM twin and < 2^63 for both SQL engines'
-    * signed-bigint arithmetic). Used by the scalable media fingerprint
-    * ([[Multimodal.m49MediaComponentsScalable]]) where 32 bits of
-    * fingerprint leave too few distinguishing bits per candidate block. */
-  def s56(x: String): String =
-    s"cast(conv(substring(md5($x),1,14),16,10) as bigint)"
-  /** DuckDB dialect of [[s56]]. */
-  def d56(x: String): String =
-    s"CAST('0x' || substring(md5($x),1,14) AS BIGINT)"
-  /** JVM twin of [[s56]] — first 7 md5 bytes, big-endian. */
-  def jvm56(x: String, md5: java.security.MessageDigest): Long = {
-    md5.reset()
-    val dg = md5.digest(x.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    ((dg(0) & 0xFFL) << 48) | ((dg(1) & 0xFFL) << 40) |
-      ((dg(2) & 0xFFL) << 32) | ((dg(3) & 0xFFL) << 24) |
-      ((dg(4) & 0xFFL) << 16) | ((dg(5) & 0xFFL) << 8) | (dg(6) & 0xFFL)
+  /** The ONE bit assembly of the hash: the first `bits / 8` bytes of an
+    * md5 `digest` as an unsigned big-endian number. Every JVM caller (the
+    * kernels, the stub codec, the hyperplane weights, the spec-side
+    * recomputations) goes through it, so the dialects cannot drift apart
+    * one copy at a time. 56 bits (7 bytes, 14 hex chars) is the widest
+    * prefix that is a whole number of bytes and < 2^63 for both SQL
+    * engines' signed-bigint arithmetic; the scalable media fingerprint
+    * ([[Multimodal.m49MediaComponentsScalable]]) uses it, since 32 bits
+    * leave too few distinguishing bits per candidate block. */
+  def prefix(digest: Array[Byte], bits: Int): Long = {
+    var v = 0L
+    var i = 0
+    while (i < bits / 8) { v = (v << 8) | (digest(i) & 0xFFL); i += 1 }
+    v
   }
 }
 

@@ -357,7 +357,27 @@ object ProtoWire {
     * top-level message is at 0); it consumes the window and raises
     * IllegalArgumentException on exactly what [[decode]] raises on. */
   def decodeReader(r: Reader, md: PMessageDesc, reg: ProtoRegistry,
-      depth: Int): DynamicMessage = {
+      depth: Int): DynamicMessage = walk(r, md, reg, depth, build = true)
+
+  /** [[decodeReader]] building nothing: the same walk over the same window,
+    * rejecting exactly what it rejects, for payloads a codec parses but
+    * never writes. */
+  def checkReader(r: Reader, md: PMessageDesc, reg: ProtoRegistry, depth: Int): Unit =
+    walk(r, md, reg, depth, build = false)
+
+  /** One value of type `t`: read as [[readScalar]] reads it, or in a
+    * check-only walk skipped by its wire type (rejecting what the read
+    * rejects) with message values walked one level deeper. */
+  private def value(r: Reader, t: PType, reg: ProtoRegistry, depth: Int, build: Boolean): Any =
+    if (build) readScalar(r, t, reg, depth)
+    else t match {
+      case PMessage(name) => walk(r.slice(), reg.message(name), reg, depth + 1, build = false)
+      case _ => r.skip(wireType(t)); null
+    }
+
+  /** The decode walk; the message only when `build`, else null. */
+  private def walk(r: Reader, md: PMessageDesc, reg: ProtoRegistry,
+      depth: Int, build: Boolean): DynamicMessage = {
     checkDepth(depth)
     var values = Map.empty[Int, Any]
     while (r.hasMore) {
@@ -380,9 +400,9 @@ object ProtoWire {
             val et = er.varint()
             val ewt = (et & 7).toInt
             (et >>> 3).toInt match {
-              case 1 if ewt == kwt => k = readScalar(er, f.mapKey, reg, depth)
+              case 1 if ewt == kwt => k = value(er, f.mapKey, reg, depth, build)
               case 2 if ewt == vwt =>
-                val x = readScalar(er, f.mapValue, reg, depth)
+                val x = value(er, f.mapValue, reg, depth, build)
                 v = v match {
                   case prev: DynamicMessage => mergeMessages(prev, x.asInstanceOf[DynamicMessage])
                   case _ => x
@@ -390,30 +410,39 @@ object ProtoWire {
               case _ => er.skip(ewt)
             }
           }
-          if (v == null) v = f.mapValue match {
-            case PMessage(name) => DynamicMessage.empty(reg.message(name))
-            case mt => PType.defaultOf(mt)
+          if (build) {
+            if (v == null) v = f.mapValue match {
+              case PMessage(name) => DynamicMessage.empty(reg.message(name))
+              case mt => PType.defaultOf(mt)
+            }
+            val prev = values.getOrElse(num, Map.empty[Any, Any]).asInstanceOf[Map[Any, Any]]
+            values += (num -> (prev + (k -> v)))
           }
-          val prev = values.getOrElse(num, Map.empty[Any, Any]).asInstanceOf[Map[Any, Any]]
-          values += (num -> (prev + (k -> v)))
         case Some(f) if f.repeated =>
-          val prev = values.getOrElse(num, Vector.empty[Any]).asInstanceOf[Vector[Any]]
+          var xs = values.getOrElse(num, Vector.empty[Any]).asInstanceOf[Vector[Any]]
           if (wt == Len && packable(f.typ)) {
             val pr = r.slice()
-            var xs = prev
-            while (pr.hasMore) xs = xs :+ readScalar(pr, f.typ, reg, depth)
-            values += (num -> xs)
-          } else values += (num -> (prev :+ readScalar(r, f.typ, reg, depth)))
-        case Some(f) =>
-          val v = readScalar(r, f.typ, reg, depth)
-          val merged = (f.typ, values.get(num)) match {
-            case (PMessage(_), Some(prev: DynamicMessage)) =>
-              mergeMessages(prev, v.asInstanceOf[DynamicMessage])
-            case _ => v
+            while (pr.hasMore) {
+              val x = value(pr, f.typ, reg, depth, build)
+              if (build) xs = xs :+ x
+            }
+          } else {
+            val x = value(r, f.typ, reg, depth, build)
+            if (build) xs = xs :+ x
           }
-          values += (num -> merged)
+          if (build) values += (num -> xs)
+        case Some(f) =>
+          val v = value(r, f.typ, reg, depth, build)
+          if (build) {
+            val merged = (f.typ, values.get(num)) match {
+              case (PMessage(_), Some(prev: DynamicMessage)) =>
+                mergeMessages(prev, v.asInstanceOf[DynamicMessage])
+              case _ => v
+            }
+            values += (num -> merged)
+          }
       }
     }
-    DynamicMessage(md, values)
+    if (build) DynamicMessage(md, values) else null
   }
 }

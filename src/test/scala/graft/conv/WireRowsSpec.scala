@@ -340,6 +340,18 @@ class WireRowsSpec extends SparkSpec {
     assert(direct.toSeq === viaMessage)
   }
 
+  test("toProtoBinary: TimeOfDay ticks past a Long of nanoseconds raise, not wrap, on both paths") {
+    val cfg = GraftConfig(timeOfDayUnit = GraftConfig.TimeUnit.Seconds)
+    val df = Protarrow.messagesToDataFrame(spark, Seq(DynamicMessage(em, Map.empty)), em, cfg, reg)
+      .withColumn("time_of_day_value", org.apache.spark.sql.functions.lit(10000000000L))
+    Seq[() => Any](() => Protarrow.toProtoBinary(df, em, cfg, reg).collect(),
+      () => Protarrow.dataFrameToMessages(df, em, cfg, reg)).foreach { run =>
+      val e = intercept[Exception](run())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(c =>
+        c.isInstanceOf[IllegalArgumentException] && c.getMessage.contains("out of range: ticks=")), e)
+    }
+  }
+
   test("toProtoBinary: one reused Writer per partition, every row its own bytes") {
     val msgs = sample(Gen.listOfN(12, TestGen.genMessage(em)), 9L)
     val df = Protarrow.messagesToDataFrame(spark, msgs, em, GraftConfig(), reg).repartition(3)

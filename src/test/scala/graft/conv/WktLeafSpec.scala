@@ -34,6 +34,15 @@ class WktLeafSpec extends AnyFunSuite {
       Math.addExact(Math.multiplyExact(h * 3600L + m * 60L + s, 1000000000L), n.toLong) /
         cfg.timeOfDayUnit.nanos)
 
+  /** Encode direction: ticks → (hours, minutes, seconds, nanos), over
+    * exact integers. */
+  private def timeOfDayFieldsRef(ticks: Long, cfg: GraftConfig): Seq[Int] = {
+    val n = BigInt(ticks) * cfg.timeOfDayUnit.nanos
+    if (!n.isValidLong) throw new IllegalArgumentException(
+      s"${WellKnown.TimeOfDayName} out of range: ticks=$ticks")
+    Seq(n / 3600000000000L, n / 60000000000L % 60, n / 1000000000L % 60, n % 1000000000L).map(_.toInt)
+  }
+
   private def durationRef(secs: Long, nanos: Int, cfg: GraftConfig): Long =
     inRange(WellKnown.DurationName, s"seconds=$secs nanos=$nanos")(Math.addExact(
       Math.multiplyExact(secs, 1000000000L / cfg.durationUnit.nanos), nanos / cfg.durationUnit.nanos))
@@ -80,6 +89,9 @@ class WktLeafSpec extends AnyFunSuite {
       val random = Seq.fill(4000)((rnd.nextLong() >> rnd.nextInt(64), rnd.nextInt() >> rnd.nextInt(32)))
       for ((s, n) <- edgeSeconds.flatMap(s => edgeNanos.map(s -> _)) ++ random)
         assert(outcome(Codecs.durationTicks(s, n, cfg)) === outcome(durationRef(s, n, cfg)), s"$s $n $cfg")
+      for (t <- edgeSeconds ++ random.map(_._1))
+        assert(outcome((1 to 4).map(Codecs.timeOfDayField(Codecs.timeOfDayNanos(t, cfg), _))) ===
+          outcome(timeOfDayFieldsRef(t, cfg)), s"ticks $t $cfg")
     }
   }
 }

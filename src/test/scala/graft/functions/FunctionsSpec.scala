@@ -15,17 +15,24 @@ class FunctionsSpec extends SparkSpec {
       .select(col("doc_id"), explode(col("s")).as("sh"))
       .withColumn("h", expr(graft.operators.H.s("sh")))
     // expression path (as in d28)
-    val exprSig = graft.operators.Dedup.shingles(spark, sfDir)
+    val exprRows = graft.operators.Dedup.shingles(spark, sfDir)
       .withColumn("th", expr(s"transform(s, x -> ${graft.operators.H.s("x")})"))
       .selectExpr("doc_id",
         "transform(sequence(0, 11), k -> array_min(transform(th, " +
-          "h -> ((2*k + 1) * h + (k*k + 1)) % 2147483647))) as sig")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+          "h -> ((2*k + 1) * h + (k*k + 1)) % 2147483647))) as sig", "th")
+      .collect()
+    val exprSig = exprRows.map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    // the streaming tier's fold over the same shingle sets
+    val foldSig = exprRows.map(r =>
+      r.getLong(0) -> graft.operators.Dedup.minhashSig(r.getSeq[Long](2).toArray).toSeq).toMap
     // aggregator path (untyped udaf registration)
     val aggSig = ex.groupBy("doc_id").agg(MinHashAgg.udafOf(12)(col("h")).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(aggSig.keySet === exprSig.keySet)
-    aggSig.foreach { case (id, sig) => assert(sig === exprSig(id), s"doc $id") }
+    aggSig.foreach { case (id, sig) =>
+      assert(sig === exprSig(id), s"doc $id")
+      assert(foldSig(id) === sig, s"doc $id: Dedup.minhashSig")
+    }
   }
 
   test("array_dot: bit-equal to the interpreted HOF fold, both eval paths") {

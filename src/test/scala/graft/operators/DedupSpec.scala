@@ -153,15 +153,31 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.blocksFor(Dedup.TargetBlockRows * 100 + 1) === 101)
   }
 
+  test("H: the JVM hash equals Spark's H.s at 32 and 56 bits, non-ASCII text included") {
+    val spark2 = spark
+    import spark2.implicits._
+    val rnd = new scala.util.Random(1409)
+    val pieces = Seq("a", "Z", "7", " ", "é", "ß", "中", "文", "😀", "🎉")
+    val xs = (Seq("", "é", "中文", "😀", "naïve café 東京 🎉") ++
+      Seq.fill(200)(Seq.fill(rnd.nextInt(12))(pieces(rnd.nextInt(pieces.size))).mkString)).distinct
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+    for (bits <- Seq(32, 56)) {
+      val sql = xs.toDF("x").selectExpr("x", s"${H.s("x", bits)} as h").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(sql.size === xs.size)
+      xs.foreach(x => assert(H.jvm(x, md5, bits) === sql(x), s"'$x' at $bits bits"))
+    }
+  }
+
   test("m44: phash kernel is bit-equal to the interpreted expression form") {
     import org.apache.spark.sql.functions.{col, length}
     val spark2 = spark
     import spark2.implicits._
     val docs = T(spark, sfDir, "documents").select("doc_id", "text")
-    val exprForm = Multimodal.phashExprForm(docs).collect()
+    val exprForm = Multimodal.phashExprForm(docs, 32).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val kernel = docs.filter(length(col("text")) >= 4)
-      .as[(Long, String)].mapPartitions(Multimodal.phashKernel)
+      .as[(Long, String)].mapPartitions(Multimodal.phashKernel(32))
       .collect().toMap
     assert(exprForm.nonEmpty && kernel === exprForm,
       "the JVM sliding-window vote must reproduce the SQL-expression phash exactly")
@@ -172,10 +188,10 @@ class DedupSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     val docs = T(spark, sfDir, "documents").select("doc_id", "text")
-    val exprForm = Multimodal.phash56ExprForm(docs).collect()
+    val exprForm = Multimodal.phashExprForm(docs, 56).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val kernel = docs.filter(length(col("text")) >= 4)
-      .as[(Long, String)].mapPartitions(Multimodal.phash56Kernel)
+      .as[(Long, String)].mapPartitions(Multimodal.phashKernel(56))
       .collect().toMap
     assert(exprForm.nonEmpty && kernel === exprForm,
       "the JVM sliding-window vote must reproduce the SQL-expression 56-bit phash exactly")
@@ -187,8 +203,8 @@ class DedupSpec extends SparkSpec {
     // Brute-force all-pairs hamming at sf0.001 is the ground truth.
     val spark2 = spark
     import spark2.implicits._
-    val ph = Multimodal.phash56ExprForm(
-      T(spark, sfDir, "documents").select("doc_id", "text"))
+    val ph = Multimodal.phashExprForm(
+      T(spark, sfDir, "documents").select("doc_id", "text"), 56)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     val brute = (for {
       (a, pa) <- ph; (b, pb) <- ph
